@@ -63,7 +63,6 @@ class LineageLog:
         superstep: int,
         state: DataFrame,
         stats: SuperstepStats,
-        partition_key: str | None = None,
         num_partitions: int | None = None,
     ) -> DataFrame:
         """Materialize a superstep's state (durable parquet, or in-memory
@@ -76,8 +75,6 @@ class LineageLog:
         superstep — preserving the partitioning via repartition+persist
         chains was measured SLOWER here (extra exchange + cache churn beat
         the elision win at V ≪ E), so the simple barrier stays.
-        ``partition_key``/``num_partitions`` are accepted for future
-        layouts where the trade flips (e.g. V-heavy graphs).
         """
         self.stats.append(stats)
         if not self.base_dir:
@@ -114,14 +111,6 @@ class LineageLog:
         path = self._state_path(superstep)
         state.write.mode("overwrite").parquet(path)
         return self.spark.read.parquet(path)
-
-    def release(self) -> None:
-        """Unpersist any in-memory states still held (call at kernel end;
-        the final state stays usable — Spark recomputes from the truncated
-        plan if its cache is gone, callers typically re-persist it)."""
-        for df in getattr(self, "_mem_states", [])[:-1]:
-            df.unpersist()
-        self._mem_states = getattr(self, "_mem_states", [])[-1:]
 
     def finalize(self, superstep: int, stats: SuperstepStats) -> None:
         """Write lineage rows + the commit marker — strictly AFTER the state

@@ -49,7 +49,6 @@ def commit_and_stats(
     active_expr: Column,
     edge_parts: dict[int, int],
     t0: float,
-    partition_key: str | None = "id",
     num_partitions: int | None = None,
 ) -> tuple[DataFrame, float, int]:
     """Materialize ``new_state``, aggregate ``delta_expr`` / ``active_expr``
@@ -62,7 +61,7 @@ def commit_and_stats(
     if log.base_dir:
         committed = log.commit_state(
             step, new_state, SuperstepStats(step, -1.0, -1, 0.0),
-            partition_key=partition_key, num_partitions=num_partitions,
+            num_partitions=num_partitions,
         )
         stats_src = committed
         cached = None
@@ -88,7 +87,7 @@ def commit_and_stats(
     if not log.base_dir:
         committed = log.commit_state(
             step, cached, SuperstepStats(step, -1.0, -1, 0.0),
-            partition_key=partition_key, num_partitions=num_partitions,
+            num_partitions=num_partitions,
         )
         cached.unpersist()
     delta = sum(float(r["d"] or 0.0) for r in rows)

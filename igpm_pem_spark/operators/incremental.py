@@ -10,14 +10,12 @@ communities around the new edges (``incremental/query_call.py:180-258``,
 Our realization (O2/O3 in SURVEY.md §4) replaces the heuristic community
 scope with the exact/delta frontier the kernels already have:
 
-* PageRank — ranks carry over; residuals are seeded ONLY where they can be
-  nonzero. The carried ranks satisfy the previous graph's fixpoint
-  equation, so at any vertex whose in-contributions didn't change the
-  residual is exactly the uniform base shift (zero when V is unchanged);
-  correction messages are generated solely from edges whose source's
-  out-degree changed — i.e. from the delta bucket's endpoints. The seed
-  join therefore shuffles O(edges incident to the perturbation), not O(E),
-  and the delta frontier starts at the perturbation instead of everywhere.
+* PageRank — ranks carry over: each bucket runs the batch kernel's exact
+  power iteration warm-started from the previous fixpoint
+  (``pagerank(init_ranks=...)``). A small bucket leaves the carried vector
+  close to the new fixpoint, so the refresh needs fewer supersteps than a
+  cold start, with no per-bucket seeding jobs and the batch kernel's
+  exactness.
 * Connected components — the previous fixpoint stays valid except where
   new edges merge components: seed ``changed`` at new-edge endpoints only
   and rerun to fixpoint. Exact.
@@ -35,7 +33,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .graph import kernel_nparts, partitioned_adjacency, vertex_ids
-from .pagerank import pagerank
+from .pagerank import PageRankResult, pagerank
 
 
 @dataclass
@@ -93,14 +91,16 @@ def incremental_pagerank(
     with_pattern_counts: bool = False,
     pem=None,
 ) -> IncrementalResult:
-    """Replay ts buckets; per step, warm-start from the previous ranks and
-    re-converge with delta-restricted supersteps.
+    """Replay ts buckets: the base slice converges with exact PageRank from
+    a uniform start; every later bucket re-converges with the same exact
+    iteration, warm-started from the previous step's ranks.
 
-    ``pem`` — an ``operators.pem.PemController``: each step runs with the
-    controller's current ``frontier_eps`` (recompute scope) and reports
-    its wall time back, so the scope adapts to the per-step latency
-    budget — the deterministic replacement for the reference's DQN
-    (entry point 3, ``pem_egqp.py``; SURVEY §3.3 stance)."""
+    ``pem`` — an ``operators.pem.PemController``: each bucket after the
+    base stops at tolerance ``max(tol, pem.eps · n)``, with n the previous
+    step's vertex count, and reports its wall time back, so the recompute
+    effort adapts to the per-step latency budget — the deterministic
+    replacement for the reference's DQN (entry point 3, ``pem_egqp.py``;
+    SURVEY §3.3 stance)."""
     if num_partitions is None:
         num_partitions = kernel_nparts(edges)
     sizes = _bucket_sizes(edges, ts_col)
@@ -109,9 +109,7 @@ def incremental_pagerank(
     cum_m = 0
 
     result = IncrementalResult(state=None)
-    prev_ranks: DataFrame | None = None
-    prev_n, prev_dm = 0, 0.0
-    prev_cut: int | None = None
+    prev: PageRankResult | None = None
     counts = _DeltaPatternCounts(num_partitions) if with_pattern_counts else None
     for si, cut in enumerate(steps):
         cum_m += sizes[cut]
@@ -119,22 +117,15 @@ def incremental_pagerank(
             continue
         cum = edges.where(F.col(ts_col) <= cut)
         new_cnt = sizes[cut] if cut > base_cut else cum_m
+        step_tol = tol
+        if pem is not None and prev is not None:
+            step_tol = max(tol, pem.eps * prev.n_vertices)
         t0 = time.time()
-        if prev_ranks is None:
-            res = pagerank(
-                spark, cum, directed=directed, alpha=alpha, tol=tol,
-                mode="delta", num_partitions=num_partitions, steps_per_commit=5,
-                frontier_eps=pem.eps if pem is not None else None,
-            )
-            prev_n, prev_dm = _graph_consts(res.ranks, cum, directed)
-        else:
-            bucket = edges.where(F.col(ts_col) == cut)
-            prev_cum = edges.where(F.col(ts_col) <= prev_cut)
-            res, prev_n, prev_dm = _pagerank_warm(
-                spark, cum, bucket, prev_cum, prev_ranks, prev_n, prev_dm,
-                directed, alpha, tol, num_partitions,
-                frontier_eps=pem.eps if pem is not None else None,
-            )
+        res = pagerank(
+            spark, cum, directed=directed, alpha=alpha, tol=step_tol,
+            num_partitions=num_partitions,
+            init_ranks=prev.ranks if prev is not None else None,
+        )
         wall = time.time() - t0
         if pem is not None:
             pem.observe(
@@ -156,9 +147,8 @@ def incremental_pagerank(
             )
             metrics.n_triangles, metrics.n_stars = counts.update(cum, bucket_df)
         result.steps.append(metrics)
-        prev_ranks = res.ranks.localCheckpoint(eager=True)
-        prev_cut = cut
-    result.state = prev_ranks
+        prev = res
+    result.state = prev.ranks if prev is not None else None
     return result
 
 
@@ -256,214 +246,6 @@ class _DeltaPatternCounts:
             .dropDuplicates(["a", "b", "c"])
             .count()
         )
-
-
-def _graph_consts(ranks: DataFrame, edges: DataFrame, directed: bool) -> tuple[int, float]:
-    """(n, dangling_mass) of a converged rank vector on its graph — the
-    scalars the next warm start needs to seed the uniform base shift."""
-    n = ranks.count()
-    if not directed:
-        return n, 0.0
-    srcs = (
-        edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .select(F.col("src").alias("id"))
-        .distinct()
-    )
-    dm = (
-        ranks.join(srcs, "id", "left_anti")
-        .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
-        .first()[0]
-    )
-    return n, float(dm)
-
-
-def _sym_pairs(edges: DataFrame, directed: bool) -> DataFrame:
-    e = edges.select("src", "dst").where(F.col("src") != F.col("dst"))
-    if not directed:
-        e = e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-    return e
-
-
-def _pagerank_warm(
-    spark, cum_edges, bucket_edges, prev_edges, prev_ranks, prev_n, prev_dm,
-    directed, alpha, tol, num_partitions, frontier_eps=None,
-):
-    """Perturbation-proportional warm start.
-
-    The carried ranks satisfy the PREVIOUS graph's fixpoint equation
-    r = (1-α)/n₀ + α(A₀r + dm₀/n₀) up to the previous run's tolerance, so
-    the residual against the NEW graph decomposes exactly:
-
-        δ_v = c_base(v) + α · corr_v
-
-    where ``c_base`` is a per-vertex CONSTANT (the uniform base/dangling
-    shift — zero when neither V nor the dangling mass changed) and
-    ``corr_v`` sums contribution changes from in-neighbors whose
-    out-degree changed — i.e. only from vertices incident to the bucket.
-    The seed therefore joins the (tiny) affected-source set against the
-    cached adjacency and the previous edge slice; no whole-graph
-    contribution pass (the round-2 version's O(E) message shuffle per
-    bucket). Inherits ≤ O(tol) extra error from the carried residue —
-    the same order as the convergence tolerance itself.
-
-    Returns (PageRankResult, n_new, dm_new) — the scalars carried to the
-    next bucket. The result gains a ``seed_active`` attribute: the number
-    of vertices seeded with |δ| > frontier_eps (the evidence that seeding
-    work is perturbation-proportional, asserted by tests).
-    """
-    from .pagerank import _adjacency_with_degree
-
-    adj = _adjacency_with_degree(cum_edges, directed, num_partitions).persist()
-    verts = vertex_ids(adj)
-    n = verts.count()
-
-    # affected sources: endpoints of the bucket as message SENDERS under
-    # the kernel's orientation (both directions when symmetrized)
-    U = _sym_pairs(bucket_edges, directed).select("src").distinct()
-    ranks_u = (
-        prev_ranks.withColumnRenamed("id", "src").join(U, "src", "left_semi")
-    )
-
-    # new-side contributions of affected sources (adjacency is cached and
-    # already carries deg; semi-join keeps only U's edges)
-    t1 = (
-        adj.join(U, "src", "left_semi")
-        .join(F.broadcast(ranks_u), "src")
-        .select("dst", (F.col("rank") / F.col("deg")).alias("c"))
-    )
-    # old-side contributions: U's edges in the previous slice, degree
-    # recomputed over that slice only (filter BEFORE dedup so the shuffle
-    # is proportional to edges incident to U, not E)
-    pe_u = (
-        _sym_pairs(prev_edges, directed)
-        .join(U, "src", "left_semi")
-        .dropDuplicates(["src", "dst"])
-    )
-    deg_old = pe_u.groupBy("src").agg(F.count("*").alias("dold"))
-    t2 = (
-        pe_u.join(deg_old, "src")
-        .join(F.broadcast(ranks_u), "src")
-        .select("dst", (-F.col("rank") / F.col("dold")).alias("c"))
-    )
-    corr = (
-        t1.unionByName(t2)
-        .groupBy(F.col("dst").alias("id"))
-        .agg(F.sum("c").alias("c"))
-    )
-
-    # uniform base/dangling shift (scalars; zero-zero when V and the
-    # dangling mass are unchanged — the common intra-graph bucket)
-    if directed:
-        dangling_new = verts.join(
-            adj.select(F.col("src").alias("id")).distinct(), "id", "left_anti"
-        )
-        dm_new = float(
-            prev_ranks.join(dangling_new, "id", "left_semi")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
-            .first()[0]
-        )
-    else:
-        dm_new = 0.0
-    cb_new_vertex = ((1.0 - alpha) + alpha * dm_new) / n
-    cb_known = cb_new_vertex - ((1.0 - alpha) + alpha * prev_dm) / max(prev_n, 1)
-
-    if frontier_eps is None:
-        frontier_eps = tol / (10.0 * n)
-    # the delta kernel's state convention: rank already INCLUDES the
-    # current delta (each step adds only the newly pushed delta)
-    delta_expr = F.when(F.col("prev").isNotNull(), F.lit(cb_known)).otherwise(
-        F.lit(cb_new_vertex)
-    ) + F.lit(alpha) * F.coalesce(F.col("c"), F.lit(0.0))
-    seeded = (
-        verts.join(prev_ranks.withColumnRenamed("rank", "prev"), "id", "left")
-        .join(corr, "id", "left")
-        .select(
-            "id",
-            (F.coalesce(F.col("prev"), F.lit(0.0)) + delta_expr).alias("rank"),
-            delta_expr.alias("delta"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    seed_active = seeded.where(F.abs(F.col("delta")) > frontier_eps).count()
-    res = _delta_converge(
-        spark, cum_edges, seeded, directed, alpha, tol, num_partitions,
-        adj=adj, frontier_eps=frontier_eps,
-    )
-    res.seed_active = seed_active
-    n_out, dm_out = _graph_consts(res.ranks, cum_edges, directed)
-    return res, n_out, dm_out
-
-
-def _delta_converge(
-    spark, edges, state, directed, alpha, tol, num_partitions, adj=None,
-    frontier_eps=None,
-):
-    from ..lineage import LineageLog
-    from ._superstep import commit_and_stats, edge_partition_counts, loop_confs
-    from .pagerank import PageRankResult, _adjacency_with_degree, _delta_step
-
-    if adj is None:
-        adj = _adjacency_with_degree(edges, directed, num_partitions).persist()
-    verts = vertex_ids(adj)
-    n = verts.count()
-    if directed:
-        # same dangling handling as the batch kernel — residual mass
-        # reaching a sink must be respread, not dropped
-        dangling = verts.join(
-            adj.select(F.col("src").alias("id")).distinct(), "id", "left_anti"
-        ).persist()
-        n_dangling = dangling.count()
-    else:
-        dangling, n_dangling = None, 0
-    edge_parts = edge_partition_counts(adj)
-    if frontier_eps is None:
-        frontier_eps = tol / (10.0 * n)
-    log = LineageLog(spark, None)
-    converged, step = False, 0
-    # loop_confs + lazy localCheckpoint per sub-step: the same two fixes
-    # the batch kernel's loop carries (pagerank.py) — _delta_step
-    # references its state ~3× per sub-step, so an unchained 3-step block
-    # re-analyzes AND re-executes the inner sub-steps' subtrees ~3^k
-    # times per commit, and each commit is a fresh plan whose Janino/AQE
-    # driver-serial work repeats ~40× per bucket at tol=1e-9 (measured
-    # on pagerank_incremental_replay at sf0.01: 30.4 s → 21.8 s
-    # manifest-style, same ranks, same superstep count)
-    with loop_confs(spark):
-        while step < 100:
-            t0 = time.time()
-            new_state = state
-            intermediates = []
-            for b in range(3):
-                new_state = _delta_step(
-                    new_state, adj, dangling, n_dangling, n, alpha, frontier_eps,
-                    num_partitions,
-                )
-                if b < 2:
-                    new_state = new_state.localCheckpoint(eager=False)
-                    intermediates.append(new_state)
-            step += 3
-            state, delta, active = commit_and_stats(
-                log, step - 1, new_state, F.abs(F.col("delta")),
-                F.abs(F.col("delta")) > frontier_eps, edge_parts, t0,
-            )
-            for df in intermediates:
-                df.unpersist()
-            # a coarse PEM eps may truncate more residual mass than tol —
-            # an empty frontier is then the (documented) stopping point
-            if delta < tol or active == 0:
-                converged = True
-                break
-    adj.unpersist()
-    if dangling is not None:
-        dangling.unpersist()
-    total = float(state.agg(F.sum("rank")).first()[0])
-    ranks = state.select("id", (F.col("rank") / F.lit(total)).alias("rank"))
-    res = PageRankResult(ranks, step, converged, None)
-    res.stats = log.stats
-    return res
 
 
 def incremental_pattern_match(

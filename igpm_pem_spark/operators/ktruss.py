@@ -246,7 +246,7 @@ def trussness_hindex(
             state, delta, _ = commit_and_stats(
                 log, rounds - 1, new_state,
                 F.col("changed").cast("double"), F.col("changed"), edge_parts, t0,
-                partition_key=None, num_partitions=num_partitions,
+                num_partitions=num_partitions,
             )
             if delta == 0.0:
                 converged = True

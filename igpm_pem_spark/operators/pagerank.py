@@ -56,6 +56,7 @@ class PageRankResult:
     converged: bool
     resumed_from: int | None
     stats: list[SuperstepStats] = field(default_factory=list)
+    n_vertices: int = 0  # |V| of the ranked graph
 
 
 def _adjacency_with_degree(
@@ -137,6 +138,7 @@ def pagerank(
     steps_per_commit: int = 1,
     personalization: dict | list | None = None,
     weight_col: str | None = None,
+    init_ranks: DataFrame | None = None,
 ) -> PageRankResult:
     """Run PageRank to L1 convergence ``sum(|Δ|) < tol``.
 
@@ -155,200 +157,216 @@ def pagerank(
     p_{t+1} = (1-restart)·W p_t + restart·p_0 with restart=0.7 ⇔
     ``alpha=0.3`` here), computed as one rank vector per run instead of
     the reference's all-pairs proximity dict (``rwr.py:108-129``).
+
+    ``init_ranks`` — warm start (exact mode only): an (id, rank) table such
+    as the ranks of an earlier slice of the same graph. Carried vertices
+    start at their rank and unseen ones at 0, so a start vector summing to
+    1 still does, and exact iteration keeps it there: no renormalization.
+    Near a fixpoint the iteration only has to correct what changed. A
+    resumable checkpoint takes precedence.
     """
+    if init_ranks is not None and mode != "exact":
+        raise ValueError("init_ranks requires mode='exact'")
     if num_partitions is None:
         num_partitions = kernel_nparts(edges)
     adj = _adjacency_with_degree(
         edges, directed, num_partitions, weight_col
     ).persist()
     verts = vertex_ids(adj).repartition(num_partitions, "id").persist()
-    n = verts.count()
-    if n == 0:
-        empty = spark.createDataFrame([], "id BIGINT, rank DOUBLE, delta DOUBLE")
-        return PageRankResult(empty.select("id", "rank"), 0, True, None)
-    edge_parts = edge_partition_counts(adj)
-    if directed:
-        dangling = verts.join(
-            adj.select(F.col("src").alias("id")).distinct(), "id", "left_anti"
-        ).persist()
-        n_dangling = dangling.count()
-    else:
-        # symmetrized graphs cannot have dangling vertices: every vertex in
-        # the edge list has an out-edge — skip the setup jobs and the
-        # per-block mass subplan entirely
-        dangling, n_dangling = None, 0
+    # every persisted relation is released on every exit path, a raising
+    # superstep included
+    caches = [adj, verts]
+    try:
+        n = verts.count()
+        if n == 0:
+            empty = spark.createDataFrame([], "id BIGINT, rank DOUBLE, delta DOUBLE")
+            return PageRankResult(empty.select("id", "rank"), 0, True, None)
+        edge_parts = edge_partition_counts(adj)
+        if directed:
+            dangling = verts.join(
+                adj.select(F.col("src").alias("id")).distinct(), "id", "left_anti"
+            ).persist()
+            caches.append(dangling)
+            n_dangling = dangling.count()
+        else:
+            # symmetrized graphs cannot have dangling vertices: every vertex in
+            # the edge list has an out-edge — skip the setup jobs and the
+            # per-block mass subplan entirely
+            dangling, n_dangling = None, 0
 
-    log = LineageLog(spark, checkpoint_dir)
-    start_step, resumed_from = 0, None
-    state: DataFrame | None = None
-    if resume and checkpoint_dir:
-        last = log.last_committed()
-        if last is not None:
-            state = log.load_state(last)
-            start_step, resumed_from = last + 1, last
-
-    if personalization is not None:
-        # seeded RWR: restart mass ∝ p instead of uniform. State carries the
-        # per-vertex restart weight as a column so each superstep is
-        # self-contained (no per-step join against the seed table).
-        pvec = _personalization_df(spark, personalization)
-        if state is not None and "p" not in state.columns:
-            state = state.join(F.broadcast(pvec), "id", "left").na.fill(
-                0.0, ["p"]
+        log = LineageLog(spark, checkpoint_dir)
+        start_step, resumed_from = 0, None
+        state: DataFrame | None = None
+        if resume and checkpoint_dir:
+            last = log.last_committed()
+            if last is not None:
+                state = log.load_state(last)
+                start_step, resumed_from = last + 1, last
+        if state is None and init_ranks is not None:
+            state = (
+                verts.join(init_ranks.select("id", "rank"), "id", "left")
+                .select("id", F.coalesce(F.col("rank"), F.lit(0.0)).alias("rank"))
+                .localCheckpoint(eager=True)
             )
-            if "delta" not in state.columns:
-                state = state.withColumn("delta", F.lit(1.0))
-        if mode == "delta":
-            if frontier_eps is None:
-                frontier_eps = tol / (10.0 * n)
-            if state is None:
-                seeded = F.lit(1.0 - alpha) * F.coalesce(F.col("p"), F.lit(0.0))
-                state = (
-                    verts.join(F.broadcast(pvec), "id", "left")
-                    .select(
-                        "id",
-                        seeded.alias("rank"),
-                        seeded.alias("delta"),
-                        F.coalesce(F.col("p"), F.lit(0.0)).alias("p"),
-                    )
-                    .localCheckpoint(eager=True)
+
+        if personalization is not None:
+            # seeded RWR: restart mass ∝ p instead of uniform. State carries the
+            # per-vertex restart weight as a column so each superstep is
+            # self-contained (no per-step join against the seed table).
+            pvec = _personalization_df(spark, personalization)
+            if state is not None and "p" not in state.columns:
+                state = state.join(F.broadcast(pvec), "id", "left").na.fill(
+                    0.0, ["p"]
                 )
-            runner = _personalized_delta_step
-        elif mode == "exact":
+                if "delta" not in state.columns:
+                    state = state.withColumn("delta", F.lit(1.0))
+            if mode == "delta":
+                if frontier_eps is None:
+                    frontier_eps = tol / (10.0 * n)
+                if state is None:
+                    seeded = F.lit(1.0 - alpha) * F.coalesce(F.col("p"), F.lit(0.0))
+                    state = (
+                        verts.join(F.broadcast(pvec), "id", "left")
+                        .select(
+                            "id",
+                            seeded.alias("rank"),
+                            seeded.alias("delta"),
+                            F.coalesce(F.col("p"), F.lit(0.0)).alias("p"),
+                        )
+                        .localCheckpoint(eager=True)
+                    )
+                runner = _personalized_delta_step
+            elif mode == "exact":
+                if frontier_eps is None:
+                    frontier_eps = tol / n
+                if state is None:
+                    state = (
+                        verts.join(F.broadcast(pvec), "id", "left")
+                        .select(
+                            "id",
+                            F.lit(1.0 / n).alias("rank"),
+                            F.lit(1.0).alias("delta"),
+                            F.coalesce(F.col("p"), F.lit(0.0)).alias("p"),
+                        )
+                        .localCheckpoint(eager=True)
+                    )
+                runner = _personalized_exact_step
+            else:
+                raise ValueError(f"unknown mode {mode!r}")
+        elif mode == "exact" and not directed:
+            # fast path: in the symmetrized graph every vertex has in-edges and
+            # none dangle, so a superstep is computable from contributions
+            # alone — the state is referenced ONCE per sub-step, the unrolled
+            # logical plan stays LINEAR (the generic step references state
+            # twice, doubling the plan per level and capping the unroll), and
+            # per-vertex deltas move to the commit boundary.
             if frontier_eps is None:
                 frontier_eps = tol / n
             if state is None:
-                state = (
-                    verts.join(F.broadcast(pvec), "id", "left")
-                    .select(
-                        "id",
-                        F.lit(1.0 / n).alias("rank"),
-                        F.lit(1.0).alias("delta"),
-                        F.coalesce(F.col("p"), F.lit(0.0)).alias("p"),
-                    )
-                    .localCheckpoint(eager=True)
+                state = verts.select("id", F.lit(1.0 / n).alias("rank")).localCheckpoint(
+                    eager=True
                 )
-            runner = _personalized_exact_step
+            else:
+                state = state.select("id", "rank")
+            result = _run_exact_undirected(
+                spark, adj, verts, state, n, alpha, tol, max_iter, start_step,
+                steps_per_commit, edge_parts, log, frontier_eps, num_partitions,
+            )
+            result.resumed_from = resumed_from
+            result.stats = log.stats
+            result.n_vertices = n
+            return result
+
+        if personalization is not None:
+            pass  # runner/state already prepared above
+        elif mode == "exact":
+            if frontier_eps is None:
+                frontier_eps = tol / n  # convergence-reporting threshold only
+            if state is None:
+                state = verts.select(
+                    "id", F.lit(1.0 / n).alias("rank"), F.lit(1.0).alias("delta")
+                ).localCheckpoint(eager=True)
+            elif "delta" not in state.columns:
+                state = state.withColumn("delta", F.lit(1.0))
+            runner = _exact_step
+        elif mode == "delta":
+            if frontier_eps is None:
+                frontier_eps = tol / (10.0 * n)
+            if state is None:
+                base = (1.0 - alpha) / n
+                state = verts.select(
+                    "id", F.lit(base).alias("rank"), F.lit(base).alias("delta")
+                ).localCheckpoint(eager=True)
+            runner = _delta_step
         else:
             raise ValueError(f"unknown mode {mode!r}")
-    elif mode == "exact" and not directed:
-        # fast path: in the symmetrized graph every vertex has in-edges and
-        # none dangle, so a superstep is computable from contributions
-        # alone — the state is referenced ONCE per sub-step, the unrolled
-        # logical plan stays LINEAR (the generic step references state
-        # twice, doubling the plan per level and capping the unroll), and
-        # per-vertex deltas move to the commit boundary.
-        if frontier_eps is None:
-            frontier_eps = tol / n
-        if state is None:
-            state = verts.select("id", F.lit(1.0 / n).alias("rank")).localCheckpoint(
-                eager=True
-            )
-        else:
-            state = state.select("id", "rank")
-        result = _run_exact_undirected(
-            spark, adj, verts, state, n, alpha, tol, max_iter, start_step,
-            steps_per_commit, edge_parts, log, frontier_eps, num_partitions,
-        )
-        adj.unpersist()
-        verts.unpersist()
-        result.resumed_from = resumed_from
-        result.stats = log.stats
-        return result
 
-    if personalization is not None:
-        pass  # runner/state already prepared above
-    elif mode == "exact":
-        if frontier_eps is None:
-            frontier_eps = tol / n  # convergence-reporting threshold only
-        if state is None:
-            state = verts.select(
-                "id", F.lit(1.0 / n).alias("rank"), F.lit(1.0).alias("delta")
-            ).localCheckpoint(eager=True)
-        elif "delta" not in state.columns:
-            state = state.withColumn("delta", F.lit(1.0))
-        runner = _exact_step
-    elif mode == "delta":
-        if frontier_eps is None:
-            frontier_eps = tol / (10.0 * n)
-        if state is None:
-            base = (1.0 - alpha) / n
-            state = verts.select(
-                "id", F.lit(base).alias("rank"), F.lit(base).alias("delta")
-            ).localCheckpoint(eager=True)
-        runner = _delta_step
-    else:
-        raise ValueError(f"unknown mode {mode!r}")
-
-    converged, step = False, max(start_step - 1, 0)
-    step = start_step
-    # loop_confs (AQE + whole-stage codegen off for the loop's duration):
-    # every superstep is a fresh plan, so per-query driver-serial work
-    # (Janino units, per-stage AQE re-planning) repeats per commit and
-    # dominates — measured 32.1 → 21.7 s on the sf0.1 flagship (r6),
-    # ranks bit-identical. Same policy the CC loop has carried since r5.
-    with loop_confs(spark):
-        while step < max_iter:
-            t0 = time.time()
-            # unroll up to steps_per_commit supersteps into one lazy plan —
-            # one materialization + one stats job per block instead of per
-            # superstep (driver-side convergence is then checked per block)
-            block = min(steps_per_commit, max_iter - step)
-            new_state, intermediates = state, []
-            for b in range(block):
-                new_state = runner(
-                    new_state, adj, dangling, n_dangling, n, alpha,
-                    frontier_eps, num_partitions,
-                )
-                if b < block - 1:
-                    # lazy LOCAL CHECKPOINT, not lazy persist: a persisted
-                    # plan is only deduplicated physically — the analyzer
-                    # still walks the full unrolled tree, and _delta_step
-                    # references state ~3× per sub-step, so analysis cost
-                    # grew ~3^block per commit (measured: block=10 hung the
-                    # driver outright). checkpoint(eager=False) truncates
-                    # the LOGICAL plan to a LogicalRDD leaf immediately while
-                    # still materializing lazily in the commit's single job.
-                    new_state = new_state.localCheckpoint(eager=False)
-                    intermediates.append(new_state)
-            step += block
-            if tol <= 0.0 and not checkpoint_dir and step < max_iter:
-                # fixed-iteration benchmark mode: no convergence decision and
-                # no durable lineage needed mid-run — the localCheckpoint
-                # barrier alone materializes the state; skip the stats job
-                state = log.commit_state(
-                    step - 1, new_state, SuperstepStats(step - 1, -1.0, -1, 0.0)
-                )
-                log.stats[-1].wall_time_sec = time.time() - t0
-            else:
-                state, delta, _active = commit_and_stats(
-                    log, step - 1, new_state, F.abs(F.col("delta")),
-                    F.abs(F.col("delta")) > frontier_eps, edge_parts, t0,
-                    num_partitions=num_partitions,
-                )
-                if delta < tol:
-                    converged = True
+        converged, step = False, max(start_step - 1, 0)
+        step = start_step
+        # loop_confs (AQE + whole-stage codegen off for the loop's duration):
+        # every superstep is a fresh plan, so per-query driver-serial work
+        # (Janino units, per-stage AQE re-planning) repeats per commit and
+        # dominates — measured 32.1 → 21.7 s on the sf0.1 flagship (r6),
+        # ranks bit-identical. Same policy the CC loop has carried since r5.
+        with loop_confs(spark):
+            while step < max_iter:
+                t0 = time.time()
+                # unroll up to steps_per_commit supersteps into one lazy plan —
+                # one materialization + one stats job per block instead of per
+                # superstep (driver-side convergence is then checked per block)
+                block = min(steps_per_commit, max_iter - step)
+                new_state, intermediates = state, []
+                for b in range(block):
+                    new_state = runner(
+                        new_state, adj, dangling, n_dangling, n, alpha,
+                        frontier_eps, num_partitions,
+                    )
+                    if b < block - 1:
+                        # lazy LOCAL CHECKPOINT, not lazy persist: a persisted
+                        # plan is only deduplicated physically — the analyzer
+                        # still walks the full unrolled tree, and _delta_step
+                        # references state ~3× per sub-step, so analysis cost
+                        # grew ~3^block per commit (measured: block=10 hung the
+                        # driver outright). checkpoint(eager=False) truncates
+                        # the LOGICAL plan to a LogicalRDD leaf immediately while
+                        # still materializing lazily in the commit's single job.
+                        new_state = new_state.localCheckpoint(eager=False)
+                        intermediates.append(new_state)
+                step += block
+                if tol <= 0.0 and not checkpoint_dir and step < max_iter:
+                    # fixed-iteration benchmark mode: no convergence decision and
+                    # no durable lineage needed mid-run — the localCheckpoint
+                    # barrier alone materializes the state; skip the stats job
+                    state = log.commit_state(
+                        step - 1, new_state, SuperstepStats(step - 1, -1.0, -1, 0.0)
+                    )
+                    log.stats[-1].wall_time_sec = time.time() - t0
+                else:
+                    state, delta, _active = commit_and_stats(
+                        log, step - 1, new_state, F.abs(F.col("delta")),
+                        F.abs(F.col("delta")) > frontier_eps, edge_parts, t0,
+                        num_partitions=num_partitions,
+                    )
+                    if delta < tol:
+                        converged = True
+                    for df in intermediates:
+                        df.unpersist()
+                    if converged:
+                        break
+                    continue
                 for df in intermediates:
                     df.unpersist()
-                if converged:
-                    break
-                continue
-            for df in intermediates:
-                df.unpersist()
 
-    adj.unpersist()
-    verts.unpersist()
-    if dangling is not None:
-        dangling.unpersist()
-    if mode == "delta":
-        # residual form converges to the unnormalized series sum; normalize
-        total = float(state.agg(F.sum("rank")).first()[0])
-        ranks = state.select("id", (F.col("rank") / F.lit(total)).alias("rank"))
-    else:
-        ranks = state.select("id", "rank")
-    result = PageRankResult(ranks, step, converged, resumed_from)
-    result.stats = log.stats
-    return result
+        if mode == "delta":
+            # residual form converges to the unnormalized series sum; normalize
+            total = float(state.agg(F.sum("rank")).first()[0])
+            ranks = state.select("id", (F.col("rank") / F.lit(total)).alias("rank"))
+        else:
+            ranks = state.select("id", "rank")
+        return PageRankResult(ranks, step, converged, resumed_from, log.stats, n)
+    finally:
+        for df in caches:
+            df.unpersist()
 
 
 def _run_exact_undirected(

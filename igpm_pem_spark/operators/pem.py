@@ -5,20 +5,20 @@ tunes the recompute-scope knob (community-size threshold) from a reward
 of ``100/elapsed`` per step (``incremental/rl_model.py:146-188``,
 ``gray_incremental.py:214-222``, ``pem_egqp.py:47-86``). SURVEY §3.3's
 Spark stance: the RL loop is a tuning controller AROUND the engine, not
-an operator — our engine exposes the equivalent knob explicitly (the
-delta-frontier threshold ``frontier_eps``: larger ⇒ fewer active
-vertices ⇒ less work per step, at a bounded accuracy cost of
+an operator — our engine exposes the equivalent knob explicitly (each
+bucket refresh's stopping tolerance ``max(tol, eps·n)``: larger ⇒ fewer
+supersteps ⇒ less work per step, at a bounded accuracy cost of
 ``alpha/(1-alpha)·eps·n`` total L1) plus per-superstep lineage metrics,
 so the controller can be a deterministic policy instead of a 2×4-unit
 DQN.
 
 ``PemController`` is that policy: a multiplicative-increase /
-multiplicative-decrease rule on ``frontier_eps`` driven by each step's
-wall time against a target — steps running over budget shrink the
-recompute scope; steps comfortably under budget spend the slack on
-accuracy. Wired into ``incremental_pagerank(pem=...)``; every decision
-is recorded so runs are reproducible and auditable (the determinism the
-reference's RL explicitly lacks — its own seeds vary per run).
+multiplicative-decrease rule on ``eps`` driven by each step's wall time
+against a target — steps running over budget stop earlier; steps
+comfortably under budget spend the slack on accuracy. Wired into
+``incremental_pagerank(pem=...)``; every decision is recorded so runs
+are reproducible and auditable (the determinism the reference's RL
+explicitly lacks — its own seeds vary per run).
 """
 
 from __future__ import annotations
@@ -32,7 +32,10 @@ class PemController:
 
     ``target_step_sec`` — the per-step latency budget (the reference's
     reward is 100/elapsed: faster steps are better until accuracy pays).
-    ``eps`` — current frontier threshold handed to the delta kernel.
+    ``eps`` — current per-vertex tolerance: ``incremental_pagerank`` stops
+    each bucket's warm-started exact iteration once the L1 change falls
+    below ``max(tol, eps·n)`` (n = vertices), which bounds that bucket's
+    L1 error at ``alpha/(1-alpha)·eps·n``.
     """
 
     target_step_sec: float

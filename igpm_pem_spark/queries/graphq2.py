@@ -350,8 +350,8 @@ def _q_pagerank_incremental(spark, sf_dir):
     """Warm-start PageRank replay over 3 synthetic arrival buckets
     (ts = src % 3) — the reference's partial-execution headline
     (``incremental/gray_incremental.py``, entry point 3): each bucket
-    re-converges from the previous fixpoint with delta-restricted
-    supersteps instead of recomputing from scratch. With tol=1e-9 the
+    re-converges with exact supersteps warm-started from the previous
+    fixpoint instead of recomputing from scratch. With tol=1e-9 the
     final warm-started fixpoint and the batch fixpoint are both ≪ the
     round-6 grid away from the true solution, so the SAME deep
     recursive-CTE oracle as ``pagerank_converged`` checks the entire

@@ -355,59 +355,35 @@ def pagerank_stream(
     num_partitions: int | None = None,
 ) -> tuple["object", StreamState]:
     """Streaming PageRank — the flagship kernel lifted into foreachBatch:
-    the first micro-batch converges from scratch; every later batch
-    warm-starts from the carried ranks via the perturbation-proportional
-    seed (``incremental._pagerank_warm`` — the residual is seeded only at
-    vertices incident to the arriving edges, never a whole-graph
-    contribution pass), then re-converges with delta-restricted
-    supersteps. ``StreamState.components`` carries the (id, rank) table
-    after each batch; the final table equals batch ``pagerank`` on the
-    union of all buckets within the convergence tolerance (pinned by
-    tests).
+    the first micro-batch converges with exact PageRank from scratch;
+    every later batch re-runs the same exact iteration over the cumulative
+    edges, warm-started from the carried ranks (``pagerank(init_ranks=...)``,
+    as ``incremental_pagerank`` does per bucket). ``StreamState.components``
+    carries the (id, rank) table after each batch; the final table equals
+    batch ``pagerank`` on the union of all buckets within the convergence
+    tolerance (pinned by tests).
     """
-    from ..operators.incremental import _graph_consts, _pagerank_warm
     from ..operators.pagerank import pagerank
 
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
     state = StreamState()
-    consts = {"n": 0, "dm": 0.0}
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         new_edges = batch_df.select("src", "dst").localCheckpoint(eager=True)
         if new_edges.isEmpty():
             return
         state.batches += 1
-        if state.edges is None:
-            state.edges = new_edges
-            res = pagerank(
-                spark, state.edges, alpha=alpha, tol=tol, mode="delta",
-                num_partitions=num_partitions, steps_per_commit=5,
-            )
-            state.components = res.ranks.localCheckpoint(eager=True)
-            consts["n"], consts["dm"] = _graph_consts(
-                res.ranks, state.edges, directed=False
-            )
-            state.history.append(
-                {"batch": batch_id, "supersteps": res.supersteps}
-            )
-            return
-        prev_edges = state.edges
-        cum = prev_edges.unionByName(new_edges).localCheckpoint(eager=True)
-        res, n_new, dm_new = _pagerank_warm(
-            spark, cum, new_edges, prev_edges, state.components,
-            consts["n"], consts["dm"], False, alpha, tol, num_partitions,
+        cum = new_edges
+        if state.edges is not None:
+            cum = state.edges.unionByName(new_edges).localCheckpoint(eager=True)
+        res = pagerank(
+            spark, cum, alpha=alpha, tol=tol,
+            num_partitions=num_partitions, init_ranks=state.components,
         )
         state.edges = cum
-        state.components = res.ranks.localCheckpoint(eager=True)
-        consts["n"], consts["dm"] = n_new, dm_new
-        state.history.append(
-            {
-                "batch": batch_id,
-                "supersteps": res.supersteps,
-                "seed_active": getattr(res, "seed_active", None),
-            }
-        )
+        state.components = res.ranks
+        state.history.append({"batch": batch_id, "supersteps": res.supersteps})
 
     # one file per micro-batch (see components_stream): each parquet file
     # IS an arrival bucket, so the warm-start path actually executes

@@ -3,6 +3,7 @@ recomputation; final state must equal the batch (from-scratch) answer."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from igpm_pem_spark.operators.incremental import (
@@ -93,8 +94,8 @@ def test_incremental_pagerank_converges_to_full_graph_answer(spark):
 
 def test_incremental_pagerank_directed_dangling(spark):
     """Directed replay where later buckets leave sink (dangling) vertices:
-    the warm-start residual seed and the delta loop must respread dangling
-    mass exactly like the batch kernel, or ranks drift from the oracle."""
+    the warm-started refresh must respread dangling mass exactly like the
+    batch kernel, or ranks drift from the oracle."""
     # bucket 0: a 3-cycle; bucket 1 adds edges INTO new sinks 3 and 4
     pairs = [(0, 1, 0), (1, 2, 0), (2, 0, 0), (0, 3, 1), (2, 4, 1), (1, 4, 1)]
     edges = spark.createDataFrame(pairs, "src BIGINT, dst BIGINT, ts INT")
@@ -160,52 +161,30 @@ def test_incremental_pagerank_with_pattern_counts(spark):
     assert res.steps[-1].n_stars is not None
 
 
-def test_warm_start_seed_is_perturbation_proportional(spark):
-    """A bucket touching a handful of existing vertices must seed residuals
-    only at the perturbation (carried ranks already satisfy the old
-    fixpoint; V unchanged → the uniform base shift is zero), and still land
-    on the batch fixpoint."""
-    from igpm_pem_spark.operators.incremental import _graph_consts, _pagerank_warm
+def test_warm_start_refresh_beats_cold_exact(spark):
+    """A bucket of 3 edges among existing vertices: exact iteration
+    warm-started from the previous fixpoint needs fewer supersteps than a
+    cold start on the same graph, lands on the same ranks, and keeps the
+    rank mass at 1 without renormalizing."""
     from igpm_pem_spark.operators.pagerank import pagerank
-    from pyspark.sql import functions as F
 
     _, edges, _ = ba_graph(spark, 300, 3, seed=2)
-    n_verts = 300
-    # bucket: 3 new edges among EXISTING vertices (no new ids, undirected)
     bucket = spark.createDataFrame(
         [(5, 290), (17, 250), (100, 200)], "src BIGINT, dst BIGINT"
     )
-    base = pagerank(spark, edges, tol=1e-9, mode="delta", steps_per_commit=5)
-    n0, dm0 = _graph_consts(base.ranks, edges, False)
     cum = edges.select("src", "dst").unionByName(bucket)
-    res, _, _ = _pagerank_warm(
-        spark, cum, bucket, edges, base.ranks.localCheckpoint(eager=True),
-        n0, dm0, False, 0.85, 1e-9, 4,
-    )
-    # seeded frontier ∝ perturbation: only bucket endpoints + vertices that
-    # receive a changed contribution (their out-neighbors) can carry
-    # residue — compute that affected set exactly and pin the seed to it
-    eps_pairs = {(r.src, r.dst) for r in cum.collect()}
-    adjm = {}
-    for a, b in eps_pairs:
-        if a != b:
-            adjm.setdefault(a, set()).add(b)
-            adjm.setdefault(b, set()).add(a)
-    endpoints = {5, 290, 17, 250, 100, 200}
-    affected = set(endpoints)
-    for u in endpoints:
-        affected |= adjm.get(u, set())
-    assert res.seed_active <= len(affected), (res.seed_active, len(affected))
-    assert res.seed_active < n_verts / 2  # ≪ the graph
-    # fixpoint equals batch on the updated graph
-    want = {
-        r.id: r["rank"]
-        for r in pagerank(spark, cum, tol=1e-9, mode="delta",
-                          steps_per_commit=5).ranks.collect()
-    }
-    got = {r.id: r["rank"] for r in res.ranks.collect()}
+    base = pagerank(spark, edges, tol=1e-9)
+    warm = pagerank(spark, cum, tol=1e-9, init_ranks=base.ranks)
+    cold = pagerank(spark, cum, tol=1e-9)
+    assert warm.converged and cold.converged
+    assert warm.supersteps < cold.supersteps, (warm.supersteps, cold.supersteps)
+    got = {r.id: r["rank"] for r in warm.ranks.collect()}
+    want = {r.id: r["rank"] for r in cold.ranks.collect()}
+    assert got.keys() == want.keys() and len(got) == 300
     assert max(abs(got[k] - want[k]) for k in want) < 1e-6
-    assert len(got) == n_verts
+    assert abs(sum(got.values()) - 1.0) < 1e-9
+    with pytest.raises(ValueError):
+        pagerank(spark, cum, mode="delta", init_ranks=base.ranks)
 
 
 def test_incremental_pattern_counts_equal_full_recompute(spark):
@@ -290,7 +269,9 @@ def test_pem_controller_policy_is_deterministic():
 def test_incremental_pagerank_with_pem_adapts_scope(spark):
     """A hopeless per-step budget must coarsen the recompute scope (eps
     climbs toward eps_max) while ranks stay a sane distribution; the
-    controller's audit trail records every decision."""
+    controller's audit trail records every decision. A controller pinned
+    at a coarse eps must cut bucket supersteps (deterministic counts)
+    below the same replay without PEM: the knob does work."""
     from igpm_pem_spark.operators.pem import PemController
 
     edges = _dynamic_ba(spark)
@@ -300,3 +281,15 @@ def test_incremental_pagerank_with_pem_adapts_scope(spark):
     assert pem.eps > 1e-9  # scope coarsened under the impossible budget
     total = sum(r["rank"] for r in res.state.collect())
     assert abs(total - 1.0) < 1e-6
+
+    halves = _dynamic_ba(spark, n_buckets=2)
+    coarse = PemController(
+        target_step_sec=1e9, eps=1e-4, eps_min=1e-4, eps_max=1e-4
+    )
+    pinned = incremental_pagerank(spark, halves, base_steps=1, tol=1e-3, pem=coarse)
+    plain = incremental_pagerank(spark, halves, base_steps=1, tol=1e-3)
+    assert coarse.eps == 1e-4
+    got = [s.supersteps for s in pinned.steps]
+    want = [s.supersteps for s in plain.steps]
+    assert all(a <= b for a, b in zip(got, want)), (got, want)
+    assert sum(got) < sum(want), (got, want)

@@ -116,6 +116,22 @@ def test_pagerank_directed_dangling(spark):
     assert abs(sum(got.values()) - 1.0) < 1e-9
 
 
+def test_pagerank_releases_caches_when_a_step_raises(spark, monkeypatch):
+    """A superstep that raises must not leak the persisted adjacency,
+    vertex set or dangling set (directed, so all three exist)."""
+    from igpm_pem_spark.operators import pagerank as pr
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("injected step failure")
+
+    spark.catalog.clearCache()
+    monkeypatch.setattr(pr, "_group_sum", boom)
+    edges = edges_df(spark, [(0, 1), (1, 2), (2, 0), (0, 3)])
+    with pytest.raises(RuntimeError, match="injected"):
+        pagerank(spark, edges, directed=True)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 @pytest.mark.parametrize("graph", ["two_comp", "ba100", "line"])
 def test_connected_components_exact(spark, graph):
     edges, pairs, _ = _pairs(graph, spark)
