@@ -6,11 +6,19 @@ reloads them on restart (``patternmatching/gray/rwr.py:34-54``,
 
 * state tables (ranks / components / labels) written to
   ``<dir>/state/superstep=K/`` as parquet (Iceberg-shaped: on a real
-  cluster these are `writeTo(...).createOrReplace()` Iceberg snapshots);
+  cluster these are `writeTo(...).createOrReplace()` Iceberg snapshots)
+  and read back under the written schema, so no inference job runs;
 * one lineage row per (superstep, partition): partition id, edge count,
-  delta-norm, wall-time — the north rule's resumability evidence;
-* a commit marker written only AFTER the state parquet commit, so a crash
-  between the two leaves a resumable prefix (never a torn superstep).
+  delta-norm, wall-time — the north rule's resumability evidence. The
+  driver writes a superstep's rows itself (pyarrow, no Spark job, no
+  Python worker) as ONE file, ``<dir>/lineage/part-<K:08d>.parquet``,
+  staged under a dot-prefixed name and moved into place with
+  ``os.replace``: Spark's reader skips dot files, so it never sees a torn
+  file, and a re-run superstep overwrites its own file, so every
+  superstep's rows land exactly once;
+* a commit marker written only AFTER the state and lineage files, so a
+  crash anywhere earlier leaves a resumable prefix (never a torn
+  superstep).
 
 Resume = read the newest committed superstep and continue; vertices whose
 state already converged are carried, not recomputed (kernel-specific
@@ -28,6 +36,23 @@ import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    DoubleType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
+
+# the columns and types of the Spark-written lineage files of older
+# checkpoints too, so old and new files read as one table
+LINEAGE_SCHEMA = StructType([
+    StructField("superstep", IntegerType()),
+    StructField("partition_id", IntegerType()),
+    StructField("edge_count", LongType()),
+    StructField("delta_norm", DoubleType()),
+    StructField("wall_time_sec", DoubleType()),
+])
 
 
 @dataclass
@@ -110,28 +135,35 @@ class LineageLog:
             return state.localCheckpoint(eager=True)
         path = self._state_path(superstep)
         state.write.mode("overwrite").parquet(path)
-        return self.spark.read.parquet(path)
+        return self.spark.read.schema(state.schema).parquet(path)
 
     def finalize(self, superstep: int, stats: SuperstepStats) -> None:
-        """Write lineage rows + the commit marker — strictly AFTER the state
-        parquet commit and stats computation, so a crash anywhere earlier
-        leaves a cleanly resumable prefix (never a torn superstep)."""
+        """Write the superstep's lineage file + the commit marker — strictly
+        AFTER the state parquet commit and stats computation, so a crash
+        anywhere earlier leaves a cleanly resumable prefix (never a torn
+        superstep). Driver-side file writes only: no Spark job."""
         if not self.base_dir:
             return
-        lineage_rows = [
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        parts = stats.partition_stats or [{"partition_id": -1}]
+        rows = pa.Table.from_pydict(
             {
-                "superstep": superstep,
-                "partition_id": int(p.get("partition_id", -1)),
-                "edge_count": int(p.get("edge_count", 0)),
-                "delta_norm": float(p.get("delta_norm", 0.0)),
-                "wall_time_sec": float(stats.wall_time_sec),
-            }
-            for p in (stats.partition_stats or [{"partition_id": -1}])
-        ]
-        self.spark.createDataFrame(
-            lineage_rows,
-            "superstep INT, partition_id INT, edge_count BIGINT, delta_norm DOUBLE, wall_time_sec DOUBLE",
-        ).coalesce(1).write.mode("append").parquet(os.path.join(self.base_dir, "lineage"))
+                "superstep": [superstep] * len(parts),
+                "partition_id": [int(p.get("partition_id", -1)) for p in parts],
+                "edge_count": [int(p.get("edge_count", 0)) for p in parts],
+                "delta_norm": [float(p.get("delta_norm", 0.0)) for p in parts],
+                "wall_time_sec": [float(stats.wall_time_sec)] * len(parts),
+            },
+            schema=to_arrow_schema(LINEAGE_SCHEMA),
+        )
+        lineage_dir = os.path.join(self.base_dir, "lineage")
+        name = f"part-{superstep:08d}.parquet"
+        tmp = os.path.join(lineage_dir, f".{name}.tmp")
+        pq.write_table(rows, tmp)
+        os.replace(tmp, os.path.join(lineage_dir, name))
         # marker last: a superstep is resumable only once fully durable
         with open(self._marker_path(superstep), "w") as f:
             json.dump(
@@ -162,4 +194,6 @@ class LineageLog:
     def lineage_df(self) -> DataFrame | None:
         if not self.base_dir:
             return None
-        return self.spark.read.parquet(os.path.join(self.base_dir, "lineage"))
+        return self.spark.read.schema(LINEAGE_SCHEMA).parquet(
+            os.path.join(self.base_dir, "lineage")
+        )

@@ -3,9 +3,11 @@
 Every kernel commits its new state (parquet round-trip or localCheckpoint —
 the lineage-truncation barrier) and then runs a SINGLE aggregation job,
 grouped by physical partition id, that yields the global delta norm, the
-active-vertex count, and the per-partition lineage rows in one pass.
-Keeping the superstep at two Spark jobs (materialize + stats) is what makes
-driver-side iteration cheap enough for hundreds of supersteps.
+active-vertex count, and the per-partition lineage rows in one pass. A
+commit therefore runs two Spark jobs of its own (materialize + stats);
+the durable lineage file and commit marker are driver-side writes (see
+lineage.py). Broadcast sides of a step plan and each kernel's per-call
+setup add jobs on top (perfbench's traced ``<kernel>.jobs`` counts them).
 """
 
 from __future__ import annotations

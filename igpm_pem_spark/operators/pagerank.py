@@ -30,10 +30,14 @@ Scale design (100 TB / 1e9+ edges):
   aggregating (O(E) shuffle) instead of map-side combining (O(V·P)
   partial-agg output — see ``_group_sum``); AQE skew-join splitting
   covers the join side on a real cluster;
-* each superstep is exactly two jobs: materialize new state (parquet
-  commit or localCheckpoint — the lineage-truncation barrier) + one
-  per-partition stats aggregation (delta norm, active count, lineage
-  rows in a single pass);
+* each commit (a block of ``steps_per_commit`` supersteps) runs two
+  jobs of its own: materialize new state (parquet write or
+  localCheckpoint — the lineage-truncation barrier) + one per-partition
+  stats aggregation (delta norm, active count, lineage rows in a single
+  pass); the lineage file and commit marker are driver-side writes.
+  Per-call setup (vertex count, partition counts, start state) and
+  broadcast sides add jobs on top, so a call runs more than two jobs
+  per commit (perfbench's traced ``pagerank.jobs``);
 * kill/resume re-reads the newest committed superstep (see lineage.py).
 """
 

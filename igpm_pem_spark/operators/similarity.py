@@ -24,7 +24,9 @@ from pyspark.sql import DataFrame, Window, functions as F
 _LOG = logging.getLogger(__name__)
 
 
-def _capped_signatures(signed: DataFrame, max_bucket: int) -> DataFrame:
+def _capped_signatures(
+    signed: DataFrame, max_bucket: int
+) -> tuple[DataFrame, DataFrame]:
     """Window-count bucket guard over the (id, tbl, sig) relation — the
     ANN port of dedup.lsh_candidate_pairs' max_bucket cap (dedup.py band
     join). One shuffle on (tbl, sig) — the same key the candidate
@@ -44,10 +46,14 @@ def _capped_signatures(signed: DataFrame, max_bucket: int) -> DataFrame:
     1.9M-row exchange at the bench shape)."""
     w = Window.partitionBy("tbl", "sig")
     sized = signed.withColumn("_bsz", F.count("*").over(w)).persist()
-    stats = sized.agg(
-        F.count("*").alias("n"),
-        F.sum(F.when(F.col("_bsz") > max_bucket, 1).otherwise(0)).alias("n_drop"),
-    ).collect()[0]
+    try:
+        stats = sized.agg(
+            F.count("*").alias("n"),
+            F.sum(F.when(F.col("_bsz") > max_bucket, 1).otherwise(0)).alias("n_drop"),
+        ).collect()[0]
+    except BaseException:
+        sized.unpersist()
+        raise
     if stats.n_drop:
         _LOG.warning(
             "ANN bucket cap: dropped %d/%d signature rows in buckets wider "
@@ -374,14 +380,16 @@ def ann_lsh_topk(
     # session end (the round-3 in-bench memory-pressure gap). One eager
     # job inside the builder, documented trade: cache hygiene beats plan
     # purity for a relation this hot.
-    pairs = (
-        q.join(c, ["tbl", "sig"])
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    sig_cache.unpersist()
+    try:
+        pairs = (
+            q.join(c, ["tbl", "sig"])
+            .where(F.col("query_id") != F.col("neighbor_id"))
+            .select("query_id", "neighbor_id")
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        sig_cache.unpersist()
     ea = _vec_side(emb, id_col, vec_col, "query_id", "a")
     eb = _vec_side(emb, id_col, vec_col, "neighbor_id", "b")
     scored = (
@@ -432,14 +440,16 @@ def near_dup_pairs_ann(
     a = kept.select(F.col("id").alias("id_a"), "tbl", "sig")
     b = kept.select(F.col("id").alias("id_b"), "tbl", "sig")
     # eager pair materialization + cache release — see ann_lsh_topk
-    pairs = (
-        a.join(b, ["tbl", "sig"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    sig_cache.unpersist()
+    try:
+        pairs = (
+            a.join(b, ["tbl", "sig"])
+            .where(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b")
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        sig_cache.unpersist()
     ea = _vec_side(emb, id_col, vec_col, "id_a", "a")
     eb = _vec_side(emb, id_col, vec_col, "id_b", "b")
     return (

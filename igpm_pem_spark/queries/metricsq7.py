@@ -118,39 +118,42 @@ def _q_percolation_curve(spark, sf_dir):
     # released after the last rate's fixpoint is materialized below
     e = edges(spark, sf_dir, G_SPARSE_SQL).persist()
     out = None
-    for rate in _PERC_RATES:
-        cut = int(rate * SPLIT_BUCKETS)
-        keep = (split_bucket(F.col("src"), "fail") >= cut) & (
-            split_bucket(F.col("dst"), "fail") >= cut
-        )
-        res = connected_components(
-            spark, e.where(keep), num_partitions=graph_nparts(spark, sf_dir)
-        )
-        if not (res.converged and res.supersteps < _PERC_CC_ITERS):
-            raise RuntimeError(
-                f"percolation_curve: CC at rate {rate} took "
-                f"{res.supersteps} supersteps (converged={res.converged}); "
-                f"raise _PERC_CC_ITERS to keep the unrolled oracle exact"
+    try:
+        for rate in _PERC_RATES:
+            cut = int(rate * SPLIT_BUCKETS)
+            keep = (split_bucket(F.col("src"), "fail") >= cut) & (
+                split_bucket(F.col("dst"), "fail") >= cut
             )
-        row = (
-            component_sizes(res.components)
-            .agg(
-                F.sum("size").alias("_nv"),
-                F.count("*").alias("_nc"),
-                F.max("size").alias("_g"),
+            res = connected_components(
+                spark, e.where(keep), num_partitions=graph_nparts(spark, sf_dir)
             )
-            .select(
-                F.lit(int(rate * 100)).cast("long").alias("removed_pct"),
-                F.col("_nv").cast("long").alias("n_vertices"),
-                F.col("_nc").cast("long").alias("n_components"),
-                F.col("_g").cast("long").alias("giant_size"),
-                F.round(F.col("_g") / F.col("_nv"), 6).alias("giant_share6"),
+            if not (res.converged and res.supersteps < _PERC_CC_ITERS):
+                raise RuntimeError(
+                    f"percolation_curve: CC at rate {rate} took "
+                    f"{res.supersteps} supersteps (converged={res.converged}); "
+                    f"raise _PERC_CC_ITERS to keep the unrolled oracle exact"
+                )
+            row = (
+                component_sizes(res.components)
+                .agg(
+                    F.sum("size").alias("_nv"),
+                    F.count("*").alias("_nc"),
+                    F.max("size").alias("_g"),
+                )
+                .select(
+                    F.lit(int(rate * 100)).cast("long").alias("removed_pct"),
+                    F.col("_nv").cast("long").alias("n_vertices"),
+                    F.col("_nc").cast("long").alias("n_components"),
+                    F.col("_g").cast("long").alias("giant_size"),
+                    F.round(F.col("_g") / F.col("_nv"), 6).alias("giant_share6"),
+                )
             )
-        )
-        out = row if out is None else out.unionByName(row)
-    # every rate's CC state is localCheckpoint-materialized inside
-    # connected_components, so the rows no longer need the base cache
-    e.unpersist()
+            out = row if out is None else out.unionByName(row)
+    finally:
+        # every rate's CC state is localCheckpoint-materialized inside
+        # connected_components, so the rows no longer need the base cache;
+        # a raising rate releases it too
+        e.unpersist()
     return out
 
 

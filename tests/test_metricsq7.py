@@ -6,6 +6,7 @@ from __future__ import annotations
 import datetime
 
 import networkx as nx
+import pytest
 
 from igpm_pem_spark.queries.metricsq7 import (
     _q_decayed_counts,
@@ -71,6 +72,23 @@ def test_percolation_curve_matches_python(spark, tmp_path):
             else (None, 0, None)
         )
         assert got[pct] == ref, (pct, got[pct], ref)
+
+
+def test_percolation_curve_releases_edge_cache_when_cc_raises(spark, tmp_path, monkeypatch):
+    from igpm_pem_spark.operators import components
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+
+    def boom(*args, **kwargs):
+        assert not cache.isEmpty()  # the failure lands while the cache is held
+        raise RuntimeError("injected CC failure")
+
+    _write_lineitem(spark, tmp_path, [(1, 2), (2, 3), (4, 5)])
+    spark.catalog.clearCache()
+    monkeypatch.setattr(components, "connected_components", boom)
+    with pytest.raises(RuntimeError, match="injected"):
+        _q_percolation_curve(spark, str(tmp_path))
+    assert cache.isEmpty()
 
 
 def test_decayed_counts_hand_trace(spark, tmp_path):

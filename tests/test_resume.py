@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 
+from igpm_pem_spark.lineage import LineageLog, SuperstepStats
 from igpm_pem_spark.operators.components import connected_components
 from igpm_pem_spark.operators.pagerank import pagerank
 from igpm_pem_spark.sources.fixtures import ba_graph
@@ -113,6 +114,74 @@ def test_torn_superstep_is_ignored(spark, tmp_path):
     resumed = pagerank(spark, edges, tol=1e-8, max_iter=300, checkpoint_dir=ckpt)
     assert resumed.resumed_from == 1  # not 2
     assert resumed.converged
+
+
+def test_crash_before_marker_resumes_with_exactly_once_lineage(spark, tmp_path):
+    """A crash after superstep 2's lineage file but before its commit
+    marker: resume redoes superstep 2, reaches the uninterrupted answer,
+    and the redone superstep's lineage rows replace the first attempt's."""
+    edges = _edges(spark)
+    ckpt = str(tmp_path / "crash")
+    full = pagerank(spark, edges, tol=1e-8, max_iter=300)
+    partial = pagerank(spark, edges, tol=1e-8, max_iter=3, checkpoint_dir=ckpt)
+    assert partial.supersteps == 3
+    os.remove(os.path.join(ckpt, "_committed_2.json"))
+
+    resumed = pagerank(spark, edges, tol=1e-8, max_iter=300, checkpoint_dir=ckpt)
+    assert resumed.resumed_from == 1 and resumed.converged
+    got = {r.id: r["rank"] for r in resumed.ranks.collect()}
+    want = {r.id: r["rank"] for r in full.ranks.collect()}
+    assert max(abs(got[k] - want[k]) for k in want) < 1e-9
+
+    keys = [(r.superstep, r.partition_id)
+            for r in LineageLog(spark, ckpt).lineage_df().collect()]
+    assert len(keys) == len(set(keys))
+    assert sorted({s for s, _ in keys}) == list(range(resumed.stats[-1].superstep + 1))
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_durable_commit_spark_work_and_lineage_table(spark, tmp_path):
+    """A durable commit is one Spark job (the state write: the read-back
+    runs no schema inference); the lineage file and marker are driver
+    writes. A lineage directory that still holds a Spark-appended part
+    file from an older checkpoint reads as one table with the new files."""
+    ckpt = str(tmp_path / "ck")
+    log = LineageLog(spark, ckpt)
+    state = spark.range(8).selectExpr("id", "CAST(id AS DOUBLE) / 8 AS rank")
+    stats = SuperstepStats(
+        1, 0.5, 8, 0.1, [{"partition_id": 0, "edge_count": 3, "delta_norm": 0.5}]
+    )
+    assert _jobs_in_group(
+        spark, "durable-commit-state", lambda: log.commit_state(1, state, stats)
+    ) == 1
+    assert _jobs_in_group(
+        spark, "durable-commit-finalize", lambda: log.finalize(1, stats)
+    ) == 0
+    assert log.last_committed() == 1
+
+    lineage_dir = os.path.join(ckpt, "lineage")
+    spark.range(1).selectExpr(
+        "CAST(0 AS INT) AS superstep", "CAST(0 AS INT) AS partition_id",
+        "CAST(5 AS BIGINT) AS edge_count", "0.25D AS delta_norm",
+        "0.5D AS wall_time_sec",
+    ).coalesce(1).write.mode("append").parquet(lineage_dir)
+    lineage = log.lineage_df()
+    assert lineage.schema.simpleString() == (
+        "struct<superstep:int,partition_id:int,edge_count:bigint,"
+        "delta_norm:double,wall_time_sec:double>"
+    )
+    want = [(0, 0, 5, 0.25, 0.5), (1, 0, 3, 0.5, 0.1)]
+    assert sorted(map(tuple, lineage.collect())) == want
+    assert sorted(map(tuple, spark.read.parquet(lineage_dir).collect())) == want
 
 
 def test_sssp_kill_resume_matches_uninterrupted(spark, tmp_path):

@@ -3,6 +3,7 @@ what the exact baseline retrieves (recall@k), not merely run."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from igpm_pem_spark.operators.similarity import (
@@ -65,6 +66,25 @@ def test_ann_degenerate_bucket_cap(spark):
     assert len(uncapped) == 60 * 59 // 2
     topk_capped = ann_lsh_topk(e, query_mod=1, max_bucket=50).toPandas()
     assert len(topk_capped) == 0
+
+
+def test_ann_releases_signature_cache_when_pair_build_raises(spark, monkeypatch):
+    """A pair build that raises must not leak the persisted signature
+    relation of either ANN path."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+
+    def boom(*args, **kwargs):
+        assert not cache.isEmpty()  # the failure lands while the cache is held
+        raise RuntimeError("injected pair-build failure")
+
+    rows = [(i, [float(i % 7), 1.0, float(i % 3), 2.0]) for i in range(40)]
+    e = spark.createDataFrame(rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>")
+    spark.catalog.clearCache()
+    monkeypatch.setattr(type(e), "localCheckpoint", boom)
+    for ann in (ann_lsh_topk, near_dup_pairs_ann):
+        with pytest.raises(RuntimeError, match="injected"):
+            ann(e)
+        assert cache.isEmpty()
 
 
 def test_hyperplane_buckets_deterministic_across_partitionings(spark):
