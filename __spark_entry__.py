@@ -19,7 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from igpm_pem_spark.queries import all_queries
-from igpm_pem_spark.queries._common import G_PARTS_SQL, G_SPARSE_SQL, TABLES, edges as _edges  # noqa: F401 (bench.py uses these)
+from igpm_pem_spark.queries._common import G_PARTS_SQL, G_SPARSE_SQL, TABLES, edges as _edges  # noqa: F401 (re-exported for drivers)
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -115,9 +115,9 @@ class LineageLog:
             # materialize a cache before committing (commit_and_stats
             # does this by running the stats job on a persisted state
             # first) so the leaf inherits real InMemoryRelation bytes.
-            # Linear-plan kernels (pagerank's value/delta steps) commit
-            # here directly: their estimate grows additively in digits,
-            # which stays harmless for hundreds of supersteps.
+            # The driver's fixed-iteration commits (PageRank at tol <= 0,
+            # linear plans) come here directly: their estimate grows
+            # additively in digits, harmless for hundreds of supersteps.
             #
             # coalesce bounds the checkpointed PARTITION count at the
             # kernel's declared width: a state plan that unions several
@@ -128,9 +128,16 @@ class LineageLog:
             # branches inherit the carried state's partitioning, and the
             # per-commit union then grows (×branches)^superstep partitions
             # (measured as a 3.6M-task stage storm in the onion peel).
-            # Narrow coalesce (no shuffle) is a no-op when width is
-            # already ≤ num_partitions.
-            if num_partitions:
+            # Only a wider state is coalesced: coalesce drops the plan's
+            # known hash partitioning, and a state that keeps it (PageRank's
+            # ranks are hash-partitioned by id) spares the next superstep's
+            # state-side exchange and its consumers' shuffles. The width
+            # is read off the plan localCheckpoint executes next (no
+            # second planning pass, unlike DataFrame.rdd).
+            if num_partitions and (
+                state._jdf.queryExecution().toRdd().getNumPartitions()
+                > num_partitions
+            ):
                 state = state.coalesce(num_partitions)
             return state.localCheckpoint(eager=True)
         path = self._state_path(superstep)

@@ -48,7 +48,7 @@ def _reach(
     visited = seeds.select("id").distinct().localCheckpoint(eager=True)
     n_visited = visited.count()
     frontier = visited
-    # AQE + codegen off for the BFS loop (see pagerank's loop note)
+    # AQE + codegen off for the BFS loop (see _superstep.loop_confs)
     with loop_confs(edges.sparkSession):
         while True:
             vis = visited

@@ -115,7 +115,7 @@ def betweenness_seeded(
 
     levels = [lev0]
     visited = lev0.select("sid", "v")
-    # AQE + codegen off for the loop (see pagerank's loop note)
+    # AQE + codegen off for the loop (see _superstep.loop_confs)
     with loop_confs(spark):
         for _ in range(max_hops):
             frontier = levels[-1]
@@ -305,7 +305,7 @@ def edge_betweenness_seeded(
 
     levels = [lev0]
     visited = lev0.select("sid", "v")
-    # AQE + codegen off for the loop (see pagerank's loop note)
+    # AQE + codegen off for the loop (see _superstep.loop_confs)
     with loop_confs(spark):
         for _ in range(max_hops):
             frontier = levels[-1]
@@ -471,7 +471,7 @@ def hitting_time_truncated(
         for r in deg.orderBy(F.col("d").desc(), "id").limit(n_hubs).collect()
     ]
     h = deg.select("id", F.lit(0.0).alias("h"))
-    # AQE + codegen off for the loop (see pagerank's loop note)
+    # AQE + codegen off for the loop (see _superstep.loop_confs)
     with loop_confs(spark):
         for _ in range(iters):
             s = (

@@ -125,7 +125,7 @@ def kmeans_assign(
         return e.select("vec_id", "v", _assign_expr(c).alias("cluster"))
 
     assigned = None
-    # AQE + codegen off for the loop (see pagerank's loop note)
+    # AQE + codegen off for the loop (see _superstep.loop_confs)
     with loop_confs(spark):
         for _ in range(iters):
             assigned = _assigned(centroids)

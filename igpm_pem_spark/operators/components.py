@@ -17,13 +17,12 @@ settled vertices are never recomputed.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..lineage import LineageLog, SuperstepStats
-from ._superstep import commit_and_stats, edge_partition_counts, loop_confs
+from ..lineage import SuperstepStats
+from ._superstep import edge_partition_counts, released, run
 from .graph import kernel_nparts, partitioned_adjacency, vertex_ids
 
 
@@ -138,59 +137,25 @@ def connected_components(
         num_partitions = kernel_nparts(edges)
     adj = partitioned_adjacency(edges, num_partitions, directed=False).persist()
     verts = vertex_ids(adj).repartition(num_partitions, "id").persist()
-    edge_parts = edge_partition_counts(adj)
-
-    log = LineageLog(spark, checkpoint_dir)
-    start_step, resumed_from = 0, None
-    state: DataFrame | None = None
-    if resume and checkpoint_dir:
-        last = log.last_committed()
-        if last is not None:
-            state = log.load_state(last)
-            start_step, resumed_from = last + 1, last
-    if state is None:
-        state = verts.select(
-            "id", F.col("id").alias("component"), F.lit(True).alias("changed")
-        ).localCheckpoint(eager=True)
-
-    converged = False
-    step = start_step
-    with loop_confs(spark):
-        while step < max_iter:
-            t0 = time.time()
-            block = min(steps_per_commit, max_iter - step)
-            new_state = state
-            for b in range(block):
-                # localCheckpoint per sub-step: the shortcut's self-join
-                # plus the edge step's frontier/state refs re-EXECUTE and
-                # re-analyze their input per reference, so a lazy chain
-                # across the block multiplies both work and plan size ~4×
-                # per sub-step (measured 21.9 s vs 10.1 s for the same 12
-                # supersteps at sf0.1). The eager checkpoint is one job
-                # per sub-step and resets plan + lineage to a leaf. EVERY
-                # sub-step checkpoints: eliding the last one in favor of
-                # the commit barrier saves one tiny job but re-executes
-                # that sub-step's E-sized join ~2× through the multi-ref
-                # consumers — the wrong trade at scale (measured a wash
-                # at sf0.1).
-                stepped = _cc_step(new_state, adj, num_partitions)
-                new_state = _cc_shortcut(stepped).localCheckpoint(eager=True)
-            step += block
-            state, delta, _ = commit_and_stats(
-                log, step - 1, new_state,
-                F.col("changed").cast("double"), F.col("changed"), edge_parts, t0,
-                num_partitions=num_partitions,
-            )
-            if delta == 0.0:
-                converged = True
-                break
-    adj.unpersist()
-    verts.unpersist()
-    result = ComponentsResult(
-        state.select("id", "component"), step, converged, resumed_from
+    with released(adj, verts):
+        res = run(
+            spark,
+            lambda: verts.select(
+                "id", F.col("id").alias("component"), F.lit(True).alias("changed")
+            ).localCheckpoint(eager=True),
+            lambda s: _cc_shortcut(_cc_step(s, adj, num_partitions)),
+            max_iter=max_iter,
+            edge_parts=edge_partition_counts(adj),
+            num_partitions=num_partitions,
+            steps_per_commit=steps_per_commit,
+            eager_steps=True,
+            checkpoint_dir=checkpoint_dir,
+            resume=resume,
+        )
+    return ComponentsResult(
+        res.state.select("id", "component"), res.supersteps, res.converged,
+        res.resumed_from, res.stats,
     )
-    result.stats = log.stats
-    return result
 
 
 def component_sizes(components: DataFrame) -> DataFrame:

@@ -56,7 +56,7 @@ def eigenvector_centrality(
         )
     ).repartition(num_partitions, "src").persist()
     state = ids.withColumn("val", F.lit(1.0)).localCheckpoint(eager=True)
-    # AQE + codegen off for the loop (see pagerank's loop note)
+    # AQE + codegen off for the loop (see _superstep.loop_confs)
     with loop_confs(spark):
         for _ in range(max_iter):
             msgs = me.join(

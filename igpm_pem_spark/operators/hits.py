@@ -98,7 +98,7 @@ def hits(
         .withColumn("val", F.lit(1.0))
         .localCheckpoint(eager=True)
     )
-    # AQE + codegen off for the loop (see pagerank's loop note)
+    # AQE + codegen off for the loop (see _superstep.loop_confs)
     with loop_confs(edges.sparkSession):
         for step in range(max_iter):
             msgs = bm.join(

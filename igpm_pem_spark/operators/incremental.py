@@ -337,9 +337,8 @@ def incremental_labelprop(
     ``incremental/query_call.py:130-165``). Tests pin stability (one
     more full sweep changes nothing) and batch equality on graphs with
     unambiguous communities."""
-    from ..lineage import LineageLog
-    from ._superstep import commit_and_stats, edge_partition_counts
-    from .labelprop import _lpa_step, label_propagation
+    from ._superstep import edge_partition_counts, released, run
+    from .labelprop import label_propagation
 
     if num_partitions is None:
         num_partitions = kernel_nparts(edges)
@@ -369,33 +368,25 @@ def incremental_labelprop(
                 .distinct()
             )
             adj = partitioned_adjacency(cum, num_partitions).persist()
-            verts = vertex_ids(adj)
-            state = (
-                verts.join(labels, "id", "left")
-                .join(touched.withColumn("t", F.lit(True)), "id", "left")
-                .select(
-                    "id",
-                    F.coalesce(F.col("label"), F.col("id")).alias("label"),
-                    F.coalesce(F.col("t"), F.lit(False)).alias("changed"),
+            with released(adj):
+                res = run(
+                    spark,
+                    lambda: vertex_ids(adj)
+                    .join(labels, "id", "left")
+                    .join(touched.withColumn("t", F.lit(True)), "id", "left")
+                    .select(
+                        "id",
+                        F.coalesce(F.col("label"), F.col("id")).alias("label"),
+                        F.coalesce(F.col("t"), F.lit(False)).alias("changed"),
+                    )
+                    .localCheckpoint(eager=True),
+                    lambda s: _lpa_step_frontier(s, adj, num_partitions),
+                    max_iter=max_iter_per_step,
+                    edge_parts=edge_partition_counts(adj),
+                    num_partitions=num_partitions,
                 )
-                .localCheckpoint(eager=True)
-            )
-            edge_parts = edge_partition_counts(adj)
-            log = LineageLog(spark, None)
-            supersteps = 0
-            while supersteps < max_iter_per_step:
-                t1 = time.time()
-                new_state = _lpa_step_frontier(state, adj, num_partitions)
-                supersteps += 1
-                state, delta, _ = commit_and_stats(
-                    log, supersteps - 1, new_state,
-                    F.col("changed").cast("double"), F.col("changed"),
-                    edge_parts, t1,
-                )
-                if delta == 0.0:
-                    break
-            labels = state.select("id", "label").localCheckpoint(eager=True)
-            adj.unpersist()
+                labels = res.state.select("id", "label").localCheckpoint(eager=True)
+            supersteps = res.supersteps
         wall = time.time() - t0
         result.steps.append(
             StepMetrics(
@@ -479,8 +470,7 @@ def incremental_components(
     ``vertex_ids`` distinct per bucket. Delta parts are compacted
     (union → one repartition of DELTA data only) past ``_MAX_ADJ_PARTS``
     so a long replay doesn't accumulate per-superstep join fan-out."""
-    from ..lineage import LineageLog
-    from ._superstep import commit_and_stats, edge_partition_counts, loop_confs
+    from ._superstep import edge_partition_counts, run
     from .components import _cc_shortcut, _cc_step, connected_components
 
     if num_partitions is None:
@@ -540,39 +530,25 @@ def incremental_components(
             new_vs = touched.join(comp, "id", "left_anti").select(
                 "id", F.col("id").alias("component")
             )
-            state = (
-                comp.unionByName(new_vs)
+            res = run(
+                spark,
+                lambda: comp.unionByName(new_vs)
                 .join(touched.withColumn("t", F.lit(True)), "id", "left")
                 .select(
                     "id",
                     "component",
                     F.coalesce(F.col("t"), F.lit(False)).alias("changed"),
                 )
-                .localCheckpoint(eager=True)
+                .localCheckpoint(eager=True),
+                lambda s: _cc_shortcut(_cc_step(s, adj_parts, num_partitions)),
+                max_iter=100,
+                edge_parts=edge_parts,
+                num_partitions=num_partitions,
+                steps_per_commit=2,
+                eager_steps=True,
             )
-            log = LineageLog(spark, None)
-            supersteps = 0
-            with loop_confs(spark):
-                while supersteps < 100:
-                    t1 = time.time()
-                    new_state = state
-                    for _ in range(2):
-                        # localCheckpoint per sub-step — the shortcut's
-                        # self-join quadruples plan + work per chained
-                        # sub-step otherwise (see the batch kernel's
-                        # comment)
-                        new_state = _cc_shortcut(
-                            _cc_step(new_state, adj_parts, num_partitions)
-                        ).localCheckpoint(eager=True)
-                    supersteps += 2
-                    state, delta, _ = commit_and_stats(
-                        log, supersteps - 1, new_state,
-                        F.col("changed").cast("double"), F.col("changed"),
-                        edge_parts, t1,
-                    )
-                    if delta == 0.0:
-                        break
-            comp = state.select("id", "component").localCheckpoint(eager=True)
+            supersteps = res.supersteps
+            comp = res.state.select("id", "component").localCheckpoint(eager=True)
         wall = time.time() - t0
         result.steps.append(
             StepMetrics(
@@ -614,8 +590,7 @@ def incremental_sssp(
     PEM partial-execution idea exactly (SURVEY.md §4 O2), with no
     heuristic scope: the result equals batch ``sssp`` on the full graph.
     """
-    from ..lineage import LineageLog
-    from ._superstep import commit_and_stats, edge_partition_counts
+    from ._superstep import edge_partition_counts, released, run
     from .sssp import _prep, _sssp_step, sssp
 
     if num_partitions is None:
@@ -671,24 +646,18 @@ def incremental_sssp(
             full_adj = _prep(cum, weight_col, directed=False).repartition(
                 num_partitions, "src"
             ).persist()
-            edge_parts = edge_partition_counts(full_adj)
-            log = LineageLog(spark, None)
-            supersteps = 0
-            while supersteps < 100:
-                t1 = time.time()
-                new_state = state
-                for _ in range(2):
-                    new_state = _sssp_step(new_state, full_adj, num_partitions)
-                supersteps += 2
-                state, delta, _ = commit_and_stats(
-                    log, supersteps - 1, new_state,
-                    F.col("changed").cast("double"), F.col("changed"),
-                    edge_parts, t1,
+            with released(full_adj):
+                res = run(
+                    spark,
+                    lambda: state,
+                    lambda s: _sssp_step(s, full_adj, num_partitions),
+                    max_iter=100,
+                    edge_parts=edge_partition_counts(full_adj),
+                    num_partitions=num_partitions,
+                    steps_per_commit=2,
                 )
-                if delta == 0.0:
-                    break
-            dist = state.select("id", "dist").localCheckpoint(eager=True)
-            full_adj.unpersist()
+                dist = res.state.select("id", "dist").localCheckpoint(eager=True)
+            supersteps = res.supersteps
         wall = time.time() - t0
         result.steps.append(
             StepMetrics(

@@ -55,7 +55,7 @@ def k_core(
     peeled: list[int] = []
     converged = False
     rounds = 0
-    # AQE + codegen off for the loop (see pagerank's loop note)
+    # AQE + codegen off for the loop (see _superstep.loop_confs)
     with loop_confs(spark):
         while rounds < max_rounds:
             rounds += 1
@@ -130,8 +130,7 @@ def coreness_hindex(
     the newest committed round instead of re-peeling from degrees."""
     from pyspark.sql import Window
 
-    from ..lineage import LineageLog
-    from ._superstep import commit_and_stats, edge_partition_counts
+    from ._superstep import edge_partition_counts, run
 
     if num_partitions is None:
         num_partitions = kernel_nparts(edges)
@@ -142,63 +141,45 @@ def coreness_hindex(
         .repartition(num_partitions, "nbr")
         .localCheckpoint(eager=True)
     )
-    edge_parts = edge_partition_counts(sym)
-
-    log = LineageLog(spark, checkpoint_dir)
-    start_round, resumed_from = 0, None
-    state: DataFrame | None = None
-    if resume and checkpoint_dir:
-        last = log.last_committed()
-        if last is not None:
-            state = log.load_state(last)
-            start_round, resumed_from = last + 1, last
-    if state is None:
-        state = (
-            sym.groupBy(F.col("v").alias("id"))
-            .agg(F.count("*").alias("c"))
-            .repartition(num_partitions, "id")
-            .localCheckpoint(eager=True)
-        )
     w = Window.partitionBy("v").orderBy(F.col("c").desc())
-    converged = False
-    rounds = start_round
-    # AQE + codegen off for the loop (see pagerank's loop note)
-    with loop_confs(spark):
-        while rounds < max_rounds:
-            t0 = time.time()
-            rounds += 1
-            nbrvals = sym.join(
-                state.select(F.col("id").alias("nbr"), "c"), "nbr"
-            ).select("v", "c")
-            cum = (
-                nbrvals.groupBy("v", "c")
-                .agg(F.count("*").alias("n"))
-                .select("v", "c", F.sum("n").over(w).alias("cum"))
+
+    def step(state: DataFrame) -> DataFrame:
+        nbrvals = sym.join(
+            state.select(F.col("id").alias("nbr"), "c"), "nbr"
+        ).select("v", "c")
+        cum = (
+            nbrvals.groupBy("v", "c")
+            .agg(F.count("*").alias("n"))
+            .select("v", "c", F.sum("n").over(w).alias("cum"))
+        )
+        return (
+            cum.groupBy(F.col("v").alias("id"))
+            .agg(F.max(F.least(F.col("c"), F.col("cum"))).alias("c_new"))
+            .join(state.select("id", F.col("c").alias("c_old")), "id")
+            .select(
+                "id",
+                F.col("c_new").alias("c"),
+                (F.col("c_new") != F.col("c_old")).alias("changed"),
             )
-            new_state = (
-                cum.groupBy(F.col("v").alias("id"))
-                .agg(F.max(F.least(F.col("c"), F.col("cum"))).alias("c_new"))
-                .join(state.select("id", F.col("c").alias("c_old")), "id")
-                .select(
-                    "id",
-                    F.col("c_new").alias("c"),
-                    (F.col("c_new") != F.col("c_old")).alias("changed"),
-                )
-            )
-            state, delta, _ = commit_and_stats(
-                log, rounds - 1, new_state,
-                F.col("changed").cast("double"), F.col("changed"), edge_parts, t0,
-                num_partitions=num_partitions,
-            )
-            if delta == 0.0:
-                converged = True
-                break
-    result = CorenessResult(
-        state.select("id", F.col("c").alias("coreness")), rounds, converged,
-        resumed_from,
+        )
+
+    res = run(
+        spark,
+        lambda: sym.groupBy(F.col("v").alias("id"))
+        .agg(F.count("*").alias("c"))
+        .repartition(num_partitions, "id")
+        .localCheckpoint(eager=True),
+        step,
+        max_iter=max_rounds,
+        edge_parts=edge_partition_counts(sym),
+        num_partitions=num_partitions,
+        checkpoint_dir=checkpoint_dir,
+        resume=resume,
     )
-    result.stats = log.stats
-    return result
+    return CorenessResult(
+        res.state.select("id", F.col("c").alias("coreness")), res.supersteps,
+        res.converged, res.resumed_from, res.stats,
+    )
 
 
 @dataclass
@@ -294,7 +275,7 @@ def onion_layers(
     )
     peeled: list[int] = []
     converged = False
-    # AQE + codegen off for the loop (see pagerank's loop note)
+    # AQE + codegen off for the loop (see _superstep.loop_confs)
     with loop_confs(spark):
         while rounds < max_rounds:
             t0 = time.time()
@@ -418,7 +399,7 @@ def s_core(
     peeled: list[int] = []
     converged = False
     rounds = 0
-    # AQE + codegen off for the loop (see pagerank's loop note)
+    # AQE + codegen off for the loop (see _superstep.loop_confs)
     with loop_confs(spark):
         while rounds < max_rounds:
             rounds += 1

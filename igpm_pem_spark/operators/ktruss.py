@@ -76,7 +76,7 @@ def k_truss(
     )
     dropped: list[int] = []
     converged, rounds = False, 0
-    # AQE + codegen off for the loop (see pagerank's loop note)
+    # AQE + codegen off for the loop (see _superstep.loop_confs)
     with loop_confs(spark):
         while rounds < max_rounds:
             rounds += 1
@@ -138,12 +138,9 @@ def trussness_hindex(
     the kernels' resumability discipline (the static triangle relation is
     re-derived on resume; only the iteration state is durable).
     """
-    import time
-
     from pyspark.sql import Window
 
-    from ..lineage import LineageLog
-    from ._superstep import commit_and_stats, edge_partition_counts
+    from ._superstep import edge_partition_counts, run
 
     if num_partitions is None:
         num_partitions = kernel_nparts(edges)
@@ -173,91 +170,69 @@ def trussness_hindex(
         ).alias("ed")
     ).select("ed.src", "ed.dst")
     sup = tri_edges.groupBy("src", "dst").agg(F.count("*").alias("s"))
-    edge_parts = edge_partition_counts(tris)
-
-    log = LineageLog(spark, checkpoint_dir)
-    start_round, resumed_from = 0, None
-    state: DataFrame | None = None
-    if resume and checkpoint_dir:
-        last = log.last_committed()
-        if last is not None:
-            state = log.load_state(last)
-            start_round, resumed_from = last + 1, last
-    if state is None:
-        state = (
-            e.join(sup, ["src", "dst"], "left")
-            .select("src", "dst", F.coalesce(F.col("s"), F.lit(0)).alias("s"))
-            .repartition(num_partitions, "src", "dst")
-            .localCheckpoint(eager=True)
-        )
     w = Window.partitionBy("src", "dst").orderBy(F.col("rho").desc())
-    rounds, converged = start_round, False
-    # AQE + codegen off for the loop (see pagerank's loop note)
-    with loop_confs(spark):
-        while rounds < max_rounds:
-            t0 = time.time()
-            rounds += 1
-            sab = state.select(
-                F.col("src").alias("a"), F.col("dst").alias("b"), F.col("s").alias("s_ab")
-            )
-            sbc = state.select(
-                F.col("src").alias("b"), F.col("dst").alias("c"), F.col("s").alias("s_bc")
-            )
-            sac = state.select(
-                F.col("src").alias("a"), F.col("dst").alias("c"), F.col("s").alias("s_ac")
-            )
-            tv = tris.join(sab, ["a", "b"]).join(sbc, ["b", "c"]).join(sac, ["a", "c"])
-            rho = tv.select(
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.col("a").alias("src"), F.col("b").alias("dst"),
-                            F.least("s_bc", "s_ac").alias("rho"),
-                        ),
-                        F.struct(
-                            F.col("b").alias("src"), F.col("c").alias("dst"),
-                            F.least("s_ab", "s_ac").alias("rho"),
-                        ),
-                        F.struct(
-                            F.col("a").alias("src"), F.col("c").alias("dst"),
-                            F.least("s_ab", "s_bc").alias("rho"),
-                        ),
-                    )
-                ).alias("x")
-            ).select("x.src", "x.dst", "x.rho")
-            cum = (
-                rho.groupBy("src", "dst", "rho")
-                .agg(F.count("*").alias("n"))
-                .select("src", "dst", "rho", F.sum("n").over(w).alias("cum"))
-            )
-            h = cum.groupBy("src", "dst").agg(
-                F.max(F.least(F.col("rho"), F.col("cum"))).alias("h")
-            )
-            new_state = state.select("src", "dst", F.col("s").alias("s_old")).join(
-                h, ["src", "dst"], "left"
-            ).select(
-                "src", "dst",
-                F.least(F.col("s_old"), F.coalesce(F.col("h"), F.lit(0))).alias("s"),
-                (
-                    F.least(F.col("s_old"), F.coalesce(F.col("h"), F.lit(0)))
-                    != F.col("s_old")
-                ).alias("changed"),
-            )
-            state, delta, _ = commit_and_stats(
-                log, rounds - 1, new_state,
-                F.col("changed").cast("double"), F.col("changed"), edge_parts, t0,
-                num_partitions=num_partitions,
-            )
-            if delta == 0.0:
-                converged = True
-                break
-    result = TrussnessResult(
-        state.select(
+
+    def step(state: DataFrame) -> DataFrame:
+        sab = state.select(
+            F.col("src").alias("a"), F.col("dst").alias("b"), F.col("s").alias("s_ab")
+        )
+        sbc = state.select(
+            F.col("src").alias("b"), F.col("dst").alias("c"), F.col("s").alias("s_bc")
+        )
+        sac = state.select(
+            F.col("src").alias("a"), F.col("dst").alias("c"), F.col("s").alias("s_ac")
+        )
+        tv = tris.join(sab, ["a", "b"]).join(sbc, ["b", "c"]).join(sac, ["a", "c"])
+        rho = tv.select(
+            F.explode(
+                F.array(
+                    F.struct(
+                        F.col("a").alias("src"), F.col("b").alias("dst"),
+                        F.least("s_bc", "s_ac").alias("rho"),
+                    ),
+                    F.struct(
+                        F.col("b").alias("src"), F.col("c").alias("dst"),
+                        F.least("s_ab", "s_ac").alias("rho"),
+                    ),
+                    F.struct(
+                        F.col("a").alias("src"), F.col("c").alias("dst"),
+                        F.least("s_ab", "s_bc").alias("rho"),
+                    ),
+                )
+            ).alias("x")
+        ).select("x.src", "x.dst", "x.rho")
+        cum = (
+            rho.groupBy("src", "dst", "rho")
+            .agg(F.count("*").alias("n"))
+            .select("src", "dst", "rho", F.sum("n").over(w).alias("cum"))
+        )
+        h = cum.groupBy("src", "dst").agg(
+            F.max(F.least(F.col("rho"), F.col("cum"))).alias("h")
+        )
+        s_new = F.least(F.col("s_old"), F.coalesce(F.col("h"), F.lit(0)))
+        return state.select("src", "dst", F.col("s").alias("s_old")).join(
+            h, ["src", "dst"], "left"
+        ).select("src", "dst", s_new.alias("s"), (s_new != F.col("s_old")).alias("changed"))
+
+    res = run(
+        spark,
+        lambda: e.join(sup, ["src", "dst"], "left")
+        .select("src", "dst", F.coalesce(F.col("s"), F.lit(0)).alias("s"))
+        .repartition(num_partitions, "src", "dst")
+        .localCheckpoint(eager=True),
+        step,
+        max_iter=max_rounds,
+        edge_parts=edge_partition_counts(tris),
+        num_partitions=num_partitions,
+        checkpoint_dir=checkpoint_dir,
+        resume=resume,
+    )
+    return TrussnessResult(
+        res.state.select(
             "src", "dst", (F.col("s") + F.lit(2)).cast("long").alias("trussness")
         ),
-        rounds,
-        converged,
-        resumed_from,
+        res.supersteps,
+        res.converged,
+        res.resumed_from,
+        res.stats,
     )
-    result.stats = log.stats
-    return result

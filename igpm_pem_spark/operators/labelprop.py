@@ -21,13 +21,12 @@ community-size threshold (SURVEY.md §3.3) with deterministic control.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..lineage import LineageLog, SuperstepStats
-from ._superstep import commit_and_stats, edge_partition_counts, loop_confs
+from ..lineage import SuperstepStats
+from ._superstep import edge_partition_counts, fixpoint, released, run
 from .graph import kernel_nparts, partitioned_adjacency, vertex_ids
 
 
@@ -87,54 +86,25 @@ def label_propagation(
         num_partitions = kernel_nparts(edges)
     adj = partitioned_adjacency(edges, num_partitions, directed=False).persist()
     verts = vertex_ids(adj).repartition(num_partitions, "id").persist()
-    edge_parts = edge_partition_counts(adj)
-
-    log = LineageLog(spark, checkpoint_dir)
-    start_step, resumed_from = 0, None
-    state: DataFrame | None = None
-    if resume and checkpoint_dir:
-        last = log.last_committed()
-        if last is not None:
-            state = log.load_state(last)
-            start_step, resumed_from = last + 1, last
-    if state is None:
-        state = verts.select(
-            "id", F.col("id").alias("label"), F.lit(True).alias("changed")
-        ).localCheckpoint(eager=True)
-
-    converged = False
-    step = start_step
-    # AQE + codegen off for the loop — fresh plans per superstep make the
-    # driver-serial planning work dominate (see pagerank's loop note)
-    with loop_confs(spark):
-        while step < max_iter:
-            t0 = time.time()
-            block = min(steps_per_commit, max_iter - step)
-            new_state, intermediates = state, []
-            for b in range(block):
-                new_state = _lpa_step(new_state, adj, num_partitions)
-                if b < block - 1:
-                    # lazy localCheckpoint truncates the LOGICAL plan (lazy
-                    # persist only dedupes physically; analysis stays
-                    # exponential in block — see pagerank's block loop)
-                    new_state = new_state.localCheckpoint(eager=False)
-                    intermediates.append(new_state)
-            step += block
-            state, delta, _ = commit_and_stats(
-                log, step - 1, new_state,
-                F.col("changed").cast("double"), F.col("changed"), edge_parts, t0,
-                num_partitions=num_partitions,
-            )
-            for df in intermediates:
-                df.unpersist()
-            if stop_on_stable and delta == 0.0:
-                converged = True
-                break
-    adj.unpersist()
-    verts.unpersist()
-    result = LabelPropResult(state.select("id", "label"), step, converged, resumed_from)
-    result.stats = log.stats
-    return result
+    with released(adj, verts):
+        res = run(
+            spark,
+            lambda: verts.select(
+                "id", F.col("id").alias("label"), F.lit(True).alias("changed")
+            ).localCheckpoint(eager=True),
+            lambda s: _lpa_step(s, adj, num_partitions),
+            until=fixpoint if stop_on_stable else None,
+            max_iter=max_iter,
+            edge_parts=edge_partition_counts(adj),
+            num_partitions=num_partitions,
+            steps_per_commit=steps_per_commit,
+            checkpoint_dir=checkpoint_dir,
+            resume=resume,
+        )
+    return LabelPropResult(
+        res.state.select("id", "label"), res.supersteps, res.converged,
+        res.resumed_from, res.stats,
+    )
 
 
 def modularity_local_move(

@@ -117,7 +117,7 @@ def minimum_spanning_forest(
         )
     chosen_counts: list[int] = []
     converged = False
-    # AQE + codegen off for the loop (see pagerank's loop note)
+    # AQE + codegen off for the loop (see _superstep.loop_confs)
     with loop_confs(spark):
         while rounds < max_rounds:
             t0 = _time.time()

@@ -14,12 +14,12 @@ Two execution modes:
   correctness gate): uniform start, dangling mass spread uniformly,
   L1 convergence.
 * ``delta`` — residual propagation: only vertices whose residual exceeds
-  ``frontier_eps`` send messages. This is the Spark-idiomatic realization
+  ``tol/(10n)`` send messages. This is the Spark-idiomatic realization
   of IGPM-PEM's partial-execution idea (recompute only the affected
   subgraph: ``incremental/gray_incremental.py:473-478``): the frontier
   shrinks every superstep, so late supersteps touch a tiny fraction of
   the graph. Fixpoint identical to ``exact`` up to
-  ``alpha/(1-alpha) * frontier_eps * n`` total L1 error.
+  ``alpha/(1-alpha) * tol/10`` total L1 error.
 
 Scale design (100 TB / 1e9+ edges):
 * the edge table is shuffled ONCE (``partitioned_adjacency``) and every
@@ -30,26 +30,19 @@ Scale design (100 TB / 1e9+ edges):
   aggregating (O(E) shuffle) instead of map-side combining (O(V·P)
   partial-agg output — see ``_group_sum``); AQE skew-join splitting
   covers the join side on a real cluster;
-* each commit (a block of ``steps_per_commit`` supersteps) runs two
-  jobs of its own: materialize new state (parquet write or
-  localCheckpoint — the lineage-truncation barrier) + one per-partition
-  stats aggregation (delta norm, active count, lineage rows in a single
-  pass); the lineage file and commit marker are driver-side writes.
-  Per-call setup (vertex count, partition counts, start state) and
-  broadcast sides add jobs on top, so a call runs more than two jobs
-  per commit (perfbench's traced ``pagerank.jobs``);
-* kill/resume re-reads the newest committed superstep (see lineage.py).
+* the loop, its commits (a block of ``steps_per_commit`` supersteps
+  each) and kill/resume are the shared superstep driver's
+  (``_superstep.run``).
 """
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..lineage import LineageLog, SuperstepStats
-from ._superstep import commit_and_stats, edge_partition_counts, loop_confs
+from ..lineage import SuperstepStats
+from ._superstep import edge_partition_counts, released, run
 from .graph import kernel_nparts, partitioned_adjacency, vertex_ids
 
 
@@ -138,7 +131,6 @@ def pagerank(
     checkpoint_dir: str | None = None,
     resume: bool = True,
     mode: str = "exact",
-    frontier_eps: float | None = None,
     steps_per_commit: int = 1,
     personalization: dict | list | None = None,
     weight_col: str | None = None,
@@ -169,6 +161,8 @@ def pagerank(
     Near a fixpoint the iteration only has to correct what changed. A
     resumable checkpoint takes precedence.
     """
+    if mode not in ("exact", "delta"):
+        raise ValueError(f"unknown mode {mode!r}")
     if init_ranks is not None and mode != "exact":
         raise ValueError("init_ranks requires mode='exact'")
     if num_partitions is None:
@@ -177,281 +171,114 @@ def pagerank(
         edges, directed, num_partitions, weight_col
     ).persist()
     verts = vertex_ids(adj).repartition(num_partitions, "id").persist()
-    # every persisted relation is released on every exit path, a raising
-    # superstep included
-    caches = [adj, verts]
-    try:
+    # symmetrized graphs cannot have dangling vertices: every vertex in the
+    # edge list has an out-edge — no setup jobs, no per-block mass subplan
+    dangling = None
+    if directed:
+        dangling = verts.join(
+            adj.select(F.col("src").alias("id")).distinct(), "id", "left_anti"
+        ).persist()
+    with released(*[df for df in (adj, verts, dangling) if df is not None]):
         n = verts.count()
         if n == 0:
-            empty = spark.createDataFrame([], "id BIGINT, rank DOUBLE, delta DOUBLE")
-            return PageRankResult(empty.select("id", "rank"), 0, True, None)
+            empty = spark.createDataFrame([], "id BIGINT, rank DOUBLE")
+            return PageRankResult(empty, 0, True, None)
         edge_parts = edge_partition_counts(adj)
-        if directed:
-            dangling = verts.join(
-                adj.select(F.col("src").alias("id")).distinct(), "id", "left_anti"
-            ).persist()
-            caches.append(dangling)
-            n_dangling = dangling.count()
-        else:
-            # symmetrized graphs cannot have dangling vertices: every vertex in
-            # the edge list has an out-edge — skip the setup jobs and the
-            # per-block mass subplan entirely
-            dangling, n_dangling = None, 0
-
-        log = LineageLog(spark, checkpoint_dir)
-        start_step, resumed_from = 0, None
-        state: DataFrame | None = None
-        if resume and checkpoint_dir:
-            last = log.last_committed()
-            if last is not None:
-                state = log.load_state(last)
-                start_step, resumed_from = last + 1, last
-        if state is None and init_ranks is not None:
-            state = (
-                verts.join(init_ranks.select("id", "rank"), "id", "left")
-                .select("id", F.coalesce(F.col("rank"), F.lit(0.0)).alias("rank"))
-                .localCheckpoint(eager=True)
-            )
-
+        n_dangling = dangling.count() if directed else 0
+        # frontier / active threshold: residuals below it stop sending
+        # (delta mode) and count as settled in the commit stats
+        eps = tol / (10.0 * n) if mode == "delta" else tol / n
+        pvec = None
         if personalization is not None:
-            # seeded RWR: restart mass ∝ p instead of uniform. State carries the
-            # per-vertex restart weight as a column so each superstep is
+            # seeded RWR: restart mass ∝ p instead of uniform. State carries
+            # the per-vertex restart weight as a column so each superstep is
             # self-contained (no per-step join against the seed table).
             pvec = _personalization_df(spark, personalization)
-            if state is not None and "p" not in state.columns:
-                state = state.join(F.broadcast(pvec), "id", "left").na.fill(
-                    0.0, ["p"]
+
+        def start() -> DataFrame:
+            s = verts
+            if init_ranks is not None:
+                # shuffle_hash: never broadcast a rank vector (see _exact_step)
+                s = s.join(
+                    init_ranks.select("id", "rank").hint("shuffle_hash"), "id", "left"
                 )
-                if "delta" not in state.columns:
-                    state = state.withColumn("delta", F.lit(1.0))
+            if pvec is not None:
+                s = s.join(F.broadcast(pvec), "id", "left")
+            p = F.coalesce(F.col("p"), F.lit(0.0))
             if mode == "delta":
-                if frontier_eps is None:
-                    frontier_eps = tol / (10.0 * n)
-                if state is None:
-                    seeded = F.lit(1.0 - alpha) * F.coalesce(F.col("p"), F.lit(0.0))
-                    state = (
-                        verts.join(F.broadcast(pvec), "id", "left")
-                        .select(
-                            "id",
-                            seeded.alias("rank"),
-                            seeded.alias("delta"),
-                            F.coalesce(F.col("p"), F.lit(0.0)).alias("p"),
-                        )
-                        .localCheckpoint(eager=True)
-                    )
-                runner = _personalized_delta_step
-            elif mode == "exact":
-                if frontier_eps is None:
-                    frontier_eps = tol / n
-                if state is None:
-                    state = (
-                        verts.join(F.broadcast(pvec), "id", "left")
-                        .select(
-                            "id",
-                            F.lit(1.0 / n).alias("rank"),
-                            F.lit(1.0).alias("delta"),
-                            F.coalesce(F.col("p"), F.lit(0.0)).alias("p"),
-                        )
-                        .localCheckpoint(eager=True)
-                    )
-                runner = _personalized_exact_step
+                r0 = F.lit(1.0 - alpha) * p if pvec is not None else F.lit((1.0 - alpha) / n)
+                cols = [r0.alias("rank"), r0.alias("delta")]
+            elif init_ranks is not None:
+                cols = [F.coalesce(F.col("rank"), F.lit(0.0)).alias("rank")]
             else:
-                raise ValueError(f"unknown mode {mode!r}")
-        elif mode == "exact" and not directed:
-            # fast path: in the symmetrized graph every vertex has in-edges and
-            # none dangle, so a superstep is computable from contributions
-            # alone — the state is referenced ONCE per sub-step, the unrolled
-            # logical plan stays LINEAR (the generic step references state
-            # twice, doubling the plan per level and capping the unroll), and
-            # per-vertex deltas move to the commit boundary.
-            if frontier_eps is None:
-                frontier_eps = tol / n
-            if state is None:
-                state = verts.select("id", F.lit(1.0 / n).alias("rank")).localCheckpoint(
-                    eager=True
-                )
-            else:
-                state = state.select("id", "rank")
-            result = _run_exact_undirected(
-                spark, adj, verts, state, n, alpha, tol, max_iter, start_step,
-                steps_per_commit, edge_parts, log, frontier_eps, num_partitions,
-            )
-            result.resumed_from = resumed_from
-            result.stats = log.stats
-            result.n_vertices = n
-            return result
+                cols = [F.lit(1.0 / n).alias("rank")]
+            if pvec is not None:
+                cols.append(p.alias("p"))
+            return s.select("id", *cols).localCheckpoint(eager=True)
 
-        if personalization is not None:
-            pass  # runner/state already prepared above
-        elif mode == "exact":
-            if frontier_eps is None:
-                frontier_eps = tol / n  # convergence-reporting threshold only
-            if state is None:
-                state = verts.select(
-                    "id", F.lit(1.0 / n).alias("rank"), F.lit(1.0).alias("delta")
-                ).localCheckpoint(eager=True)
-            elif "delta" not in state.columns:
-                state = state.withColumn("delta", F.lit(1.0))
-            runner = _exact_step
-        elif mode == "delta":
-            if frontier_eps is None:
-                frontier_eps = tol / (10.0 * n)
-            if state is None:
-                base = (1.0 - alpha) / n
-                state = verts.select(
-                    "id", F.lit(base).alias("rank"), F.lit(base).alias("delta")
-                ).localCheckpoint(eager=True)
-            runner = _delta_step
+        if pvec is not None:
+            runner = _personalized_delta_step if mode == "delta" else _personalized_exact_step
         else:
-            raise ValueError(f"unknown mode {mode!r}")
-
-        converged, step = False, max(start_step - 1, 0)
-        step = start_step
-        # loop_confs (AQE + whole-stage codegen off for the loop's duration):
-        # every superstep is a fresh plan, so per-query driver-serial work
-        # (Janino units, per-stage AQE re-planning) repeats per commit and
-        # dominates — measured 32.1 → 21.7 s on the sf0.1 flagship (r6),
-        # ranks bit-identical. Same policy the CC loop has carried since r5.
-        with loop_confs(spark):
-            while step < max_iter:
-                t0 = time.time()
-                # unroll up to steps_per_commit supersteps into one lazy plan —
-                # one materialization + one stats job per block instead of per
-                # superstep (driver-side convergence is then checked per block)
-                block = min(steps_per_commit, max_iter - step)
-                new_state, intermediates = state, []
-                for b in range(block):
-                    new_state = runner(
-                        new_state, adj, dangling, n_dangling, n, alpha,
-                        frontier_eps, num_partitions,
-                    )
-                    if b < block - 1:
-                        # lazy LOCAL CHECKPOINT, not lazy persist: a persisted
-                        # plan is only deduplicated physically — the analyzer
-                        # still walks the full unrolled tree, and _delta_step
-                        # references state ~3× per sub-step, so analysis cost
-                        # grew ~3^block per commit (measured: block=10 hung the
-                        # driver outright). checkpoint(eager=False) truncates
-                        # the LOGICAL plan to a LogicalRDD leaf immediately while
-                        # still materializing lazily in the commit's single job.
-                        new_state = new_state.localCheckpoint(eager=False)
-                        intermediates.append(new_state)
-                step += block
-                if tol <= 0.0 and not checkpoint_dir and step < max_iter:
-                    # fixed-iteration benchmark mode: no convergence decision and
-                    # no durable lineage needed mid-run — the localCheckpoint
-                    # barrier alone materializes the state; skip the stats job
-                    state = log.commit_state(
-                        step - 1, new_state, SuperstepStats(step - 1, -1.0, -1, 0.0)
-                    )
-                    log.stats[-1].wall_time_sec = time.time() - t0
-                else:
-                    state, delta, _active = commit_and_stats(
-                        log, step - 1, new_state, F.abs(F.col("delta")),
-                        F.abs(F.col("delta")) > frontier_eps, edge_parts, t0,
-                        num_partitions=num_partitions,
-                    )
-                    if delta < tol:
-                        converged = True
-                    for df in intermediates:
-                        df.unpersist()
-                    if converged:
-                        break
-                    continue
-                for df in intermediates:
-                    df.unpersist()
-
+            runner = _delta_step if mode == "delta" else _exact_step
+        close_block = None
+        if mode == "exact" and not directed and pvec is None:
+            # every vertex of a symmetrized graph has in-edges and none
+            # dangle, so a step is computable from contributions alone: it
+            # references state ONCE and the unrolled plan stays linear (the
+            # generic step references it twice); per-vertex deltas move to
+            # the commit boundary
+            runner, close_block = _value_step, _rank_change
+        res = run(
+            spark,
+            start,
+            lambda s: runner(
+                s, adj, dangling, n_dangling, n, alpha, eps, num_partitions
+            ),
+            delta=F.abs(F.col("delta")),
+            active=F.abs(F.col("delta")) > eps,
+            until=(lambda d: d < tol) if tol > 0.0 else None,
+            max_iter=max_iter,
+            edge_parts=edge_parts,
+            num_partitions=num_partitions,
+            steps_per_commit=steps_per_commit,
+            checkpoint_dir=checkpoint_dir,
+            resume=resume,
+            close_block=close_block,
+        )
+        ranks = res.state.select("id", "rank")
         if mode == "delta":
-            # residual form converges to the unnormalized series sum; normalize
-            total = float(state.agg(F.sum("rank")).first()[0])
-            ranks = state.select("id", (F.col("rank") / F.lit(total)).alias("rank"))
-        else:
-            ranks = state.select("id", "rank")
-        return PageRankResult(ranks, step, converged, resumed_from, log.stats, n)
-    finally:
-        for df in caches:
-            df.unpersist()
-
-
-def _run_exact_undirected(
-    spark, adj, verts, state, n, alpha, tol, max_iter, start_step,
-    steps_per_commit, edge_parts, log: LineageLog, frontier_eps, num_partitions,
-) -> PageRankResult:
-    """Value-only power iteration for symmetrized graphs: state is
-    (id, rank); per-vertex delta is computed once per commit by joining
-    the new committed state against the previous one (the convergence
-    rule becomes L1(r_k - r_{k-block}) < tol — a strictly more
-    conservative stop than the per-superstep rule)."""
-    base = (1.0 - alpha) / n
-
-    def value_step(s: DataFrame) -> DataFrame:
-        j = adj.join(
-            s.select(F.col("id").alias("src"), "rank").hint("shuffle_hash"), "src"
-        )
-        contribs = _group_sum(
-            j.select("dst", _share(j, "rank").alias("c")), "c", num_partitions
-        )
-        return contribs.select(
-            F.col("dst").alias("id"),
-            (F.lit(base) + F.lit(alpha) * F.col("c")).alias("rank"),
+            # residual form converges to the unnormalized series sum
+            total = float(ranks.agg(F.sum("rank")).first()[0])
+            ranks = ranks.select("id", (F.col("rank") / F.lit(total)).alias("rank"))
+        return PageRankResult(
+            ranks, res.supersteps, res.converged, res.resumed_from, res.stats, n
         )
 
-    converged = False
-    step = start_step
-    prev = state
-    # AQE + codegen off for the loop (see the delta-mode loop's note)
-    with loop_confs(spark):
-        while step < max_iter:
-            t0 = time.time()
-            block = min(steps_per_commit, max_iter - step)
-            new_state = prev
-            for _ in range(block):
-                new_state = value_step(new_state)
-            step += block
-            committed = log.commit_state(
-                step - 1, new_state, SuperstepStats(step - 1, -1.0, -1, 0.0)
-            )
-            if tol <= 0.0 and step < max_iter:
-                # fixed-iteration mode: no convergence decision needed mid-run
-                log.stats[-1].wall_time_sec = time.time() - t0
-                prev = committed
-                continue
-            # commit-boundary delta: one V-sized join per block, not per step
-            rows = (
-                committed.join(
-                    prev.select("id", F.col("rank").alias("_prev")), "id", "left"
-                )
-                .groupBy(F.spark_partition_id().alias("pid"))
-                .agg(
-                    F.sum(F.abs(F.col("rank") - F.coalesce(F.col("_prev"), F.lit(0.0)))).alias("d"),
-                    F.sum(
-                        (
-                            F.abs(F.col("rank") - F.coalesce(F.col("_prev"), F.lit(0.0)))
-                            > frontier_eps
-                        ).cast("long")
-                    ).alias("a"),
-                )
-                .collect()
-            )
-            delta = sum(float(r["d"] or 0.0) for r in rows)
-            active = sum(int(r["a"] or 0) for r in rows)
-            st = log.stats[-1]
-            st.delta_norm, st.active_vertices = delta, active
-            st.partition_stats = [
-                {
-                    "partition_id": int(r["pid"]),
-                    "edge_count": edge_parts.get(int(r["pid"]), 0),
-                    "delta_norm": float(r["d"] or 0.0),
-                }
-                for r in rows
-            ]
-            st.wall_time_sec = time.time() - t0
-            log.finalize(step - 1, st)
-            prev = committed
-            if delta < tol:
-                converged = True
-                break
-    return PageRankResult(prev.select("id", "rank"), step, converged, None)
+
+def _value_step(state, adj, dangling, n_dangling, n, alpha, eps, n_parts) -> DataFrame:
+    """Value-only power iteration for symmetrized graphs: (id, rank) in,
+    (id, rank) out; the delta comes from ``_rank_change`` per commit."""
+    j = adj.join(
+        state.select(F.col("id").alias("src"), "rank").hint("shuffle_hash"), "src"
+    )
+    contribs = _group_sum(j.select("dst", _share(j, "rank").alias("c")), "c", n_parts)
+    return contribs.select(
+        F.col("dst").alias("id"),
+        (F.lit((1.0 - alpha) / n) + F.lit(alpha) * F.col("c")).alias("rank"),
+    )
+
+
+def _rank_change(last: DataFrame, first: DataFrame) -> DataFrame:
+    """Attach delta = |rank − rank at block start|: one V-sized join per
+    commit, so the stop rule is L1(r_k − r_{k−block}) < tol — strictly
+    more conservative than the per-superstep rule. shuffle_hash, not
+    broadcast: a committed state's real (small) size would otherwise make
+    the planner broadcast it, one extra job per commit."""
+    prev = F.coalesce(F.col("_prev"), F.lit(0.0))
+    return last.join(
+        first.select("id", F.col("rank").alias("_prev")).hint("shuffle_hash"),
+        "id", "left",
+    ).select("id", "rank", F.abs(F.col("rank") - prev).alias("delta"))
 
 
 def _dangling_mass_col(state: DataFrame, dangling: DataFrame, col: str) -> DataFrame:
@@ -473,21 +300,16 @@ def _group_sum(msgs: DataFrame, val: str, n_parts: int | None = None) -> DataFra
     the raw messages first shuffles E rows once and aggregates inside the
     post-exchange stage (partial+final fuse there), so cost is O(E), not
     O(V·P). For community-clustered graphs where per-partition dst
-    cardinality ≪ V, the map-side-combine plan wins instead — that is a
-    data-layout property, not a kernel property; IGPM_AGG_MODE=partial
-    selects it.
+    cardinality ≪ V, the map-side-combine plan would win instead — a
+    data-layout property, not a kernel property.
     """
-    import os
-
-    if os.environ.get("IGPM_AGG_MODE", "repartition") == "partial":
-        return msgs.groupBy("dst").agg(F.sum(val).alias(val))
     rep = (
         msgs.repartition(n_parts, "dst") if n_parts else msgs.repartition("dst")
     )
     return rep.groupBy("dst").agg(F.sum(val).alias(val))
 
 
-def _exact_step(state, adj, dangling, n_dangling, n, alpha, frontier_eps, n_parts) -> DataFrame:
+def _exact_step(state, adj, dangling, n_dangling, n, alpha, eps, n_parts) -> DataFrame:
     # shuffle_hash on the (small) state side: the cached adjacency's hash
     # partitioning is reused (zero exchange on the big side) and the hash
     # build parallelizes per partition — broadcasting a 1e9-row rank vector
@@ -517,7 +339,7 @@ def _exact_step(state, adj, dangling, n_dangling, n, alpha, frontier_eps, n_part
 
 
 def _personalized_exact_step(
-    state, adj, dangling, n_dangling, n, alpha, frontier_eps, n_parts
+    state, adj, dangling, n_dangling, n, alpha, eps, n_parts
 ) -> DataFrame:
     """Exact RWR power iteration: state carries the restart weight ``p``;
     restart AND dangling mass land ∝ p (NetworkX personalized semantics,
@@ -546,11 +368,11 @@ def _personalized_exact_step(
 
 
 def _personalized_delta_step(
-    state, adj, dangling, n_dangling, n, alpha, frontier_eps, n_parts
+    state, adj, dangling, n_dangling, n, alpha, eps, n_parts
 ) -> DataFrame:
     """Residual push for seeded RWR — linearity makes the delta kernel
     identical to the uniform one except restart/dangling mass scale by p."""
-    active = state.where(F.abs(F.col("delta")) > frontier_eps)
+    active = state.where(F.abs(F.col("delta")) > eps)
     j = adj.join(
         active.select(F.col("id").alias("src"), "delta").hint("shuffle_hash"), "src"
     )
@@ -574,8 +396,8 @@ def _personalized_delta_step(
     )
 
 
-def _delta_step(state, adj, dangling, n_dangling, n, alpha, frontier_eps, n_parts) -> DataFrame:
-    active = state.where(F.abs(F.col("delta")) > frontier_eps)
+def _delta_step(state, adj, dangling, n_dangling, n, alpha, eps, n_parts) -> DataFrame:
+    active = state.where(F.abs(F.col("delta")) > eps)
     j = adj.join(
         active.select(F.col("id").alias("src"), "delta").hint("shuffle_hash"), "src"
     )

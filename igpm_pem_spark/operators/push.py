@@ -71,7 +71,7 @@ def forward_push_ppr(
         .repartition(num_partitions, "id")
         .localCheckpoint(eager=True)
     )
-    # AQE + codegen off for the loop (see pagerank's loop note)
+    # AQE + codegen off for the loop (see _superstep.loop_confs)
     with loop_confs(spark):
         for _ in range(rounds):
             is_active = F.col("r") > F.lit(eps) * F.col("deg")

@@ -192,7 +192,7 @@ def strongly_connected_components(
     converged = False
     t0 = time.time()
     # AQE + codegen off for the whole FW-BW-Trim iteration (fresh
-    # plans per sweep/phase — see pagerank's loop note)
+    # plans per sweep/phase — see _superstep.loop_confs)
     with loop_confs(spark):
         while phases < max_phases:
             # trim first, every phase: the initial periphery, then whatever

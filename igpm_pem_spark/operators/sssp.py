@@ -19,15 +19,14 @@ self-loop on every vertex (the same keep-alive trick as the CC oracle's
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .graph import kernel_nparts
 
-from ..lineage import LineageLog, SuperstepStats
-from ._superstep import commit_and_stats, edge_partition_counts, loop_confs
+from ..lineage import SuperstepStats
+from ._superstep import edge_partition_counts, loop_confs, released, run
 
 
 @dataclass
@@ -113,57 +112,26 @@ def sssp(
     adj = _prep(edges, weight_col, directed).repartition(
         num_partitions, "src"
     ).persist()
-    if adj.where(F.col("w") < 0).limit(1).count() > 0:
-        adj.unpersist()
-        raise ValueError("sssp requires non-negative weights")
-    edge_parts = edge_partition_counts(adj)
-    log = LineageLog(spark, checkpoint_dir)
-
-    state, resumed_from, start_step = None, None, 0
-    if resume and checkpoint_dir:
-        last = log.last_committed()
-        if last is not None:
-            state = log.load_state(last)
-            start_step, resumed_from = last + 1, last
-    if state is None:
-        state = spark.createDataFrame(
-            [(int(source), 0.0, True)], "id BIGINT, dist DOUBLE, changed BOOLEAN"
-        ).repartition(num_partitions, "id").localCheckpoint(eager=True)
-
-    converged, step = False, start_step
-    # AQE + codegen off for the loop (driver-serial planning dominates
-    # fresh per-superstep plans — see pagerank's loop note)
-    with loop_confs(spark):
-        while step < max_iter:
-            t0 = time.time()
-            block = min(steps_per_commit, max_iter - step)
-            new_state, intermediates = state, []
-            for b in range(block):
-                new_state = _sssp_step(new_state, adj, num_partitions)
-                if b < block - 1:
-                    # lazy localCheckpoint, not lazy persist: truncates the
-                    # LOGICAL plan to a leaf (persist only dedupes the
-                    # physical plan — the analyzer still walks the full
-                    # unrolled tree, ~3^block; see pagerank's block loop)
-                    new_state = new_state.localCheckpoint(eager=False)
-                    intermediates.append(new_state)
-            step += block
-            state, delta, _ = commit_and_stats(
-                log, step - 1, new_state,
-                F.col("changed").cast("double"), F.col("changed"), edge_parts, t0,
-                num_partitions=num_partitions,
-            )
-            for df in intermediates:
-                df.unpersist()
-            if delta == 0.0:
-                converged = True
-                break
-    adj.unpersist()
-    result = SsspResult(
-        state.select("id", "dist"), step, converged, resumed_from
+    with released(adj):
+        if adj.where(F.col("w") < 0).limit(1).count() > 0:
+            raise ValueError("sssp requires non-negative weights")
+        res = run(
+            spark,
+            lambda: spark.createDataFrame(
+                [(int(source), 0.0, True)], "id BIGINT, dist DOUBLE, changed BOOLEAN"
+            ).repartition(num_partitions, "id").localCheckpoint(eager=True),
+            lambda s: _sssp_step(s, adj, num_partitions),
+            max_iter=max_iter,
+            edge_parts=edge_partition_counts(adj),
+            num_partitions=num_partitions,
+            steps_per_commit=steps_per_commit,
+            checkpoint_dir=checkpoint_dir,
+            resume=resume,
+        )
+    return SsspResult(
+        res.state.select("id", "dist"), res.supersteps, res.converged,
+        res.resumed_from, res.stats,
     )
-    result.stats = log.stats
-    return result
 
 
 def _widest_prep(edges: DataFrame, weight_col: str, directed: bool) -> DataFrame:

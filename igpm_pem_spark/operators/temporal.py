@@ -27,15 +27,14 @@ oracle that min-merges per level.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from .graph import kernel_nparts
 
-from ..lineage import LineageLog, SuperstepStats
-from ._superstep import commit_and_stats, edge_partition_counts, loop_confs
+from ..lineage import SuperstepStats
+from ._superstep import edge_partition_counts, released, run
 
 
 @dataclass
@@ -107,45 +106,23 @@ def earliest_arrival(
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "ts")
         )
     adj = e.distinct().repartition(num_partitions, "src").persist()
-    edge_parts = edge_partition_counts(adj)
-    log = LineageLog(spark, None)
-
-    state = spark.createDataFrame(
-        [(int(s), int(start_ts), True) for s in sources],
-        "id BIGINT, arrival BIGINT, changed BOOLEAN",
-    ).repartition(num_partitions, "id").localCheckpoint(eager=True)
-
-    converged, step = False, 0
-    # AQE + codegen off for the loop (see pagerank's loop note)
-    with loop_confs(spark):
-        while step < max_iter:
-            t0 = time.time()
-            block = min(steps_per_commit, max_iter - step)
-            new_state, intermediates = state, []
-            for b in range(block):
-                new_state = _ea_step(new_state, adj, num_partitions)
-                if b < block - 1:
-                    # lazy localCheckpoint: truncate the LOGICAL plan (see
-                    # the pagerank/sssp block loops for the measured why)
-                    new_state = new_state.localCheckpoint(eager=False)
-                    intermediates.append(new_state)
-            step += block
-            state, delta, _ = commit_and_stats(
-                log, step - 1, new_state,
-                F.col("changed").cast("double"), F.col("changed"), edge_parts, t0,
-                num_partitions=num_partitions,
-            )
-            for df in intermediates:
-                df.unpersist()
-            if delta == 0.0:
-                converged = True
-                break
-    adj.unpersist()
-    result = EarliestArrivalResult(
-        state.select("id", "arrival"), step, converged
+    with released(adj):
+        res = run(
+            spark,
+            lambda: spark.createDataFrame(
+                [(int(v), int(start_ts), True) for v in sources],
+                "id BIGINT, arrival BIGINT, changed BOOLEAN",
+            ).repartition(num_partitions, "id").localCheckpoint(eager=True),
+            lambda s: _ea_step(s, adj, num_partitions),
+            max_iter=max_iter,
+            edge_parts=edge_partition_counts(adj),
+            num_partitions=num_partitions,
+            steps_per_commit=steps_per_commit,
+        )
+    return EarliestArrivalResult(
+        res.state.select("id", "arrival"), res.supersteps, res.converged,
+        res.stats,
     )
-    result.stats = log.stats
-    return result
 
 
 def interarrival_burstiness(

@@ -50,7 +50,7 @@ def wl_colors(
     colors = sym.groupBy(F.col("src").alias("id")).agg(
         F.count("*").cast("string").alias("color")
     )
-    # AQE + codegen off for the loop (see pagerank's loop note)
+    # AQE + codegen off for the loop (see _superstep.loop_confs)
     with loop_confs(edges.sparkSession):
         for _ in range(rounds):
             nb = sym.join(

@@ -4,10 +4,10 @@ The scale-evidence counterpart of the reference's seeded BA generators
 (``generator.py:10-37``): produces a skewed (power-law in-degree) edge
 table of arbitrary size with every row a pure function of ``spark.range``
 indices via stateless splitmix64 mixing — identical output at any
-parallelism, no driver-side data, no RNG state. Used by ``bench.py
---scaling`` to build a graph large enough that per-superstep compute
-dominates fixed overhead (otherwise a two-parallelism comparison measures
-scheduler latency, not scaling).
+parallelism, no driver-side data, no RNG state. Sized large enough, the
+graph lets per-superstep compute dominate fixed overhead, so a
+two-parallelism comparison measures scaling rather than scheduler
+latency.
 """
 
 from __future__ import annotations

@@ -48,8 +48,7 @@ def components_stream(
 
     Returns (StreamingQuery, StreamState); caller stops the query.
     """
-    from ..lineage import LineageLog
-    from ..operators._superstep import commit_and_stats, edge_partition_counts
+    from ..operators._superstep import edge_partition_counts, released, run
     from ..operators.components import _cc_step, connected_components
     from ..operators.graph import partitioned_adjacency, vertex_ids
 
@@ -77,37 +76,28 @@ def components_stream(
             .distinct()
         )
         adj = partitioned_adjacency(state.edges, num_partitions).persist()
-        verts = vertex_ids(adj)
-        st = (
-            verts.join(state.components, "id", "left")
-            .join(touched.withColumn("t", F.lit(True)), "id", "left")
-            .select(
-                "id",
-                F.coalesce(F.col("component"), F.col("id")).alias("component"),
-                F.coalesce(F.col("t"), F.lit(False)).alias("changed"),
+        with released(adj):
+            res = run(
+                spark,
+                lambda: vertex_ids(adj)
+                .join(state.components, "id", "left")
+                .join(touched.withColumn("t", F.lit(True)), "id", "left")
+                .select(
+                    "id",
+                    F.coalesce(F.col("component"), F.col("id")).alias("component"),
+                    F.coalesce(F.col("t"), F.lit(False)).alias("changed"),
+                )
+                .localCheckpoint(eager=True),
+                lambda s: _cc_step(s, adj, num_partitions),
+                max_iter=100,
+                edge_parts=edge_partition_counts(adj),
+                num_partitions=num_partitions,
+                steps_per_commit=2,
             )
-            .localCheckpoint(eager=True)
-        )
-        edge_parts = edge_partition_counts(adj)
-        log = LineageLog(spark, None)
-        supersteps = 0
-        import time as _t
-
-        while supersteps < 100:
-            t1 = _t.time()
-            ns = st
-            for _ in range(2):
-                ns = _cc_step(ns, adj, num_partitions)
-            supersteps += 2
-            st, delta, _ = commit_and_stats(
-                log, supersteps - 1, ns,
-                F.col("changed").cast("double"), F.col("changed"), edge_parts, t1,
+            state.components = (
+                res.state.select("id", "component").localCheckpoint(eager=True)
             )
-            if delta == 0.0:
-                break
-        state.components = st.select("id", "component").localCheckpoint(eager=True)
-        adj.unpersist()
-        state.history.append({"batch": batch_id, "supersteps": supersteps})
+        state.history.append({"batch": batch_id, "supersteps": res.supersteps})
 
     # one file per micro-batch: availableNow would otherwise swallow every
     # waiting bucket into a single batch and the incremental path would
@@ -257,8 +247,7 @@ def sssp_stream(
     batch; the final table equals batch ``sssp`` on the union of all
     buckets (pinned by tests).
     """
-    from ..lineage import LineageLog
-    from ..operators._superstep import commit_and_stats, edge_partition_counts
+    from ..operators._superstep import edge_partition_counts, released, run
     from ..operators.sssp import _prep, _sssp_step, sssp
 
     if num_partitions is None:
@@ -309,26 +298,18 @@ def sssp_stream(
         full_adj = _prep(state.edges, "w", directed=False).repartition(
             num_partitions, "src"
         ).persist()
-        edge_parts = edge_partition_counts(full_adj)
-        log = LineageLog(spark, None)
-        supersteps = 0
-        import time as _t
-
-        while supersteps < 100:
-            t1 = _t.time()
-            ns = st
-            for _ in range(2):
-                ns = _sssp_step(ns, full_adj, num_partitions)
-            supersteps += 2
-            st, delta, _ = commit_and_stats(
-                log, supersteps - 1, ns,
-                F.col("changed").cast("double"), F.col("changed"), edge_parts, t1,
+        with released(full_adj):
+            res = run(
+                spark,
+                lambda: st,
+                lambda s: _sssp_step(s, full_adj, num_partitions),
+                max_iter=100,
+                edge_parts=edge_partition_counts(full_adj),
+                num_partitions=num_partitions,
+                steps_per_commit=2,
             )
-            if delta == 0.0:
-                break
-        state.components = st.select("id", "dist").localCheckpoint(eager=True)
-        full_adj.unpersist()
-        state.history.append({"batch": batch_id, "supersteps": supersteps})
+            state.components = res.state.select("id", "dist").localCheckpoint(eager=True)
+        state.history.append({"batch": batch_id, "supersteps": res.supersteps})
 
     # one file per micro-batch (see components_stream): each parquet file
     # is an arrival bucket, so the monotone delta path actually runs
@@ -423,8 +404,7 @@ def labelprop_stream(
     sweep changes nothing) and batch equality on unambiguous communities.
     ``StreamState.components`` carries the (id, label) table per batch.
     """
-    from ..lineage import LineageLog
-    from ..operators._superstep import commit_and_stats, edge_partition_counts
+    from ..operators._superstep import edge_partition_counts, released, run
     from ..operators.graph import partitioned_adjacency, vertex_ids
     from ..operators.incremental import _lpa_step_frontier
     from ..operators.labelprop import label_propagation
@@ -454,35 +434,25 @@ def labelprop_stream(
             .distinct()
         )
         adj = partitioned_adjacency(state.edges, num_partitions).persist()
-        verts = vertex_ids(adj)
-        st = (
-            verts.join(state.components, "id", "left")
-            .join(touched.withColumn("t", F.lit(True)), "id", "left")
-            .select(
-                "id",
-                F.coalesce(F.col("label"), F.col("id")).alias("label"),
-                F.coalesce(F.col("t"), F.lit(False)).alias("changed"),
+        with released(adj):
+            res = run(
+                spark,
+                lambda: vertex_ids(adj)
+                .join(state.components, "id", "left")
+                .join(touched.withColumn("t", F.lit(True)), "id", "left")
+                .select(
+                    "id",
+                    F.coalesce(F.col("label"), F.col("id")).alias("label"),
+                    F.coalesce(F.col("t"), F.lit(False)).alias("changed"),
+                )
+                .localCheckpoint(eager=True),
+                lambda s: _lpa_step_frontier(s, adj, num_partitions),
+                max_iter=max_iter_per_batch,
+                edge_parts=edge_partition_counts(adj),
+                num_partitions=num_partitions,
             )
-            .localCheckpoint(eager=True)
-        )
-        edge_parts = edge_partition_counts(adj)
-        log = LineageLog(spark, None)
-        supersteps = 0
-        import time as _t
-
-        while supersteps < max_iter_per_batch:
-            t1 = _t.time()
-            ns = _lpa_step_frontier(st, adj, num_partitions)
-            supersteps += 1
-            st, delta, _ = commit_and_stats(
-                log, supersteps - 1, ns,
-                F.col("changed").cast("double"), F.col("changed"), edge_parts, t1,
-            )
-            if delta == 0.0:
-                break
-        state.components = st.select("id", "label").localCheckpoint(eager=True)
-        adj.unpersist()
-        state.history.append({"batch": batch_id, "supersteps": supersteps})
+            state.components = res.state.select("id", "label").localCheckpoint(eager=True)
+        state.history.append({"batch": batch_id, "supersteps": res.supersteps})
 
     # one file per micro-batch (see components_stream): each parquet file
     # IS an arrival bucket, so the frontier-restricted path actually runs

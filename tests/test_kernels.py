@@ -116,20 +116,73 @@ def test_pagerank_directed_dangling(spark):
     assert abs(sum(got.values()) - 1.0) < 1e-9
 
 
-def test_pagerank_releases_caches_when_a_step_raises(spark, monkeypatch):
-    """A superstep that raises must not leak the persisted adjacency,
-    vertex set or dangling set (directed, so all three exist)."""
-    from igpm_pem_spark.operators import pagerank as pr
+@pytest.mark.parametrize(
+    "module, step, kernel",
+    [
+        ("pagerank", "_group_sum", lambda s, e: pagerank(s, e, directed=True)),
+        ("components", "_cc_step", connected_components),
+        ("labelprop", "_lpa_step", label_propagation),
+    ],
+    ids=["pagerank", "components", "labelprop"],
+)
+def test_releases_caches_when_a_step_raises(spark, monkeypatch, module, step, kernel):
+    """A superstep that raises must not leak the kernel's persisted
+    adjacency and vertex set (nor, for directed PageRank, its dangling
+    set)."""
+    import importlib
 
     def boom(*args, **kwargs):
         raise RuntimeError("injected step failure")
 
     spark.catalog.clearCache()
-    monkeypatch.setattr(pr, "_group_sum", boom)
+    monkeypatch.setattr(
+        importlib.import_module(f"igpm_pem_spark.operators.{module}"), step, boom
+    )
     edges = edges_df(spark, [(0, 1), (1, 2), (2, 0), (0, 3)])
     with pytest.raises(RuntimeError, match="injected"):
-        pagerank(spark, edges, directed=True)
+        kernel(spark, edges)
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_loop_confs_restores_session_values_when_threads_interleave(spark):
+    """Two threads' loop scopes interleave A-enter, B-enter, A-exit,
+    B-exit: the loop confs stay off until the last scope closes, then the
+    session's own values come back. No Spark job runs."""
+    import threading
+
+    from igpm_pem_spark.operators._superstep import loop_confs
+
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.codegen.wholeStage")
+    saved = {k: spark.conf.get(k) for k in keys}
+    a_in, b_in, a_out = threading.Event(), threading.Event(), threading.Event()
+    seen = {}
+
+    def a():
+        with loop_confs(spark):
+            a_in.set()
+            b_in.wait(30)
+        a_out.set()
+
+    def b():
+        a_in.wait(30)
+        with loop_confs(spark):
+            b_in.set()
+            a_out.wait(30)
+            seen["after_a_exit"] = {k: spark.conf.get(k) for k in keys}
+
+    try:
+        for k in keys:
+            spark.conf.set(k, "true")
+        threads = [threading.Thread(target=f) for f in (a, b)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+        assert seen["after_a_exit"] == {k: "false" for k in keys}
+        assert {k: spark.conf.get(k) for k in keys} == {k: "true" for k in keys}
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
 
 
 @pytest.mark.parametrize("graph", ["two_comp", "ba100", "line"])
