@@ -1,7 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-``entry(spark)`` — flagship smoke query at sf0.001 (delta-mode PageRank
-over the part co-occurrence import graph).
+``entry(spark)`` — flagship smoke query at sf0.001 (PageRank over the
+part co-occurrence import graph).
 ``queries()`` / ``oracle_sql()`` — the operator registry lives in
 ``igpm_pem_spark/queries/`` (graph kernels, training-data pipeline ops,
 relational operator coverage), one callable + DuckDB oracle per operator
@@ -24,11 +24,11 @@ from igpm_pem_spark.queries._common import G_PARTS_SQL, G_SPARSE_SQL, TABLES, ed
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: import-centrality ranking — part co-occurrence graph at
-    sf0.001, delta-mode PageRank to convergence, top 100."""
+    sf0.001, PageRank to convergence, top 100."""
     from igpm_pem_spark.operators.pagerank import pagerank
 
     e = _edges(spark, "/root/testdata/sf0.001")
-    res = pagerank(spark, e, tol=1e-6, max_iter=100, mode="delta", steps_per_commit=10)
+    res = pagerank(spark, e, tol=1e-6, max_iter=100, steps_per_commit=10)
     return res.ranks.orderBy(F.desc("rank"), F.asc("id")).limit(100)
 
 

@@ -81,7 +81,6 @@ def main(argv: list[str] | None = None) -> int:
     pr.add_argument("--alpha", type=float, default=0.85)
     pr.add_argument("--tol", type=float, default=1e-6)
     pr.add_argument("--max-iter", type=int, default=200)
-    pr.add_argument("--mode", choices=["exact", "delta"], default="delta")
     pr.add_argument("--steps-per-commit", type=int, default=5)
     pr.add_argument("--weight-col")
     pr.add_argument("--seed", type=int, action="append", default=None,
@@ -149,7 +148,7 @@ def main(argv: list[str] | None = None) -> int:
 
         res = pagerank(
             spark, edges, directed=args.directed, alpha=args.alpha,
-            tol=args.tol, max_iter=args.max_iter, mode=args.mode,
+            tol=args.tol, max_iter=args.max_iter,
             steps_per_commit=args.steps_per_commit,
             num_partitions=args.num_partitions,
             checkpoint_dir=args.checkpoint_dir,

@@ -483,86 +483,89 @@ def incremental_components(
     adj_parts: list[DataFrame] = []
     edge_parts: dict[int, int] = {}
     _MAX_ADJ_PARTS = 8
-    for si, cut in enumerate(steps):
-        cum_m += sizes[cut]
-        if si < base_steps - 1:
-            continue
-        t0 = time.time()
-        if comp is None:
-            cum = edges.where(F.col(ts_col) <= cut)
-            res = connected_components(
-                spark, cum, num_partitions=num_partitions, steps_per_commit=4
-            )
-            comp = res.components.localCheckpoint(eager=True)
-            supersteps = res.supersteps
-            base_adj = partitioned_adjacency(cum, num_partitions).persist()
-            adj_parts = [base_adj]
-            edge_parts = edge_partition_counts(base_adj)
-            adj_shuffled = sum(edge_parts.values())
-        else:
-            new_edges = edges.where(F.col(ts_col) == cut)
-            touched = (
-                new_edges.select(F.col("src").alias("id"))
-                .unionByName(new_edges.select(F.col("dst").alias("id")))
-                .distinct()
-            )
-            delta_adj = partitioned_adjacency(new_edges, num_partitions).persist()
-            adj_parts.append(delta_adj)
-            if len(adj_parts) > _MAX_ADJ_PARTS:
-                # compact the deltas (never the base): re-shuffles only
-                # delta-sized data, keeps the per-superstep join fan-out
-                # bounded on long replays
-                tail = adj_parts[1:]
-                merged = tail[0]
-                for p in tail[1:]:
-                    merged = merged.unionByName(p)
-                merged = merged.repartition(num_partitions, "src").persist()
-                merged.count()
-                for p in tail:
-                    p.unpersist()
-                adj_parts = [adj_parts[0], merged]
-            delta_counts = edge_partition_counts(delta_adj)
-            adj_shuffled = sum(delta_counts.values())
-            for pid, c in delta_counts.items():
-                edge_parts[pid] = edge_parts.get(pid, 0) + c
-            # the carried fixpoint names every prior vertex; only the
-            # bucket's endpoints can be new, and only they start changed
-            new_vs = touched.join(comp, "id", "left_anti").select(
-                "id", F.col("id").alias("component")
-            )
-            res = run(
-                spark,
-                lambda: comp.unionByName(new_vs)
-                .join(touched.withColumn("t", F.lit(True)), "id", "left")
-                .select(
-                    "id",
-                    "component",
-                    F.coalesce(F.col("t"), F.lit(False)).alias("changed"),
+    try:
+        for si, cut in enumerate(steps):
+            cum_m += sizes[cut]
+            if si < base_steps - 1:
+                continue
+            t0 = time.time()
+            if comp is None:
+                cum = edges.where(F.col(ts_col) <= cut)
+                res = connected_components(
+                    spark, cum, num_partitions=num_partitions, steps_per_commit=4
                 )
-                .localCheckpoint(eager=True),
-                lambda s: _cc_shortcut(_cc_step(s, adj_parts, num_partitions)),
-                max_iter=100,
-                edge_parts=edge_parts,
-                num_partitions=num_partitions,
-                steps_per_commit=2,
-                eager_steps=True,
+                comp = res.components.localCheckpoint(eager=True)
+                supersteps = res.supersteps
+                base_adj = partitioned_adjacency(cum, num_partitions).persist()
+                adj_parts = [base_adj]
+                edge_parts = edge_partition_counts(base_adj)
+                adj_shuffled = sum(edge_parts.values())
+            else:
+                new_edges = edges.where(F.col(ts_col) == cut)
+                touched = (
+                    new_edges.select(F.col("src").alias("id"))
+                    .unionByName(new_edges.select(F.col("dst").alias("id")))
+                    .distinct()
+                )
+                delta_adj = partitioned_adjacency(new_edges, num_partitions).persist()
+                adj_parts.append(delta_adj)
+                if len(adj_parts) > _MAX_ADJ_PARTS:
+                    # compact the deltas (never the base): re-shuffles only
+                    # delta-sized data, keeps the per-superstep join fan-out
+                    # bounded on long replays
+                    tail = adj_parts[1:]
+                    merged = tail[0]
+                    for p in tail[1:]:
+                        merged = merged.unionByName(p)
+                    merged = merged.repartition(num_partitions, "src").persist()
+                    merged.count()
+                    for p in tail:
+                        p.unpersist()
+                    adj_parts = [adj_parts[0], merged]
+                delta_counts = edge_partition_counts(delta_adj)
+                adj_shuffled = sum(delta_counts.values())
+                for pid, c in delta_counts.items():
+                    edge_parts[pid] = edge_parts.get(pid, 0) + c
+                # the carried fixpoint names every prior vertex; only the
+                # bucket's endpoints can be new, and only they start changed
+                new_vs = touched.join(comp, "id", "left_anti").select(
+                    "id", F.col("id").alias("component")
+                )
+                res = run(
+                    spark,
+                    lambda: comp.unionByName(new_vs)
+                    .join(touched.withColumn("t", F.lit(True)), "id", "left")
+                    .select(
+                        "id",
+                        "component",
+                        F.coalesce(F.col("t"), F.lit(False)).alias("changed"),
+                    )
+                    .localCheckpoint(eager=True),
+                    lambda s: _cc_shortcut(_cc_step(s, adj_parts, num_partitions)),
+                    max_iter=100,
+                    edge_parts=edge_parts,
+                    num_partitions=num_partitions,
+                    steps_per_commit=2,
+                    eager_steps=True,
+                )
+                supersteps = res.supersteps
+                comp = res.state.select("id", "component").localCheckpoint(eager=True)
+            wall = time.time() - t0
+            result.steps.append(
+                StepMetrics(
+                    step=cut,
+                    n_new_edges=sizes[cut],
+                    n_total_edges=cum_m,
+                    supersteps=supersteps,
+                    wall_sec=round(wall, 3),
+                    edges_per_sec=round(supersteps * 2 * cum_m / max(wall, 1e-9), 1),
+                    adj_shuffled_rows=int(adj_shuffled),
+                )
             )
-            supersteps = res.supersteps
-            comp = res.state.select("id", "component").localCheckpoint(eager=True)
-        wall = time.time() - t0
-        result.steps.append(
-            StepMetrics(
-                step=cut,
-                n_new_edges=sizes[cut],
-                n_total_edges=cum_m,
-                supersteps=supersteps,
-                wall_sec=round(wall, 3),
-                edges_per_sec=round(supersteps * 2 * cum_m / max(wall, 1e-9), 1),
-                adj_shuffled_rows=int(adj_shuffled),
-            )
-        )
-    for p in adj_parts:
-        p.unpersist()
+    finally:
+        # the carried adjacency parts are freed on every exit path
+        for p in adj_parts:
+            p.unpersist()
     result.state = comp
     return result
 

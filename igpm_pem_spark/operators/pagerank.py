@@ -7,19 +7,14 @@ reference materializes an all-pairs proximity dict (``rwr.py:108-129``) —
 exactly the thing that cannot scale; we keep one rank per vertex and let
 the join do the propagation.
 
-Two execution modes:
-
-* ``exact`` — classic synchronous power iteration, matches
-  ``networkx.pagerank`` semantics to allclose 1e-6 (the north-rule
-  correctness gate): uniform start, dangling mass spread uniformly,
-  L1 convergence.
-* ``delta`` — residual propagation: only vertices whose residual exceeds
-  ``tol/(10n)`` send messages. This is the Spark-idiomatic realization
-  of IGPM-PEM's partial-execution idea (recompute only the affected
-  subgraph: ``incremental/gray_incremental.py:473-478``): the frontier
-  shrinks every superstep, so late supersteps touch a tiny fraction of
-  the graph. Fixpoint identical to ``exact`` up to
-  ``alpha/(1-alpha) * tol/10`` total L1 error.
+One iteration scheme: classic synchronous power iteration, matching
+``networkx.pagerank`` semantics to allclose 1e-6 (the north-rule
+correctness gate): uniform start, dangling mass spread uniformly (or ∝ the
+restart vector for seeded RWR), L1 convergence. IGPM-PEM's partial-execution
+idea (recompute only the affected subgraph:
+``incremental/gray_incremental.py:473-478``) lives in the warm-started
+refresh (``init_ranks``, ``operators/incremental.py``), not in a second
+scheme: a residual-push frontier lost every measured configuration.
 
 Scale design (100 TB / 1e9+ edges):
 * the edge table is shuffled ONCE (``partitioned_adjacency``) and every
@@ -93,14 +88,6 @@ def _adjacency_with_degree(
     return adj.withColumn("deg", F.sum("w").over(Window.partitionBy("src")))
 
 
-def _share(joined: DataFrame, val: str):
-    """Per-edge contribution share of ``val``: rank/deg unweighted,
-    rank·w/Σw when the adjacency carries weights."""
-    if "w" in joined.columns:
-        return F.col(val) * F.col("w") / F.col("deg")
-    return F.col(val) / F.col("deg")
-
-
 def _personalization_df(spark: SparkSession, personalization) -> DataFrame:
     """Normalize a seed spec (dict id->weight, or iterable of ids with
     uniform weights) into a tiny (id, p) DataFrame with sum(p)=1 — the
@@ -130,7 +117,6 @@ def pagerank(
     num_partitions: int | None = None,
     checkpoint_dir: str | None = None,
     resume: bool = True,
-    mode: str = "exact",
     steps_per_commit: int = 1,
     personalization: dict | list | None = None,
     weight_col: str | None = None,
@@ -154,17 +140,13 @@ def pagerank(
     ``alpha=0.3`` here), computed as one rank vector per run instead of
     the reference's all-pairs proximity dict (``rwr.py:108-129``).
 
-    ``init_ranks`` — warm start (exact mode only): an (id, rank) table such
-    as the ranks of an earlier slice of the same graph. Carried vertices
-    start at their rank and unseen ones at 0, so a start vector summing to
-    1 still does, and exact iteration keeps it there: no renormalization.
+    ``init_ranks`` — warm start: an (id, rank) table such as the ranks of
+    an earlier slice of the same graph. Carried vertices start at their
+    rank and unseen ones at 0, so a start vector summing to 1 still does,
+    and the power iteration keeps it there: no renormalization.
     Near a fixpoint the iteration only has to correct what changed. A
     resumable checkpoint takes precedence.
     """
-    if mode not in ("exact", "delta"):
-        raise ValueError(f"unknown mode {mode!r}")
-    if init_ranks is not None and mode != "exact":
-        raise ValueError("init_ranks requires mode='exact'")
     if num_partitions is None:
         num_partitions = kernel_nparts(edges)
     adj = _adjacency_with_degree(
@@ -185,9 +167,6 @@ def pagerank(
             return PageRankResult(empty, 0, True, None)
         edge_parts = edge_partition_counts(adj)
         n_dangling = dangling.count() if directed else 0
-        # frontier / active threshold: residuals below it stop sending
-        # (delta mode) and count as settled in the commit stats
-        eps = tol / (10.0 * n) if mode == "delta" else tol / n
         pvec = None
         if personalization is not None:
             # seeded RWR: restart mass ∝ p instead of uniform. State carries
@@ -196,32 +175,21 @@ def pagerank(
             pvec = _personalization_df(spark, personalization)
 
         def start() -> DataFrame:
-            s = verts
+            s, rank = verts, F.lit(1.0 / n)
             if init_ranks is not None:
-                # shuffle_hash: never broadcast a rank vector (see _exact_step)
+                # shuffle_hash: never broadcast a rank vector (see _contribs)
                 s = s.join(
                     init_ranks.select("id", "rank").hint("shuffle_hash"), "id", "left"
                 )
+                rank = F.coalesce(F.col("rank"), F.lit(0.0))
+            cols = [rank.alias("rank")]
             if pvec is not None:
                 s = s.join(F.broadcast(pvec), "id", "left")
-            p = F.coalesce(F.col("p"), F.lit(0.0))
-            if mode == "delta":
-                r0 = F.lit(1.0 - alpha) * p if pvec is not None else F.lit((1.0 - alpha) / n)
-                cols = [r0.alias("rank"), r0.alias("delta")]
-            elif init_ranks is not None:
-                cols = [F.coalesce(F.col("rank"), F.lit(0.0)).alias("rank")]
-            else:
-                cols = [F.lit(1.0 / n).alias("rank")]
-            if pvec is not None:
-                cols.append(p.alias("p"))
+                cols.append(F.coalesce(F.col("p"), F.lit(0.0)).alias("p"))
             return s.select("id", *cols).localCheckpoint(eager=True)
 
-        if pvec is not None:
-            runner = _personalized_delta_step if mode == "delta" else _personalized_exact_step
-        else:
-            runner = _delta_step if mode == "delta" else _exact_step
-        close_block = None
-        if mode == "exact" and not directed and pvec is None:
+        runner, close_block = _exact_step, None
+        if not directed and pvec is None:
             # every vertex of a symmetrized graph has in-edges and none
             # dangle, so a step is computable from contributions alone: it
             # references state ONCE and the unrolled plan stays linear (the
@@ -231,11 +199,10 @@ def pagerank(
         res = run(
             spark,
             start,
-            lambda s: runner(
-                s, adj, dangling, n_dangling, n, alpha, eps, num_partitions
-            ),
+            lambda s: runner(s, adj, dangling, n_dangling, n, alpha, num_partitions),
             delta=F.abs(F.col("delta")),
-            active=F.abs(F.col("delta")) > eps,
+            # a change below tol/n counts as settled in the commit stats
+            active=F.abs(F.col("delta")) > tol / n,
             until=(lambda d: d < tol) if tol > 0.0 else None,
             max_iter=max_iter,
             edge_parts=edge_parts,
@@ -245,27 +212,37 @@ def pagerank(
             resume=resume,
             close_block=close_block,
         )
-        ranks = res.state.select("id", "rank")
-        if mode == "delta":
-            # residual form converges to the unnormalized series sum
-            total = float(ranks.agg(F.sum("rank")).first()[0])
-            ranks = ranks.select("id", (F.col("rank") / F.lit(total)).alias("rank"))
         return PageRankResult(
-            ranks, res.supersteps, res.converged, res.resumed_from, res.stats, n
+            res.state.select("id", "rank"), res.supersteps, res.converged,
+            res.resumed_from, res.stats, n,
         )
 
 
-def _value_step(state, adj, dangling, n_dangling, n, alpha, eps, n_parts) -> DataFrame:
+def _value_step(state, adj, dangling, n_dangling, n, alpha, n_parts) -> DataFrame:
     """Value-only power iteration for symmetrized graphs: (id, rank) in,
     (id, rank) out; the delta comes from ``_rank_change`` per commit."""
-    j = adj.join(
-        state.select(F.col("id").alias("src"), "rank").hint("shuffle_hash"), "src"
-    )
-    contribs = _group_sum(j.select("dst", _share(j, "rank").alias("c")), "c", n_parts)
-    return contribs.select(
+    return _contribs(state, adj, n_parts).select(
         F.col("dst").alias("id"),
         (F.lit((1.0 - alpha) / n) + F.lit(alpha) * F.col("c")).alias("rank"),
     )
+
+
+def _contribs(state: DataFrame, adj: DataFrame, n_parts: int) -> DataFrame:
+    """(dst, c): the rank each vertex receives over its in-edges — rank/deg
+    per edge unweighted, rank·w/Σw when the adjacency carries weights."""
+    # shuffle_hash on the (small) state side: the cached adjacency's hash
+    # partitioning is reused (zero exchange on the big side) and the hash
+    # build parallelizes per partition — broadcasting a 1e9-row rank vector
+    # is the plan that cannot scale, and its single-threaded build is also
+    # what flattens local-mode core scaling
+    j = adj.join(
+        state.select(F.col("id").alias("src"), "rank").hint("shuffle_hash"), "src"
+    )
+    if "w" in j.columns:
+        share = F.col("rank") * F.col("w") / F.col("deg")
+    else:
+        share = F.col("rank") / F.col("deg")
+    return _group_sum(j.select("dst", share.alias("c")), "c", n_parts)
 
 
 def _rank_change(last: DataFrame, first: DataFrame) -> DataFrame:
@@ -281,12 +258,12 @@ def _rank_change(last: DataFrame, first: DataFrame) -> DataFrame:
     ).select("id", "rank", F.abs(F.col("rank") - prev).alias("delta"))
 
 
-def _dangling_mass_col(state: DataFrame, dangling: DataFrame, col: str) -> DataFrame:
+def _dangling_mass(state: DataFrame, dangling: DataFrame) -> DataFrame:
     """1-row (_dm) DataFrame — kept lazy (broadcast cross join) so unrolled
     superstep blocks never touch the driver."""
     return (
         state.join(dangling, "id", "left_semi")
-        .agg(F.coalesce(F.sum(col), F.lit(0.0)).alias("_dm"))
+        .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm"))
     )
 
 
@@ -309,112 +286,27 @@ def _group_sum(msgs: DataFrame, val: str, n_parts: int | None = None) -> DataFra
     return rep.groupBy("dst").agg(F.sum(val).alias(val))
 
 
-def _exact_step(state, adj, dangling, n_dangling, n, alpha, eps, n_parts) -> DataFrame:
-    # shuffle_hash on the (small) state side: the cached adjacency's hash
-    # partitioning is reused (zero exchange on the big side) and the hash
-    # build parallelizes per partition — broadcasting a 1e9-row rank vector
-    # is the plan that cannot scale, and its single-threaded build is also
-    # what flattens local-mode core scaling
-    j = adj.join(
-        state.select(F.col("id").alias("src"), "rank").hint("shuffle_hash"), "src"
-    )
-    contribs = _group_sum(j.select("dst", _share(j, "rank").alias("c")), "c", n_parts)
-    joined = state.join(contribs.withColumnRenamed("dst", "id"), "id", "left")
+def _exact_step(state, adj, dangling, n_dangling, n, alpha, n_parts) -> DataFrame:
+    """One power-iteration step. A state carrying the restart weight ``p``
+    is seeded RWR: restart AND dangling mass land ∝ p (NetworkX
+    personalized semantics, reference ``rwr.py:176-180``); otherwise both
+    spread uniformly over the n vertices."""
+    contribs = _contribs(state, adj, n_parts).withColumnRenamed("dst", "id")
+    joined = state.join(contribs, "id", "left")
     if n_dangling:
         dm = F.col("_dm")
-        joined = joined.crossJoin(
-            F.broadcast(_dangling_mass_col(state, dangling, "rank"))
-        )
+        joined = joined.crossJoin(F.broadcast(_dangling_mass(state, dangling)))
     else:
         dm = F.lit(0.0)
-    new_rank = (
-        F.lit((1.0 - alpha) / n)
-        + F.lit(alpha) * (F.coalesce(F.col("c"), F.lit(0.0)) + dm / F.lit(float(n)))
-    )
+    c = F.coalesce(F.col("c"), F.lit(0.0))
+    seeded = "p" in state.columns
+    if seeded:
+        new_rank = F.lit(1.0 - alpha) * F.col("p") + F.lit(alpha) * (c + dm * F.col("p"))
+    else:
+        new_rank = F.lit((1.0 - alpha) / n) + F.lit(alpha) * (c + dm / F.lit(float(n)))
     return joined.select(
         "id",
         new_rank.alias("rank"),
         F.abs(new_rank - F.col("rank")).alias("delta"),
-    )
-
-
-def _personalized_exact_step(
-    state, adj, dangling, n_dangling, n, alpha, eps, n_parts
-) -> DataFrame:
-    """Exact RWR power iteration: state carries the restart weight ``p``;
-    restart AND dangling mass land ∝ p (NetworkX personalized semantics,
-    reference ``rwr.py:176-180``)."""
-    j = adj.join(
-        state.select(F.col("id").alias("src"), "rank").hint("shuffle_hash"), "src"
-    )
-    contribs = _group_sum(j.select("dst", _share(j, "rank").alias("c")), "c", n_parts)
-    joined = state.join(contribs.withColumnRenamed("dst", "id"), "id", "left")
-    if n_dangling:
-        dm = F.col("_dm")
-        joined = joined.crossJoin(
-            F.broadcast(_dangling_mass_col(state, dangling, "rank"))
-        )
-    else:
-        dm = F.lit(0.0)
-    new_rank = F.lit(1.0 - alpha) * F.col("p") + F.lit(alpha) * (
-        F.coalesce(F.col("c"), F.lit(0.0)) + dm * F.col("p")
-    )
-    return joined.select(
-        "id",
-        new_rank.alias("rank"),
-        F.abs(new_rank - F.col("rank")).alias("delta"),
-        "p",
-    )
-
-
-def _personalized_delta_step(
-    state, adj, dangling, n_dangling, n, alpha, eps, n_parts
-) -> DataFrame:
-    """Residual push for seeded RWR — linearity makes the delta kernel
-    identical to the uniform one except restart/dangling mass scale by p."""
-    active = state.where(F.abs(F.col("delta")) > eps)
-    j = adj.join(
-        active.select(F.col("id").alias("src"), "delta").hint("shuffle_hash"), "src"
-    )
-    msgs = _group_sum(j.select("dst", _share(j, "delta").alias("m")), "m", n_parts)
-    joined = state.join(msgs.withColumnRenamed("dst", "id"), "id", "left")
-    if n_dangling:
-        dm = F.col("_dm")
-        joined = joined.crossJoin(
-            F.broadcast(_dangling_mass_col(active, dangling, "delta"))
-        )
-    else:
-        dm = F.lit(0.0)
-    new_delta = F.lit(alpha) * (
-        F.coalesce(F.col("m"), F.lit(0.0)) + dm * F.col("p")
-    )
-    return joined.select(
-        "id",
-        (F.col("rank") + new_delta).alias("rank"),
-        new_delta.alias("delta"),
-        "p",
-    )
-
-
-def _delta_step(state, adj, dangling, n_dangling, n, alpha, eps, n_parts) -> DataFrame:
-    active = state.where(F.abs(F.col("delta")) > eps)
-    j = adj.join(
-        active.select(F.col("id").alias("src"), "delta").hint("shuffle_hash"), "src"
-    )
-    msgs = _group_sum(j.select("dst", _share(j, "delta").alias("m")), "m", n_parts)
-    joined = state.join(msgs.withColumnRenamed("dst", "id"), "id", "left")
-    if n_dangling:
-        dm = F.col("_dm")
-        joined = joined.crossJoin(
-            F.broadcast(_dangling_mass_col(active, dangling, "delta"))
-        )
-    else:
-        dm = F.lit(0.0)
-    new_delta = F.lit(alpha) * (
-        F.coalesce(F.col("m"), F.lit(0.0)) + dm / F.lit(float(n))
-    )
-    return joined.select(
-        "id",
-        (F.col("rank") + new_delta).alias("rank"),
-        new_delta.alias("delta"),
+        *(["p"] if seeded else []),
     )

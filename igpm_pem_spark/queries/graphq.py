@@ -72,7 +72,7 @@ def _q_pagerank_fixed8(spark, sf_dir):
     from ..operators.pagerank import pagerank
 
     res = pagerank(
-        spark, edges(spark, sf_dir), tol=0.0, max_iter=8, mode="exact",
+        spark, edges(spark, sf_dir), tol=0.0, max_iter=8,
         num_partitions=graph_nparts(spark, sf_dir),
     )
     return res.ranks.select("id", F.round("rank", 7).alias("rank7"))
@@ -97,7 +97,7 @@ def _q_pagerank_weighted_fixed8(spark, sf_dir):
 
     e = edges(spark, sf_dir, _G_WPARTS_SQL)
     res = pagerank(
-        spark, e, tol=0.0, max_iter=8, mode="exact", weight_col="w",
+        spark, e, tol=0.0, max_iter=8, weight_col="w",
         num_partitions=graph_nparts(spark, sf_dir),
     )
     return res.ranks.select("id", F.round("rank", 7).alias("rank7"))
@@ -134,7 +134,7 @@ def _q_rwr_seeded_fixed8(spark, sf_dir):
     e = edges(spark, sf_dir)
     seeds = [int(r.id) for r in vertex_ids(e).orderBy("id").limit(5).collect()]
     res = pagerank(
-        spark, e, alpha=0.3, tol=0.0, max_iter=8, mode="exact",
+        spark, e, alpha=0.3, tol=0.0, max_iter=8,
         personalization={s: 1.0 for s in seeds},
         num_partitions=graph_nparts(spark, sf_dir),
     )
@@ -214,7 +214,7 @@ def _q_incremental_cc(spark, sf_dir):
 
 
 def _q_pagerank_converged(spark, sf_dir):
-    """Delta-mode PageRank run to convergence — the flagship loop. Oracled
+    """PageRank run to convergence — the flagship loop. Oracled
     by a deep fixed-N recursive CTE: with tol=1e-9 the kernel's distance
     from the true fixpoint and the oracle's at N=160 (0.85^160 ≈ 5e-12 L1)
     are both orders of magnitude below the round-6 comparison grid, so the
@@ -222,7 +222,7 @@ def _q_pagerank_converged(spark, sf_dir):
     from ..operators.pagerank import pagerank
 
     res = pagerank(
-        spark, edges(spark, sf_dir), tol=1e-9, max_iter=300, mode="delta",
+        spark, edges(spark, sf_dir), tol=1e-9, max_iter=300,
         steps_per_commit=10, num_partitions=graph_nparts(spark, sf_dir),
     )
     return res.ranks.select("id", F.round("rank", 6).alias("rank6"))
@@ -776,10 +776,10 @@ def _q_spam_mass(spark, sf_dir):
     np_ = graph_nparts(spark, sf_dir)
     seeds = [int(r.id) for r in vertex_ids(e).orderBy("id").limit(5).collect()]
     pr = pagerank(
-        spark, e, tol=0.0, max_iter=8, mode="exact", num_partitions=np_
+        spark, e, tol=0.0, max_iter=8, num_partitions=np_
     ).ranks
     tr = pagerank(
-        spark, e, tol=0.0, max_iter=8, mode="exact",
+        spark, e, tol=0.0, max_iter=8,
         personalization={s: 1.0 for s in seeds}, num_partitions=np_,
     ).ranks
     return (

@@ -975,7 +975,7 @@ def _q_link_recommend(spark, sf_dir):
     e = edges(spark, sf_dir, G_SPARSE_SQL)
     seed = int(vertex_ids(e).agg(F.min("id")).first()[0])
     res = pagerank(
-        spark, e, alpha=0.3, tol=0.0, max_iter=8, mode="exact",
+        spark, e, alpha=0.3, tol=0.0, max_iter=8,
         personalization={seed: 1.0},
         num_partitions=graph_nparts(spark, sf_dir),
     )

@@ -336,7 +336,7 @@ def _q_graph_end_to_end(spark, sf_dir):
     e = edges(spark, sf_dir, G_SPARSE_SQL)
     np_ = graph_nparts(spark, sf_dir)
     pr = pagerank(
-        spark, e, tol=0.0, max_iter=8, mode="exact", num_partitions=np_
+        spark, e, tol=0.0, max_iter=8, num_partitions=np_
     ).ranks
     cc = connected_components(spark, e, num_partitions=np_).components
     dg = degrees(e)

@@ -332,7 +332,7 @@ def _q_textrank(spark, sf_dir):
     e = pairs.select(
         token_id("a").alias("src"), token_id("b").alias("dst"), "w"
     )
-    res = pagerank(spark, e, tol=0.0, max_iter=8, mode="exact", weight_col="w")
+    res = pagerank(spark, e, tol=0.0, max_iter=8, weight_col="w")
     tid_map = vocab.select("token", token_id("token").alias("id")).distinct()
     return (
         res.ranks.join(F.broadcast(tid_map), "id")

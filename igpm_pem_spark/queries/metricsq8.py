@@ -118,7 +118,7 @@ def _q_pagerank_decay(spark, sf_dir):
 
     e = edges(spark, sf_dir, _G_DECAY_SQL)
     res = pagerank(
-        spark, e, tol=0.0, max_iter=8, mode="exact", weight_col="w",
+        spark, e, tol=0.0, max_iter=8, weight_col="w",
         num_partitions=graph_nparts(spark, sf_dir),
     )
     return res.ranks.select("id", F.round("rank", 7).alias("rank7"))

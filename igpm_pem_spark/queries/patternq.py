@@ -112,7 +112,7 @@ def _q_pattern_best_match_rwr(spark, sf_dir):
     from ._common import graph_nparts
 
     res = pagerank(
-        spark, e, alpha=0.3, tol=0.0, max_iter=8, mode="exact",
+        spark, e, alpha=0.3, tol=0.0, max_iter=8,
         personalization={s: 1.0 for s in seeds},
         num_partitions=graph_nparts(spark, sf_dir),
     )

@@ -12,6 +12,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Three quarters of the host's physical memory, capped at 48g: a
+    driver heap larger than the host only fails later, under load."""
+    ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1, min(48, ram * 3 // 4 // 2**30))}g"
+
+
 def get_spark(
     app_name: str = "igpm_pem_spark",
     cores: int | None = None,
@@ -22,6 +29,8 @@ def get_spark(
 
     ``cores`` defaults to $SPARK_GRAFT_CPUS or all local cores. On a real
     cluster the master/size comes from spark-submit and ``cores`` is ignored.
+    The driver heap is $SPARK_DRIVER_MEM, else ``_default_driver_memory()``;
+    ``extra_conf`` overrides both.
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
@@ -39,7 +48,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         # stage progress bars interleave \r-frames into stdout/stderr; the
         # bench driver keeps only a 2000-char tail of it, so keep it clean

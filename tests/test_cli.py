@@ -29,7 +29,7 @@ def test_cli_pagerank_weighted_seeded(spark, tmp_path):
     rc = main([
         "pagerank", "--edges", p, "--output", out,
         "--weight-col", "wt", "--seed", "0", "--seed", "1",
-        "--alpha", "0.3", "--tol", "1e-8", "--mode", "exact",
+        "--alpha", "0.3", "--tol", "1e-8",
     ])
     assert rc == 0
     ranks = spark.read.parquet(out)

@@ -6,12 +6,14 @@ from __future__ import annotations
 
 import networkx as nx
 import pytest
+from pyspark.sql import functions as F
 
 from igpm_pem_spark.operators.components import (
     connected_components,
     median_component_size,
 )
 from igpm_pem_spark.operators.graph import degrees
+from igpm_pem_spark.operators.incremental import incremental_components
 from igpm_pem_spark.operators.labelprop import label_propagation
 from igpm_pem_spark.operators.pagerank import pagerank
 from igpm_pem_spark.operators.triangles import (
@@ -57,31 +59,17 @@ def test_pagerank_exact_matches_networkx(spark, graph):
     assert all(s.partition_stats for s in res.stats)
 
 
-@pytest.mark.parametrize("graph", ["test1", "ba100"])
-def test_pagerank_delta_mode_matches_exact_fixpoint(spark, graph):
-    edges, pairs, directed = _pairs(graph, spark)
-    res = pagerank(spark, edges, directed=directed, tol=1e-8, max_iter=300, mode="delta")
-    assert res.converged
-    got = {r.id: r["rank"] for r in res.ranks.collect()}
-    want = pagerank_oracle(pairs, directed)
-    assert max(abs(got[k] - want[k]) for k in want) < 1e-6
-    # the frontier shrinks: late supersteps are cheaper than early ones
-    actives = [s.active_vertices for s in res.stats]
-    assert actives[-1] <= actives[0]
-
-
 @pytest.mark.parametrize("graph", ["test1", "line", "ba100"])
-@pytest.mark.parametrize("mode", ["exact", "delta"])
-def test_personalized_pagerank_matches_oracle(spark, graph, mode):
+def test_personalized_pagerank_matches_oracle(spark, graph):
     """Seeded RWR (reference rwr.py:149-180, restart 0.7 ⇔ alpha 0.3):
-    restart mass lands on the seed set; both kernels must hit the
+    restart mass lands on the seed set; the kernel must hit the
     NetworkX-personalization fixpoint."""
     edges, pairs, directed = _pairs(graph, spark)
     seeds = sorted({a for a, _ in pairs})[:2]
     pers = {seeds[0]: 2.0, seeds[1]: 1.0}
     res = pagerank(
         spark, edges, directed=directed, alpha=0.3, tol=1e-9, max_iter=300,
-        mode=mode, personalization=pers,
+        personalization=pers,
     )
     assert res.converged
     got = {r.id: r["rank"] for r in res.ranks.collect()}
@@ -116,28 +104,48 @@ def test_pagerank_directed_dangling(spark):
     assert abs(sum(got.values()) - 1.0) < 1e-9
 
 
+def _boom(*args, **kwargs):
+    raise RuntimeError("injected step failure")
+
+
+def _boom_on_refresh(cc_step):
+    """CC step that runs the base computation (one adjacency) and raises
+    in the first bucket refresh (a list of adjacency parts)."""
+    def step(state, adj, *rest):
+        if isinstance(adj, list):
+            _boom()
+        return cc_step(state, adj, *rest)
+    return step
+
+
+def _two_buckets(spark, edges):
+    return incremental_components(
+        spark, edges.withColumn("ts", (F.col("dst") == 3).cast("int"))
+    )
+
+
 @pytest.mark.parametrize(
-    "module, step, kernel",
+    "module, step, patch, kernel",
     [
-        ("pagerank", "_group_sum", lambda s, e: pagerank(s, e, directed=True)),
-        ("components", "_cc_step", connected_components),
-        ("labelprop", "_lpa_step", label_propagation),
+        ("pagerank", "_group_sum", lambda f: _boom,
+         lambda s, e: pagerank(s, e, directed=True)),
+        ("components", "_cc_step", lambda f: _boom, connected_components),
+        ("labelprop", "_lpa_step", lambda f: _boom, label_propagation),
+        ("components", "_cc_step", _boom_on_refresh, _two_buckets),
     ],
-    ids=["pagerank", "components", "labelprop"],
+    ids=["pagerank", "components", "labelprop", "incremental_components"],
 )
-def test_releases_caches_when_a_step_raises(spark, monkeypatch, module, step, kernel):
+def test_releases_caches_when_a_step_raises(
+    spark, monkeypatch, module, step, patch, kernel
+):
     """A superstep that raises must not leak the kernel's persisted
     adjacency and vertex set (nor, for directed PageRank, its dangling
-    set)."""
+    set; nor, for incremental CC, its carried adjacency parts)."""
     import importlib
 
-    def boom(*args, **kwargs):
-        raise RuntimeError("injected step failure")
-
     spark.catalog.clearCache()
-    monkeypatch.setattr(
-        importlib.import_module(f"igpm_pem_spark.operators.{module}"), step, boom
-    )
+    mod = importlib.import_module(f"igpm_pem_spark.operators.{module}")
+    monkeypatch.setattr(mod, step, patch(getattr(mod, step)))
     edges = edges_df(spark, [(0, 1), (1, 2), (2, 0), (0, 3)])
     with pytest.raises(RuntimeError, match="injected"):
         kernel(spark, edges)
@@ -316,10 +324,8 @@ def _weighted_pr_oracle(wpairs, directed, alpha=0.85, tol=1e-13, iters=3000):
     raise RuntimeError("weighted oracle did not converge")
 
 
-@pytest.mark.parametrize("directed,mode", [
-    (False, "exact"), (False, "delta"), (True, "exact"), (True, "delta"),
-])
-def test_weighted_pagerank_matches_oracle(spark, directed, mode):
+@pytest.mark.parametrize("directed", [False, True])
+def test_weighted_pagerank_matches_oracle(spark, directed):
     # parallel edge (0,1) appears twice -> weights must SUM; vertex 4 is a
     # sink in the directed view (dangling)
     wpairs = [
@@ -330,7 +336,7 @@ def test_weighted_pagerank_matches_oracle(spark, directed, mode):
         wpairs, "src BIGINT, dst BIGINT, wt DOUBLE"
     )
     res = pagerank(
-        spark, edges, directed=directed, mode=mode, tol=1e-10,
+        spark, edges, directed=directed, tol=1e-10,
         weight_col="wt", steps_per_commit=3,
     )
     got = {r.id: r["rank"] for r in res.ranks.collect()}
@@ -346,9 +352,9 @@ def test_spam_mass_composition_matches_python_oracle(spark):
     farthest from the seeds the largest."""
     edges, pairs, _ = _pairs("ba100", spark)
     seeds = sorted({s for s, _ in pairs} | {d for _, d in pairs})[:5]
-    pr = pagerank(spark, edges, tol=0.0, max_iter=8, mode="exact")
+    pr = pagerank(spark, edges, tol=0.0, max_iter=8)
     tr = pagerank(
-        spark, edges, tol=0.0, max_iter=8, mode="exact",
+        spark, edges, tol=0.0, max_iter=8,
         personalization={s: 1.0 for s in seeds},
     )
     got_pr = {r.id: r["rank"] for r in pr.ranks.collect()}

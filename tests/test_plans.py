@@ -37,7 +37,7 @@ def test_pagerank_step_never_broadcasts_state(spark):
     state = verts.select(
         "id", F.lit(1.0 / n).alias("rank"), F.lit(1.0).alias("delta")
     ).localCheckpoint(eager=True)
-    plan = _explain(_exact_step(state, adj, None, 0, n, 0.85, 1e-9, 4))
+    plan = _explain(_exact_step(state, adj, None, 0, n, 0.85, 4))
     # the rank-vector side must come in via a shuffled hash join — a
     # broadcast of per-vertex state cannot scale to 1e9 vertices, and its
     # single-threaded build also flattens core scaling (measured)
@@ -73,7 +73,7 @@ def test_message_agg_layout_pinned_to_adjacency_partitions(spark):
         "id", F.col("id").alias("label"), F.lit(True).alias("changed")
     ).localCheckpoint(eager=True)
     for step_df in (
-        _exact_step(pr_state, adj, None, 0, n, 0.85, 1e-9, 3),
+        _exact_step(pr_state, adj, None, 0, n, 0.85, 3),
         _cc_step(cc_state, adj, 3),
         _lpa_step(lpa_state, adj, 3),
     ):

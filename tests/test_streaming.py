@@ -185,7 +185,7 @@ def test_pagerank_stream_matches_batch(spark, tmp_path):
 
     assert state.batches == 3
     got = {r.id: r.rank for r in state.components.collect()}
-    want_res = pagerank(spark, edges.select("src", "dst"), tol=1e-6, mode="delta")
+    want_res = pagerank(spark, edges.select("src", "dst"), tol=1e-6)
     want = {r.id: r.rank for r in want_res.ranks.collect()}
     assert got.keys() == want.keys()
     for v, x in want.items():
