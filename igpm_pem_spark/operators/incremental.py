@@ -8,7 +8,21 @@ communities around the new edges (``incremental/query_call.py:180-258``,
 ``gray_incremental.py:230-271``, ``compute_part_RWR`` ``:473-478``).
 
 Our realization (O2/O3 in SURVEY.md §4) replaces the heuristic community
-scope with the exact/delta frontier the kernels already have:
+scope with the exact frontier the kernels already have. Each kernel is one
+refresh object with two methods:
+
+* ``base(cum)`` — run the batch kernel on the first cumulative edge set;
+* ``refresh(old, bucket, cum)`` — apply one arriving ``bucket`` to the
+  carried state (``old`` are the edges before it, ``cum = old ∪ bucket``).
+
+Both return the step's counts (``supersteps`` plus optional
+``StepMetrics`` fields), and the current result is the object's ``state``.
+Two thin drivers feed them: ``_replay`` below (timestamp buckets of one
+edge table) and ``streaming.stream._stream`` (one parquet file per
+micro-batch), so a replay and a stream run the same update. A refresh
+holds no cached relation between arrivals — carried relations are eager
+``localCheckpoint``s — because a stream never learns which batch is its
+last.
 
 * PageRank — ranks carry over: each bucket runs the batch kernel's exact
   power iteration warm-started from the previous fixpoint
@@ -16,9 +30,10 @@ scope with the exact/delta frontier the kernels already have:
   close to the new fixpoint, so the refresh needs fewer supersteps than a
   cold start, with no per-bucket seeding jobs and the batch kernel's
   exactness.
-* Connected components — the previous fixpoint stays valid except where
-  new edges merge components: seed ``changed`` at new-edge endpoints only
-  and rerun to fixpoint. Exact.
+* Connected components / SSSP / LPA — the previous fixpoint stays valid
+  except around the new edges: seed ``changed`` at new-edge endpoints only
+  and rerun to fixpoint. Exact (LPA: a stable labeling).
+* Pattern matching — only matches using ≥1 new edge are enumerated.
 * Per-step metrics mirror the reference's printed throughput
   (``incremental/query_call.py:250``: patterns/s; ours: supersteps, wall,
   edges/sec) and optional exact triangle/star ground truth
@@ -29,11 +44,12 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .graph import kernel_nparts, partitioned_adjacency, vertex_ids
-from .pagerank import PageRankResult, pagerank
+from .pagerank import pagerank
 
 
 @dataclass
@@ -78,6 +94,92 @@ def _bucket_sizes(edges: DataFrame, ts_col: str) -> dict[int, int]:
     }
 
 
+def _step_metrics(
+    step: int, n_new: int, n_total: int, wall: float, counts: dict
+) -> StepMetrics:
+    """One arrival's record from a refresh's ``counts``: edges/sec counts
+    both directions of the cumulative graph once per superstep."""
+    return StepMetrics(
+        step=step,
+        n_new_edges=n_new,
+        n_total_edges=n_total,
+        wall_sec=round(wall, 3),
+        edges_per_sec=round(counts["supersteps"] * 2 * n_total / max(wall, 1e-9), 1),
+        **counts,
+    )
+
+
+def _replay(kernel, edges: DataFrame, ts_col: str, base_steps: int) -> IncrementalResult:
+    """The one timestamp-bucket loop: the first ``base_steps`` buckets are
+    the base graph (``kernel.base``), every later bucket is one
+    ``kernel.refresh``. ``cum`` / ``old`` / ``bucket`` are lazy ``ts``
+    filters of ``edges``, so a partitioned store prunes its reads. The
+    base step's ``n_new_edges`` is the whole base slice."""
+    sizes = _bucket_sizes(edges, ts_col)
+    ts = F.col(ts_col)
+    result = IncrementalResult(state=None)
+    cum_m = 0
+    for si, cut in enumerate(sorted(sizes)):
+        cum_m += sizes[cut]
+        if si < base_steps - 1:
+            continue
+        cum = edges.where(ts <= cut)
+        t0 = time.time()
+        if not result.steps:
+            n_new, counts = cum_m, kernel.base(cum)
+        else:
+            n_new = sizes[cut]
+            counts = kernel.refresh(edges.where(ts < cut), edges.where(ts == cut), cum)
+        result.steps.append(_step_metrics(cut, n_new, cum_m, time.time() - t0, counts))
+    result.state = kernel.state
+    return result
+
+
+class _PageRankRefresh:
+    """Exact PageRank: the base converges from a uniform start, every
+    arrival re-converges warm-started from the carried ranks. With a
+    ``pem`` controller each refresh stops at ``max(tol, pem.eps · n)``, n
+    the previous vertex count, and every call's wall is reported back.
+    ``counts`` (a ``_DeltaPatternCounts``) adds per-step triangle/star
+    ground truth."""
+
+    def __init__(
+        self, spark: SparkSession, *, alpha: float, tol: float, directed: bool,
+        num_partitions: int, pem=None, counts=None,
+    ):
+        self.spark, self.alpha, self.tol, self.directed = spark, alpha, tol, directed
+        self.np, self.pem, self.counts = num_partitions, pem, counts
+        self.state: DataFrame | None = None  # (id, rank)
+        self.n = 0
+
+    def base(self, cum: DataFrame) -> dict:
+        out = self._converge(cum, self.tol)
+        if self.counts is not None:
+            out.update(self.counts.base(cum))
+        return out
+
+    def refresh(self, old: DataFrame, bucket: DataFrame, cum: DataFrame) -> dict:
+        tol = self.tol if self.pem is None else max(self.tol, self.pem.eps * self.n)
+        out = self._converge(cum, tol)
+        if self.counts is not None:
+            out.update(self.counts.refresh(old, bucket, cum))
+        return out
+
+    def _converge(self, cum: DataFrame, tol: float) -> dict:
+        t0 = time.time()
+        res = pagerank(
+            self.spark, cum, directed=self.directed, alpha=self.alpha, tol=tol,
+            num_partitions=self.np, init_ranks=self.state,
+        )
+        if self.pem is not None:
+            self.pem.observe(
+                time.time() - t0,
+                res.stats[-1].active_vertices if res.stats else None,
+            )
+        self.state, self.n = res.ranks, res.n_vertices
+        return {"supersteps": res.supersteps}
+
+
 def incremental_pagerank(
     spark: SparkSession,
     edges: DataFrame,
@@ -103,53 +205,12 @@ def incremental_pagerank(
     SURVEY §3.3 stance)."""
     if num_partitions is None:
         num_partitions = kernel_nparts(edges)
-    sizes = _bucket_sizes(edges, ts_col)
-    steps = sorted(sizes)
-    base_cut = steps[min(base_steps, len(steps)) - 1] if steps else 0
-    cum_m = 0
-
-    result = IncrementalResult(state=None)
-    prev: PageRankResult | None = None
     counts = _DeltaPatternCounts(num_partitions) if with_pattern_counts else None
-    for si, cut in enumerate(steps):
-        cum_m += sizes[cut]
-        if si < base_steps - 1:
-            continue
-        cum = edges.where(F.col(ts_col) <= cut)
-        new_cnt = sizes[cut] if cut > base_cut else cum_m
-        step_tol = tol
-        if pem is not None and prev is not None:
-            step_tol = max(tol, pem.eps * prev.n_vertices)
-        t0 = time.time()
-        res = pagerank(
-            spark, cum, directed=directed, alpha=alpha, tol=step_tol,
-            num_partitions=num_partitions,
-            init_ranks=prev.ranks if prev is not None else None,
-        )
-        wall = time.time() - t0
-        if pem is not None:
-            pem.observe(
-                wall,
-                res.stats[-1].active_vertices if res.stats else None,
-            )
-        metrics = StepMetrics(
-            step=cut,
-            n_new_edges=new_cnt,
-            n_total_edges=cum_m,
-            supersteps=res.supersteps,
-            wall_sec=round(wall, 3),
-            edges_per_sec=round(res.supersteps * 2 * cum_m / wall, 1),
-        )
-        if counts is not None:
-            bucket_df = (
-                None if counts.known is None
-                else edges.where(F.col(ts_col) == cut)
-            )
-            metrics.n_triangles, metrics.n_stars = counts.update(cum, bucket_df)
-        result.steps.append(metrics)
-        prev = res
-    result.state = prev.ranks if prev is not None else None
-    return result
+    kernel = _PageRankRefresh(
+        spark, alpha=alpha, tol=tol, directed=directed,
+        num_partitions=num_partitions, pem=pem, counts=counts,
+    )
+    return _replay(kernel, edges, ts_col, base_steps)
 
 
 class _DeltaPatternCounts:
@@ -166,65 +227,63 @@ class _DeltaPatternCounts:
     def __init__(self, num_partitions: int, star_min_degree: int = 4):
         self.np = num_partitions
         self.k = star_min_degree
-        self.known: DataFrame | None = None  # canonical a<b edges, persisted
+        self.known: DataFrame | None = None  # canonical a<b edges
         self.deg: DataFrame | None = None  # (id, d)
         self.tri = 0
 
-    def update(self, cum: DataFrame, bucket: DataFrame | None) -> tuple[int, int]:
+    def base(self, cum: DataFrame) -> dict:
         from .graph import canonical_undirected
         from .triangles import triangle_count
 
-        if self.known is None:
-            known = (
-                canonical_undirected(cum)
-                .repartition(self.np, "src", "dst")
-                .persist()
+        self.known = self._keyed(canonical_undirected(cum))
+        self.tri = triangle_count(self.known)
+        self.deg = (
+            self.known.select(F.col("src").alias("id"))
+            .unionByName(self.known.select(F.col("dst").alias("id")))
+            .groupBy("id")
+            .agg(F.count("*").alias("d"))
+            .localCheckpoint(eager=True)
+        )
+        return self._counts()
+
+    def refresh(self, old: DataFrame, bucket: DataFrame, cum: DataFrame) -> dict:
+        from .graph import canonical_undirected
+
+        cb = canonical_undirected(bucket)
+        # truly-new canonical edges; known is hash-partitioned on the
+        # join key so only the (tiny) bucket side shuffles
+        new_e = cb.join(
+            self.known, ["src", "dst"], "left_anti"
+        ).localCheckpoint(eager=True)
+        self.tri += self._tri_delta(new_e)
+        upd = (
+            new_e.select(F.col("src").alias("id"))
+            .unionByName(new_e.select(F.col("dst").alias("id")))
+            .groupBy("id")
+            .agg(F.count("*").alias("du"))
+        )
+        self.deg = (
+            self.deg.join(upd, "id", "outer")
+            .select(
+                "id",
+                (
+                    F.coalesce(F.col("d"), F.lit(0))
+                    + F.coalesce(F.col("du"), F.lit(0))
+                ).alias("d"),
             )
-            known.count()
-            self.known = known
-            self.tri = triangle_count(known)
-            self.deg = (
-                known.select(F.col("src").alias("id"))
-                .unionByName(known.select(F.col("dst").alias("id")))
-                .groupBy("id")
-                .agg(F.count("*").alias("d"))
-                .localCheckpoint(eager=True)
-            )
-        else:
-            cb = canonical_undirected(bucket)
-            # truly-new canonical edges; known is hash-partitioned on the
-            # join key so only the (tiny) bucket side shuffles
-            new_e = cb.join(
-                self.known, ["src", "dst"], "left_anti"
-            ).localCheckpoint(eager=True)
-            self.tri += self._tri_delta(new_e)
-            upd = (
-                new_e.select(F.col("src").alias("id"))
-                .unionByName(new_e.select(F.col("dst").alias("id")))
-                .groupBy("id")
-                .agg(F.count("*").alias("du"))
-            )
-            self.deg = (
-                self.deg.join(upd, "id", "outer")
-                .select(
-                    "id",
-                    (
-                        F.coalesce(F.col("d"), F.lit(0))
-                        + F.coalesce(F.col("du"), F.lit(0))
-                    ).alias("d"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            old = self.known
-            self.known = (
-                old.unionByName(new_e)
-                .repartition(self.np, "src", "dst")
-                .persist()
-            )
-            self.known.count()
-            old.unpersist()
+            .localCheckpoint(eager=True)
+        )
+        self.known = self._keyed(self.known.unionByName(new_e))
+        return self._counts()
+
+    def _keyed(self, canon: DataFrame) -> DataFrame:
+        # an eager checkpoint keeps the (src, dst) hash partitioning the
+        # anti-join relies on and leaves nothing cached to release
+        return canon.repartition(self.np, "src", "dst").localCheckpoint(eager=True)
+
+    def _counts(self) -> dict:
         stars = self.deg.where(F.col("d") >= self.k).count()
-        return self.tri, int(stars)
+        return {"n_triangles": self.tri, "n_stars": int(stars)}
 
     def _tri_delta(self, new_e: DataFrame) -> int:
         """Triangles (a<b<c) using ≥1 edge of ``new_e`` — three pinned
@@ -248,6 +307,36 @@ class _DeltaPatternCounts:
         )
 
 
+class _PatternRefresh:
+    """Incremental matching: the base enumerates every match; an arrival
+    enumerates ONLY matches using ≥1 bucket edge (append-only graphs never
+    lose matches) and unions them into the carried match table."""
+
+    def __init__(self, spark: SparkSession, vertices: DataFrame, q):
+        self.spark, self.vertices, self.q = spark, vertices, q
+        self.state: DataFrame | None = None  # one row per match signature
+        self.n = 0
+
+    def base(self, cum: DataFrame) -> dict:
+        from ..plans.pattern import match_pattern
+
+        return self._carry(match_pattern(self.spark, self.vertices, cum, self.q))
+
+    def refresh(self, old: DataFrame, bucket: DataFrame, cum: DataFrame) -> dict:
+        from ..plans.pattern import match_pattern
+
+        new_m = match_pattern(
+            self.spark, self.vertices, cum, self.q,
+            delta_edges=bucket, old_edges=old,
+        )
+        return self._carry(self.state.unionByName(new_m).dropDuplicates(["sig"]))
+
+    def _carry(self, matches: DataFrame) -> dict:
+        self.state = matches.localCheckpoint(eager=True)
+        n, self.n = self.n, self.state.count()
+        return {"supersteps": 1, "n_new_matches": self.n - n}
+
+
 def incremental_pattern_match(
     spark: SparkSession,
     vertices: DataFrame,
@@ -265,54 +354,56 @@ def incremental_pattern_match(
     (``incremental/gray_incremental.py:230-271``), without its
     community-scope heuristic. Final state equals the batch match (tests
     pin it). State rows: one per distinct match signature."""
-    from ..plans.pattern import match_pattern
+    return _replay(_PatternRefresh(spark, vertices, q), edges, ts_col, base_steps)
 
-    sizes = _bucket_sizes(edges, ts_col)
-    steps = sorted(sizes)
-    cum_m = 0
-    result = IncrementalResult(state=None)
-    matches: DataFrame | None = None
-    for si, cut in enumerate(steps):
-        cum_m += sizes[cut]
-        if si < base_steps - 1:
-            continue
-        cum = edges.where(F.col(ts_col) <= cut)
-        t0 = time.time()
-        if matches is None:
-            new_m = match_pattern(spark, vertices, cum, q)
-        else:
-            bucket = edges.where(F.col(ts_col) == cut)
-            old = edges.where(F.col(ts_col) < cut)
-            new_m = match_pattern(
-                spark, vertices, cum, q, delta_edges=bucket, old_edges=old
-            )
-        if matches is None:
-            matches = new_m.localCheckpoint(eager=True)
-            n_new = matches.count()
-        else:
-            before = matches.count()
-            matches = (
-                matches.unionByName(new_m)
-                .dropDuplicates(["sig"])
-                .localCheckpoint(eager=True)
-            )
-            n_new = matches.count() - before
-        wall = time.time() - t0
-        result.steps.append(
-            StepMetrics(
-                step=cut,
-                n_new_edges=sizes[cut],
-                n_total_edges=cum_m,
-                supersteps=1,
-                wall_sec=round(wall, 3),
-                edges_per_sec=round(cum_m / max(wall, 1e-9), 1),
-                n_triangles=None,
-                n_stars=None,
-                n_new_matches=int(n_new),
-            )
+
+def _changed_at(state: DataFrame, touched: DataFrame) -> DataFrame:
+    """``state`` with a ``changed`` flag set exactly on ``touched`` ids."""
+    return state.join(touched.withColumn("t", F.lit(True)), "id", "left").select(
+        *state.columns, F.coalesce(F.col("t"), F.lit(False)).alias("changed")
+    )
+
+
+class _LabelPropRefresh:
+    """Deterministic LPA: the base runs batch LPA; an arrival carries the
+    labels over and marks the bucket's endpoints changed, and only
+    RECEIVERS adjacent to a changed vertex recompute their argmax."""
+
+    def __init__(self, spark: SparkSession, max_iter: int, num_partitions: int):
+        self.spark, self.max_iter, self.np = spark, max_iter, num_partitions
+        self.state: DataFrame | None = None  # (id, label)
+
+    def base(self, cum: DataFrame) -> dict:
+        from .labelprop import label_propagation
+
+        res = label_propagation(
+            self.spark, cum, max_iter=self.max_iter,
+            num_partitions=self.np, steps_per_commit=2,
         )
-    result.state = matches
-    return result
+        self.state = res.labels.localCheckpoint(eager=True)
+        return {"supersteps": res.supersteps}
+
+    def refresh(self, old: DataFrame, bucket: DataFrame, cum: DataFrame) -> dict:
+        from ._superstep import edge_partition_counts, released, run
+
+        labels, touched = self.state, vertex_ids(bucket)
+        adj = partitioned_adjacency(cum, self.np).persist()
+        with released(adj):
+            res = run(
+                self.spark,
+                lambda: _changed_at(
+                    vertex_ids(adj).join(labels, "id", "left").select(
+                        "id", F.coalesce(F.col("label"), F.col("id")).alias("label")
+                    ),
+                    touched,
+                ).localCheckpoint(eager=True),
+                lambda s: _lpa_step_frontier(s, adj, self.np),
+                max_iter=self.max_iter,
+                edge_parts=edge_partition_counts(adj),
+                num_partitions=self.np,
+            )
+            self.state = res.state.select("id", "label").localCheckpoint(eager=True)
+        return {"supersteps": res.supersteps}
 
 
 def incremental_labelprop(
@@ -337,69 +428,10 @@ def incremental_labelprop(
     ``incremental/query_call.py:130-165``). Tests pin stability (one
     more full sweep changes nothing) and batch equality on graphs with
     unambiguous communities."""
-    from ._superstep import edge_partition_counts, released, run
-    from .labelprop import label_propagation
-
     if num_partitions is None:
         num_partitions = kernel_nparts(edges)
-    sizes = _bucket_sizes(edges, ts_col)
-    steps = sorted(sizes)
-    cum_m = 0
-    result = IncrementalResult(state=None)
-    labels: DataFrame | None = None
-    for si, cut in enumerate(steps):
-        cum_m += sizes[cut]
-        if si < base_steps - 1:
-            continue
-        cum = edges.where(F.col(ts_col) <= cut)
-        t0 = time.time()
-        if labels is None:
-            res = label_propagation(
-                spark, cum, max_iter=max_iter_per_step,
-                num_partitions=num_partitions, steps_per_commit=2,
-            )
-            labels = res.labels.localCheckpoint(eager=True)
-            supersteps = res.supersteps
-        else:
-            new_edges = edges.where(F.col(ts_col) == cut)
-            touched = (
-                new_edges.select(F.col("src").alias("id"))
-                .unionByName(new_edges.select(F.col("dst").alias("id")))
-                .distinct()
-            )
-            adj = partitioned_adjacency(cum, num_partitions).persist()
-            with released(adj):
-                res = run(
-                    spark,
-                    lambda: vertex_ids(adj)
-                    .join(labels, "id", "left")
-                    .join(touched.withColumn("t", F.lit(True)), "id", "left")
-                    .select(
-                        "id",
-                        F.coalesce(F.col("label"), F.col("id")).alias("label"),
-                        F.coalesce(F.col("t"), F.lit(False)).alias("changed"),
-                    )
-                    .localCheckpoint(eager=True),
-                    lambda s: _lpa_step_frontier(s, adj, num_partitions),
-                    max_iter=max_iter_per_step,
-                    edge_parts=edge_partition_counts(adj),
-                    num_partitions=num_partitions,
-                )
-                labels = res.state.select("id", "label").localCheckpoint(eager=True)
-            supersteps = res.supersteps
-        wall = time.time() - t0
-        result.steps.append(
-            StepMetrics(
-                step=cut,
-                n_new_edges=sizes[cut],
-                n_total_edges=cum_m,
-                supersteps=supersteps,
-                wall_sec=round(wall, 3),
-                edges_per_sec=round(supersteps * 2 * cum_m / max(wall, 1e-9), 1),
-            )
-        )
-    result.state = labels
-    return result
+    kernel = _LabelPropRefresh(spark, max_iter_per_step, num_partitions)
+    return _replay(kernel, edges, ts_col, base_steps)
 
 
 def _lpa_step_frontier(state: DataFrame, adj: DataFrame, n_parts: int) -> DataFrame:
@@ -446,6 +478,91 @@ def _lpa_step_frontier(state: DataFrame, adj: DataFrame, n_parts: int) -> DataFr
     )
 
 
+class _ComponentsRefresh:
+    """Exact incremental hash-min: an arrival seeds the frontier at the
+    bucket's endpoints (everything else is already a fixpoint).
+
+    Incremental in I/O too: the cumulative adjacency is CARRIED as a list
+    of parts — the base graph shuffled once, plus one bucket-sized delta
+    per arrival — instead of re-running ``partitioned_adjacency(cum)`` (an
+    O(E) shuffle) every bucket. ``_cc_step`` joins the frontier against
+    each part in place, so per-step shuffle volume is ∝ the bucket + the
+    frontier's message cone, never the full edge set (hash-min is
+    insensitive to the duplicate rows a delta can re-introduce). Vertices
+    likewise: the carried fixpoint already names every prior vertex, so
+    the state is rebuilt from it + the bucket's endpoints — no O(E)
+    ``vertex_ids`` distinct per bucket. Parts are eager
+    ``localCheckpoint``s: they keep their src hash partitioning and leave
+    nothing cached. Delta parts are compacted (union → one repartition of
+    DELTA data only) past ``MAX_PARTS`` so a long replay doesn't
+    accumulate per-superstep join fan-out."""
+
+    MAX_PARTS = 8
+
+    def __init__(self, spark: SparkSession, num_partitions: int):
+        self.spark, self.np = spark, num_partitions
+        self.state: DataFrame | None = None  # (id, component)
+        self.parts: list[DataFrame] = []
+        self.edge_parts: dict[int, int] = {}
+
+    def base(self, cum: DataFrame) -> dict:
+        from .components import connected_components
+
+        res = connected_components(
+            self.spark, cum, num_partitions=self.np, steps_per_commit=4
+        )
+        self.state = res.components.localCheckpoint(eager=True)
+        return {"supersteps": res.supersteps, "adj_shuffled_rows": self._carry(cum)}
+
+    def refresh(self, old: DataFrame, bucket: DataFrame, cum: DataFrame) -> dict:
+        from ._superstep import run
+        from .components import _cc_shortcut, _cc_step
+
+        shuffled = self._carry(bucket)
+        comp, touched = self.state, vertex_ids(bucket)
+        # the carried fixpoint names every prior vertex; only the
+        # bucket's endpoints can be new, and only they start changed
+        new_vs = touched.join(comp, "id", "left_anti").select(
+            "id", F.col("id").alias("component")
+        )
+        parts = self.parts
+        res = run(
+            self.spark,
+            lambda: _changed_at(comp.unionByName(new_vs), touched).localCheckpoint(
+                eager=True
+            ),
+            lambda s: _cc_shortcut(_cc_step(s, parts, self.np)),
+            max_iter=100,
+            edge_parts=self.edge_parts,
+            num_partitions=self.np,
+            steps_per_commit=2,
+            eager_steps=True,
+        )
+        self.state = res.state.select("id", "component").localCheckpoint(eager=True)
+        return {"supersteps": res.supersteps, "adj_shuffled_rows": shuffled}
+
+    def _carry(self, edges: DataFrame) -> int:
+        """Append ``edges``' adjacency as one more carried part; returns
+        the rows it shuffled."""
+        from ._superstep import edge_partition_counts
+
+        part = partitioned_adjacency(edges, self.np).localCheckpoint(eager=True)
+        counts = edge_partition_counts(part)
+        for pid, c in counts.items():
+            self.edge_parts[pid] = self.edge_parts.get(pid, 0) + c
+        self.parts.append(part)
+        if len(self.parts) > self.MAX_PARTS:
+            # compact the deltas (never the base): re-shuffles only
+            # delta-sized data, keeps the per-superstep join fan-out
+            # bounded on long replays
+            merged = reduce(DataFrame.unionByName, self.parts[1:])
+            self.parts = [
+                self.parts[0],
+                merged.repartition(self.np, "src").localCheckpoint(eager=True),
+            ]
+        return sum(counts.values())
+
+
 def incremental_components(
     spark: SparkSession,
     edges: DataFrame,
@@ -454,120 +571,83 @@ def incremental_components(
     base_steps: int = 1,
     num_partitions: int | None = None,
 ) -> IncrementalResult:
-    """Exact incremental hash-min: per arriving bucket, seed the frontier
-    at the new edges' endpoints (everything else is already a fixpoint).
-
-    Incremental in I/O too: the cumulative adjacency is CARRIED as a list
-    of persisted parts — the base graph shuffled once, plus one
-    bucket-sized delta per arrival — instead of re-running
-    ``partitioned_adjacency(cum)`` (an O(E) shuffle) every bucket.
-    ``_cc_step`` joins the frontier against each part in place, so
-    per-step shuffle volume is ∝ the bucket + the frontier's message
-    cone, never the full edge set (hash-min is insensitive to the
-    duplicate rows a delta can re-introduce). Vertices likewise: the
-    carried fixpoint already names every prior vertex, so the state is
-    rebuilt from ``comp`` + the bucket's endpoints — no O(E)
-    ``vertex_ids`` distinct per bucket. Delta parts are compacted
-    (union → one repartition of DELTA data only) past ``_MAX_ADJ_PARTS``
-    so a long replay doesn't accumulate per-superstep join fan-out."""
-    from ._superstep import edge_partition_counts, run
-    from .components import _cc_shortcut, _cc_step, connected_components
-
+    """Exact incremental hash-min over arrival buckets: per bucket the
+    frontier is seeded at the new edges' endpoints and the carried
+    adjacency grows by one bucket-sized part (see ``_ComponentsRefresh``).
+    The result equals batch ``connected_components`` on the full graph."""
     if num_partitions is None:
         num_partitions = kernel_nparts(edges)
-    sizes = _bucket_sizes(edges, ts_col)
-    steps = sorted(sizes)
-    cum_m = 0
-    result = IncrementalResult(state=None)
-    comp: DataFrame | None = None
-    adj_parts: list[DataFrame] = []
-    edge_parts: dict[int, int] = {}
-    _MAX_ADJ_PARTS = 8
-    try:
-        for si, cut in enumerate(steps):
-            cum_m += sizes[cut]
-            if si < base_steps - 1:
-                continue
-            t0 = time.time()
-            if comp is None:
-                cum = edges.where(F.col(ts_col) <= cut)
-                res = connected_components(
-                    spark, cum, num_partitions=num_partitions, steps_per_commit=4
-                )
-                comp = res.components.localCheckpoint(eager=True)
-                supersteps = res.supersteps
-                base_adj = partitioned_adjacency(cum, num_partitions).persist()
-                adj_parts = [base_adj]
-                edge_parts = edge_partition_counts(base_adj)
-                adj_shuffled = sum(edge_parts.values())
-            else:
-                new_edges = edges.where(F.col(ts_col) == cut)
-                touched = (
-                    new_edges.select(F.col("src").alias("id"))
-                    .unionByName(new_edges.select(F.col("dst").alias("id")))
-                    .distinct()
-                )
-                delta_adj = partitioned_adjacency(new_edges, num_partitions).persist()
-                adj_parts.append(delta_adj)
-                if len(adj_parts) > _MAX_ADJ_PARTS:
-                    # compact the deltas (never the base): re-shuffles only
-                    # delta-sized data, keeps the per-superstep join fan-out
-                    # bounded on long replays
-                    tail = adj_parts[1:]
-                    merged = tail[0]
-                    for p in tail[1:]:
-                        merged = merged.unionByName(p)
-                    merged = merged.repartition(num_partitions, "src").persist()
-                    merged.count()
-                    for p in tail:
-                        p.unpersist()
-                    adj_parts = [adj_parts[0], merged]
-                delta_counts = edge_partition_counts(delta_adj)
-                adj_shuffled = sum(delta_counts.values())
-                for pid, c in delta_counts.items():
-                    edge_parts[pid] = edge_parts.get(pid, 0) + c
-                # the carried fixpoint names every prior vertex; only the
-                # bucket's endpoints can be new, and only they start changed
-                new_vs = touched.join(comp, "id", "left_anti").select(
-                    "id", F.col("id").alias("component")
-                )
-                res = run(
-                    spark,
-                    lambda: comp.unionByName(new_vs)
-                    .join(touched.withColumn("t", F.lit(True)), "id", "left")
-                    .select(
-                        "id",
-                        "component",
-                        F.coalesce(F.col("t"), F.lit(False)).alias("changed"),
-                    )
-                    .localCheckpoint(eager=True),
-                    lambda s: _cc_shortcut(_cc_step(s, adj_parts, num_partitions)),
-                    max_iter=100,
-                    edge_parts=edge_parts,
-                    num_partitions=num_partitions,
-                    steps_per_commit=2,
-                    eager_steps=True,
-                )
-                supersteps = res.supersteps
-                comp = res.state.select("id", "component").localCheckpoint(eager=True)
-            wall = time.time() - t0
-            result.steps.append(
-                StepMetrics(
-                    step=cut,
-                    n_new_edges=sizes[cut],
-                    n_total_edges=cum_m,
-                    supersteps=supersteps,
-                    wall_sec=round(wall, 3),
-                    edges_per_sec=round(supersteps * 2 * cum_m / max(wall, 1e-9), 1),
-                    adj_shuffled_rows=int(adj_shuffled),
-                )
+    return _replay(_ComponentsRefresh(spark, num_partitions), edges, ts_col, base_steps)
+
+
+class _SSSPRefresh:
+    """Exact weighted SSSP: append-only edges are MONOTONE for min-plus, so
+    the carried distances stay a valid upper bound. An arrival relaxes ONLY
+    its own edges against them (a bucket-sized join), seeds the frontier
+    where that improves something, and sweeps frontier-restricted on the
+    cumulative adjacency."""
+
+    def __init__(
+        self, spark: SparkSession, source: int, weight_col: str, num_partitions: int
+    ):
+        self.spark, self.source, self.w, self.np = spark, source, weight_col, num_partitions
+        self.state: DataFrame | None = None  # (id, dist)
+
+    def base(self, cum: DataFrame) -> dict:
+        from .sssp import sssp
+
+        res = sssp(
+            self.spark, cum, self.source, weight_col=self.w,
+            num_partitions=self.np, steps_per_commit=4,
+        )
+        self.state = res.distances.localCheckpoint(eager=True)
+        return {"supersteps": res.supersteps}
+
+    def refresh(self, old: DataFrame, bucket: DataFrame, cum: DataFrame) -> dict:
+        from ._superstep import edge_partition_counts, released, run
+        from .sssp import _prep, _sssp_step
+
+        dist = self.state
+        # relax ONLY the new edges against the carried fixpoint: a
+        # bucket-sized join, not a graph-sized pass
+        cand = (
+            _prep(bucket, self.w, directed=False)
+            .join(
+                dist.select(F.col("id").alias("src"), F.col("dist").alias("d0")),
+                "src",
             )
-    finally:
-        # the carried adjacency parts are freed on every exit path
-        for p in adj_parts:
-            p.unpersist()
-    result.state = comp
-    return result
+            .select("dst", (F.col("d0") + F.col("w")).alias("cand"))
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.min("cand").alias("cand"))
+        )
+        start = (
+            dist.join(cand, "id", "full")
+            .select(
+                "id",
+                F.least(
+                    F.coalesce(F.col("dist"), F.col("cand")),
+                    F.coalesce(F.col("cand"), F.col("dist")),
+                ).alias("dist"),
+                (
+                    F.col("dist").isNull()
+                    | (F.coalesce(F.col("cand"), F.col("dist")) < F.col("dist"))
+                ).alias("changed"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        adj = _prep(cum, self.w, directed=False).repartition(self.np, "src").persist()
+        with released(adj):
+            res = run(
+                self.spark,
+                lambda: start,
+                lambda s: _sssp_step(s, adj, self.np),
+                max_iter=100,
+                edge_parts=edge_partition_counts(adj),
+                num_partitions=self.np,
+                steps_per_commit=2,
+            )
+            self.state = res.state.select("id", "dist").localCheckpoint(eager=True)
+        return {"supersteps": res.supersteps}
 
 
 def incremental_sssp(
@@ -580,97 +660,14 @@ def incremental_sssp(
     base_steps: int = 1,
     num_partitions: int | None = None,
 ) -> IncrementalResult:
-    """Exact incremental weighted SSSP over arrival buckets.
-
-    Append-only edges are MONOTONE for min-plus: a new edge can only
-    create shorter paths, never invalidate the carried distances, so the
-    previous fixpoint is a valid upper bound. Per bucket the frontier is
-    seeded ONLY where a new edge actually improves something — each new
-    edge (u,v,w) is relaxed once against the carried state (one join of
-    the BUCKET, not the graph, against the distance table) — and the
-    Bellman-Ford sweeps then run frontier-restricted on the cumulative
-    adjacency. Work per step ∝ the perturbation's downstream cone, the
-    PEM partial-execution idea exactly (SURVEY.md §4 O2), with no
-    heuristic scope: the result equals batch ``sssp`` on the full graph.
-    """
-    from ._superstep import edge_partition_counts, released, run
-    from .sssp import _prep, _sssp_step, sssp
-
+    """Exact incremental weighted SSSP over arrival buckets: the previous
+    fixpoint is a valid upper bound, each bucket's edges are relaxed once
+    against it and the Bellman-Ford sweeps then run frontier-restricted
+    (see ``_SSSPRefresh``). Work per step ∝ the perturbation's downstream
+    cone, the PEM partial-execution idea exactly (SURVEY.md §4 O2), with
+    no heuristic scope: the result equals batch ``sssp`` on the full
+    graph."""
     if num_partitions is None:
         num_partitions = kernel_nparts(edges)
-    sizes = _bucket_sizes(edges, ts_col)
-    steps = sorted(sizes)
-    cum_m = 0
-    result = IncrementalResult(state=None)
-    dist: DataFrame | None = None
-    for si, cut in enumerate(steps):
-        cum_m += sizes[cut]
-        if si < base_steps - 1:
-            continue
-        cum = edges.where(F.col(ts_col) <= cut)
-        t0 = time.time()
-        if dist is None:
-            res = sssp(
-                spark, cum, source, weight_col=weight_col,
-                num_partitions=num_partitions, steps_per_commit=4,
-            )
-            dist = res.distances.localCheckpoint(eager=True)
-            supersteps = res.supersteps
-        else:
-            adj = _prep(
-                edges.where(F.col(ts_col) == cut), weight_col, directed=False
-            )
-            # relax ONLY the new edges against the carried fixpoint: a
-            # bucket-sized join, not a graph-sized pass
-            cand = (
-                adj.join(
-                    dist.select(F.col("id").alias("src"), F.col("dist").alias("d0")),
-                    "src",
-                )
-                .select("dst", (F.col("d0") + F.col("w")).alias("cand"))
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.min("cand").alias("cand"))
-            )
-            state = (
-                dist.join(cand, "id", "full")
-                .select(
-                    "id",
-                    F.least(
-                        F.coalesce(F.col("dist"), F.col("cand")),
-                        F.coalesce(F.col("cand"), F.col("dist")),
-                    ).alias("dist"),
-                    (
-                        F.col("dist").isNull()
-                        | (F.coalesce(F.col("cand"), F.col("dist")) < F.col("dist"))
-                    ).alias("changed"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            full_adj = _prep(cum, weight_col, directed=False).repartition(
-                num_partitions, "src"
-            ).persist()
-            with released(full_adj):
-                res = run(
-                    spark,
-                    lambda: state,
-                    lambda s: _sssp_step(s, full_adj, num_partitions),
-                    max_iter=100,
-                    edge_parts=edge_partition_counts(full_adj),
-                    num_partitions=num_partitions,
-                    steps_per_commit=2,
-                )
-                dist = res.state.select("id", "dist").localCheckpoint(eager=True)
-            supersteps = res.supersteps
-        wall = time.time() - t0
-        result.steps.append(
-            StepMetrics(
-                step=cut,
-                n_new_edges=sizes[cut],
-                n_total_edges=cum_m,
-                supersteps=supersteps,
-                wall_sec=round(wall, 3),
-                edges_per_sec=round(supersteps * 2 * cum_m / max(wall, 1e-9), 1),
-            )
-        )
-    result.state = dist
-    return result
+    kernel = _SSSPRefresh(spark, source, weight_col, num_partitions)
+    return _replay(kernel, edges, ts_col, base_steps)

@@ -3,11 +3,14 @@
 The reference's "stream" is a hand-rolled micro-batch replay of a
 timestamped edge log (SURVEY.md §2.8): buckets arrive in order, state
 (RWR/EXTRACT/results) is carried and updated per bucket. The idiomatic
-Spark form is a file-source stream of edge parquet + ``foreachBatch``
-driving exactly the same per-bucket update the batch replay uses
-(operators/incremental.py), with engine state carried across batches by
-the driver. For the graph replay, watermarks are deliberately out of
-scope — the reference's buckets are ordered (``step_list`` sorted,
+Spark form is a file-source stream of edge parquet, one file per
+micro-batch, whose batch handler (``_stream``) drives exactly the same
+per-bucket update the timestamp replay uses: each graph stream hands one
+refresh object of ``operators/incremental.py`` to ``_stream``, which
+calls its ``base`` on the first batch and its ``refresh`` on every later
+one, with the cumulative edges carried across batches by the driver. For
+the graph replay, watermarks are deliberately out of scope — the
+reference's buckets are ordered (``step_list`` sorted,
 ``gray/query_call.py:135``).
 
 Training-data additions (round instructions): ``dedup_stream`` (exact
@@ -18,9 +21,20 @@ dropped) — the two streaming shapes a corpus pipeline actually runs.
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ..operators.incremental import (
+    StepMetrics,
+    _ComponentsRefresh,
+    _LabelPropRefresh,
+    _PageRankRefresh,
+    _PatternRefresh,
+    _SSSPRefresh,
+    _step_metrics,
+)
 
 
 @dataclass
@@ -28,9 +42,73 @@ class StreamState:
     """Driver-held engine state updated by each micro-batch."""
 
     edges: DataFrame | None = None  # cumulative edge table
+    # the kernel's current result: (id, component | dist | rank | label)
     components: DataFrame | None = None
+    matches: DataFrame | None = None  # pattern_match_stream's match table
     batches: int = 0
-    history: list[dict] = field(default_factory=list)
+    history: list[StepMetrics] = field(default_factory=list)
+
+
+def _foreach_file(
+    spark: SparkSession, source_dir: str, schema: str, on_batch,
+    checkpoint_dir: str | None,
+):
+    """Start ``on_batch`` over ``source_dir`` with one parquet file per
+    micro-batch: availableNow would otherwise swallow every waiting file
+    into a single batch, and each file IS an arrival bucket here."""
+    reader = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(source_dir)
+    )
+    writer = reader.writeStream.foreachBatch(on_batch).trigger(availableNow=True)
+    if checkpoint_dir:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    return writer.start()
+
+
+def _stream(
+    spark: SparkSession,
+    source_dir: str,
+    kernel,
+    schema: str,
+    checkpoint_dir: str | None,
+    out: str = "components",
+) -> tuple["object", StreamState]:
+    """The one micro-batch driver of the graph streams: the first
+    non-empty batch is ``kernel.base``, every later one is
+    ``kernel.refresh(old, bucket, cum)`` over the carried union of the
+    batches. After each batch the kernel's result lands in
+    ``state.<out>`` and one ``StepMetrics`` (step = batch id) in
+    ``state.history``. Returns (StreamingQuery, StreamState); the caller
+    stops the query."""
+    state = StreamState()
+
+    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
+        bucket = batch_df.localCheckpoint(eager=True)
+        n = bucket.count()
+        if n == 0:
+            return
+        t0 = time.time()
+        old = state.edges
+        if old is None:
+            cum, counts = bucket, kernel.base(bucket)
+        else:
+            cum = old.unionByName(bucket).localCheckpoint(eager=True)
+            counts = kernel.refresh(old, bucket, cum)
+        total = n + (state.history[-1].n_total_edges if state.history else 0)
+        state.batches += 1
+        state.edges = cum
+        setattr(state, out, kernel.state)
+        state.history.append(
+            _step_metrics(batch_id, n, total, time.time() - t0, counts)
+        )
+
+    return _foreach_file(spark, source_dir, schema, on_batch, checkpoint_dir), state
+
+
+def _default_nparts(spark: SparkSession, num_partitions: int | None) -> int:
+    return num_partitions or spark.sparkContext.defaultParallelism
 
 
 def components_stream(
@@ -43,75 +121,14 @@ def components_stream(
 ) -> tuple["object", StreamState]:
     """Start a file-source stream over ``source_dir`` (new parquet files =
     new edge buckets) that maintains connected components incrementally:
-    each micro-batch seeds the hash-min frontier at the arriving edges'
-    endpoints only (exact — see incremental_components).
+    each micro-batch adds one batch-sized adjacency part and seeds the
+    hash-min frontier at the arriving edges' endpoints only (exact — see
+    ``_ComponentsRefresh``).
 
     Returns (StreamingQuery, StreamState); caller stops the query.
     """
-    from ..operators._superstep import edge_partition_counts, released, run
-    from ..operators.components import _cc_step, connected_components
-    from ..operators.graph import partitioned_adjacency, vertex_ids
-
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
-    state = StreamState()
-
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        new_edges = batch_df.select("src", "dst").localCheckpoint(eager=True)
-        if new_edges.isEmpty():
-            return
-        state.batches += 1
-        if state.edges is None:
-            state.edges = new_edges
-            res = connected_components(
-                spark, state.edges, num_partitions=num_partitions, steps_per_commit=4
-            )
-            state.components = res.components.localCheckpoint(eager=True)
-            state.history.append({"batch": batch_id, "supersteps": res.supersteps})
-            return
-        state.edges = state.edges.unionByName(new_edges).localCheckpoint(eager=True)
-        touched = (
-            new_edges.select(F.col("src").alias("id"))
-            .unionByName(new_edges.select(F.col("dst").alias("id")))
-            .distinct()
-        )
-        adj = partitioned_adjacency(state.edges, num_partitions).persist()
-        with released(adj):
-            res = run(
-                spark,
-                lambda: vertex_ids(adj)
-                .join(state.components, "id", "left")
-                .join(touched.withColumn("t", F.lit(True)), "id", "left")
-                .select(
-                    "id",
-                    F.coalesce(F.col("component"), F.col("id")).alias("component"),
-                    F.coalesce(F.col("t"), F.lit(False)).alias("changed"),
-                )
-                .localCheckpoint(eager=True),
-                lambda s: _cc_step(s, adj, num_partitions),
-                max_iter=100,
-                edge_parts=edge_partition_counts(adj),
-                num_partitions=num_partitions,
-                steps_per_commit=2,
-            )
-            state.components = (
-                res.state.select("id", "component").localCheckpoint(eager=True)
-            )
-        state.history.append({"batch": batch_id, "supersteps": res.supersteps})
-
-    # one file per micro-batch: availableNow would otherwise swallow every
-    # waiting bucket into a single batch and the incremental path would
-    # never execute — each parquet file IS an arrival bucket here
-    reader = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-    writer = reader.writeStream.foreachBatch(on_batch).trigger(availableNow=True)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    query = writer.start()
-    return query, state
+    kernel = _ComponentsRefresh(spark, _default_nparts(spark, num_partitions))
+    return _stream(spark, source_dir, kernel, schema, checkpoint_dir)
 
 
 def pattern_match_stream(
@@ -125,53 +142,16 @@ def pattern_match_stream(
 ) -> tuple["object", StreamState]:
     """Streaming IGPM: a file-source edge stream drives incremental
     pattern matching — per micro-batch, ONLY matches using ≥1 arriving
-    edge are enumerated (``match_pattern(delta_edges=…)``, path edges
-    included via seeded closure deltas) and unioned into the carried
-    match table. The streaming face of the engine's headline operator;
-    the match table after the stream drains equals a batch match over
-    all edges (pinned by tests).
+    edge are enumerated (path edges included via seeded closure deltas)
+    and unioned into the carried match table
+    (``_PatternRefresh``). The streaming face of the engine's
+    headline operator; the match table after the stream drains equals a
+    batch match over all edges (pinned by tests).
 
-    Returns (StreamingQuery, StreamState) — ``state.components`` is
-    unused; the match table lands in ``state.matches``."""
-    from ..plans.pattern import match_pattern
-
-    state = StreamState()
-    state.matches = None  # (dynamic attr: match table)
-
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        new_edges = batch_df.localCheckpoint(eager=True)
-        if new_edges.isEmpty():
-            return
-        state.batches += 1
-        if state.edges is None:
-            state.edges = new_edges
-            m = match_pattern(spark, vertices, state.edges, q)
-            state.matches = m.localCheckpoint(eager=True)
-            state.history.append(
-                {"batch": batch_id, "n_matches": state.matches.count()}
-            )
-            return
-        old = state.edges
-        state.edges = old.unionByName(new_edges).localCheckpoint(eager=True)
-        new_m = match_pattern(
-            spark, vertices, state.edges, q,
-            delta_edges=new_edges, old_edges=old,
-        )
-        state.matches = (
-            state.matches.unionByName(new_m)
-            .dropDuplicates(["sig"])
-            .localCheckpoint(eager=True)
-        )
-        state.history.append(
-            {"batch": batch_id, "n_matches": state.matches.count()}
-        )
-
-    reader = spark.readStream.schema(schema).parquet(source_dir)
-    writer = reader.writeStream.foreachBatch(on_batch).trigger(availableNow=True)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    query = writer.start()
-    return query, state
+    Returns (StreamingQuery, StreamState) — the match table lands in
+    ``state.matches``."""
+    kernel = _PatternRefresh(spark, vertices, q)
+    return _stream(spark, source_dir, kernel, schema, checkpoint_dir, out="matches")
 
 
 def dedup_stream(
@@ -242,87 +222,15 @@ def sssp_stream(
     delta — each micro-batch relaxes ONLY its arriving edges against the
     carried distance table (a batch-sized join), then runs
     frontier-restricted sweeps on the cumulative graph
-    (``incremental.incremental_sssp``'s step, lifted into foreachBatch).
+    (``_SSSPRefresh``, the replay's update).
     ``StreamState.components`` carries the (id, dist) table after each
     batch; the final table equals batch ``sssp`` on the union of all
     buckets (pinned by tests).
     """
-    from ..operators._superstep import edge_partition_counts, released, run
-    from ..operators.sssp import _prep, _sssp_step, sssp
-
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
-    state = StreamState()
-
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        new_edges = batch_df.select("src", "dst", "w").localCheckpoint(eager=True)
-        if new_edges.isEmpty():
-            return
-        state.batches += 1
-        if state.edges is None:
-            state.edges = new_edges
-            res = sssp(
-                spark, state.edges, source_vertex, weight_col="w",
-                num_partitions=num_partitions, steps_per_commit=4,
-            )
-            state.components = res.distances.localCheckpoint(eager=True)
-            state.history.append({"batch": batch_id, "supersteps": res.supersteps})
-            return
-        state.edges = state.edges.unionByName(new_edges).localCheckpoint(eager=True)
-        dist = state.components
-        adj_new = _prep(new_edges, "w", directed=False)
-        cand = (
-            adj_new.join(
-                dist.select(F.col("id").alias("src"), F.col("dist").alias("d0")),
-                "src",
-            )
-            .select("dst", (F.col("d0") + F.col("w")).alias("cand"))
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("cand").alias("cand"))
-        )
-        st = (
-            dist.join(cand, "id", "full")
-            .select(
-                "id",
-                F.least(
-                    F.coalesce(F.col("dist"), F.col("cand")),
-                    F.coalesce(F.col("cand"), F.col("dist")),
-                ).alias("dist"),
-                (
-                    F.col("dist").isNull()
-                    | (F.coalesce(F.col("cand"), F.col("dist")) < F.col("dist"))
-                ).alias("changed"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        full_adj = _prep(state.edges, "w", directed=False).repartition(
-            num_partitions, "src"
-        ).persist()
-        with released(full_adj):
-            res = run(
-                spark,
-                lambda: st,
-                lambda s: _sssp_step(s, full_adj, num_partitions),
-                max_iter=100,
-                edge_parts=edge_partition_counts(full_adj),
-                num_partitions=num_partitions,
-                steps_per_commit=2,
-            )
-            state.components = res.state.select("id", "dist").localCheckpoint(eager=True)
-        state.history.append({"batch": batch_id, "supersteps": res.supersteps})
-
-    # one file per micro-batch (see components_stream): each parquet file
-    # is an arrival bucket, so the monotone delta path actually runs
-    reader = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
+    kernel = _SSSPRefresh(
+        spark, source_vertex, "w", _default_nparts(spark, num_partitions)
     )
-    writer = reader.writeStream.foreachBatch(on_batch).trigger(availableNow=True)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    query = writer.start()
-    return query, state
+    return _stream(spark, source_dir, kernel, schema, checkpoint_dir)
 
 
 def pagerank_stream(
@@ -335,51 +243,19 @@ def pagerank_stream(
     checkpoint_dir: str | None = None,
     num_partitions: int | None = None,
 ) -> tuple["object", StreamState]:
-    """Streaming PageRank — the flagship kernel lifted into foreachBatch:
-    the first micro-batch converges with exact PageRank from scratch;
-    every later batch re-runs the same exact iteration over the cumulative
-    edges, warm-started from the carried ranks (``pagerank(init_ranks=...)``,
-    as ``incremental_pagerank`` does per bucket). ``StreamState.components``
-    carries the (id, rank) table after each batch; the final table equals
-    batch ``pagerank`` on the union of all buckets within the convergence
-    tolerance (pinned by tests).
+    """Streaming PageRank: the first micro-batch converges with exact
+    PageRank from a uniform start; every later batch re-runs the same
+    exact iteration over the cumulative edges, warm-started from the
+    carried ranks (``_PageRankRefresh``, the replay's update).
+    ``StreamState.components`` carries the (id, rank) table after each
+    batch; the final table equals batch PageRank on the union of all
+    buckets within the convergence tolerance (pinned by tests).
     """
-    from ..operators.pagerank import pagerank
-
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
-    state = StreamState()
-
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        new_edges = batch_df.select("src", "dst").localCheckpoint(eager=True)
-        if new_edges.isEmpty():
-            return
-        state.batches += 1
-        cum = new_edges
-        if state.edges is not None:
-            cum = state.edges.unionByName(new_edges).localCheckpoint(eager=True)
-        res = pagerank(
-            spark, cum, alpha=alpha, tol=tol,
-            num_partitions=num_partitions, init_ranks=state.components,
-        )
-        state.edges = cum
-        state.components = res.ranks
-        state.history.append({"batch": batch_id, "supersteps": res.supersteps})
-
-    # one file per micro-batch (see components_stream): each parquet file
-    # IS an arrival bucket, so the warm-start path actually executes
-    reader = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
+    kernel = _PageRankRefresh(
+        spark, alpha=alpha, tol=tol, directed=False,
+        num_partitions=_default_nparts(spark, num_partitions),
     )
-    writer = reader.writeStream.foreachBatch(on_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    query = writer.start()
-    return query, state
+    return _stream(spark, source_dir, kernel, schema, checkpoint_dir)
 
 
 def labelprop_stream(
@@ -394,7 +270,7 @@ def labelprop_stream(
     """Streaming deterministic LPA: the first micro-batch converges from
     scratch; every later batch warm-starts from the carried labels with
     the arriving edges' endpoints marked changed, then runs
-    receiver-restricted sweeps (``incremental._lpa_step_frontier`` — a
+    receiver-restricted sweeps (``_LabelPropRefresh`` — a
     vertex whose neighborhood's labels didn't change cannot change, so
     the message shuffle is frontier-proportional, not E-proportional).
 
@@ -404,68 +280,10 @@ def labelprop_stream(
     sweep changes nothing) and batch equality on unambiguous communities.
     ``StreamState.components`` carries the (id, label) table per batch.
     """
-    from ..operators._superstep import edge_partition_counts, released, run
-    from ..operators.graph import partitioned_adjacency, vertex_ids
-    from ..operators.incremental import _lpa_step_frontier
-    from ..operators.labelprop import label_propagation
-
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
-    state = StreamState()
-
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        new_edges = batch_df.select("src", "dst").localCheckpoint(eager=True)
-        if new_edges.isEmpty():
-            return
-        state.batches += 1
-        if state.edges is None:
-            state.edges = new_edges
-            res = label_propagation(
-                spark, state.edges, max_iter=max_iter_per_batch,
-                num_partitions=num_partitions, steps_per_commit=2,
-            )
-            state.components = res.labels.localCheckpoint(eager=True)
-            state.history.append({"batch": batch_id, "supersteps": res.supersteps})
-            return
-        state.edges = state.edges.unionByName(new_edges).localCheckpoint(eager=True)
-        touched = (
-            new_edges.select(F.col("src").alias("id"))
-            .unionByName(new_edges.select(F.col("dst").alias("id")))
-            .distinct()
-        )
-        adj = partitioned_adjacency(state.edges, num_partitions).persist()
-        with released(adj):
-            res = run(
-                spark,
-                lambda: vertex_ids(adj)
-                .join(state.components, "id", "left")
-                .join(touched.withColumn("t", F.lit(True)), "id", "left")
-                .select(
-                    "id",
-                    F.coalesce(F.col("label"), F.col("id")).alias("label"),
-                    F.coalesce(F.col("t"), F.lit(False)).alias("changed"),
-                )
-                .localCheckpoint(eager=True),
-                lambda s: _lpa_step_frontier(s, adj, num_partitions),
-                max_iter=max_iter_per_batch,
-                edge_parts=edge_partition_counts(adj),
-                num_partitions=num_partitions,
-            )
-            state.components = res.state.select("id", "label").localCheckpoint(eager=True)
-        state.history.append({"batch": batch_id, "supersteps": res.supersteps})
-
-    # one file per micro-batch (see components_stream): each parquet file
-    # IS an arrival bucket, so the frontier-restricted path actually runs
-    reader = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
+    kernel = _LabelPropRefresh(
+        spark, max_iter_per_batch, _default_nparts(spark, num_partitions)
     )
-    writer = reader.writeStream.foreachBatch(on_batch).trigger(availableNow=True)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    query = writer.start()
-    return query, state
+    return _stream(spark, source_dir, kernel, schema, checkpoint_dir)
 
 
 def sessionize_stream(
@@ -823,13 +641,5 @@ def new_returning_stream(
             .localCheckpoint(eager=True)
         )
 
-    reader = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-    writer = reader.writeStream.foreachBatch(on_batch).trigger(availableNow=True)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    query = writer.start()
+    query = _foreach_file(spark, source_dir, schema, on_batch, checkpoint_dir)
     return query, state

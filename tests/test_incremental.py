@@ -75,10 +75,14 @@ def test_incremental_components_shuffle_proportional_to_bucket(spark):
 
 def test_incremental_components_small_fixture(spark):
     _, edges, _ = fixture_graph(spark, "dynamic_test1")
-    res = incremental_components(spark, edges)
     pairs = [(r.src, r.dst) for r in edges.collect()]
-    got = {r.id: r.component for r in res.state.collect()}
-    assert got == components_oracle(pairs)
+    for base_steps in (1, 2):
+        res = incremental_components(spark, edges, base_steps=base_steps)
+        got = {r.id: r.component for r in res.state.collect()}
+        assert got == components_oracle(pairs)
+        assert len(res.steps) == 4 - base_steps
+        # the base step reports the whole base slice as new
+        assert res.steps[0].n_new_edges == res.steps[0].n_total_edges
 
 
 def test_incremental_pagerank_converges_to_full_graph_answer(spark):
@@ -152,9 +156,12 @@ def test_incremental_pattern_match_ba_buckets(spark):
 
 def test_incremental_pagerank_with_pattern_counts(spark):
     _, edges, _ = fixture_graph(spark, "dynamic_test1")
+    spark.catalog.clearCache()
     res = incremental_pagerank(
         spark, edges, base_steps=1, tol=1e-7, with_pattern_counts=True
     )
+    # the carried canonical edge set is a checkpoint, not a leaked cache
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     # reference prints exact triangle/star ground truth per step
     # (gray_incremental.py:193-202); final graph = test1 → 2 triangles
     assert res.steps[-1].n_triangles == 2

@@ -20,6 +20,7 @@ def test_components_stream_matches_batch(spark, tmp_path):
         bucket = edges.where(f"ts = {ts}")
         bucket.coalesce(1).write.mode("append").parquet(src_dir)
 
+    spark.catalog.clearCache()
     query, state = components_stream(
         spark,
         src_dir,
@@ -28,7 +29,10 @@ def test_components_stream_matches_batch(spark, tmp_path):
     query.awaitTermination(120)
     query.stop()
 
-    assert state.batches >= 1
+    assert state.batches == 3
+    # the carried adjacency parts are checkpoints: nothing stays cached
+    # after the stream drains
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     pairs = [(r.src, r.dst) for r in edges.collect()]
     got = {r.id: r.component for r in state.components.collect()}
     assert got == components_oracle(pairs)
@@ -125,6 +129,8 @@ def test_pattern_match_stream_equals_batch(spark, tmp_path):
     def sigs(df):
         return {tuple((p["u"], p["v"]) for p in r["sig"]) for r in df.collect()}
 
+    # one micro-batch per bucket file, so the delta-match path runs
+    assert state.batches == 3
     batch = match_pattern(spark, verts, edges, q)
     assert sigs(state.matches) == sigs(batch)
     assert len(sigs(state.matches)) == 2
