@@ -25,26 +25,28 @@ every vertex.
 
 from __future__ import annotations
 
+from contextlib import ExitStack
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ._superstep import loop_confs
+from ._superstep import loop_confs, released
 from .graph import kernel_nparts
 
 from .scc import strongly_connected_components
 
 
-def _reach(
-    edges: DataFrame, seeds: DataFrame, num_partitions: int, batch: int = 3
-) -> DataFrame:
-    """(id): vertices reachable from ``seeds`` (seeds included) over the
-    directed edge relation — frontier BFS to fixpoint.
+# BFS levels expanded lazily per materialization (the steps_per_commit
+# trick from the iterative kernels): one checkpoint + one count job per
+# batch instead of two jobs per level, which is what dominates wall time
+# on deep, small frontiers.
+_BATCH = 3
 
-    ``batch`` levels are expanded lazily per materialization (the
-    steps_per_commit trick from the iterative kernels): one checkpoint +
-    one count job per batch instead of two jobs per level, which is what
-    dominates wall time on deep, small frontiers."""
+
+def _reach(edges: DataFrame, seeds: DataFrame, num_partitions: int) -> DataFrame:
+    """(id): vertices reachable from ``seeds`` (seeds included) over the
+    directed edge relation — frontier BFS to fixpoint, ``_BATCH`` levels
+    per job."""
     visited = seeds.select("id").distinct().localCheckpoint(eager=True)
     n_visited = visited.count()
     frontier = visited
@@ -52,7 +54,7 @@ def _reach(
     with loop_confs(edges.sparkSession):
         while True:
             vis = visited
-            for _ in range(batch):
+            for _ in range(_BATCH):
                 frontier = (
                     edges.join(frontier.withColumnRenamed("id", "src"), "src")
                     .select(F.col("dst").alias("id"))
@@ -87,61 +89,66 @@ def bowtie_decomposition(
     deterministic in any engine."""
     if num_partitions is None:
         num_partitions = kernel_nparts(edges)
-    e = (
-        edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-        .repartition(num_partitions, "src")
-        .persist()
-    )
-    rev = e.select(
-        F.col("dst").alias("src"), F.col("src").alias("dst")
-    ).repartition(num_partitions, "src").persist()
-    verts = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .persist()
-    )
+    with ExitStack() as held:
 
-    scc = strongly_connected_components(
-        spark, e, num_partitions=num_partitions
-    ).components.persist()
-    top = (
-        scc.groupBy("scc")
-        .agg(F.count("*").alias("n"))
-        .orderBy(F.desc("n"), F.asc("scc"))
-        .first()
-    )
-    core_label = int(top["scc"])
-    core = scc.where(F.col("scc") == core_label).select("id").persist()
+        def persist(df: DataFrame) -> DataFrame:
+            held.enter_context(released(df))
+            return df.persist()
 
-    fwd = _reach(e, core, num_partitions)          # reached from core
-    bwd = _reach(rev, core, num_partitions)        # reaching core
-    outs = fwd.join(core, "id", "left_anti").persist()
-    ins = bwd.join(core, "id", "left_anti").persist()
-    fin = _reach(e, ins, num_partitions)           # forward from IN
-    bout = _reach(rev, outs, num_partitions)       # backward from OUT
+        e = persist(
+            edges.select("src", "dst")
+            .where(F.col("src") != F.col("dst"))
+            .dropDuplicates(["src", "dst"])
+            .repartition(num_partitions, "src")
+        )
+        rev = persist(
+            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+            .repartition(num_partitions, "src")
+        )
+        verts = persist(
+            e.select(F.col("src").alias("id"))
+            .unionByName(e.select(F.col("dst").alias("id")))
+            .distinct()
+        )
 
-    def flag(df: DataFrame, name: str) -> DataFrame:
-        return df.select("id", F.lit(True).alias(name))
+        scc = persist(
+            strongly_connected_components(
+                spark, e, num_partitions=num_partitions
+            ).components
+        )
+        top = (
+            scc.groupBy("scc")
+            .agg(F.count("*").alias("n"))
+            .orderBy(F.desc("n"), F.asc("scc"))
+            .first()
+        )
+        core_label = int(top["scc"])
+        core = persist(scc.where(F.col("scc") == core_label).select("id"))
 
-    j = (
-        verts.join(flag(core, "is_core"), "id", "left")
-        .join(flag(ins, "is_in"), "id", "left")
-        .join(flag(outs, "is_out"), "id", "left")
-        .join(flag(fin, "is_fin"), "id", "left")
-        .join(flag(bout, "is_bout"), "id", "left")
-    )
-    cls = (
-        F.when(F.col("is_core"), "core")
-        .when(F.col("is_in"), "in")
-        .when(F.col("is_out"), "out")
-        .when(F.col("is_fin") & F.col("is_bout"), "tube")
-        .when(F.col("is_fin") | F.col("is_bout"), "tendril")
-        .otherwise("disconnected")
-    )
-    out = j.select("id", cls.alias("cls")).localCheckpoint(eager=True)
-    for df in (e, rev, verts, scc, core, outs, ins):
-        df.unpersist()
+        fwd = _reach(e, core, num_partitions)          # reached from core
+        bwd = _reach(rev, core, num_partitions)        # reaching core
+        outs = persist(fwd.join(core, "id", "left_anti"))
+        ins = persist(bwd.join(core, "id", "left_anti"))
+        fin = _reach(e, ins, num_partitions)           # forward from IN
+        bout = _reach(rev, outs, num_partitions)       # backward from OUT
+
+        def flag(df: DataFrame, name: str) -> DataFrame:
+            return df.select("id", F.lit(True).alias(name))
+
+        j = (
+            verts.join(flag(core, "is_core"), "id", "left")
+            .join(flag(ins, "is_in"), "id", "left")
+            .join(flag(outs, "is_out"), "id", "left")
+            .join(flag(fin, "is_fin"), "id", "left")
+            .join(flag(bout, "is_bout"), "id", "left")
+        )
+        cls = (
+            F.when(F.col("is_core"), "core")
+            .when(F.col("is_in"), "in")
+            .when(F.col("is_out"), "out")
+            .when(F.col("is_fin") & F.col("is_bout"), "tube")
+            .when(F.col("is_fin") | F.col("is_bout"), "tendril")
+            .otherwise("disconnected")
+        )
+        out = j.select("id", cls.alias("cls")).localCheckpoint(eager=True)
     return BowtieResult(out, core_label)

@@ -33,6 +33,9 @@ from random-walk proximity to exact shortest-path dependency.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .graph import symmetrize, vertex_ids
@@ -86,6 +89,103 @@ def katz_truncated(
     return out.select("id", expr.alias("katz"))
 
 
+@contextmanager
+def _bfs_levels(
+    spark: SparkSession,
+    edges: DataFrame,
+    n_seeds: int,
+    max_hops: int,
+    directed: bool,
+):
+    """Brandes' forward pass from the ``n_seeds`` lowest-id vertices:
+    yields (sym, levels), levels[ℓ] = (sid, v, sigma) for the vertices at
+    distance exactly ℓ ≤ ``max_hops`` from sid, sigma = exact integer
+    shortest-path count. The persisted edges and levels are released on
+    exit, exceptions included."""
+    sym = _sym(edges, directed).persist()
+    levels: list[DataFrame] = []
+    try:
+        seeds = vertex_ids(sym).orderBy("id").limit(n_seeds)
+        levels.append(
+            seeds.select(
+                F.col("id").alias("sid"), F.col("id").alias("v"),
+                F.lit(1).cast("long").alias("sigma"),
+            ).localCheckpoint(eager=True)
+        )
+        visited = levels[0].select("sid", "v")
+        # AQE + codegen off for the loop (see _superstep.loop_confs)
+        with loop_confs(spark):
+            for _ in range(max_hops):
+                nxt = (
+                    levels[-1].join(sym.withColumnRenamed("src", "v"), "v")
+                    .select("sid", F.col("dst").alias("v"), "sigma")
+                    .join(visited, ["sid", "v"], "left_anti")
+                    .groupBy("sid", "v")
+                    .agg(F.sum("sigma").alias("sigma"))
+                    .persist()
+                )
+                levels.append(nxt)
+                if nxt.isEmpty():
+                    levels.pop().unpersist()
+                    break
+                visited = visited.unionByName(nxt.select("sid", "v"))
+        yield sym, levels
+    finally:
+        for lv in levels:
+            lv.unpersist()
+        sym.unpersist()
+
+
+def _brandes_walk(
+    sym: DataFrame, levels: list[DataFrame]
+) -> tuple[list[DataFrame], list[DataFrame]]:
+    """Brandes' backward pass, horizon inward. δ at the horizon is 0;
+    each inner level accumulates the per-DAG-edge dependency
+    c(v→w) = σ(v)/σ(w)·(1 + δ(w)) over its successors. Returns the
+    (v, delta) rows of every level ≥ 1 and the (v, w, d) edge terms of
+    every level ≥ 0 (the seeds' own level-0→1 edges included). Lazy but
+    for one eager checkpoint of each level ≥ 1's (sid, v, w_sigma,
+    delta), which the next level down reads."""
+    deltas, edge_terms = [], []
+    succ = None  # (sid, v, w_sigma, delta) of the level just outside
+    for ell in range(len(levels) - 1, -1, -1):
+        lev = levels[ell]
+        if succ is None:
+            cur = lev.select("sid", "v", F.lit(0.0).alias("delta"))
+        else:
+            per_edge = (
+                lev.join(
+                    sym.select(F.col("src").alias("v"), F.col("dst").alias("w")),
+                    "v",
+                )
+                .join(succ.withColumnRenamed("v", "w"), ["sid", "w"])
+                .select(
+                    "sid", "v", "w",
+                    (
+                        F.col("sigma").cast("double")
+                        / F.col("w_sigma").cast("double")
+                        * (F.lit(1.0) + F.col("delta"))
+                    ).alias("d"),
+                )
+            )
+            edge_terms.append(per_edge.select("v", "w", "d"))
+            contrib = per_edge.groupBy("sid", "v").agg(F.sum("d").alias("delta"))
+            cur = (
+                lev.select("sid", "v")
+                .join(contrib, ["sid", "v"], "left")
+                .select("sid", "v", F.coalesce("delta", F.lit(0.0)).alias("delta"))
+            )
+        if ell == 0:
+            break
+        deltas.append(cur.select("v", "delta"))
+        succ = (
+            lev.select("sid", "v", F.col("sigma").alias("w_sigma"))
+            .join(cur.select("sid", "v", "delta"), ["sid", "v"])
+            .localCheckpoint(eager=True)
+        )
+    return deltas, edge_terms
+
+
 def betweenness_seeded(
     spark: SparkSession,
     edges: DataFrame,
@@ -106,86 +206,16 @@ def betweenness_seeded(
     from OTHER seeds' paths, exactly as Brandes defines it."""
     if max_hops < 1:
         raise ValueError("betweenness_seeded: max_hops must be >= 1")
-    sym = _sym(edges, directed).persist()
-    seeds = vertex_ids(sym).orderBy("id").limit(n_seeds)
-    lev0 = seeds.select(
-        F.col("id").alias("sid"), F.col("id").alias("v"),
-        F.lit(1).cast("long").alias("sigma"),
-    ).localCheckpoint(eager=True)
-
-    levels = [lev0]
-    visited = lev0.select("sid", "v")
-    # AQE + codegen off for the loop (see _superstep.loop_confs)
-    with loop_confs(spark):
-        for _ in range(max_hops):
-            frontier = levels[-1]
-            nxt = (
-                frontier.join(sym.withColumnRenamed("src", "v"), "v")
-                .select("sid", F.col("dst").alias("v"), "sigma")
-                .join(visited, ["sid", "v"], "left_anti")
-                .groupBy("sid", "v")
-                .agg(F.sum("sigma").alias("sigma"))
-                .persist()
-            )
-            if nxt.isEmpty():
-                nxt.unpersist()
-                break
-            levels.append(nxt)
-            visited = visited.unionByName(nxt.select("sid", "v"))
-
-    # backward dependency accumulation, horizon inward
-    delta_terms = []
-    succ_delta = None  # (sid, v, delta) of the level just outside
-    for ell in range(len(levels) - 1, 0, -1):
-        lev = levels[ell]
-        if succ_delta is None:
-            cur = lev.select("sid", "v", F.lit(0.0).alias("delta"))
-        else:
-            outer = succ_delta.withColumnRenamed("v", "w")
-            contrib = (
-                lev.join(
-                    sym.select(F.col("src").alias("v"), F.col("dst").alias("w")),
-                    "v",
-                )
-                .join(outer, ["sid", "w"])
-                .select(
-                    "sid", "v",
-                    (
-                        F.col("sigma").cast("double")
-                        / F.col("w_sigma").cast("double")
-                        * (F.lit(1.0) + F.col("delta"))
-                    ).alias("d"),
-                )
-                .groupBy("sid", "v")
-                .agg(F.sum("d").alias("delta"))
-            )
-            cur = (
-                lev.select("sid", "v")
-                .join(contrib, ["sid", "v"], "left")
-                .select("sid", "v", F.coalesce("delta", F.lit(0.0)).alias("delta"))
-            )
-        delta_terms.append(cur.select("v", "delta"))
-        succ_delta = (
-            lev.select("sid", "v", F.col("sigma").alias("w_sigma"))
-            .join(cur.select("sid", "v", "delta"), ["sid", "v"])
-            .localCheckpoint(eager=True)
-        )
-
-    if not delta_terms:
-        out = spark.createDataFrame([], "id BIGINT, bc DOUBLE")
-    else:
-        alld = delta_terms[0]
-        for t in delta_terms[1:]:
-            alld = alld.unionByName(t)
-        out = (
-            alld.groupBy(F.col("v").alias("id"))
+    with _bfs_levels(spark, edges, n_seeds, max_hops, directed) as (sym, levels):
+        deltas, _ = _brandes_walk(sym, levels)
+        if not deltas:
+            return spark.createDataFrame([], "id BIGINT, bc DOUBLE")
+        return (
+            reduce(DataFrame.unionByName, deltas)
+            .groupBy(F.col("v").alias("id"))
             .agg(F.sum("delta").alias("bc"))
             .localCheckpoint(eager=True)
         )
-    for lv in levels[1:]:
-        lv.unpersist()
-    sym.unpersist()
-    return out
 
 
 def voterank(spark: SparkSession, edges: DataFrame, k: int = 3) -> DataFrame:
@@ -276,9 +306,9 @@ def edge_betweenness_seeded(
     ``n_seeds`` lowest-id vertices — the Girvan-Newman splitting score,
     truncated to shortest paths of length ≤ ``max_hops``.
 
-    Same forward pass as ``betweenness_seeded`` (levels of
-    (sid, v, sigma) with exact integer path counts); the backward pass
-    accumulates the PER-DAG-EDGE dependency
+    The forward pass and backward walk of ``betweenness_seeded``
+    (levels of (sid, v, sigma) with exact integer path counts); it reads
+    the PER-DAG-EDGE dependency
     c(v→w) = σ(v)/σ(w) · (1 + δ(w)) for every BFS-DAG edge between
     consecutive levels — including the seed's own level-0→1 edges,
     which the vertex variant never materializes (δ at a seed is
@@ -296,94 +326,22 @@ def edge_betweenness_seeded(
     communities (patternmatching/gray/extract.py proximity scoring)."""
     if max_hops < 1:
         raise ValueError("edge_betweenness_seeded: max_hops must be >= 1")
-    sym = _sym(edges, directed).persist()
-    seeds = vertex_ids(sym).orderBy("id").limit(n_seeds)
-    lev0 = seeds.select(
-        F.col("id").alias("sid"), F.col("id").alias("v"),
-        F.lit(1).cast("long").alias("sigma"),
-    ).localCheckpoint(eager=True)
-
-    levels = [lev0]
-    visited = lev0.select("sid", "v")
-    # AQE + codegen off for the loop (see _superstep.loop_confs)
-    with loop_confs(spark):
-        for _ in range(max_hops):
-            frontier = levels[-1]
-            nxt = (
-                frontier.join(sym.withColumnRenamed("src", "v"), "v")
-                .select("sid", F.col("dst").alias("v"), "sigma")
-                .join(visited, ["sid", "v"], "left_anti")
-                .groupBy("sid", "v")
-                .agg(F.sum("sigma").alias("sigma"))
-                .persist()
-            )
-            if nxt.isEmpty():
-                nxt.unpersist()
-                break
-            levels.append(nxt)
-            visited = visited.unionByName(nxt.select("sid", "v"))
-
-    # backward: vertex deltas per level (as the vertex kernel) plus the
-    # per-DAG-edge terms, walked one level further down to the seeds
-    edge_terms = []
-    succ_delta = None  # (sid, v, w_sigma, delta) of the level outside
-    for ell in range(len(levels) - 1, -1, -1):
-        lev = levels[ell]
-        if succ_delta is None:
-            cur = lev.select("sid", "v", F.lit(0.0).alias("delta"))
-        else:
-            outer = succ_delta.withColumnRenamed("v", "w")
-            per_edge = (
-                lev.join(
-                    sym.select(F.col("src").alias("v"), F.col("dst").alias("w")),
-                    "v",
-                )
-                .join(outer, ["sid", "w"])
-                .select(
-                    "sid", "v", "w",
-                    (
-                        F.col("sigma").cast("double")
-                        / F.col("w_sigma").cast("double")
-                        * (F.lit(1.0) + F.col("delta"))
-                    ).alias("d"),
-                )
-            )
-            edge_terms.append(per_edge.select("v", "w", "d"))
-            contrib = per_edge.groupBy("sid", "v").agg(F.sum("d").alias("delta"))
-            cur = (
-                lev.select("sid", "v")
-                .join(contrib, ["sid", "v"], "left")
-                .select("sid", "v", F.coalesce("delta", F.lit(0.0)).alias("delta"))
-            )
-        if ell == 0:
-            break
-        succ_delta = (
-            lev.select("sid", "v", F.col("sigma").alias("w_sigma"))
-            .join(cur.select("sid", "v", "delta"), ["sid", "v"])
-            .localCheckpoint(eager=True)
-        )
-
-    if not edge_terms:
-        out = spark.createDataFrame([], "u BIGINT, v BIGINT, ebc DOUBLE")
-    else:
-        alle = edge_terms[0]
-        for t in edge_terms[1:]:
-            alle = alle.unionByName(t)
+    with _bfs_levels(spark, edges, n_seeds, max_hops, directed) as (sym, levels):
+        _, edge_terms = _brandes_walk(sym, levels)
+        if not edge_terms:
+            return spark.createDataFrame([], "u BIGINT, v BIGINT, ebc DOUBLE")
+        alle = reduce(DataFrame.unionByName, edge_terms)
         if not directed:
             alle = alle.select(
                 F.least("v", "w").alias("v"),
                 F.greatest("v", "w").alias("w"),
                 "d",
             )
-        out = (
+        return (
             alle.groupBy(F.col("v").alias("u"), F.col("w").alias("v"))
             .agg(F.sum("d").alias("ebc"))
             .localCheckpoint(eager=True)
         )
-    for lv in levels[1:]:
-        lv.unpersist()
-    sym.unpersist()
-    return out
 
 
 def dominating_set_greedy(

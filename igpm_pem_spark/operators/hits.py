@@ -41,7 +41,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ._superstep import loop_confs
+from ._superstep import loop_confs, released
 from .graph import kernel_nparts, simple_edges
 
 
@@ -51,17 +51,19 @@ class HitsResult:
     supersteps: int
 
 
-def _message_graph(e: DataFrame) -> DataFrame:
-    """Static bipartite message graph (fid, fs, tid, ts, w)."""
-    fwd = e.select(
+def _message_graph(e: DataFrame, fwd: DataFrame, bwd: DataFrame) -> DataFrame:
+    """Static bipartite message graph (fid, fs, tid, ts, w) from the
+    weighted rows (src, dst, w) of the edges ``e``: ``fwd`` carries
+    hub(src) to auth(dst), ``bwd`` carries auth(dst) back to hub(src);
+    every (id, side) of ``e`` also gets its weight-0 keep-alive self
+    message."""
+    f = fwd.select(
         F.col("src").alias("fid"), F.lit("h").alias("fs"),
-        F.col("dst").alias("tid"), F.lit("a").alias("ts"),
-        F.lit(1.0).alias("w"),
+        F.col("dst").alias("tid"), F.lit("a").alias("ts"), "w",
     )
-    bwd = e.select(
+    b = bwd.select(
         F.col("dst").alias("fid"), F.lit("a").alias("fs"),
-        F.col("src").alias("tid"), F.lit("h").alias("ts"),
-        F.lit(1.0).alias("w"),
+        F.col("src").alias("tid"), F.lit("h").alias("ts"), "w",
     )
     ids = (
         e.select(F.col("src").alias("id"))
@@ -77,42 +79,38 @@ def _message_graph(e: DataFrame) -> DataFrame:
         F.col("id").alias("tid"), F.col("side").alias("ts"),
         F.lit(0.0).alias("w"),
     )
-    return fwd.unionByName(bwd).unionByName(keep)
+    return f.unionByName(b).unionByName(keep)
 
 
-def hits(
-    spark: SparkSession,
-    edges: DataFrame,
-    *,
-    max_iter: int = 8,
-    num_partitions: int | None = None,
+def _hub_auth(
+    e: DataFrame, fwd: DataFrame, bwd: DataFrame, max_iter: int,
+    num_partitions: int,
 ) -> HitsResult:
-    """Fixed-iteration HITS over the directed simple graph of ``edges``."""
-    if num_partitions is None:
-        num_partitions = kernel_nparts(edges)
-    e = simple_edges(edges, directed=True)
-    bm = _message_graph(e).repartition(num_partitions, "fid").persist()
-    state = (
-        bm.select(F.col("fid").alias("id"), F.col("fs").alias("side"))
-        .distinct()
-        .withColumn("val", F.lit(1.0))
-        .localCheckpoint(eager=True)
-    )
-    # AQE + codegen off for the loop (see _superstep.loop_confs)
-    with loop_confs(edges.sparkSession):
-        for step in range(max_iter):
-            msgs = bm.join(
-                state.hint("shuffle_hash"),
-                (bm["fid"] == state["id"]) & (bm["fs"] == state["side"]),
-            ).select("tid", "ts", (F.col("val") * F.col("w")).alias("m"))
-            state = (
-                msgs.repartition(num_partitions, "tid", "ts")
-                .groupBy(F.col("tid").alias("id"), F.col("ts").alias("side"))
-                .agg(F.sum("m").alias("val"))
-            )
-            # truncate the iterative lineage each superstep (tiny state)
-            state = state.localCheckpoint(eager=True)
-    bm.unpersist()
+    """The HITS/SALSA loop: ``max_iter`` Jacobi supersteps over the
+    message graph of ``fwd`` / ``bwd``, then the final L1 normalization
+    and the (id, hub, auth) pivot."""
+    bm = _message_graph(e, fwd, bwd).repartition(num_partitions, "fid").persist()
+    with released(bm):
+        state = (
+            bm.select(F.col("fid").alias("id"), F.col("fs").alias("side"))
+            .distinct()
+            .withColumn("val", F.lit(1.0))
+            .localCheckpoint(eager=True)
+        )
+        # AQE + codegen off for the loop (see _superstep.loop_confs)
+        with loop_confs(bm.sparkSession):
+            for _ in range(max_iter):
+                msgs = bm.join(
+                    state.hint("shuffle_hash"),
+                    (bm["fid"] == state["id"]) & (bm["fs"] == state["side"]),
+                ).select("tid", "ts", (F.col("val") * F.col("w")).alias("m"))
+                state = (
+                    msgs.repartition(num_partitions, "tid", "ts")
+                    .groupBy(F.col("tid").alias("id"), F.col("ts").alias("side"))
+                    .agg(F.sum("m").alias("val"))
+                )
+                # truncate the iterative lineage each superstep (tiny state)
+                state = state.localCheckpoint(eager=True)
     totals = state.groupBy("side").agg(F.sum("val").alias("s"))
     norm = state.join(F.broadcast(totals), "side").select(
         "id", "side", (F.col("val") / F.col("s")).alias("val")
@@ -126,37 +124,19 @@ def hits(
     )
 
 
-def _salsa_message_graph(e: DataFrame) -> DataFrame:
-    """SALSA's stochastic message graph: the HITS bipartite layout with
-    degree-normalized weights (fwd w = 1/outdeg(src), bwd w = 1/indeg(dst))
-    plus the same weight-0 keep-alive self messages."""
-    outdeg = e.groupBy("src").agg(F.count("*").alias("od"))
-    indeg = e.groupBy("dst").agg(F.count("*").alias("idg"))
-    fwd = e.join(outdeg, "src").select(
-        F.col("src").alias("fid"), F.lit("h").alias("fs"),
-        F.col("dst").alias("tid"), F.lit("a").alias("ts"),
-        (F.lit(1.0) / F.col("od")).alias("w"),
-    )
-    bwd = e.join(indeg, "dst").select(
-        F.col("dst").alias("fid"), F.lit("a").alias("fs"),
-        F.col("src").alias("tid"), F.lit("h").alias("ts"),
-        (F.lit(1.0) / F.col("idg")).alias("w"),
-    )
-    ids = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    keep = ids.crossJoin(
-        F.broadcast(
-            ids.sparkSession.createDataFrame([("h",), ("a",)], "side STRING")
-        )
-    ).select(
-        F.col("id").alias("fid"), F.col("side").alias("fs"),
-        F.col("id").alias("tid"), F.col("side").alias("ts"),
-        F.lit(0.0).alias("w"),
-    )
-    return fwd.unionByName(bwd).unionByName(keep)
+def hits(
+    spark: SparkSession,
+    edges: DataFrame,
+    *,
+    max_iter: int = 8,
+    num_partitions: int | None = None,
+) -> HitsResult:
+    """Fixed-iteration HITS over the directed simple graph of ``edges``."""
+    if num_partitions is None:
+        num_partitions = kernel_nparts(edges)
+    e = simple_edges(edges, directed=True)
+    w = e.withColumn("w", F.lit(1.0))
+    return _hub_auth(e, w, w, max_iter, num_partitions)
 
 
 def salsa(
@@ -175,40 +155,17 @@ def salsa(
         hub_t(u)  = sum over (u,v) of auth_{t-1}(v) / indeg(v)
 
     simultaneous (Jacobi) updates from hub_0 = auth_0 = 1, final L1
-    normalization only.  Same one-join + one-aggregate superstep plan as
-    ``hits`` — only the static message weights differ, so the scale shape
-    (bm partitioned once, repartition-then-sum aggregate) is inherited."""
+    normalization only.  The ``hits`` kernel with degree-normalized
+    message weights (fwd w = 1/outdeg(src), bwd w = 1/indeg(dst))."""
     if num_partitions is None:
         num_partitions = kernel_nparts(edges)
     e = simple_edges(edges, directed=True)
-    bm = _salsa_message_graph(e).repartition(num_partitions, "fid").persist()
-    state = (
-        bm.select(F.col("fid").alias("id"), F.col("fs").alias("side"))
-        .distinct()
-        .withColumn("val", F.lit(1.0))
-        .localCheckpoint(eager=True)
+    outdeg = e.groupBy("src").agg(F.count("*").alias("od"))
+    indeg = e.groupBy("dst").agg(F.count("*").alias("idg"))
+    fwd = e.join(outdeg, "src").select(
+        "src", "dst", (F.lit(1.0) / F.col("od")).alias("w")
     )
-    with loop_confs(edges.sparkSession):
-        for _ in range(max_iter):
-            msgs = bm.join(
-                state.hint("shuffle_hash"),
-                (bm["fid"] == state["id"]) & (bm["fs"] == state["side"]),
-            ).select("tid", "ts", (F.col("val") * F.col("w")).alias("m"))
-            state = (
-                msgs.repartition(num_partitions, "tid", "ts")
-                .groupBy(F.col("tid").alias("id"), F.col("ts").alias("side"))
-                .agg(F.sum("m").alias("val"))
-            )
-            state = state.localCheckpoint(eager=True)
-    bm.unpersist()
-    totals = state.groupBy("side").agg(F.sum("val").alias("s"))
-    norm = state.join(F.broadcast(totals), "side").select(
-        "id", "side", (F.col("val") / F.col("s")).alias("val")
+    bwd = e.join(indeg, "dst").select(
+        "src", "dst", (F.lit(1.0) / F.col("idg")).alias("w")
     )
-    wide = norm.groupBy("id").pivot("side", ["h", "a"]).agg(F.first("val"))
-    return HitsResult(
-        wide.select(
-            "id", F.col("h").alias("hub"), F.col("a").alias("auth")
-        ),
-        max_iter,
-    )
+    return _hub_auth(e, fwd, bwd, max_iter, num_partitions)

@@ -20,10 +20,10 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from .graph import kernel_nparts, simple_edges
-from ._superstep import loop_confs
+from ._superstep import loop_confs, released
 
 
 @dataclass
@@ -33,6 +33,54 @@ class KCoreResult:
     rounds: int
     converged: bool
     peeled_per_round: list[int] = field(default_factory=list)
+
+
+def _peel(
+    spark: SparkSession,
+    sym: DataFrame,
+    threshold: int,
+    degree: Column,
+    max_rounds: int,
+    num_partitions: int,
+) -> KCoreResult:
+    """Peel the vertices whose ``degree`` aggregate over their incident
+    rows of the symmetrized ``sym`` is below ``threshold`` until stable;
+    the surviving rows keep ``sym``'s columns."""
+    cols = sym.columns
+    peeled: list[int] = []
+    converged = False
+    rounds = 0
+    # AQE + codegen off for the loop (see _superstep.loop_confs)
+    with loop_confs(spark):
+        while rounds < max_rounds:
+            rounds += 1
+            # persist: deg feeds both the drop-count action and the two keep
+            # semi-joins; without the cache the degree aggregation runs twice
+            # per peel round over the surviving edges
+            deg = (
+                sym.repartition(num_partitions, "src")
+                .groupBy("src")
+                .agg(degree.alias("deg"))
+                .persist()
+            )
+            with released(deg):
+                keep = deg.where(F.col("deg") >= threshold).select(
+                    F.col("src").alias("id")
+                )
+                drop_cnt = deg.where(F.col("deg") < threshold).count()
+                peeled.append(int(drop_cnt))
+                if drop_cnt == 0:
+                    converged = True
+                    break
+                # sym is materialized before the round's cache goes
+                sym = (
+                    sym.join(keep.withColumnRenamed("id", "src"), "src", "left_semi")
+                    .join(keep.withColumnRenamed("id", "dst"), "dst", "left_semi")
+                    .select(*cols)
+                    .localCheckpoint(eager=True)
+                )
+    verts = sym.select(F.col("src").alias("id")).distinct()
+    return KCoreResult(verts, sym, rounds, converged, peeled)
 
 
 def k_core(
@@ -52,38 +100,7 @@ def k_core(
         .repartition(num_partitions, "src")
         .localCheckpoint(eager=True)
     )
-    peeled: list[int] = []
-    converged = False
-    rounds = 0
-    # AQE + codegen off for the loop (see _superstep.loop_confs)
-    with loop_confs(spark):
-        while rounds < max_rounds:
-            rounds += 1
-            # persist: deg feeds both the drop-count action and the two keep
-            # semi-joins; without the cache the degree aggregation runs twice
-            # per peel round over the surviving edges
-            deg = (
-                e.repartition(num_partitions, "src")
-                .groupBy("src")
-                .agg(F.count("*").alias("deg"))
-                .persist()
-            )
-            keep = deg.where(F.col("deg") >= k).select(F.col("src").alias("id"))
-            drop_cnt = deg.where(F.col("deg") < k).count()
-            peeled.append(int(drop_cnt))
-            if drop_cnt == 0:
-                deg.unpersist()
-                converged = True
-                break
-            e = (
-                e.join(keep.withColumnRenamed("id", "src"), "src", "left_semi")
-                .join(keep.withColumnRenamed("id", "dst"), "dst", "left_semi")
-                .select("src", "dst")
-                .localCheckpoint(eager=True)
-            )
-            deg.unpersist()  # e is materialized; the round's cache can go
-    verts = e.select(F.col("src").alias("id")).distinct()
-    return KCoreResult(verts, e, rounds, converged, peeled)
+    return _peel(spark, e, k, F.count("*"), max_rounds, num_partitions)
 
 
 @dataclass
@@ -374,9 +391,9 @@ def s_core(
     is an exact-integer compare — no float threshold can diverge
     between engines or partitionings.
 
-    Same shrinking-active-set shape as ``k_core``: per round one
-    weighted-degree aggregation + two semi-joins on the survivors; work
-    ∝ the surviving edge set, which only shrinks.
+    The ``k_core`` peel with ``sum(w)`` in place of ``count(*)``: per
+    round one weighted-degree aggregation + two semi-joins on the
+    survivors; work ∝ the surviving edge set, which only shrinks.
 
     INPUT CONTRACT: ``edges`` must be a canonical undirected weighted
     edge list — one row per unordered pair (src < dst convention), no
@@ -396,32 +413,4 @@ def s_core(
     sym = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
     ).localCheckpoint(eager=True)
-    peeled: list[int] = []
-    converged = False
-    rounds = 0
-    # AQE + codegen off for the loop (see _superstep.loop_confs)
-    with loop_confs(spark):
-        while rounds < max_rounds:
-            rounds += 1
-            wdeg = (
-                sym.repartition(num_partitions, "src")
-                .groupBy("src")
-                .agg(F.sum("w").alias("wd"))
-                .persist()
-            )
-            keep = wdeg.where(F.col("wd") >= s).select(F.col("src").alias("id"))
-            drop_cnt = wdeg.where(F.col("wd") < s).count()
-            peeled.append(int(drop_cnt))
-            if drop_cnt == 0:
-                wdeg.unpersist()
-                converged = True
-                break
-            sym = (
-                sym.join(keep.withColumnRenamed("id", "src"), "src", "left_semi")
-                .join(keep.withColumnRenamed("id", "dst"), "dst", "left_semi")
-                .select("src", "dst", "w")
-                .localCheckpoint(eager=True)
-            )
-            wdeg.unpersist()
-    verts = sym.select(F.col("src").alias("id")).distinct()
-    return KCoreResult(verts, sym, rounds, converged, peeled)
+    return _peel(spark, sym, s, F.sum("w"), max_rounds, num_partitions)

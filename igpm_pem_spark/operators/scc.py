@@ -30,7 +30,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ._superstep import loop_confs
+from ._superstep import loop_confs, released, run
+from .components import _cc_step
 from .graph import kernel_nparts
 
 
@@ -43,56 +44,39 @@ class SccResult:
     stats: list = field(default_factory=list)
 
 
+# Sweeps per changed-count job. Measured at sf0.01: 4 vs 2 is a wash (the
+# trimmed phases' fixpoints are shallow, so wider blocks just add no-op
+# sweeps).
+_UNROLL = 2
+
+
 def _min_prop_fix(
     state: DataFrame,
     adj: DataFrame,
     num_partitions: int,
     max_iter: int,
-    unroll: int = 2,
 ) -> tuple[DataFrame, int]:
-    """Run color(v) ← min(color(v), min over edges (u,v) of color(u)) to
-    fixpoint, frontier-restricted. state: (id, color, changed).
+    """Run component(v) ← min(component(v), min over edges (u,v) of
+    component(u)) to fixpoint, frontier-restricted: the CC sweep
+    (``components._cc_step``) over directed edges. state: (id,
+    component, changed).
 
-    ``unroll`` sweeps share ONE job (the changed-count action is what
+    ``_UNROLL`` sweeps share ONE job (the changed-count action is what
     materializes the lazy per-sweep checkpoints): on deep fixpoints the
     wall is dominated by per-job scheduling, not data, so cutting the
     job count nearly proportionally cuts the wall. Each sweep references
     state 3× (frontier, join left, compare), so every sweep truncates
     the logical plan with a lazy localCheckpoint — analysis stays linear
-    in unroll and the checkpointed partitions are computed once inside
-    the job. Measured at sf0.01: unroll 4 vs 2 is a wash (the trimmed
-    phases' fixpoints are shallow, so wider blocks just add no-op
-    sweeps) — 2 stays the default.
+    in the unroll and the checkpointed partitions are computed once
+    inside the job.
     Convergence detection is unaffected: a sweep over an unchanged state
     changes nothing, so "last sweep of the batch changed nothing" is
-    still exactly the fixpoint test (at most unroll-1 no-op sweeps run)."""
+    still exactly the fixpoint test (at most _UNROLL-1 no-op sweeps run)."""
     steps = 0
     while steps < max_iter:
-        for _ in range(min(unroll, max_iter - steps)):
-            frontier = state.where("changed").select(
-                F.col("id").alias("src"), F.col("color").alias("cand")
-            )
-            raw = adj.join(frontier.hint("shuffle_hash"), "src").select("dst", "cand")
-            msgs = (
-                raw.repartition(num_partitions, "dst")
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.min("cand").alias("cand"))
-            )
-            state = state.join(msgs, "id", "left").select(
-                "id",
-                F.least(
-                    F.col("color"), F.coalesce(F.col("cand"), F.col("color"))
-                ).alias("color"),
-                (F.coalesce(F.col("cand"), F.col("color")) < F.col("color")).alias(
-                    "changed"
-                ),
-            )
+        for _ in range(min(_UNROLL, max_iter - steps)):
+            state = _cc_step(state, adj, num_partitions).localCheckpoint(eager=False)
             steps += 1
-            # per-sweep lazy checkpoint: each sweep references state 3×
-            # (frontier, join left, compare), so an uncheckpointed chain
-            # grows ~3^unroll in analysis — truncating per sweep keeps
-            # plans linear and lets unroll rise past 2
-            state = state.localCheckpoint(eager=False)
         if state.where("changed").count() == 0:
             return state, steps
     raise RuntimeError(f"min-propagation did not converge in {max_iter} sweeps")
@@ -193,7 +177,7 @@ def strongly_connected_components(
     t0 = time.time()
     # AQE + codegen off for the whole FW-BW-Trim iteration (fresh
     # plans per sweep/phase — see _superstep.loop_confs)
-    with loop_confs(spark):
+    with released(fwd), loop_confs(spark):
         while phases < max_phases:
             # trim first, every phase: the initial periphery, then whatever
             # each extracted SCC's removal exposes
@@ -215,7 +199,7 @@ def strongly_connected_components(
             ba = fa.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
             # 1. forward min-coloring
             color0 = alive.select(
-                "id", F.col("id").alias("color"), F.lit(True).alias("changed")
+                "id", F.col("id").alias("component"), F.lit(True).alias("changed")
             ).localCheckpoint(eager=True)
             colored, s1 = _min_prop_fix(color0, fa, num_partitions, max_iter)
             supersteps += s1
@@ -224,11 +208,15 @@ def strongly_connected_components(
             # on the color-respecting backward edges
             same_color = (
                 ba.join(
-                    colored.select(F.col("id").alias("src"), F.col("color").alias("_cs")),
+                    colored.select(
+                        F.col("id").alias("src"), F.col("component").alias("_cs")
+                    ),
                     "src",
                 )
                 .join(
-                    colored.select(F.col("id").alias("dst"), F.col("color").alias("_cd")),
+                    colored.select(
+                        F.col("id").alias("dst"), F.col("component").alias("_cd")
+                    ),
                     "dst",
                 )
                 .where(F.col("_cs") == F.col("_cd"))
@@ -237,18 +225,18 @@ def strongly_connected_components(
             )
             mark0 = colored.select(
                 "id",
-                F.when(F.col("id") == F.col("color"), F.col("color")).alias("m"),
-                (F.col("id") == F.col("color")).alias("changed"),
+                F.when(F.col("id") == F.col("component"), F.col("component")).alias("m"),
+                (F.col("id") == F.col("component")).alias("changed"),
             ).select(
-                "id", F.coalesce(F.col("m"), F.lit(2**62)).alias("color"), "changed"
+                "id", F.coalesce(F.col("m"), F.lit(2**62)).alias("component"), "changed"
             ).localCheckpoint(eager=True)
             marked, s2 = _min_prop_fix(mark0, same_color, num_partitions, max_iter)
             supersteps += s2
             # marked < sentinel ⇒ pivot's color reached v backward within its
             # color class ⇒ v ∈ SCC(pivot). (min over marks is safe: within a
             # color class the only possible mark is the class's pivot color.)
-            scc_now = marked.where(F.col("color") < F.lit(2**62)).select(
-                "id", F.col("color").alias("scc")
+            scc_now = marked.where(F.col("component") < F.lit(2**62)).select(
+                "id", F.col("component").alias("scc")
             )
             done = scc_now if done is None else done.unionByName(scc_now)
             done = done.localCheckpoint(eager=True)
@@ -256,7 +244,6 @@ def strongly_connected_components(
                 alive.join(scc_now.select("id"), "id", "left_anti")
                 .localCheckpoint(eager=True)
             )
-    fwd.unpersist()
     if not converged and alive.limit(1).count() > 0:
         raise RuntimeError(
             f"SCC did not finish in {max_phases} phases — pathological "
@@ -267,13 +254,29 @@ def strongly_connected_components(
     return result
 
 
+def _level_step(state: DataFrame, q: DataFrame) -> DataFrame:
+    """One max-propagation sweep over the quotient edges q(a, b):
+    level(c) ← max(level(c), 1 + max level of c's predecessors)."""
+    msgs = (
+        q.join(state.select(F.col("c").alias("a"), "level"), "a")
+        .groupBy(F.col("b").alias("c"))
+        .agg((F.max("level") + 1).alias("cand"))
+    )
+    return state.join(msgs, "c", "left").select(
+        "c",
+        F.greatest(F.col("level"), F.coalesce(F.col("cand"), F.col("level")))
+        .cast("int")
+        .alias("level"),
+        (F.coalesce(F.col("cand"), F.lit(0)) > F.col("level")).alias("changed"),
+    )
+
+
 def condensation_levels(
     spark: SparkSession,
     edges: DataFrame,
     *,
     max_levels: int = 200,
     num_partitions: int | None = None,
-    scc_kwargs: dict | None = None,
 ) -> DataFrame:
     """(scc, level): longest-path layering of the SCC condensation DAG —
     the build/evaluation schedule of a directed link graph (an import
@@ -284,11 +287,12 @@ def condensation_levels(
     components — computed by bulk max-propagation sweeps over the
     quotient edge set, which is ≤ the SCC count squared but in practice
     tiny next to the input graph (the expensive part, the SCC map, is
-    the already-scale-shaped kernel above). Sweep count = DAG depth."""
+    the already-scale-shaped kernel above). Sweep count = DAG depth; the
+    sweeps run through the superstep driver, four per commit."""
     if num_partitions is None:
         num_partitions = kernel_nparts(edges)
     comp = strongly_connected_components(
-        spark, edges, num_partitions=num_partitions, **(scc_kwargs or {})
+        spark, edges, num_partitions=num_partitions
     ).components
     e = edges.select("src", "dst").where(F.col("src") != F.col("dst"))
     q = (
@@ -300,34 +304,20 @@ def condensation_levels(
         .repartition(num_partitions, "a")
         .localCheckpoint(eager=True)
     )
-    state = (
-        comp.select(F.col("scc").alias("c"))
+    res = run(
+        spark,
+        lambda: comp.select(F.col("scc").alias("c"))
         .distinct()
-        .select("c", F.lit(0).cast("int").alias("level"))
-        .localCheckpoint(eager=True)
+        .select("c", F.lit(0).cast("int").alias("level"), F.lit(True).alias("changed"))
+        .localCheckpoint(eager=True),
+        lambda s: _level_step(s, q),
+        max_iter=max_levels,
+        edge_parts={},
+        num_partitions=num_partitions,
+        steps_per_commit=4,
     )
-    with loop_confs(spark):
-        for _ in range(max_levels):
-            msgs = (
-                q.join(state.select(F.col("c").alias("a"), "level"), "a")
-                .groupBy(F.col("b").alias("c"))
-                .agg((F.max("level") + 1).alias("cand"))
-            )
-            nxt = (
-                state.join(msgs, "c", "left")
-                .select(
-                    "c",
-                    F.greatest(F.col("level"), F.coalesce(F.col("cand"), F.col("level")))
-                    .cast("int")
-                    .alias("level"),
-                    (F.coalesce(F.col("cand"), F.lit(0)) > F.col("level")).alias("chg"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            changed = nxt.where("chg").count()
-            state = nxt.select("c", "level").localCheckpoint(eager=True)
-            if changed == 0:
-                return state.select(F.col("c").alias("scc"), "level")
-    raise RuntimeError(
-        f"condensation deeper than {max_levels} levels — raise max_levels"
-    )
+    if not res.converged:
+        raise RuntimeError(
+            f"condensation deeper than {max_levels} levels — raise max_levels"
+        )
+    return res.state.select(F.col("c").alias("scc"), "level")

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .graph import kernel_nparts
 
 from ..lineage import SuperstepStats
-from ._superstep import edge_partition_counts, loop_confs, released, run
+from ._superstep import edge_partition_counts, released, run
 
 
 @dataclass
@@ -38,7 +38,9 @@ class SsspResult:
     stats: list[SuperstepStats] = field(default_factory=list)
 
 
-def _prep(edges: DataFrame, weight_col: str, directed: bool) -> DataFrame:
+def _prep(
+    edges: DataFrame, weight_col: str, directed: bool, fold=F.min
+) -> DataFrame:
     e = edges.select(
         "src", "dst", F.col(weight_col).cast("double").alias("w")
     ).where(F.col("src") != F.col("dst"))
@@ -48,8 +50,9 @@ def _prep(edges: DataFrame, weight_col: str, directed: bool) -> DataFrame:
                 F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
             )
         )
-    # parallel edges: keep the cheapest (min-weight) representative
-    return e.groupBy("src", "dst").agg(F.min("w").alias("w"))
+    # parallel edges: ``fold`` picks the representative weight (the
+    # cheapest for shortest paths)
+    return e.groupBy("src", "dst").agg(fold("w").alias("w"))
 
 
 def _sssp_step(state: DataFrame, adj: DataFrame, num_partitions: int) -> DataFrame:
@@ -134,16 +137,32 @@ def sssp(
     )
 
 
-def _widest_prep(edges: DataFrame, weight_col: str, directed: bool) -> DataFrame:
-    e = edges.select(
-        "src", "dst", F.col(weight_col).cast("double").alias("w")
-    ).where(F.col("src") != F.col("dst"))
-    if not directed:
-        e = e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
-        )
-    # parallel edges: keep the WIDEST (max-weight) representative
-    return e.groupBy("src", "dst").agg(F.max("w").alias("w"))
+def _widest_step(state: DataFrame, adj: DataFrame, num_partitions: int) -> DataFrame:
+    """``_sssp_step`` with (min, +) swapped for (max, min): frontier
+    vertices push min(width, w) to their out-neighbors, each vertex keeps
+    the widest candidate."""
+    frontier = state.where("changed").select(
+        F.col("id").alias("src"), F.col("width").alias("w0")
+    )
+    raw = adj.join(frontier.hint("shuffle_hash"), "src").select(
+        "dst", F.least(F.col("w0"), F.col("w")).alias("cand")
+    )
+    msgs = (
+        raw.repartition(num_partitions, "dst")
+        .groupBy(F.col("dst").alias("id"))
+        .agg(F.max("cand").alias("cand"))
+    )
+    return state.join(msgs, "id", "full").select(
+        "id",
+        F.greatest(
+            F.coalesce(F.col("width"), F.col("cand")),
+            F.coalesce(F.col("cand"), F.col("width")),
+        ).alias("width"),
+        (
+            F.col("width").isNull()
+            | (F.coalesce(F.col("cand"), F.col("width")) > F.col("width"))
+        ).alias("changed"),
+    )
 
 
 def widest_path(
@@ -160,52 +179,30 @@ def widest_path(
     width(v) = max over edges (u,v) of min(width(u), w) — "what is the
     fattest pipe from here to everywhere" (capacity routing, dependency
     bandwidth). Same frontier-restricted superstep as the min-plus
-    kernel with (min, +) swapped for (max, min); widths are input
-    weights verbatim (never sums), so the fixpoint is engine-exact with
-    ANY weights, not just integral ones. The source carries +inf (every
-    path's bottleneck is its narrowest edge). Monotone non-decreasing,
-    bounded by max weight ⇒ converges; unreached vertices are absent."""
+    kernel with (min, +) swapped for (max, min), run by the same driver
+    at four steps per commit; widths are input weights verbatim (never
+    sums), so the fixpoint is engine-exact with ANY weights, not just
+    integral ones. The source carries +inf (every path's bottleneck is
+    its narrowest edge). Monotone non-decreasing, bounded by max weight
+    ⇒ converges; unreached vertices are absent."""
     if num_partitions is None:
         num_partitions = kernel_nparts(edges)
+    # parallel edges: keep the WIDEST (max-weight) representative
     adj = (
-        _widest_prep(edges, weight_col, directed)
+        _prep(edges, weight_col, directed, F.max)
         .repartition(num_partitions, "src")
         .localCheckpoint(eager=True)
     )
-    state = spark.createDataFrame(
-        [(int(source), float("inf"), True)], "id BIGINT, width DOUBLE, changed BOOLEAN"
-    ).repartition(num_partitions, "id")
-    converged, step = False, 0
-    with loop_confs(spark):
-        while step < max_iter:
-            step += 1
-            frontier = state.where("changed").select(
-                F.col("id").alias("src"), F.col("width").alias("w0")
-            )
-            raw = adj.join(frontier.hint("shuffle_hash"), "src").select(
-                "dst", F.least(F.col("w0"), F.col("w")).alias("cand")
-            )
-            msgs = (
-                raw.repartition(num_partitions, "dst")
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.max("cand").alias("cand"))
-            )
-            state = (
-                state.join(msgs, "id", "full")
-                .select(
-                    "id",
-                    F.greatest(
-                        F.coalesce(F.col("width"), F.col("cand")),
-                        F.coalesce(F.col("cand"), F.col("width")),
-                    ).alias("width"),
-                    (
-                        F.col("width").isNull()
-                        | (F.coalesce(F.col("cand"), F.col("width")) > F.col("width"))
-                    ).alias("changed"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            if state.where("changed").limit(1).count() == 0:
-                converged = True
-                break
-    return SsspResult(state.select("id", F.col("width").alias("width")), step, converged)
+    res = run(
+        spark,
+        lambda: spark.createDataFrame(
+            [(int(source), float("inf"), True)],
+            "id BIGINT, width DOUBLE, changed BOOLEAN",
+        ).repartition(num_partitions, "id"),
+        lambda s: _widest_step(s, adj, num_partitions),
+        max_iter=max_iter,
+        edge_parts={},
+        num_partitions=num_partitions,
+        steps_per_commit=4,
+    )
+    return SsspResult(res.state.select("id", "width"), res.supersteps, res.converged)

@@ -8,6 +8,7 @@ import networkx as nx
 import pytest
 from pyspark.sql import functions as F
 
+from igpm_pem_spark.operators.bowtie import bowtie_decomposition
 from igpm_pem_spark.operators.components import (
     connected_components,
     median_component_size,
@@ -16,6 +17,7 @@ from igpm_pem_spark.operators.graph import degrees
 from igpm_pem_spark.operators.incremental import incremental_components
 from igpm_pem_spark.operators.labelprop import label_propagation
 from igpm_pem_spark.operators.pagerank import pagerank
+from igpm_pem_spark.operators.scc import strongly_connected_components
 from igpm_pem_spark.operators.triangles import (
     star_count,
     triangle_count,
@@ -132,15 +134,21 @@ def _two_buckets(spark, edges):
         ("components", "_cc_step", lambda f: _boom, connected_components),
         ("labelprop", "_lpa_step", lambda f: _boom, label_propagation),
         ("components", "_cc_step", _boom_on_refresh, _two_buckets),
+        ("scc", "_trim", lambda f: _boom, strongly_connected_components),
+        ("bowtie", "strongly_connected_components", lambda f: _boom,
+         bowtie_decomposition),
     ],
-    ids=["pagerank", "components", "labelprop", "incremental_components"],
+    ids=["pagerank", "components", "labelprop", "incremental_components",
+         "scc", "bowtie"],
 )
 def test_releases_caches_when_a_step_raises(
     spark, monkeypatch, module, step, patch, kernel
 ):
     """A superstep that raises must not leak the kernel's persisted
     adjacency and vertex set (nor, for directed PageRank, its dangling
-    set; nor, for incremental CC, its carried adjacency parts)."""
+    set; nor, for incremental CC, its carried adjacency parts; nor, for
+    SCC and the bow-tie, their persisted edge, vertex, SCC and core
+    relations)."""
     import importlib
 
     spark.catalog.clearCache()

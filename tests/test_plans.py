@@ -180,9 +180,9 @@ def test_new_kernel_message_layouts_pinned(spark):
 
     # HITS: one join+agg per superstep over the bipartite message graph,
     # aggregate exchange on (tid, ts) with the pinned count
-    bm = _message_graph(
-        synthetic_edges(spark, 300, 1500)
-    ).repartition(3, "fid").persist()
+    e = synthetic_edges(spark, 300, 1500)
+    w = e.withColumn("w", F.lit(1.0))
+    bm = _message_graph(e, w, w).repartition(3, "fid").persist()
     bm.count()
     st = (
         bm.select(F.col("fid").alias("id"), F.col("fs").alias("side"))
