@@ -39,7 +39,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .graph import symmetrize, vertex_ids
-from ._superstep import loop_confs
+from ._superstep import loop_confs, released
 
 
 def _sym(edges: DataFrame, directed: bool) -> DataFrame:
@@ -100,18 +100,17 @@ def _bfs_levels(
     """Brandes' forward pass from the ``n_seeds`` lowest-id vertices:
     yields (sym, levels), levels[ℓ] = (sid, v, sigma) for the vertices at
     distance exactly ℓ ≤ ``max_hops`` from sid, sigma = exact integer
-    shortest-path count. The persisted edges and levels are released on
-    exit, exceptions included."""
+    shortest-path count. The persisted edges are released on exit,
+    exceptions included; the levels are local checkpoints."""
     sym = _sym(edges, directed).persist()
-    levels: list[DataFrame] = []
-    try:
+    with released(sym):
         seeds = vertex_ids(sym).orderBy("id").limit(n_seeds)
-        levels.append(
+        levels = [
             seeds.select(
                 F.col("id").alias("sid"), F.col("id").alias("v"),
                 F.lit(1).cast("long").alias("sigma"),
             ).localCheckpoint(eager=True)
-        )
+        ]
         visited = levels[0].select("sid", "v")
         # AQE + codegen off for the loop (see _superstep.loop_confs)
         with loop_confs(spark):
@@ -122,18 +121,17 @@ def _bfs_levels(
                     .join(visited, ["sid", "v"], "left_anti")
                     .groupBy("sid", "v")
                     .agg(F.sum("sigma").alias("sigma"))
-                    .persist()
+                    # each level reads the one before and the union of all
+                    # before it, so an uncut lineage doubles the plan (and
+                    # its planning and broadcast jobs) per level: cut it,
+                    # lazily — the count below materializes the checkpoint
+                    .localCheckpoint(eager=False)
                 )
-                levels.append(nxt)
-                if nxt.isEmpty():
-                    levels.pop().unpersist()
+                if nxt.count() == 0:
                     break
+                levels.append(nxt)
                 visited = visited.unionByName(nxt.select("sid", "v"))
         yield sym, levels
-    finally:
-        for lv in levels:
-            lv.unpersist()
-        sym.unpersist()
 
 
 def _brandes_walk(
