@@ -116,8 +116,9 @@ class LineageLog:
             # does this by running the stats job on a persisted state
             # first) so the leaf inherits real InMemoryRelation bytes.
             # The driver's fixed-iteration commits (PageRank at tol <= 0,
-            # linear plans) come here directly: their estimate grows
-            # additively in digits, harmless for hundreds of supersteps.
+            # HITS, push, WL, ...) come here directly: a linear step grows
+            # the estimate additively in digits, harmless for hundreds of
+            # supersteps; push and WL (two state references) run few rounds.
             #
             # coalesce bounds the checkpointed PARTITION count at the
             # kernel's declared width: a state plan that unions several

@@ -26,9 +26,10 @@ delta / active expressions over a new state and its stop test
   favor of the commit re-runs that step's E-sized join ~2×. The kernel
   picks the rule from its step's structure (``eager_steps``);
 * **the commit** — ``commit_and_stats``: materialize + one stats job;
-* **fixed iterations** — a run without a stop test (PageRank at
-  ``tol <= 0``) skips the stats job on every in-memory commit but the
-  last: the checkpoint barrier alone materializes the state;
+* **fixed iterations** — an in-memory run without a stop test (PageRank
+  at ``tol <= 0``, HITS, push, WL, ...) commits every block, the last
+  included, with ``commit_state`` alone: no stats job and no
+  ``close_block`` (its stats read ``delta_norm == -1.0``);
 * **caches** — ``released`` unpersists the kernel's inputs on every exit
   path, a raising step included.
 
@@ -120,8 +121,8 @@ def run(
     step: Callable[[DataFrame], DataFrame],
     *,
     max_iter: int,
-    edge_parts: dict[int, int],
-    num_partitions: int,
+    num_partitions: int | None,
+    edge_parts: dict[int, int] | None = None,
     steps_per_commit: int = 1,
     eager_steps: bool = False,
     checkpoint_dir: str | None = None,
@@ -134,13 +135,14 @@ def run(
     """Iterate ``step`` from ``start()`` (or the resumed state) until
     ``until(delta)`` holds at a commit or ``max_iter`` supersteps ran.
 
-    ``delta`` / ``active`` are summed / counted over each committed state;
+    ``delta`` / ``active`` are summed / counted over each committed state
+    (per partition next to ``edge_parts``' edge counts in the lineage);
     they default to the state's ``changed`` flag, so a fixpoint kernel
     stops once a commit changed nothing. ``until=None`` runs exactly
     ``max_iter`` supersteps. ``close_block(last, first)`` maps a block's
     last state and its start state to the state that is committed: a step
     that carries no per-vertex delta emits it there, with one join per
-    commit instead of one per step (skipped where the stats job is)."""
+    commit instead of one per step (skipped with the stats job)."""
     if delta is None:
         delta, active = F.col("changed").cast("double"), F.col("changed")
     log = LineageLog(spark, checkpoint_dir)
@@ -165,7 +167,7 @@ def run(
                 elif b < block - 1:
                     new_state = new_state.localCheckpoint(eager=False)
             step_no += block
-            if until is None and not checkpoint_dir and step_no < max_iter:
+            if until is None and not checkpoint_dir:
                 state = log.commit_state(
                     step_no - 1, new_state,
                     SuperstepStats(step_no - 1, -1.0, -1, 0.0),
@@ -176,7 +178,7 @@ def run(
             if close_block is not None:
                 new_state = close_block(new_state, state)
             state, d, _ = commit_and_stats(
-                log, step_no - 1, new_state, delta, active, edge_parts, t0,
+                log, step_no - 1, new_state, delta, active, edge_parts or {}, t0,
                 num_partitions=num_partitions,
             )
             if until is not None and until(d):

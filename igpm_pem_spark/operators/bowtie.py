@@ -25,52 +25,56 @@ every vertex.
 
 from __future__ import annotations
 
+import sys
 from contextlib import ExitStack
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ._superstep import loop_confs, released
-from .graph import kernel_nparts
+from ._superstep import released, run
+from .graph import kernel_nparts, vertex_ids
 
 from .scc import strongly_connected_components
 
 
-# BFS levels expanded lazily per materialization (the steps_per_commit
-# trick from the iterative kernels): one checkpoint + one count job per
-# batch instead of two jobs per level, which is what dominates wall time
-# on deep, small frontiers.
+# BFS levels unrolled per commit (the driver's ``steps_per_commit``): one
+# checkpoint + one stats job per batch instead of per level, which is what
+# dominates wall time on deep, small frontiers.
 _BATCH = 3
+
+
+def _reach_step(state: DataFrame, edges: DataFrame, num_partitions: int) -> DataFrame:
+    """One BFS level over (id, changed): the out-neighbors of the
+    frontier (``changed``) not yet visited join as the new frontier."""
+    new = (
+        edges.join(state.where("changed").select(F.col("id").alias("src")), "src")
+        .select(F.col("dst").alias("id"))
+        .distinct()
+        .join(state, "id", "left_anti")
+    )
+    return (
+        state.select("id", F.lit(False).alias("changed"))
+        .unionByName(new.select("id", F.lit(True).alias("changed")))
+        .repartition(num_partitions, "id")
+    )
 
 
 def _reach(edges: DataFrame, seeds: DataFrame, num_partitions: int) -> DataFrame:
     """(id): vertices reachable from ``seeds`` (seeds included) over the
     directed edge relation — frontier BFS to fixpoint, ``_BATCH`` levels
-    per job."""
-    visited = seeds.select("id").distinct().localCheckpoint(eager=True)
-    n_visited = visited.count()
-    frontier = visited
-    # AQE + codegen off for the BFS loop (see _superstep.loop_confs)
-    with loop_confs(edges.sparkSession):
-        while True:
-            vis = visited
-            for _ in range(_BATCH):
-                frontier = (
-                    edges.join(frontier.withColumnRenamed("id", "src"), "src")
-                    .select(F.col("dst").alias("id"))
-                    .distinct()
-                    .join(vis, "id", "left_anti")
-                )
-                vis = vis.unionByName(frontier)
-            vis = (
-                vis.repartition(num_partitions, "id").localCheckpoint(eager=True)
-            )
-            n_now = vis.count()
-            if n_now == n_visited:
-                return visited
-            # next batch expands from everything newly discovered this batch
-            frontier = vis.join(visited, "id", "left_anti")
-            visited, n_visited = vis, n_now
+    per commit."""
+    return run(
+        edges.sparkSession,
+        lambda: seeds.select("id")
+        .distinct()
+        .withColumn("changed", F.lit(True))
+        .localCheckpoint(eager=True),
+        lambda s: _reach_step(s, edges, num_partitions),
+        # a BFS ends by itself: no frontier is left after at most |V| levels
+        max_iter=sys.maxsize,
+        num_partitions=num_partitions,
+        steps_per_commit=_BATCH,
+    ).state.select("id")
 
 
 @dataclass
@@ -105,11 +109,7 @@ def bowtie_decomposition(
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
             .repartition(num_partitions, "src")
         )
-        verts = persist(
-            e.select(F.col("src").alias("id"))
-            .unionByName(e.select(F.col("dst").alias("id")))
-            .distinct()
-        )
+        verts = persist(vertex_ids(e))
 
         scc = persist(
             strongly_connected_components(

@@ -39,7 +39,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .graph import symmetrize, vertex_ids
-from ._superstep import loop_confs, released
+from ._superstep import loop_confs, released, run
 
 
 def _sym(edges: DataFrame, directed: bool) -> DataFrame:
@@ -142,8 +142,8 @@ def _brandes_walk(
     c(v→w) = σ(v)/σ(w)·(1 + δ(w)) over its successors. Returns the
     (v, delta) rows of every level ≥ 1 and the (v, w, d) edge terms of
     every level ≥ 0 (the seeds' own level-0→1 edges included). Lazy but
-    for one eager checkpoint of each level ≥ 1's (sid, v, w_sigma,
-    delta), which the next level down reads."""
+    for one eager checkpoint of each level ≥ 2's (sid, v, w_sigma,
+    delta), which the next level down reads; level 1's is a lazy one."""
     deltas, edge_terms = [], []
     succ = None  # (sid, v, w_sigma, delta) of the level just outside
     for ell in range(len(levels) - 1, -1, -1):
@@ -176,10 +176,12 @@ def _brandes_walk(
         if ell == 0:
             break
         deltas.append(cur.select("v", "delta"))
+        # level 1's rows feed only the seeds' own edge terms (level 0),
+        # which the vertex kernel never reads: cut that one lazily
         succ = (
             lev.select("sid", "v", F.col("sigma").alias("w_sigma"))
             .join(cur.select("sid", "v", "delta"), ["sid", "v"])
-            .localCheckpoint(eager=True)
+            .localCheckpoint(eager=ell > 1)
         )
     return deltas, edge_terms
 
@@ -394,6 +396,22 @@ def dominating_set_greedy(
     return spark.createDataFrame(picks, "rank LONG, id LONG, gain LONG")
 
 
+def _hitting_step(
+    h: DataFrame, sym: DataFrame, deg: DataFrame, hubs: list[int]
+) -> DataFrame:
+    s = (
+        sym.join(h.select(F.col("id").alias("dst"), F.col("h").alias("nh")), "dst")
+        .groupBy(F.col("src").alias("id"))
+        .agg(F.sum("nh").alias("s"))
+    )
+    return deg.join(s, "id").select(
+        "id",
+        F.when(F.col("id").isin(hubs), F.lit(0.0))
+        .otherwise(F.lit(1.0) + F.col("s") / F.col("d"))
+        .alias("h"),
+    )
+
+
 def hitting_time_truncated(
     spark: SparkSession,
     edges: DataFrame,
@@ -422,31 +440,18 @@ def hitting_time_truncated(
     deg = sym.groupBy(F.col("src").alias("id")).agg(
         F.count("*").cast("long").alias("d")
     ).persist()
-    hubs = [
-        int(r.id)
-        for r in deg.orderBy(F.col("d").desc(), "id").limit(n_hubs).collect()
-    ]
-    h = deg.select("id", F.lit(0.0).alias("h"))
-    # AQE + codegen off for the loop (see _superstep.loop_confs)
-    with loop_confs(spark):
-        for _ in range(iters):
-            s = (
-                sym.join(
-                    h.select(F.col("id").alias("dst"), F.col("h").alias("nh")), "dst"
-                )
-                .groupBy(F.col("src").alias("id"))
-                .agg(F.sum("nh").alias("s"))
-            )
-            h = (
-                deg.join(s, "id")
-                .select(
-                    "id",
-                    F.when(F.col("id").isin(hubs), F.lit(0.0))
-                    .otherwise(F.lit(1.0) + F.col("s") / F.col("d"))
-                    .alias("h"),
-                )
-                .localCheckpoint(eager=False)
-            )
-    sym.unpersist()
-    deg.unpersist()
-    return h
+    with released(sym, deg):
+        hubs = [
+            int(r.id)
+            for r in deg.orderBy(F.col("d").desc(), "id").limit(n_hubs).collect()
+        ]
+        # one block of ``iters`` steps: lazy cuts between them, one commit
+        return run(
+            spark,
+            lambda: deg.select("id", F.lit(0.0).alias("h")),
+            lambda h: _hitting_step(h, sym, deg, hubs),
+            until=None,
+            max_iter=iters,
+            steps_per_commit=iters,
+            num_partitions=None,
+        ).state

@@ -22,8 +22,19 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ._superstep import loop_confs
-from .graph import kernel_nparts, simple_edges
+from ._superstep import released, run
+from .graph import kernel_nparts, simple_edges, vertex_ids
+
+
+def _eigen_step(state: DataFrame, me: DataFrame, n_parts: int) -> DataFrame:
+    msgs = me.join(
+        state.withColumnRenamed("id", "src").hint("shuffle_hash"), "src"
+    ).select("dst", (F.col("val") * F.col("w")).alias("m"))
+    return (
+        msgs.repartition(n_parts, "dst")
+        .groupBy(F.col("dst").alias("id"))
+        .agg(F.sum("m").alias("val"))
+    )
 
 
 @dataclass
@@ -43,11 +54,7 @@ def eigenvector_centrality(
     if num_partitions is None:
         num_partitions = kernel_nparts(edges)
     e = simple_edges(edges, directed=directed)
-    ids = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    ids = vertex_ids(e)
     # message relation with keep-alive: real edges weight 1, self weight 0
     me = e.select("src", "dst", F.lit(1.0).alias("w")).unionByName(
         ids.select(
@@ -55,24 +62,15 @@ def eigenvector_centrality(
             F.lit(0.0).alias("w"),
         )
     ).repartition(num_partitions, "src").persist()
-    state = ids.withColumn("val", F.lit(1.0)).localCheckpoint(eager=True)
-    # AQE + codegen off for the loop (see _superstep.loop_confs)
-    with loop_confs(spark):
-        for _ in range(max_iter):
-            msgs = me.join(
-                state.withColumnRenamed("id", "src").hint("shuffle_hash"), "src"
-            ).select("dst", (F.col("val") * F.col("w")).alias("m"))
-            state = (
-                msgs.repartition(num_partitions, "dst")
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum("m").alias("val"))
-                .localCheckpoint(eager=True)
-            )
-    me.unpersist()
+    with released(me):
+        state = run(
+            spark,
+            lambda: ids.withColumn("val", F.lit(1.0)).localCheckpoint(eager=True),
+            lambda s: _eigen_step(s, me, num_partitions),
+            until=None,
+            max_iter=max_iter,
+            num_partitions=num_partitions,
+        ).state
     total = state.agg(F.sum("val")).first()[0]
-    if not total:
-        return EigenResult(state.select("id", F.lit(0.0).alias("score")), max_iter)
-    return EigenResult(
-        state.select("id", (F.col("val") / F.lit(float(total))).alias("score")),
-        max_iter,
-    )
+    score = F.col("val") / F.lit(float(total)) if total else F.lit(0.0)
+    return EigenResult(state.select("id", score.alias("score")), max_iter)

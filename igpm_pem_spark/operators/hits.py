@@ -41,8 +41,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ._superstep import loop_confs, released
-from .graph import kernel_nparts, simple_edges
+from ._superstep import released, run
+from .graph import kernel_nparts, simple_edges, vertex_ids
 
 
 @dataclass
@@ -65,11 +65,7 @@ def _message_graph(e: DataFrame, fwd: DataFrame, bwd: DataFrame) -> DataFrame:
         F.col("dst").alias("fid"), F.lit("a").alias("fs"),
         F.col("src").alias("tid"), F.lit("h").alias("ts"), "w",
     )
-    ids = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    ids = vertex_ids(e)
     keep = ids.crossJoin(
         F.broadcast(
             ids.sparkSession.createDataFrame([("h",), ("a",)], "side STRING")
@@ -82,35 +78,38 @@ def _message_graph(e: DataFrame, fwd: DataFrame, bwd: DataFrame) -> DataFrame:
     return f.unionByName(b).unionByName(keep)
 
 
+def _hub_auth_step(state: DataFrame, bm: DataFrame, n_parts: int) -> DataFrame:
+    msgs = bm.join(
+        state.hint("shuffle_hash"),
+        (bm["fid"] == state["id"]) & (bm["fs"] == state["side"]),
+    ).select("tid", "ts", (F.col("val") * F.col("w")).alias("m"))
+    return (
+        msgs.repartition(n_parts, "tid", "ts")
+        .groupBy(F.col("tid").alias("id"), F.col("ts").alias("side"))
+        .agg(F.sum("m").alias("val"))
+    )
+
+
 def _hub_auth(
     e: DataFrame, fwd: DataFrame, bwd: DataFrame, max_iter: int,
     num_partitions: int,
 ) -> HitsResult:
-    """The HITS/SALSA loop: ``max_iter`` Jacobi supersteps over the
-    message graph of ``fwd`` / ``bwd``, then the final L1 normalization
-    and the (id, hub, auth) pivot."""
+    """The HITS/SALSA kernel: ``max_iter`` Jacobi supersteps over the
+    message graph of ``fwd`` / ``bwd``, one commit each, then the final
+    L1 normalization and the (id, hub, auth) pivot."""
     bm = _message_graph(e, fwd, bwd).repartition(num_partitions, "fid").persist()
     with released(bm):
-        state = (
-            bm.select(F.col("fid").alias("id"), F.col("fs").alias("side"))
+        state = run(
+            bm.sparkSession,
+            lambda: bm.select(F.col("fid").alias("id"), F.col("fs").alias("side"))
             .distinct()
             .withColumn("val", F.lit(1.0))
-            .localCheckpoint(eager=True)
-        )
-        # AQE + codegen off for the loop (see _superstep.loop_confs)
-        with loop_confs(bm.sparkSession):
-            for _ in range(max_iter):
-                msgs = bm.join(
-                    state.hint("shuffle_hash"),
-                    (bm["fid"] == state["id"]) & (bm["fs"] == state["side"]),
-                ).select("tid", "ts", (F.col("val") * F.col("w")).alias("m"))
-                state = (
-                    msgs.repartition(num_partitions, "tid", "ts")
-                    .groupBy(F.col("tid").alias("id"), F.col("ts").alias("side"))
-                    .agg(F.sum("m").alias("val"))
-                )
-                # truncate the iterative lineage each superstep (tiny state)
-                state = state.localCheckpoint(eager=True)
+            .localCheckpoint(eager=True),
+            lambda s: _hub_auth_step(s, bm, num_partitions),
+            until=None,
+            max_iter=max_iter,
+            num_partitions=num_partitions,
+        ).state
     totals = state.groupBy("side").agg(F.sum("val").alias("s"))
     norm = state.join(F.broadcast(totals), "side").select(
         "id", "side", (F.col("val") / F.col("s")).alias("val")

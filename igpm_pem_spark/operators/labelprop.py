@@ -23,24 +23,29 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from ..lineage import SuperstepStats
 from ._superstep import edge_partition_counts, fixpoint, released, run
 from .graph import kernel_nparts, partitioned_adjacency, vertex_ids
 
 
-def _lpa_step(state: DataFrame, adj: DataFrame, n_parts: int | None = None) -> DataFrame:
+def _lpa_step(
+    state: DataFrame, adj: DataFrame, n_parts: int, vote: Column | None = None
+) -> DataFrame:
+    """One synchronous LPA round; each (vertex, neighbor label) scores
+    ``vote`` over the neighbor's edges — ``count(*)`` by default,
+    ``sum(w)`` for the weighted kernel."""
     raw = adj.join(
         state.select(F.col("id").alias("src"), "label").hint("shuffle_hash"), "src"
-    ).select("dst", "label")
+    ).drop("src")
     # repartition-then-count: (dst,label) keys have near-edge cardinality,
     # so map-side combine buys nothing and costs V×P (pagerank._group_sum);
     # layout pinned to the adjacency's partition count (pagerank.py ditto)
     hist = (
-        (raw.repartition(n_parts, "dst") if n_parts else raw.repartition("dst"))
+        raw.repartition(n_parts, "dst")
         .groupBy(F.col("dst").alias("id"), "label")
-        .agg(F.count("*").alias("cnt"))
+        .agg((F.count("*") if vote is None else vote).alias("cnt"))
     )
     w = Window.partitionBy("id").orderBy(F.desc("cnt"), F.asc("label"))
     best = (
@@ -265,9 +270,10 @@ def label_propagation_weighted(
     """(id, label): synchronous LPA where each neighbor vote carries the
     edge weight — label'(v) = argmax_label Σ w(v,u) over neighbors u with
     that label, ties to the smallest label. The multiplicity-aware
-    community pass for weighted co-occurrence / import graphs; same
-    superstep shape as the unweighted kernel (one join over the
-    once-shuffled adjacency + a sum aggregate + a window argmax).
+    community pass for weighted co-occurrence / import graphs: the
+    unweighted kernel's step with ``sum(w)`` votes over the symmetrized
+    edges (parallel edges and self-loops kept), run for ``max_iter``
+    supersteps with one commit each.
 
     Determinism note: with integer-valued weights (co-occurrence counts)
     the vote sums are exact in float64, so the argmax is engine-portable
@@ -285,29 +291,15 @@ def label_propagation_weighted(
         .repartition(num_partitions, "src")
         .localCheckpoint(eager=True)
     )
-    state = (
-        sym.select(F.col("src").alias("id"))
+    return run(
+        spark,
+        lambda: sym.select(F.col("src").alias("id"))
         .distinct()
         .select("id", F.col("id").alias("label"))
         .repartition(num_partitions, "id")
-        .localCheckpoint(eager=True)
-    )
-    win = Window.partitionBy("id").orderBy(F.desc("wsum"), F.asc("label"))
-    for _ in range(max_iter):
-        raw = sym.join(
-            state.select(F.col("id").alias("src"), "label").hint("shuffle_hash"),
-            "src",
-        ).select("dst", "label", "w")
-        hist = (
-            raw.repartition(num_partitions, "dst")
-            .groupBy(F.col("dst").alias("id"), "label")
-            .agg(F.sum("w").alias("wsum"))
-        )
-        state = (
-            hist.withColumn("rn", F.row_number().over(win))
-            .where("rn = 1")
-            .select("id", "label")
-            .repartition(num_partitions, "id")
-            .localCheckpoint(eager=True)
-        )
-    return state
+        .localCheckpoint(eager=True),
+        lambda s: _lpa_step(s, sym, num_partitions, F.sum("w")),
+        until=None,
+        max_iter=max_iter,
+        num_partitions=num_partitions,
+    ).state.select("id", "label")

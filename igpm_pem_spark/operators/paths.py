@@ -33,13 +33,18 @@ def _pair_rel(edges: DataFrame, directed: bool, label: str | None) -> DataFrame:
     return e.dropDuplicates(["src", "dst"])
 
 
-def _closure_from_rel(e: DataFrame, seeds: DataFrame, max_hops: int) -> DataFrame:
-    """(src, dst, hops) with src ∈ seeds(id) — frontier expansion seeded at
-    the given vertex set, so the join work is proportional to the seeds'
-    ≤max_hops neighborhoods, not the whole graph."""
-    hop1 = e.join(
-        seeds.withColumnRenamed("id", "src"), "src", "left_semi"
-    ).withColumn("hops", F.lit(1))
+def _closure_from_rel(
+    e: DataFrame, seeds: DataFrame | None, max_hops: int
+) -> DataFrame:
+    """(src, dst, hops) with src ∈ seeds(id), or any src without seeds —
+    frontier expansion seeded at the given vertex set, so the join work
+    is proportional to the seeds' ≤max_hops neighborhoods, not the whole
+    graph. A frontier holds walks, not distinct pairs: the final min
+    dedupes them, with no shuffle per level."""
+    hop1 = e
+    if seeds is not None:
+        hop1 = e.join(seeds.withColumnRenamed("id", "src"), "src", "left_semi")
+    hop1 = hop1.withColumn("hops", F.lit(1))
     closure = hop1
     frontier = hop1
     for _ in range(1, max_hops):
@@ -52,7 +57,6 @@ def _closure_from_rel(e: DataFrame, seeds: DataFrame, max_hops: int) -> DataFram
                 (F.col("f.hops") + 1).alias("hops"),
             )
             .where(F.col("src") != F.col("dst"))
-            .dropDuplicates(["src", "dst"])
         )
         closure = closure.unionByName(nxt)
         frontier = nxt
@@ -118,33 +122,7 @@ def path_closure(
     """(src, dst, hops): minimal hop count ≤ max_hops between distinct
     vertex pairs, optionally restricted to one edge label (the reference
     caches one EXTRACT per label, ``gray_multiple.py:173-178``)."""
-    e = edges
-    if label is not None and "label" in e.columns:
-        e = e.where(F.col("label") == label)
-    e = e.select("src", "dst").where(F.col("src") != F.col("dst"))
-    if not directed:
-        e = e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-    e = e.dropDuplicates(["src", "dst"])
-
-    hop1 = e.withColumn("hops", F.lit(1))
-    closure = hop1
-    frontier = hop1
-    for _ in range(1, max_hops):
-        nxt = (
-            frontier.alias("f")
-            .join(e.alias("e"), F.col("f.dst") == F.col("e.src"))
-            .select(
-                F.col("f.src").alias("src"),
-                F.col("e.dst").alias("dst"),
-                (F.col("f.hops") + 1).alias("hops"),
-            )
-            .where(F.col("src") != F.col("dst"))
-        )
-        closure = closure.unionByName(nxt)
-        frontier = nxt
-    return closure.groupBy("src", "dst").agg(F.min("hops").alias("hops"))
+    return _closure_from_rel(_pair_rel(edges, directed, label), None, max_hops)
 
 
 def _simple_paths(

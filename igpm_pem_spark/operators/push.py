@@ -31,7 +31,38 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .graph import kernel_nparts, simple_edges
-from ._superstep import loop_confs
+from ._superstep import run
+
+
+def _push_step(
+    state: DataFrame, sym: DataFrame, alpha: float, eps: float, n_parts: int
+) -> DataFrame:
+    is_active = F.col("r") > F.lit(eps) * F.col("deg")
+    msgs = (
+        state.where(is_active)
+        .select(F.col("id").alias("v"), (F.col("r") / F.col("deg")).alias("share"))
+        .join(sym, "v")
+        .select(
+            F.col("nbr").alias("id"),
+            (F.lit(1.0 - alpha) * F.col("share")).alias("m"),
+        )
+        .groupBy("id")
+        .agg(F.sum("m").alias("inflow"))
+    )
+    return (
+        state.join(msgs, "id", "left")
+        .select(
+            "id", "deg",
+            F.when(is_active, F.col("p") + F.lit(alpha) * F.col("r"))
+            .otherwise(F.col("p"))
+            .alias("p"),
+            (
+                F.when(is_active, F.lit(0.0)).otherwise(F.col("r"))
+                + F.coalesce(F.col("inflow"), F.lit(0.0))
+            ).alias("r"),
+        )
+        .repartition(n_parts, "id")
+    )
 
 
 def forward_push_ppr(
@@ -61,46 +92,21 @@ def forward_push_ppr(
     deg = sym.groupBy(F.col("v").alias("id")).agg(F.count("*").alias("deg"))
     seed_mass = 1.0 / len(seeds)
     seed_df = spark.createDataFrame([(int(s),) for s in seeds], "id BIGINT")
-    state = (
-        deg.join(seed_df.withColumn("r0", F.lit(seed_mass)), "id", "left")
+    state = run(
+        spark,
+        lambda: deg.join(seed_df.withColumn("r0", F.lit(seed_mass)), "id", "left")
         .select(
             "id", "deg",
             F.lit(0.0).alias("p"),
             F.coalesce(F.col("r0"), F.lit(0.0)).alias("r"),
         )
         .repartition(num_partitions, "id")
-        .localCheckpoint(eager=True)
-    )
-    # AQE + codegen off for the loop (see _superstep.loop_confs)
-    with loop_confs(spark):
-        for _ in range(rounds):
-            is_active = F.col("r") > F.lit(eps) * F.col("deg")
-            active = state.where(is_active)
-            msgs = (
-                active.select(F.col("id").alias("v"), (F.col("r") / F.col("deg")).alias("share"))
-                .join(sym, "v")
-                .select(
-                    F.col("nbr").alias("id"),
-                    (F.lit(1.0 - alpha) * F.col("share")).alias("m"),
-                )
-                .groupBy("id")
-                .agg(F.sum("m").alias("inflow"))
-            )
-            state = (
-                state.join(msgs, "id", "left")
-                .select(
-                    "id", "deg",
-                    F.when(is_active, F.col("p") + F.lit(alpha) * F.col("r"))
-                    .otherwise(F.col("p"))
-                    .alias("p"),
-                    (
-                        F.when(is_active, F.lit(0.0)).otherwise(F.col("r"))
-                        + F.coalesce(F.col("inflow"), F.lit(0.0))
-                    ).alias("r"),
-                )
-                .repartition(num_partitions, "id")
-                .localCheckpoint(eager=True)
-            )
+        .localCheckpoint(eager=True),
+        lambda s: _push_step(s, sym, alpha, eps, num_partitions),
+        until=None,
+        max_iter=rounds,
+        num_partitions=num_partitions,
+    ).state
     return state.select(
         "id", F.round("p", 6).alias("p6"), F.round("r", 6).alias("r6")
     ).where((F.col("p6") != 0.0) | (F.col("r6") != 0.0))

@@ -312,7 +312,6 @@ def condensation_levels(
         .localCheckpoint(eager=True),
         lambda s: _level_step(s, q),
         max_iter=max_levels,
-        edge_parts={},
         num_partitions=num_partitions,
         steps_per_commit=4,
     )

@@ -201,7 +201,6 @@ def widest_path(
         ).repartition(num_partitions, "id"),
         lambda s: _widest_step(s, adj, num_partitions),
         max_iter=max_iter,
-        edge_parts={},
         num_partitions=num_partitions,
         steps_per_commit=4,
     )

@@ -25,7 +25,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .graph import kernel_nparts, simple_edges
-from ._superstep import loop_confs
+from ._superstep import run
+
+
+def _wl_step(colors: DataFrame, sym: DataFrame) -> DataFrame:
+    nb = sym.join(
+        colors.withColumnRenamed("id", "dst").withColumnRenamed("color", "nc"),
+        "dst",
+    ).select(F.col("src").alias("id"), "nc")
+    # (color x count) runs: hub-safe — one row per distinct neighbor color
+    runs = nb.groupBy("id", "nc").agg(F.count("*").cast("string").alias("cnt"))
+    sig = runs.select(
+        "id", F.concat(F.col("nc"), F.lit("x"), F.col("cnt")).alias("run")
+    ).groupBy("id").agg(
+        F.concat_ws(";", F.sort_array(F.collect_list("run"))).alias("sig")
+    )
+    return colors.join(sig, "id").select(
+        "id",
+        F.substring(
+            F.md5(F.concat(F.col("color"), F.lit("|"), F.col("sig"))), 1, 16
+        ).alias("color"),
+    )
 
 
 def wl_colors(
@@ -47,30 +67,17 @@ def wl_colors(
         .repartition(num_partitions, "src")
         .localCheckpoint(eager=True)
     )
-    colors = sym.groupBy(F.col("src").alias("id")).agg(
-        F.count("*").cast("string").alias("color")
-    )
-    # AQE + codegen off for the loop (see _superstep.loop_confs)
-    with loop_confs(edges.sparkSession):
-        for _ in range(rounds):
-            nb = sym.join(
-                colors.withColumnRenamed("id", "dst").withColumnRenamed("color", "nc"),
-                "dst",
-            ).select(F.col("src").alias("id"), "nc")
-            # (color x count) runs: hub-safe — one row per distinct neighbor color
-            runs = nb.groupBy("id", "nc").agg(F.count("*").cast("string").alias("cnt"))
-            sig = runs.select(
-                "id", F.concat(F.col("nc"), F.lit("x"), F.col("cnt")).alias("run")
-            ).groupBy("id").agg(
-                F.concat_ws(";", F.sort_array(F.collect_list("run"))).alias("sig")
-            )
-            colors = colors.join(sig, "id").select(
-                "id",
-                F.substring(
-                    F.md5(F.concat(F.col("color"), F.lit("|"), F.col("sig"))), 1, 16
-                ).alias("color"),
-            ).localCheckpoint(eager=False)
-    return colors
+    return run(
+        edges.sparkSession,
+        lambda: sym.groupBy(F.col("src").alias("id")).agg(
+            F.count("*").cast("string").alias("color")
+        ),
+        lambda colors: _wl_step(colors, sym),
+        until=None,
+        max_iter=rounds,
+        steps_per_commit=rounds,
+        num_partitions=num_partitions,
+    ).state
 
 
 def wl_histogram(edges: DataFrame, *, rounds: int = 3) -> DataFrame:

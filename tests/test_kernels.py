@@ -9,10 +9,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from igpm_pem_spark.operators.bowtie import bowtie_decomposition
+from igpm_pem_spark.operators.centrality import hitting_time_truncated
 from igpm_pem_spark.operators.components import (
     connected_components,
     median_component_size,
 )
+from igpm_pem_spark.operators.eigencentrality import eigenvector_centrality
 from igpm_pem_spark.operators.graph import degrees
 from igpm_pem_spark.operators.incremental import incremental_components
 from igpm_pem_spark.operators.labelprop import label_propagation
@@ -137,9 +139,13 @@ def _two_buckets(spark, edges):
         ("scc", "_trim", lambda f: _boom, strongly_connected_components),
         ("bowtie", "strongly_connected_components", lambda f: _boom,
          bowtie_decomposition),
+        ("eigencentrality", "_eigen_step", lambda f: _boom,
+         eigenvector_centrality),
+        ("centrality", "_hitting_step", lambda f: _boom,
+         hitting_time_truncated),
     ],
     ids=["pagerank", "components", "labelprop", "incremental_components",
-         "scc", "bowtie"],
+         "scc", "bowtie", "eigencentrality", "hitting_time"],
 )
 def test_releases_caches_when_a_step_raises(
     spark, monkeypatch, module, step, patch, kernel
@@ -148,7 +154,8 @@ def test_releases_caches_when_a_step_raises(
     adjacency and vertex set (nor, for directed PageRank, its dangling
     set; nor, for incremental CC, its carried adjacency parts; nor, for
     SCC and the bow-tie, their persisted edge, vertex, SCC and core
-    relations)."""
+    relations; nor, for eigenvector centrality and hitting time, their
+    message relation or edges and degrees)."""
     import importlib
 
     spark.catalog.clearCache()
@@ -372,6 +379,8 @@ def test_spam_mass_composition_matches_python_oracle(spark):
         pairs, False, tol=0.0, max_iter=8,
         personalization={s: 1.0 for s in seeds},
     )
+    # a fixed-iteration run commits its last block without a stats job
+    assert pr.stats[-1].delta_norm == -1.0 and not pr.stats[-1].partition_stats
     mass_got = {v: (got_pr[v] - got_tr[v]) / got_pr[v] for v in got_pr}
     mass_want = {v: (want_pr[v] - want_tr[v]) / want_pr[v] for v in want_pr}
     assert set(mass_got) == set(mass_want)
