@@ -69,15 +69,19 @@ def main(argv: list[str] | None = None) -> int:
     pc.add_argument("path")
     pc.add_argument("--output")
 
-    def kernel_parser(name: str, help_: str):
+    def edges_parser(name: str, help_: str):
         p = sub.add_parser(name, help=help_)
         p.add_argument("--edges", required=True, help="parquet with src,dst[,...]")
+        return p
+
+    def kernel_parser(name: str, help_: str):
+        p = edges_parser(name, help_)
         p.add_argument("--output")
-        p.add_argument("--directed", action="store_true")
         p.add_argument("--num-partitions", type=int, default=None)
         return p
 
     pr = kernel_parser("pagerank", "(weighted/seeded) PageRank to convergence")
+    pr.add_argument("--directed", action="store_true")
     pr.add_argument("--alpha", type=float, default=0.85)
     pr.add_argument("--tol", type=float, default=1e-6)
     pr.add_argument("--max-iter", type=int, default=200)
@@ -109,7 +113,7 @@ def main(argv: list[str] | None = None) -> int:
     mf.add_argument("--weight-col", default="w")
     mf.add_argument("--checkpoint-dir")
 
-    kernel_parser("triangles", "exact triangle count (adaptive plan)")
+    edges_parser("triangles", "exact triangle count (adaptive plan)")
 
     mt = kernel_parser("matching", "handshake maximal matching")
     mt.add_argument("--rounds", type=int, default=8)

@@ -8,24 +8,33 @@ reloads them on restart (``patternmatching/gray/rwr.py:34-54``,
   ``<dir>/state/superstep=K/`` as parquet (Iceberg-shaped: on a real
   cluster these are `writeTo(...).createOrReplace()` Iceberg snapshots)
   and read back under the written schema, so no inference job runs;
-* one lineage row per (superstep, partition): partition id, edge count,
-  delta-norm, wall-time — the north rule's resumability evidence. The
-  driver writes a superstep's rows itself (pyarrow, no Spark job, no
-  Python worker) as ONE file, ``<dir>/lineage/part-<K:08d>.parquet``,
-  staged under a dot-prefixed name and moved into place with
-  ``os.replace``: Spark's reader skips dot files, so it never sees a torn
-  file, and a re-run superstep overwrites its own file, so every
-  superstep's rows land exactly once;
+* one lineage row per (superstep, partition): the id of the committed
+  state's own partition, its edge count, delta-norm and wall-time — the
+  north rule's resumability evidence. The stats job that yields them runs
+  over the persisted state BEFORE it is written, so a durable row names
+  the same partition as an in-memory run's row (a read-back's splits are
+  ordered by file size and may pack several files into one). The driver
+  writes a superstep's rows itself (pyarrow, no Spark job, no Python
+  worker) as ONE file, ``<dir>/lineage/part-<K:08d>.parquet``, staged
+  under a dot-prefixed name and moved into place with ``os.replace``:
+  Spark's reader skips dot files, so it never sees a torn file, and a
+  re-run superstep overwrites its own file, so every superstep's rows
+  land exactly once;
 * a commit marker written only AFTER the state and lineage files, so a
   crash anywhere earlier leaves a resumable prefix (never a torn
   superstep).
+
+``LineageLog.commit`` is the one commit path: the superstep driver, the
+onion peel and both minimum-spanning-forest logs call it, durable or in
+memory (no checkpoint directory: an eager localCheckpoint, no resume).
 
 Resume = read the newest committed superstep and continue; vertices whose
 state already converged are carried, not recomputed (kernel-specific
 frontier logic lives with each kernel).
 
-The parquet write/read round-trip doubles as the lineage-truncation
-barrier that iterative Spark needs (the classic plan-blowup failure mode).
+The parquet write/read round-trip (or the localCheckpoint) doubles as the
+lineage-truncation barrier that iterative Spark needs (the classic
+plan-blowup failure mode).
 """
 
 from __future__ import annotations
@@ -35,7 +44,7 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
@@ -65,8 +74,9 @@ class SuperstepStats:
 
 
 class LineageLog:
-    """Checkpoint directory manager. ``base_dir=None`` → in-memory only
-    (localCheckpoint truncation, no resume)."""
+    """Checkpoint directory manager and the superstep commit.
+    ``base_dir=None`` → in-memory only (localCheckpoint truncation, no
+    resume)."""
 
     def __init__(self, spark: SparkSession, base_dir: str | None):
         self.spark = spark
@@ -83,79 +93,121 @@ class LineageLog:
     def _marker_path(self, superstep: int) -> str:
         return os.path.join(self.base_dir, f"_committed_{superstep}.json")
 
-    def commit_state(
+    def commit(
         self,
         superstep: int,
         state: DataFrame,
-        stats: SuperstepStats,
+        t0: float,
+        *,
         num_partitions: int | None = None,
+        delta: Column | None = None,
+        active: Column | None = None,
+        edge_parts: dict[int, int] | None = None,
     ) -> DataFrame:
-        """Materialize a superstep's state (durable parquet, or in-memory
-        when no checkpoint dir). The superstep is NOT resumable until
-        ``finalize`` runs.
+        """Commit ``state`` as ``superstep`` (a round started at ``t0``),
+        append its complete ``SuperstepStats`` and return the committed
+        state.
 
-        In-memory mode is a plain eager localCheckpoint: it truncates the
-        (otherwise doubling-per-superstep) logical plan. It also erases
-        partitioning metadata, costing the state-side exchanges each
-        superstep — preserving the partitioning via repartition+persist
-        chains was measured SLOWER here (extra exchange + cache churn beat
-        the elision win at V ≪ E), so the simple barrier stays.
-        """
-        self.stats.append(stats)
-        if not self.base_dir:
-            # NOTE on stats hygiene: localCheckpoint's LogicalRDD leaf
-            # inherits the child plan's ESTIMATED sizeInBytes
-            # (LogicalRDD.rewriteStatsAndConstraints), and join-bearing
-            # supersteps estimate it as the PRODUCT of their inputs — a
-            # self-joining kernel squares it every commit, the BigInt's
-            # digit count doubles per iteration, and the driver ends up
-            # multiplying million-digit numbers inside the stats visitor
-            # (measured: 16 s → 44 s → 109 s per superstep on 9k rows).
-            # Kernels whose step references state more than once MUST
-            # materialize a cache before committing (commit_and_stats
-            # does this by running the stats job on a persisted state
-            # first) so the leaf inherits real InMemoryRelation bytes.
-            # The driver's fixed-iteration commits (PageRank at tol <= 0,
-            # HITS, push, WL, ...) come here directly: a linear step grows
-            # the estimate additively in digits, harmless for hundreds of
-            # supersteps; push and WL (two state references) run few rounds.
-            #
-            # coalesce bounds the checkpointed PARTITION count at the
-            # kernel's declared width: a state plan that unions several
-            # state-derived branches normally ends each branch at a fresh
-            # shuffle (constant width), but a session-level plan change —
-            # e.g. a leaked cached edge subtree giving Catalyst accurate
-            # small stats and flipping a shuffle join to broadcast — makes
-            # branches inherit the carried state's partitioning, and the
-            # per-commit union then grows (×branches)^superstep partitions
-            # (measured as a 3.6M-task stage storm in the onion peel).
-            # Only a wider state is coalesced: coalesce drops the plan's
-            # known hash partitioning, and a state that keeps it (PageRank's
-            # ranks are hash-partitioned by id) spares the next superstep's
-            # state-side exchange and its consumers' shuffles. The width
-            # is read off the plan localCheckpoint executes next (no
-            # second planning pass, unlike DataFrame.rdd).
-            if num_partitions and (
-                state._jdf.queryExecution().toRdd().getNumPartitions()
-                > num_partitions
-            ):
-                state = state.coalesce(num_partitions)
-            return state.localCheckpoint(eager=True)
-        path = self._state_path(superstep)
-        state.write.mode("overwrite").parquet(path)
-        return self.spark.read.schema(state.schema).parquet(path)
+        With stats (``delta`` / ``active``, summed / counted per partition)
+        or durable, in this order: persist the state; run ONE stats job
+        over that cache, grouped by the state's own partitions (each
+        partition's delta next to its ``edge_parts`` edge count);
+        materialize from the cache (eager localCheckpoint, or a parquet
+        write read back under the written schema: no inference job); when
+        durable, write the lineage file, then the marker (driver-side, no
+        job); unpersist the cache on every exit path. The stats job fills
+        the cache the materialization reads, so a stats commit is 2 jobs,
+        durable or in memory. In memory without stats (the fixed-iteration
+        kernels) it is one eager localCheckpoint; stats-less commits log
+        ``delta_norm == -1.0``.
 
-    def finalize(self, superstep: int, stats: SuperstepStats) -> None:
-        """Write the superstep's lineage file + the commit marker — strictly
-        AFTER the state parquet commit and stats computation, so a crash
-        anywhere earlier leaves a cleanly resumable prefix (never a torn
-        superstep). Driver-side file writes only: no Spark job."""
-        if not self.base_dir:
-            return
+        Estimate hygiene: localCheckpoint's LogicalRDD leaf inherits the
+        child plan's ESTIMATED sizeInBytes, and a join-bearing step
+        estimates it as the PRODUCT of its inputs: a self-joining kernel
+        squares it every commit and the driver ends up multiplying
+        million-digit numbers in the stats visitor (measured: 16 s → 44 s
+        → 109 s per superstep on 9k rows). Checkpointing the PERSISTED
+        state gives the leaf the cache's real byte size. A stats-less
+        commit keeps the estimate: a linear step (PageRank at
+        ``tol <= 0``, HITS, ...) grows it additively in digits; push and
+        WL (two state references) run few rounds."""
+        if delta is None and not self.base_dir:
+            committed = self._checkpoint(state, num_partitions)
+            self.stats.append(
+                SuperstepStats(superstep, -1.0, -1, time.time() - t0)
+            )
+            return committed
+        cached = state.persist()
+        try:
+            d, a, parts = -1.0, -1, []
+            if delta is not None:
+                rows = (
+                    cached.groupBy(F.spark_partition_id().alias("pid"))
+                    .agg(
+                        F.sum(delta).alias("d"),
+                        F.sum(active.cast("long")).alias("a"),
+                    )
+                    .collect()
+                )
+                d = sum(float(r["d"] or 0.0) for r in rows)
+                a = sum(int(r["a"] or 0) for r in rows)
+                parts = [
+                    {
+                        "partition_id": int(r["pid"]),
+                        "edge_count": (edge_parts or {}).get(int(r["pid"]), 0),
+                        "delta_norm": float(r["d"] or 0.0),
+                    }
+                    for r in rows
+                ]
+            if self.base_dir:
+                path = self._state_path(superstep)
+                cached.write.mode("overwrite").parquet(path)
+                committed = self.spark.read.schema(state.schema).parquet(path)
+            else:
+                committed = self._checkpoint(cached, num_partitions)
+            st = SuperstepStats(superstep, d, a, time.time() - t0, parts)
+            if self.base_dir:
+                self._write_lineage(st)
+            self.stats.append(st)
+            return committed
+        finally:
+            cached.unpersist()
+
+    @staticmethod
+    def _checkpoint(state: DataFrame, num_partitions: int | None) -> DataFrame:
+        """Eager localCheckpoint: truncates the (otherwise growing) plan.
+
+        Coalesce bounds the checkpointed PARTITION count at the kernel's
+        declared width: a state plan that unions several state-derived
+        branches normally ends each branch at a fresh shuffle (constant
+        width), but a session-level plan change (e.g. a leaked cached edge
+        subtree giving Catalyst accurate small stats and flipping a shuffle
+        join to broadcast) makes branches inherit the carried state's
+        partitioning, and the per-commit union then grows
+        (×branches)^superstep partitions (measured as a 3.6M-task stage
+        storm in the onion peel). Only a wider state is coalesced: coalesce
+        drops the plan's known hash partitioning, and a state that keeps it
+        (PageRank's ranks are hash-partitioned by id) spares the next
+        superstep's state-side exchange and its consumers' shuffles. The
+        width is read off the plan localCheckpoint executes next (no second
+        planning pass, unlike DataFrame.rdd)."""
+        if num_partitions and (
+            state._jdf.queryExecution().toRdd().getNumPartitions()
+            > num_partitions
+        ):
+            state = state.coalesce(num_partitions)
+        return state.localCheckpoint(eager=True)
+
+    def _write_lineage(self, stats: SuperstepStats) -> None:
+        """The superstep's lineage file, then its commit marker: a crash
+        anywhere earlier in the commit leaves a cleanly resumable prefix
+        (never a torn superstep). Driver-side file writes only: no Spark
+        job."""
         import pyarrow as pa
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
+        superstep = stats.superstep
         parts = stats.partition_stats or [{"partition_id": -1}]
         rows = pa.Table.from_pydict(
             {

@@ -25,21 +25,25 @@ delta / active expressions over a new state and its stop test
   the same 12 sf0.1 supersteps), and eliding the last checkpoint in
   favor of the commit re-runs that step's E-sized join ~2×. The kernel
   picks the rule from its step's structure (``eager_steps``);
-* **the commit** — ``commit_and_stats``: materialize + one stats job;
+* **the commit** — one ``LineageLog.commit`` per block: persist, one
+  stats job over the cache, materialize from the cache, lineage file and
+  marker when durable, unpersist on every exit path;
 * **fixed iterations** — an in-memory run without a stop test (PageRank
   at ``tol <= 0``, HITS, push, WL, ...) commits every block, the last
-  included, with ``commit_state`` alone: no stats job and no
+  included, with no stats: one eager localCheckpoint, no
   ``close_block`` (its stats read ``delta_norm == -1.0``);
 * **caches** — ``released`` unpersists the kernel's inputs on every exit
   path, a raising step included.
 
-Commit stats: every commit materializes the new state (parquet round-trip
-or localCheckpoint — the lineage-truncation barrier) and then runs ONE
-aggregation job, grouped by physical partition id, that yields the global
-delta norm, the active-vertex count and the per-partition lineage rows in
-a single pass; the durable lineage file and commit marker are driver-side
-writes (see lineage.py). Broadcast sides of a step plan and each kernel's
-per-call setup add jobs on top (perfbench's traced ``<kernel>.jobs``).
+Commit stats: a commit with stats runs ONE aggregation job over the
+persisted new state, grouped by the state's own partitions, that yields
+the global delta norm, the active-vertex count and the per-partition
+lineage rows in a single pass; the materialization (parquet round-trip or
+localCheckpoint — the lineage-truncation barrier) then reads the cache, so
+the commit is 2 jobs, durable or in memory. The durable lineage file and
+commit marker are driver-side writes (see lineage.py). Broadcast sides of
+a step plan and each kernel's per-call setup add jobs on top (perfbench's
+traced ``<kernel>.jobs``).
 """
 
 from __future__ import annotations
@@ -145,6 +149,8 @@ def run(
     commit instead of one per step (skipped with the stats job)."""
     if delta is None:
         delta, active = F.col("changed").cast("double"), F.col("changed")
+    # an in-memory run without a stop test reads no stats
+    with_stats = until is not None or bool(checkpoint_dir)
     log = LineageLog(spark, checkpoint_dir)
     state, step_no, resumed_from = None, 0, None
     if resume and checkpoint_dir:
@@ -167,88 +173,19 @@ def run(
                 elif b < block - 1:
                     new_state = new_state.localCheckpoint(eager=False)
             step_no += block
-            if until is None and not checkpoint_dir:
-                state = log.commit_state(
-                    step_no - 1, new_state,
-                    SuperstepStats(step_no - 1, -1.0, -1, 0.0),
-                    num_partitions=num_partitions,
-                )
-                log.stats[-1].wall_time_sec = time.time() - t0
-                continue
-            if close_block is not None:
+            if with_stats and close_block is not None:
                 new_state = close_block(new_state, state)
-            state, d, _ = commit_and_stats(
-                log, step_no - 1, new_state, delta, active, edge_parts or {}, t0,
+            state = log.commit(
+                step_no - 1, new_state, t0,
                 num_partitions=num_partitions,
+                delta=delta if with_stats else None,
+                active=active,
+                edge_parts=edge_parts,
             )
-            if until is not None and until(d):
+            if until is not None and until(log.stats[-1].delta_norm):
                 converged = True
                 break
     return RunResult(state, step_no, converged, resumed_from, log.stats)
-
-
-def commit_and_stats(
-    log: LineageLog,
-    step: int,
-    new_state: DataFrame,
-    delta_expr: Column,
-    active_expr: Column,
-    edge_parts: dict[int, int],
-    t0: float,
-    num_partitions: int,
-) -> tuple[DataFrame, float, int]:
-    """Materialize ``new_state``, aggregate ``delta_expr`` / ``active_expr``
-    per physical partition in one job, then finalize the superstep's
-    lineage rows + commit marker. Returns (committed_state, delta,
-    n_active). The stats job doubles as the cache-population action for
-    in-memory commits."""
-    if log.base_dir:
-        committed = log.commit_state(
-            step, new_state, SuperstepStats(step, -1.0, -1, 0.0),
-            num_partitions=num_partitions,
-        )
-        stats_src = committed
-        cached = None
-    else:
-        # in-memory commits: run the stats job over a PERSISTED state
-        # FIRST, so the localCheckpoint that follows reads the
-        # materialized InMemoryRelation and inherits its real byte size
-        # instead of the join-product estimate (see commit_state's stats-
-        # hygiene note — self-joining kernels square the estimate per
-        # commit otherwise). Same two jobs as before, reordered;
-        # localCheckpoint preserves the underlying partitioning, so the
-        # per-partition lineage rows are identical either way.
-        cached = new_state.persist()
-        stats_src = cached
-    rows = (
-        stats_src.groupBy(F.spark_partition_id().alias("pid"))
-        .agg(
-            F.sum(delta_expr).alias("d"),
-            F.sum(active_expr.cast("long")).alias("a"),
-        )
-        .collect()
-    )
-    if not log.base_dir:
-        committed = log.commit_state(
-            step, cached, SuperstepStats(step, -1.0, -1, 0.0),
-            num_partitions=num_partitions,
-        )
-        cached.unpersist()
-    delta = sum(float(r["d"] or 0.0) for r in rows)
-    active = sum(int(r["a"] or 0) for r in rows)
-    st = log.stats[-1]
-    st.delta_norm, st.active_vertices = delta, active
-    st.partition_stats = [
-        {
-            "partition_id": int(r["pid"]),
-            "edge_count": edge_parts.get(int(r["pid"]), 0),
-            "delta_norm": float(r["d"] or 0.0),
-        }
-        for r in rows
-    ]
-    st.wall_time_sec = time.time() - t0
-    log.finalize(step, st)
-    return committed, delta, active
 
 
 def edge_partition_counts(adj: DataFrame) -> dict[int, int]:

@@ -92,7 +92,7 @@ def bootstrap_percolation(
                 break
             rounds = r
             # coalesce bounds the union's partition accumulation across
-            # rounds (see lineage.commit_state) — narrow, no shuffle
+            # rounds (see LineageLog._checkpoint) — narrow, no shuffle
             active = (
                 active.unionByName(frontier.withColumn("round", F.lit(r).cast("long")))
                 .coalesce(num_partitions)

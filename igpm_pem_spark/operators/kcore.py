@@ -22,6 +22,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from ..lineage import LineageLog
 from .graph import kernel_nparts, simple_edges
 from ._superstep import loop_confs, released
 
@@ -243,8 +244,7 @@ def onion_layers(
     lineage rows (S6 discipline): a killed run resumes at the next
     unpeeled layer; the running threshold k and the layer counter are
     both recovered from the committed state itself."""
-    from ..lineage import LineageLog
-    from ._superstep import commit_and_stats, edge_partition_counts
+    from ._superstep import edge_partition_counts
 
     if num_partitions is None:
         num_partitions = kernel_nparts(edges)
@@ -306,55 +306,56 @@ def onion_layers(
                 .select("id", F.coalesce("deg", F.lit(0)).alias("deg"))
                 .persist()
             )
-            row = deg.agg(F.min("deg").alias("m"), F.count("*").alias("n")).collect()[0]
-            if row["n"] == 0:
-                deg.unpersist()
-                converged = True
-                break
-            rounds += 1
-            k = max(k, int(row["m"]))
-            layer_rows = deg.where(F.col("deg") <= k).select(
-                "id",
-                F.lit(rounds).cast("bigint").alias("layer"),
-                F.lit(k).cast("bigint").alias("onion_core"),
-                F.lit(True).alias("changed"),
-            )
-            new_state = (
-                state.where(F.col("layer").isNotNull())
-                .select("id", "layer", "onion_core", F.lit(False).alias("changed"))
-                .unionByName(layer_rows)
-                .unionByName(
-                    deg.where(F.col("deg") > k).select(
-                        "id",
-                        F.lit(None).cast("bigint").alias("layer"),
-                        F.lit(None).cast("bigint").alias("onion_core"),
-                        F.lit(False).alias("changed"),
+            with released(deg):
+                row = deg.agg(F.min("deg").alias("m"), F.count("*").alias("n")).collect()[0]
+                if row["n"] == 0:
+                    converged = True
+                    break
+                rounds += 1
+                k = max(k, int(row["m"]))
+                layer_rows = deg.where(F.col("deg") <= k).select(
+                    "id",
+                    F.lit(rounds).cast("bigint").alias("layer"),
+                    F.lit(k).cast("bigint").alias("onion_core"),
+                    F.lit(True).alias("changed"),
+                )
+                new_state = (
+                    state.where(F.col("layer").isNotNull())
+                    .select("id", "layer", "onion_core", F.lit(False).alias("changed"))
+                    .unionByName(layer_rows)
+                    .unionByName(
+                        deg.where(F.col("deg") > k).select(
+                            "id",
+                            F.lit(None).cast("bigint").alias("layer"),
+                            F.lit(None).cast("bigint").alias("onion_core"),
+                            F.lit(False).alias("changed"),
+                        )
                     )
                 )
-            )
-            if log.base_dir:
-                state, delta, _ = commit_and_stats(
-                    log, rounds - 1, new_state,
-                    F.col("changed").cast("double"), F.col("changed"), edge_parts, t0,
-                    num_partitions=num_partitions,
-                )
-                peeled.append(int(delta))
-            else:
-                # in-memory: skip the full-state stats job AND the per-round
-                # peeled count (both measured against the peel loop); the
-                # per-round counts are recovered post-loop from the final
-                # state's layer column in one aggregate.
-                # coalesce BOUNDS the checkpointed partition count: new_state
-                # unions three state-derived branches, so if a session-level
-                # plan change (e.g. a cached edge subtree flipping the deg
-                # join to broadcast) makes those branches inherit state's
-                # partitioning instead of ending at a fresh shuffle, the
-                # un-coalesced union grows 3^round partitions — a measured
-                # 3.6M-task stage storm by round 13. Narrow coalesce (no
-                # shuffle) pins it at num_partitions every round.
-                state = new_state.coalesce(num_partitions).localCheckpoint(eager=False)
+                if log.base_dir:
+                    state = log.commit(
+                        rounds - 1, new_state, t0,
+                        num_partitions=num_partitions,
+                        delta=F.col("changed").cast("double"),
+                        active=F.col("changed"),
+                        edge_parts=edge_parts,
+                    )
+                    peeled.append(int(log.stats[-1].delta_norm))
+                else:
+                    # in-memory: skip the full-state stats job AND the per-round
+                    # peeled count (both measured against the peel loop); the
+                    # per-round counts are recovered post-loop from the final
+                    # state's layer column in one aggregate.
+                    # coalesce BOUNDS the checkpointed partition count: new_state
+                    # unions three state-derived branches, so if a session-level
+                    # plan change (e.g. a cached edge subtree flipping the deg
+                    # join to broadcast) makes those branches inherit state's
+                    # partitioning instead of ending at a fresh shuffle, the
+                    # un-coalesced union grows 3^round partitions — a measured
+                    # 3.6M-task stage storm by round 13. Narrow coalesce (no
+                    # shuffle) pins it at num_partitions every round.
+                    state = new_state.coalesce(num_partitions).localCheckpoint(eager=False)
             alive_next = state.where(F.col("layer").isNull()).select("id")
-            deg.unpersist()
             e = (
                 e.join(alive_next.withColumnRenamed("id", "src"), "src", "left_semi")
                 .join(alive_next.withColumnRenamed("id", "dst"), "dst", "left_semi")

@@ -21,27 +21,32 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .graph import canonical_undirected, kernel_nparts
+from .triangles import _triangle_list_canon
 from ._superstep import loop_confs
 
 
+def _triangle_support(tris: DataFrame) -> DataFrame:
+    """(src, dst, sup) per canonical edge of at least one (a<b<c) triangle
+    in ``tris``: each triangle explodes into its three edges."""
+    return (
+        tris.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
+                    F.struct(F.col("b").alias("src"), F.col("c").alias("dst")),
+                    F.struct(F.col("a").alias("src"), F.col("c").alias("dst")),
+                )
+            ).alias("ed")
+        )
+        .select("ed.src", "ed.dst")
+        .groupBy("src", "dst")
+        .agg(F.count("*").alias("sup"))
+    )
+
+
 def _edge_support(e: DataFrame) -> DataFrame:
-    """(src, dst, sup) per canonical edge: number of triangles through it.
-    Enumerate (a<b<c) triangles once, explode each into its three edges."""
-    e1 = e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    e2 = e.select(F.col("src").alias("b"), F.col("dst").alias("c"))
-    wedges = e1.join(e2, "b").select("a", "b", "c")
-    e3 = e.select(F.col("src").alias("a"), F.col("dst").alias("c"))
-    tris = wedges.join(e3, ["a", "c"])
-    tri_edges = tris.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
-                F.struct(F.col("b").alias("src"), F.col("c").alias("dst")),
-                F.struct(F.col("a").alias("src"), F.col("c").alias("dst")),
-            )
-        ).alias("ed")
-    ).select("ed.src", "ed.dst")
-    sup = tri_edges.groupBy("src", "dst").agg(F.count("*").alias("sup"))
+    """(src, dst, sup) per canonical edge: number of triangles through it."""
+    sup = _triangle_support(_triangle_list_canon(e))
     return e.join(sup, ["src", "dst"], "left").select(
         "src", "dst", F.coalesce(F.col("sup"), F.lit(0)).alias("sup")
     )
@@ -150,26 +155,12 @@ def trussness_hindex(
         .localCheckpoint(eager=True)
     )
     # triangles a<b<c, enumerated once over canonical edges
-    e1 = e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    e2 = e.select(F.col("src").alias("b"), F.col("dst").alias("c"))
-    e3 = e.select(F.col("src").alias("a"), F.col("dst").alias("c"))
     tris = (
-        e1.join(e2, "b")
-        .join(e3, ["a", "c"])
-        .select("a", "b", "c")
+        _triangle_list_canon(e)
         .repartition(num_partitions, "a", "b")
         .localCheckpoint(eager=True)
     )
-    tri_edges = tris.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
-                F.struct(F.col("b").alias("src"), F.col("c").alias("dst")),
-                F.struct(F.col("a").alias("src"), F.col("c").alias("dst")),
-            )
-        ).alias("ed")
-    ).select("ed.src", "ed.dst")
-    sup = tri_edges.groupBy("src", "dst").agg(F.count("*").alias("s"))
+    sup = _triangle_support(tris)
     w = Window.partitionBy("src", "dst").orderBy(F.col("rho").desc())
 
     def step(state: DataFrame) -> DataFrame:
@@ -217,7 +208,7 @@ def trussness_hindex(
     res = run(
         spark,
         lambda: e.join(sup, ["src", "dst"], "left")
-        .select("src", "dst", F.coalesce(F.col("s"), F.lit(0)).alias("s"))
+        .select("src", "dst", F.coalesce(F.col("sup"), F.lit(0)).alias("s"))
         .repartition(num_partitions, "src", "dst")
         .localCheckpoint(eager=True),
         step,

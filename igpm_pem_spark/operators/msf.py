@@ -34,7 +34,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .graph import kernel_nparts
-from ._superstep import loop_confs
+from ._superstep import loop_confs, released
 
 
 @dataclass
@@ -69,8 +69,8 @@ def minimum_spanning_forest(
     merged components and the forest chosen so far."""
     import time as _time
 
-    from ..lineage import LineageLog, SuperstepStats
-    from ._superstep import commit_and_stats, edge_partition_counts
+    from ..lineage import LineageLog
+    from ._superstep import edge_partition_counts
     from .components import connected_components
 
     if num_partitions is None:
@@ -138,47 +138,44 @@ def minimum_spanning_forest(
                 )
                 .persist()
             )
-            n_chosen = sel.count()
-            if n_chosen == 0:
-                sel.unpersist()
-                converged = True
-                break
-            rounds += 1
-            new_edges = sel.select("a", "b", "w").distinct()
-            chosen_counts.append(new_edges.count())
-            forest = new_edges if forest is None else forest.unionByName(new_edges)
-            # coalesce bounds the union's partition accumulation across
-            # Boruvka rounds (see lineage.commit_state) — narrow, no shuffle
-            forest = forest.coalesce(num_partitions).localCheckpoint(eager=False)
-            # merge on the component graph — one edge per choosing component
-            merge = connected_components(
-                spark,
-                sel.select(F.col("cu").alias("src"), F.col("cv").alias("dst")),
-                num_partitions=num_partitions,
-            ).components.withColumnRenamed("id", "comp").withColumnRenamed(
-                "component", "new_comp"
-            )
-            new_comp = (
-                comp.join(merge, "comp", "left")
-                .select(
-                    "id",
-                    F.coalesce("new_comp", "comp").alias("comp"),
-                    F.col("new_comp").isNotNull().alias("changed"),
+            with released(sel):
+                if sel.count() == 0:
+                    converged = True
+                    break
+                rounds += 1
+                new_edges = sel.select("a", "b", "w").distinct()
+                chosen_counts.append(new_edges.count())
+                forest = new_edges if forest is None else forest.unionByName(new_edges)
+                # coalesce bounds the union's partition accumulation across
+                # Boruvka rounds (see LineageLog._checkpoint) — narrow, no
+                # shuffle
+                forest = forest.coalesce(num_partitions).localCheckpoint(eager=False)
+                # merge on the component graph — one edge per choosing component
+                merge = connected_components(
+                    spark,
+                    sel.select(F.col("cu").alias("src"), F.col("cv").alias("dst")),
+                    num_partitions=num_partitions,
+                ).components.withColumnRenamed("id", "comp").withColumnRenamed(
+                    "component", "new_comp"
                 )
-            )
-            if checkpoint_dir:
-                # forest parquet FIRST, components marker LAST (torn-round rule)
-                forest = forest_log.commit_state(
-                    rounds - 1, forest,
-                    SuperstepStats(rounds - 1, -1.0, -1, 0.0),
+                new_comp = (
+                    comp.join(merge, "comp", "left")
+                    .select(
+                        "id",
+                        F.coalesce("new_comp", "comp").alias("comp"),
+                        F.col("new_comp").isNotNull().alias("changed"),
+                    )
                 )
-            comp, _, _ = commit_and_stats(
-                comp_log, rounds - 1, new_comp,
-                F.col("changed").cast("double"), F.col("changed"), edge_parts, t0,
-                num_partitions=num_partitions,
-            )
-            comp = comp.select("id", "comp")
-            sel.unpersist()
+                if checkpoint_dir:
+                    # forest parquet FIRST, components marker LAST (torn-round rule)
+                    forest = forest_log.commit(rounds - 1, forest, t0)
+                comp = comp_log.commit(
+                    rounds - 1, new_comp, t0,
+                    num_partitions=num_partitions,
+                    delta=F.col("changed").cast("double"),
+                    active=F.col("changed"),
+                    edge_parts=edge_parts,
+                ).select("id", "comp")
     if forest is None:
         forest = spark.createDataFrame([], "a BIGINT, b BIGINT, w BIGINT")
     return MsfResult(forest, comp, rounds, converged, chosen_counts, resumed_from)

@@ -37,28 +37,18 @@ def triangle_list(edges: DataFrame) -> DataFrame:
     return _triangle_list_canon(canonical_undirected(edges))
 
 
-def triangle_count(edges: DataFrame, plan: str = "adaptive") -> int:
+def triangle_count(edges: DataFrame) -> int:
     """Global triangle count — equals ``sum(nx.triangles(g).values()) / 3``
     (the reference's oracle expression, ``gray_incremental.py:193``).
 
-    ``plan``:
-    * ``adaptive`` (default) — one cheap degree probe picks the plan: the
-      id-ordered join when the max degree is benign (fewer joins, ~8×
-      faster on sparse graphs), the degree-oriented one when a hub would
-      make id-ordered wedge fan-out explode. Cutover at max_deg² > 4·E:
-      id-ordered wedge volume is bounded by E·max_deg but concentrates
-      ~max_deg² wedges on each hub's partition, so once one hub's wedge
-      count rivals the whole edge list the oriented plan's O(E^1.5)
-      guarantee wins.
-    * ``id_ordered`` — the a<b spec plan the SQL oracle mirrors.
-    * ``degree_oriented`` — hub-safe plan, forced.
-    All plans produce the same count (pinned by tests)."""
-    if plan == "id_ordered":
-        return triangle_list(edges).count()
-    if plan == "degree_oriented":
-        return triangle_count_degree_oriented(edges)
-    if plan != "adaptive":
-        raise ValueError(f"unknown triangle plan {plan!r}")
+    One cheap degree probe picks the plan: the id-ordered join (the a<b
+    spec plan the SQL oracle mirrors) when the max degree is benign (fewer
+    joins, ~8× faster on sparse graphs), the degree-oriented one when a hub
+    would make id-ordered wedge fan-out explode. Cutover at max_deg² > 4·E:
+    id-ordered wedge volume is bounded by E·max_deg but concentrates
+    ~max_deg² wedges on each hub's partition, so once one hub's wedge count
+    rivals the whole edge list the oriented plan's O(E^1.5) guarantee wins.
+    Both plans produce the same count (pinned by tests)."""
     e = canonical_undirected(edges).persist()
     try:
         sym = e.unionByName(
@@ -104,9 +94,9 @@ def triangles_per_vertex(edges: DataFrame) -> DataFrame:
     )
 
 
-def triangle_count_degree_oriented(edges: DataFrame) -> int:
-    """Triangle count with degree-based edge orientation — the scale path
-    for power-law graphs.
+def _tc_degree_oriented_canon(e: DataFrame) -> int:
+    """Triangle count over a canonical (a<b) edge list with degree-based
+    edge orientation — the scale path for power-law graphs.
 
     Each undirected edge is oriented from its lower-(degree, id) endpoint
     to the higher one; every triangle then has exactly one "apex" ordering,
@@ -114,13 +104,7 @@ def triangle_count_degree_oriented(edges: DataFrame) -> int:
     per-vertex wedge work is bounded by out-degree² where max out-degree is
     O(√E) after orientation — versus unbounded hub fan-out in the naive
     id-ordered plan (a 1e7-degree hub contributes 1e14 id-ordered wedges
-    but only ~E^1.5 oriented ones). Results are identical (tests pin it);
-    the plain a<b plan remains the oracle-comparable spec.
-    """
-    return _tc_degree_oriented_canon(canonical_undirected(edges))
-
-
-def _tc_degree_oriented_canon(e: DataFrame) -> int:
+    but only ~E^1.5 oriented ones)."""
     sym = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )

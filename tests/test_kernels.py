@@ -4,6 +4,8 @@ exact — the north-rule correctness gate."""
 
 from __future__ import annotations
 
+import tempfile
+
 import networkx as nx
 import pytest
 from pyspark.sql import functions as F
@@ -15,12 +17,16 @@ from igpm_pem_spark.operators.components import (
     median_component_size,
 )
 from igpm_pem_spark.operators.eigencentrality import eigenvector_centrality
-from igpm_pem_spark.operators.graph import degrees
+from igpm_pem_spark.operators.graph import canonical_undirected, degrees
 from igpm_pem_spark.operators.incremental import incremental_components
+from igpm_pem_spark.operators.kcore import onion_layers
 from igpm_pem_spark.operators.labelprop import label_propagation
+from igpm_pem_spark.operators.msf import minimum_spanning_forest
 from igpm_pem_spark.operators.pagerank import pagerank
 from igpm_pem_spark.operators.scc import strongly_connected_components
 from igpm_pem_spark.operators.triangles import (
+    _tc_degree_oriented_canon,
+    _triangle_list_canon,
     star_count,
     triangle_count,
     triangles_per_vertex,
@@ -128,6 +134,11 @@ def _two_buckets(spark, edges):
     )
 
 
+def _durable_onion(spark, edges):
+    with tempfile.TemporaryDirectory() as ckpt:
+        return onion_layers(spark, edges, checkpoint_dir=ckpt)
+
+
 @pytest.mark.parametrize(
     "module, step, patch, kernel",
     [
@@ -143,9 +154,13 @@ def _two_buckets(spark, edges):
          eigenvector_centrality),
         ("centrality", "_hitting_step", lambda f: _boom,
          hitting_time_truncated),
+        ("kcore", "LineageLog", lambda cls: type("L", (cls,), {"commit": _boom}),
+         _durable_onion),
+        ("components", "connected_components", lambda f: _boom,
+         lambda s, e: minimum_spanning_forest(s, e.withColumn("w", F.lit(1)))),
     ],
     ids=["pagerank", "components", "labelprop", "incremental_components",
-         "scc", "bowtie", "eigencentrality", "hitting_time"],
+         "scc", "bowtie", "eigencentrality", "hitting_time", "onion", "msf"],
 )
 def test_releases_caches_when_a_step_raises(
     spark, monkeypatch, module, step, patch, kernel
@@ -155,7 +170,9 @@ def test_releases_caches_when_a_step_raises(
     set; nor, for incremental CC, its carried adjacency parts; nor, for
     SCC and the bow-tie, their persisted edge, vertex, SCC and core
     relations; nor, for eigenvector centrality and hitting time, their
-    message relation or edges and degrees)."""
+    message relation or edges and degrees; nor the onion peel's and the
+    spanning forest's per-round degrees and chosen edges, when the
+    commit or the forest's component merge raises)."""
     import importlib
 
     spark.catalog.clearCache()
@@ -164,6 +181,26 @@ def test_releases_caches_when_a_step_raises(
     edges = edges_df(spark, [(0, 1), (1, 2), (2, 0), (0, 3)])
     with pytest.raises(RuntimeError, match="injected"):
         kernel(spark, edges)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_releases_the_commit_cache_when_its_stats_job_raises(spark):
+    """A step whose output raises only when the commit's stats job reads
+    it must not leak the state the commit persisted for that job."""
+    from pyspark.errors import PySparkException
+
+    from igpm_pem_spark.operators._superstep import run
+
+    spark.catalog.clearCache()
+    boom = F.raise_error(F.lit("injected commit failure")).cast("boolean")
+    with pytest.raises(PySparkException, match="injected"):
+        run(
+            spark,
+            lambda: spark.range(4).selectExpr("id", "true AS changed"),
+            lambda s: s.select("id", F.coalesce(boom, "changed").alias("changed")),
+            max_iter=1,
+            num_partitions=2,
+        )
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
@@ -216,6 +253,10 @@ def test_connected_components_exact(spark, graph):
     got = {r.id: r.component for r in res.components.collect()}
     want = components_oracle(pairs)
     assert got == want
+    # estimate hygiene: the committed state's size estimate is the cache's
+    # real bytes, not a join product that doubles its digits per commit
+    size = res.components._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    assert len(str(size)) < 20
 
 
 def test_median_component_size(spark):
@@ -245,11 +286,9 @@ def test_triangles_exact(spark, graph):
 
 @pytest.mark.parametrize("graph", ["test1", "ba100", "two_comp"])
 def test_degree_oriented_triangles_equal_plain(spark, graph):
-    from igpm_pem_spark.operators.triangles import triangle_count_degree_oriented
-
     edges, pairs, _ = _pairs(graph, spark)
     _, total_want = triangles_oracle(pairs)
-    assert triangle_count_degree_oriented(edges) == total_want
+    assert _tc_degree_oriented_canon(canonical_undirected(edges)) == total_want
 
 
 @pytest.mark.parametrize("graph,k", [("test1", 2), ("ba100", 3), ("ba100", 5), ("two_comp", 2)])
@@ -289,8 +328,10 @@ def test_degrees_match_networkx(spark):
 def test_triangle_plans_all_agree(spark, graph):
     edges, pairs, _ = _pairs(graph, spark)
     _, total_want = triangles_oracle(pairs)
-    for plan in ("adaptive", "id_ordered", "degree_oriented"):
-        assert triangle_count(edges, plan=plan) == total_want, plan
+    e = canonical_undirected(edges)
+    assert triangle_count(edges) == total_want
+    assert _triangle_list_canon(e).count() == total_want
+    assert _tc_degree_oriented_canon(e) == total_want
 
 
 def test_adaptive_triangle_probe_handles_hub(spark):

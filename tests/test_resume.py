@@ -6,8 +6,11 @@ mirrors the reference's pickle-checkpoint restart,
 from __future__ import annotations
 
 import os
+import time
 
-from igpm_pem_spark.lineage import LineageLog, SuperstepStats
+from pyspark.sql import functions as F
+
+from igpm_pem_spark.lineage import LineageLog
 from igpm_pem_spark.operators.components import connected_components
 from igpm_pem_spark.operators.pagerank import pagerank
 from igpm_pem_spark.sources.fixtures import ba_graph
@@ -49,6 +52,19 @@ def test_pagerank_resume_continues_and_matches(spark, tmp_path):
     assert steps[0] == 0 and steps == list(range(len(steps)))
     assert all(r.wall_time_sec >= 0.0 for r in rows)
     assert any(r.edge_count > 0 for r in rows)
+    # each durable row names the kernel's own partition: supersteps 0-2
+    # log what the in-memory run logs
+    for k in range(3):
+        durable = sorted(
+            (r.partition_id, r.edge_count, r.delta_norm)
+            for r in rows if r.superstep == k
+        )
+        mem = sorted(
+            (p["partition_id"], p["edge_count"], p["delta_norm"])
+            for p in full.stats[k].partition_stats
+        )
+        assert [d[:2] for d in durable] == [m[:2] for m in mem], k
+        assert all(abs(d[2] - m[2]) < 1e-12 for d, m in zip(durable, mem)), k
 
 
 def test_seeded_rwr_resume_matches_uninterrupted(spark, tmp_path):
@@ -150,23 +166,35 @@ def _jobs_in_group(spark, group, fn):
 
 
 def test_durable_commit_spark_work_and_lineage_table(spark, tmp_path):
-    """A durable commit is one Spark job (the state write: the read-back
-    runs no schema inference); the lineage file and marker are driver
-    writes. A lineage directory that still holds a Spark-appended part
-    file from an older checkpoint reads as one table with the new files."""
+    """Materializing a durable state is one Spark job (the state write: the
+    read-back runs no schema inference), and the lineage file and marker
+    are driver writes, so a commit without stats is one job. A commit with
+    stats is two, durable or in memory: the stats job fills the cache that
+    the write or the checkpoint reads. A lineage directory that still
+    holds a Spark-appended part file from an older checkpoint reads as one
+    table with the new files."""
+    spark.catalog.clearCache()
     ckpt = str(tmp_path / "ck")
     log = LineageLog(spark, ckpt)
-    state = spark.range(8).selectExpr("id", "CAST(id AS DOUBLE) / 8 AS rank")
-    stats = SuperstepStats(
-        1, 0.5, 8, 0.1, [{"partition_id": 0, "edge_count": 3, "delta_norm": 0.5}]
+    state = spark.range(0, 8, 1, 2).selectExpr(
+        "id", "CAST(id AS DOUBLE) / 8 AS rank", "id % 4 = 0 AS changed"
     )
+    changed = {"delta": F.col("changed").cast("double"), "active": F.col("changed")}
+    t0 = time.time()
     assert _jobs_in_group(
-        spark, "durable-commit-state", lambda: log.commit_state(1, state, stats)
+        spark, "durable-commit", lambda: log.commit(1, state, t0)
     ) == 1
-    assert _jobs_in_group(
-        spark, "durable-commit-finalize", lambda: log.finalize(1, stats)
-    ) == 0
     assert log.last_committed() == 1
+    assert _jobs_in_group(
+        spark, "durable-commit-stats",
+        lambda: log.commit(2, state, t0, edge_parts={0: 3}, **changed),
+    ) == 2
+    assert log.last_committed() == 2
+    assert _jobs_in_group(
+        spark, "in-memory-commit-stats",
+        lambda: LineageLog(spark, None).commit(2, state, t0, **changed),
+    ) == 2
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
     lineage_dir = os.path.join(ckpt, "lineage")
     spark.range(1).selectExpr(
@@ -179,9 +207,11 @@ def test_durable_commit_spark_work_and_lineage_table(spark, tmp_path):
         "struct<superstep:int,partition_id:int,edge_count:bigint,"
         "delta_norm:double,wall_time_sec:double>"
     )
-    want = [(0, 0, 5, 0.25, 0.5), (1, 0, 3, 0.5, 0.1)]
-    assert sorted(map(tuple, lineage.collect())) == want
-    assert sorted(map(tuple, spark.read.parquet(lineage_dir).collect())) == want
+    want = [(0, 0, 5, 0.25), (1, -1, 0, 0.0), (2, 0, 3, 1.0), (2, 1, 0, 1.0)]
+    for df in (lineage, spark.read.parquet(lineage_dir)):
+        rows = df.collect()
+        assert sorted(tuple(r)[:4] for r in rows) == want
+        assert all(r.wall_time_sec >= 0.0 for r in rows)
 
 
 def test_sssp_kill_resume_matches_uninterrupted(spark, tmp_path):
