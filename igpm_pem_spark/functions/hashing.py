@@ -93,14 +93,3 @@ def minhash_expr_sql(i: int, x: str = "tid") -> str:
     DuckDB oracle so the two engines cannot diverge."""
     a, b = perm_coeffs(i)
     return f"(({a} * {x} + {b}) % {P})"
-
-
-def simhash_bit_expr_sql(k: int, x: str = "tid") -> str:
-    """SQL text of the ±1 contribution of token-hash bit k."""
-    h = minhash_expr_sql(0, x)
-    return f"(CASE WHEN ({h} // {2**k}) % 2 = 1 THEN 1 ELSE -1 END)"
-
-
-def fingerprint_term_sql(tid: str = "tid", pos: str = "pos") -> str:
-    """SQL text of one position-sensitive fingerprint term."""
-    return f"(({FP_A} * {tid} + {FP_B} * {pos}) % {P})"

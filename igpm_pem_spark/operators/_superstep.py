@@ -7,7 +7,7 @@ delta / active expressions over a new state and its stop test
 
 * **resume** — with a checkpoint directory, the newest committed superstep
   (``LineageLog.last_committed``) is the start state and the loop carries
-  on from the superstep after it;
+  on from the superstep after it, so a fresh run takes a fresh directory;
 * **conf scope** — the loop runs inside ``loop_confs``;
 * **blocks** — up to ``steps_per_commit`` steps are unrolled into one lazy
   plan per commit, so the driver pays one commit per block, not per step;
@@ -130,7 +130,6 @@ def run(
     steps_per_commit: int = 1,
     eager_steps: bool = False,
     checkpoint_dir: str | None = None,
-    resume: bool = True,
     close_block: Callable[[DataFrame, DataFrame], DataFrame] | None = None,
     delta: Column | None = None,
     active: Column | None = None,
@@ -153,7 +152,7 @@ def run(
     with_stats = until is not None or bool(checkpoint_dir)
     log = LineageLog(spark, checkpoint_dir)
     state, step_no, resumed_from = None, 0, None
-    if resume and checkpoint_dir:
+    if checkpoint_dir:
         last = log.last_committed()
         if last is not None:
             state = log.load_state(last)

@@ -37,13 +37,17 @@ class CascadeResult:
     converged: bool
 
 
+# Cascade rounds; a cascade still spreading after them returns
+# ``converged=False``.
+_MAX_ROUNDS = 100
+
+
 def bootstrap_percolation(
     spark: SparkSession,
     edges: DataFrame,
     seeds: DataFrame,
     *,
     threshold: int = 2,
-    max_rounds: int = 100,
     num_partitions: int | None = None,
 ) -> CascadeResult:
     """Run the threshold cascade from ``seeds`` (a DataFrame with an
@@ -71,7 +75,7 @@ def bootstrap_percolation(
     # loop_confs: per-round fresh plans repeat driver-serial
     # Janino/AQE work every round (see _superstep.loop_confs)
     with loop_confs(spark):
-        for r in range(1, max_rounds + 1):
+        for r in range(1, _MAX_ROUNDS + 1):
             # messages from the new frontier only: each edge fires once, ever
             inc = (
                 sym.join(frontier.withColumnRenamed("id", "dst"), "dst", "left_semi")

@@ -95,14 +95,14 @@ def _bfs_levels(
     edges: DataFrame,
     n_seeds: int,
     max_hops: int,
-    directed: bool,
 ):
-    """Brandes' forward pass from the ``n_seeds`` lowest-id vertices:
+    """Brandes' forward pass over the undirected ``edges`` from the
+    ``n_seeds`` lowest-id vertices:
     yields (sym, levels), levels[ℓ] = (sid, v, sigma) for the vertices at
     distance exactly ℓ ≤ ``max_hops`` from sid, sigma = exact integer
     shortest-path count. The persisted edges are released on exit,
     exceptions included; the levels are local checkpoints."""
-    sym = _sym(edges, directed).persist()
+    sym = symmetrize(edges).persist()
     with released(sym):
         seeds = vertex_ids(sym).orderBy("id").limit(n_seeds)
         levels = [
@@ -191,7 +191,6 @@ def betweenness_seeded(
     edges: DataFrame,
     n_seeds: int = 5,
     max_hops: int = 3,
-    directed: bool = False,
 ) -> DataFrame:
     """(id, bc): bounded-distance Brandes betweenness from the
     ``n_seeds`` lowest-id vertices — Σ over seeds s of the dependency
@@ -206,7 +205,7 @@ def betweenness_seeded(
     from OTHER seeds' paths, exactly as Brandes defines it."""
     if max_hops < 1:
         raise ValueError("betweenness_seeded: max_hops must be >= 1")
-    with _bfs_levels(spark, edges, n_seeds, max_hops, directed) as (sym, levels):
+    with _bfs_levels(spark, edges, n_seeds, max_hops) as (sym, levels):
         deltas, _ = _brandes_walk(sym, levels)
         if not deltas:
             return spark.createDataFrame([], "id BIGINT, bc DOUBLE")
@@ -242,54 +241,53 @@ def voterank(spark: SparkSession, edges: DataFrame, k: int = 3) -> DataFrame:
     from .graph import canonical_undirected
 
     sym = symmetrize(canonical_undirected(edges)).select("src", "dst").persist()
-    s2 = sym.count()
-    if s2 == 0:
-        sym.unpersist()
-        raise ValueError("voterank: empty graph")
-    n_v = sym.select("src").distinct().count()
-    va = (
-        sym.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("va", F.lit(int(s2)).cast("long"))
-    )
     winners: list[tuple[int, int, int]] = []
-    excluded: list[int] = []
-    for r in range(1, k + 1):
-        sc = (
-            sym.join(va.select(F.col("id").alias("dst"), "va"), "dst")
-            .groupBy("src")
-            .agg(F.sum("va").alias("score"))
-        )
-        if excluded:
-            sc = sc.where(~F.col("src").isin(excluded))
-        w = sc.orderBy(F.col("score").desc(), F.col("src")).first()
-        if w is None:
-            break
-        wid = int(w.src)
-        winners.append((r, wid, int(w.score)))
-        excluded.append(wid)
-        nbrs = (
-            sym.where(F.col("src") == wid)
-            .select(F.col("dst").alias("id"))
-            .distinct()
-            .withColumn("_hit", F.lit(1))
-        )
+    with released(sym):
+        s2 = sym.count()
+        if s2 == 0:
+            raise ValueError("voterank: empty graph")
+        n_v = sym.select("src").distinct().count()
         va = (
-            va.join(nbrs, "id", "left")
-            .select(
-                "id",
-                F.when(F.col("id") == wid, F.lit(0))
-                .when(
-                    F.col("_hit") == 1,
-                    F.greatest(F.col("va") - F.lit(int(n_v)), F.lit(0)),
-                )
-                .otherwise(F.col("va"))
-                .cast("long")
-                .alias("va"),
-            )
-            .localCheckpoint(eager=True)
+            sym.select(F.col("src").alias("id"))
+            .distinct()
+            .withColumn("va", F.lit(int(s2)).cast("long"))
         )
-    sym.unpersist()
+        excluded: list[int] = []
+        for r in range(1, k + 1):
+            sc = (
+                sym.join(va.select(F.col("id").alias("dst"), "va"), "dst")
+                .groupBy("src")
+                .agg(F.sum("va").alias("score"))
+            )
+            if excluded:
+                sc = sc.where(~F.col("src").isin(excluded))
+            w = sc.orderBy(F.col("score").desc(), F.col("src")).first()
+            if w is None:
+                break
+            wid = int(w.src)
+            winners.append((r, wid, int(w.score)))
+            excluded.append(wid)
+            nbrs = (
+                sym.where(F.col("src") == wid)
+                .select(F.col("dst").alias("id"))
+                .distinct()
+                .withColumn("_hit", F.lit(1))
+            )
+            va = (
+                va.join(nbrs, "id", "left")
+                .select(
+                    "id",
+                    F.when(F.col("id") == wid, F.lit(0))
+                    .when(
+                        F.col("_hit") == 1,
+                        F.greatest(F.col("va") - F.lit(int(n_v)), F.lit(0)),
+                    )
+                    .otherwise(F.col("va"))
+                    .cast("long")
+                    .alias("va"),
+                )
+                .localCheckpoint(eager=True)
+            )
     return spark.createDataFrame(
         winners, "rank long, id long, score_scaled long"
     )
@@ -300,7 +298,6 @@ def edge_betweenness_seeded(
     edges: DataFrame,
     n_seeds: int = 5,
     max_hops: int = 3,
-    directed: bool = False,
 ) -> DataFrame:
     """(u, v, ebc): bounded-distance Brandes EDGE betweenness from the
     ``n_seeds`` lowest-id vertices — the Girvan-Newman splitting score,
@@ -312,8 +309,8 @@ def edge_betweenness_seeded(
     c(v→w) = σ(v)/σ(w) · (1 + δ(w)) for every BFS-DAG edge between
     consecutive levels — including the seed's own level-0→1 edges,
     which the vertex variant never materializes (δ at a seed is
-    undefined, but its incident edges still carry flow). Undirected
-    edges are canonicalized to (least, greatest) before the final sum
+    undefined, but its incident edges still carry flow). Edges are
+    canonicalized to (least, greatest) before the final sum
     over seeds, so a pair traversed in opposite directions from two
     different seeds accumulates into one row.
 
@@ -326,17 +323,15 @@ def edge_betweenness_seeded(
     communities (patternmatching/gray/extract.py proximity scoring)."""
     if max_hops < 1:
         raise ValueError("edge_betweenness_seeded: max_hops must be >= 1")
-    with _bfs_levels(spark, edges, n_seeds, max_hops, directed) as (sym, levels):
+    with _bfs_levels(spark, edges, n_seeds, max_hops) as (sym, levels):
         _, edge_terms = _brandes_walk(sym, levels)
         if not edge_terms:
             return spark.createDataFrame([], "u BIGINT, v BIGINT, ebc DOUBLE")
-        alle = reduce(DataFrame.unionByName, edge_terms)
-        if not directed:
-            alle = alle.select(
-                F.least("v", "w").alias("v"),
-                F.greatest("v", "w").alias("w"),
-                "d",
-            )
+        alle = reduce(DataFrame.unionByName, edge_terms).select(
+            F.least("v", "w").alias("v"),
+            F.greatest("v", "w").alias("w"),
+            "d",
+        )
         return (
             alle.groupBy(F.col("v").alias("u"), F.col("w").alias("v"))
             .agg(F.sum("d").alias("ebc"))
@@ -348,12 +343,12 @@ def dominating_set_greedy(
     spark: SparkSession,
     edges: DataFrame,
     k: int = 5,
-    directed: bool = False,
 ) -> DataFrame:
     """(rank, id, gain): the first ``k`` picks of the classic greedy
-    dominating-set heuristic (ln-n–approximate): each round elect the
-    vertex whose CLOSED neighborhood covers the most still-uncovered
-    vertices (tie → lower id), then mark that neighborhood covered.
+    dominating-set heuristic (ln-n–approximate) over the undirected
+    ``edges``: each round elect the vertex whose CLOSED neighborhood
+    covers the most still-uncovered vertices (tie → lower id), then mark
+    that neighborhood covered.
     Rounds end early once everything is covered (later ranks are simply
     absent, identically in the SQL oracle).
 
@@ -367,7 +362,7 @@ def dominating_set_greedy(
     (patternmatching/subgraph/divide.py greedy assignment)."""
     if k < 1:
         raise ValueError("dominating_set_greedy: k must be >= 1")
-    sym = _sym(edges, directed)
+    sym = symmetrize(edges)
     verts = vertex_ids(sym)
     # closed neighborhood: every (id, covers) edge plus the self-loop
     nbr = (
@@ -376,23 +371,23 @@ def dominating_set_greedy(
         .distinct()
         .persist()
     )
-    uncovered = verts.select(F.col("id").alias("nb")).localCheckpoint(eager=True)
     picks: list[tuple[int, int, int]] = []
-    for rnd in range(1, k + 1):
-        gain = (
-            nbr.join(uncovered, "nb")
-            .groupBy("id")
-            .agg(F.count("*").alias("gain"))
-        )
-        w = gain.orderBy(F.col("gain").desc(), F.col("id")).first()
-        if w is None:
-            break
-        picks.append((rnd, int(w.id), int(w.gain)))
-        covered = nbr.where(F.col("id") == int(w.id)).select("nb")
-        uncovered = uncovered.join(covered, "nb", "left_anti").localCheckpoint(
-            eager=True
-        )
-    nbr.unpersist()
+    with released(nbr):
+        uncovered = verts.select(F.col("id").alias("nb")).localCheckpoint(eager=True)
+        for rnd in range(1, k + 1):
+            gain = (
+                nbr.join(uncovered, "nb")
+                .groupBy("id")
+                .agg(F.count("*").alias("gain"))
+            )
+            w = gain.orderBy(F.col("gain").desc(), F.col("id")).first()
+            if w is None:
+                break
+            picks.append((rnd, int(w.id), int(w.gain)))
+            covered = nbr.where(F.col("id") == int(w.id)).select("nb")
+            uncovered = uncovered.join(covered, "nb", "left_anti").localCheckpoint(
+                eager=True
+            )
     return spark.createDataFrame(picks, "rank LONG, id LONG, gain LONG")
 
 
@@ -417,11 +412,10 @@ def hitting_time_truncated(
     edges: DataFrame,
     n_hubs: int = 5,
     iters: int = 8,
-    directed: bool = False,
 ) -> DataFrame:
     """(id, h): ``iters``-step truncated expected hitting time of the
-    simple random walk to the absorbing hub set (the ``n_hubs``
-    top-degree vertices, ties → lower id) — the absorbing-walk
+    simple random walk on the undirected ``edges`` to the absorbing hub
+    set (the ``n_hubs`` top-degree vertices, ties → lower id) — the absorbing-walk
     complement of the RWR proximity family: low h = structurally close
     to the core, h saturating at the horizon = peripheral. Value
     iteration from h₀ ≡ 0:
@@ -436,7 +430,7 @@ def hitting_time_truncated(
     shuffle key as PageRank; the hub probe is a 5-row argmax."""
     if n_hubs < 1 or iters < 1:
         raise ValueError("hitting_time_truncated: n_hubs and iters must be >= 1")
-    sym = _sym(edges, directed).persist()
+    sym = symmetrize(edges).persist()
     deg = sym.groupBy(F.col("src").alias("id")).agg(
         F.count("*").cast("long").alias("d")
     ).persist()

@@ -120,7 +120,6 @@ def connected_components(
     max_iter: int = 100,
     num_partitions: int | None = None,
     checkpoint_dir: str | None = None,
-    resume: bool = True,
     steps_per_commit: int = 4,
 ) -> ComponentsResult:
     """Hash-min WCC. Edge direction is ignored (weak connectivity,
@@ -150,7 +149,6 @@ def connected_components(
             steps_per_commit=steps_per_commit,
             eager_steps=True,
             checkpoint_dir=checkpoint_dir,
-            resume=resume,
         )
     return ComponentsResult(
         res.state.select("id", "component"), res.supersteps, res.converged,
@@ -164,13 +162,13 @@ def component_sizes(components: DataFrame) -> DataFrame:
     return components.groupBy("component").agg(F.count("*").alias("size"))
 
 
-def median_component_size(components: DataFrame, min_size: int = 2) -> float:
-    """Median size over components of ≥ min_size members — mirrors
+def median_component_size(components: DataFrame) -> float:
+    """Median size over components of ≥ 2 members — mirrors
     ``statistics.median([len(c) for c in wccs if len(c) > 1])``
     (``gray_incremental.py:92-96``) via ``percentile_approx`` at scale."""
     row = (
         component_sizes(components)
-        .where(F.col("size") >= min_size)
+        .where(F.col("size") >= 2)
         .agg(F.percentile_approx("size", 0.5, 10000).alias("m"))
         .first()
     )

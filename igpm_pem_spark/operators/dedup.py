@@ -37,14 +37,6 @@ def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
     )
 
 
-def _doc_tids(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(doc_id, tid) distinct token-id pairs (the shingle set). tid is the
-    inline portable hash (functions/text.token_id) — no vocabulary join,
-    no global sort: tokenize → hash → distinct is the whole plan."""
-    t = tokens(docs, id_col, text_col)
-    return t.select("doc_id", token_id().alias("tid")).distinct()
-
-
 def minhash_signatures(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:

@@ -42,11 +42,14 @@ class DensestResult:
     converged: bool
 
 
+# Peel rounds; a peel still alive after them returns ``converged=False``.
+_MAX_ROUNDS = 64
+
+
 def densest_subgraph_peel(
     spark: SparkSession,
     edges: DataFrame,
     *,
-    max_rounds: int = 64,
     num_partitions: int | None = None,
 ) -> DensestResult:
     """Greedy (3/1 = 2(1+eps), eps=1/2) densest-subgraph peel.
@@ -84,7 +87,7 @@ def densest_subgraph_peel(
     # loop_confs: per-round fresh plans repeat driver-serial
     # Janino/AQE work every round (see _superstep.loop_confs)
     with loop_confs(spark):
-        for r in range(max_rounds):
+        for r in range(_MAX_ROUNDS):
             n_v = alive.count()
             if n_v == 0:
                 converged = True

@@ -18,7 +18,11 @@ import os
 from pyspark.sql import DataFrame, functions as F
 
 
-def kernel_nparts(df: DataFrame, floor: int = 4) -> int:
+# Fewest partitions ``kernel_nparts`` sizes a kernel to.
+_NPARTS_FLOOR = 4
+
+
+def kernel_nparts(df: DataFrame) -> int:
     """Input-proportional shuffle width for iterative kernels — the
     library-API face of the registry's ``queries._common.graph_nparts``
     sizing rule, derived from the DataFrame's own source files instead of
@@ -57,7 +61,7 @@ def kernel_nparts(df: DataFrame, floor: int = 4) -> int:
     (the scaling bench, registry queries) keep passing
     ``num_partitions`` explicitly."""
     sess = df.sparkSession
-    cap = max(floor, sess.sparkContext.defaultParallelism)
+    cap = max(_NPARTS_FLOOR, sess.sparkContext.defaultParallelism)
     try:
         files = df.inputFiles()
     except Exception:  # noqa: BLE001 — sizing hint only, never fail the kernel
@@ -83,7 +87,7 @@ def kernel_nparts(df: DataFrame, floor: int = 4) -> int:
             return cap
         if st <= 0:
             return cap
-        return max(floor, min(cap, st >> 20))
+        return max(_NPARTS_FLOOR, min(cap, st >> 20))
     total = 0
     for f in files:
         p = f.removeprefix("file:")
@@ -92,7 +96,7 @@ def kernel_nparts(df: DataFrame, floor: int = 4) -> int:
         total += os.path.getsize(p)
     if total <= 0:
         return cap
-    return max(floor, min(cap, total >> 19))
+    return max(_NPARTS_FLOOR, min(cap, total >> 19))
 
 
 def symmetrize(edges: DataFrame) -> DataFrame:
@@ -145,13 +149,10 @@ def vertex_ids(edges: DataFrame) -> DataFrame:
     )
 
 
-def degrees(edges: DataFrame, directed: bool = False) -> DataFrame:
-    """Per-vertex degree (A4, ``gray_multiple.py:63-68``).
-
-    Undirected: degree over the symmetrized simple edge list. Directed:
-    out-degree. Returns (id, degree).
-    """
-    e = simple_edges(edges, directed=directed)
+def degrees(edges: DataFrame) -> DataFrame:
+    """Per-vertex undirected degree (A4, ``gray_multiple.py:63-68``) over
+    the symmetrized simple edge list. Returns (id, degree)."""
+    e = simple_edges(edges, directed=False)
     return e.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("degree"))
 
 

@@ -31,6 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ._superstep import released
 from .graph import simple_edges
 
 
@@ -68,41 +69,41 @@ def halo_partitions(
     if depth < 1:
         raise ValueError(f"halo_partitions: depth must be >= 1, got {depth}")
     sym = simple_edges(edges, directed=False).persist()
-    verts = sym.select("src").distinct().select(F.col("src").alias("id"))
-    ball = verts.select(owner_expr(F.col("id"), num_partitions).alias("part"), "id")
-    # d expansion rounds: ball ∪ neighbors(ball), per partition. Persist
-    # each round — the next round and the two endpoint joins below all
-    # re-read it, and the expansion join re-deriving the tokenized chain
-    # per reference is the same trap the LSH band build documents.
-    ball = ball.persist()
-    for _ in range(depth):
-        grown = (
-            ball.join(sym.select(F.col("src").alias("id"), "dst"), "id")
-            .select("part", F.col("dst").alias("id"))
-            .unionByName(ball)
-            .distinct()
-            .persist()
-        )
-        grown.count()
-        ball.unpersist()
-        ball = grown
-    # induced edges: both endpoints inside the partition's ball
-    bs = ball.select("part", F.col("id").alias("src"))
-    bd = ball.select("part", F.col("id").alias("dst"))
-    halo = (
-        sym.join(bs, "src")
-        .join(bd, ["part", "dst"])
-        .select(
-            "part", "src", "dst",
-            (owner_expr(F.col("src"), num_partitions) == F.col("part")).alias(
-                "src_owned"
-            ),
-        )
-        .repartition(num_partitions, "part")
-        .localCheckpoint(eager=True)
-    )
-    ball.unpersist()
-    sym.unpersist()
+    with released(sym):
+        verts = sym.select("src").distinct().select(F.col("src").alias("id"))
+        ball = verts.select(owner_expr(F.col("id"), num_partitions).alias("part"), "id")
+        # d expansion rounds: ball ∪ neighbors(ball), per partition. Persist
+        # each round — the next round and the two endpoint joins below all
+        # re-read it, and the expansion join re-deriving the tokenized chain
+        # per reference is the same trap the LSH band build documents.
+        ball = ball.persist()
+        for _ in range(depth):
+            with released(ball):
+                grown = (
+                    ball.join(sym.select(F.col("src").alias("id"), "dst"), "id")
+                    .select("part", F.col("dst").alias("id"))
+                    .unionByName(ball)
+                    .distinct()
+                    .persist()
+                )
+                grown.count()
+            ball = grown
+        with released(ball):
+            # induced edges: both endpoints inside the partition's ball
+            bs = ball.select("part", F.col("id").alias("src"))
+            bd = ball.select("part", F.col("id").alias("dst"))
+            halo = (
+                sym.join(bs, "src")
+                .join(bd, ["part", "dst"])
+                .select(
+                    "part", "src", "dst",
+                    (owner_expr(F.col("src"), num_partitions) == F.col("part")).alias(
+                        "src_owned"
+                    ),
+                )
+                .repartition(num_partitions, "part")
+                .localCheckpoint(eager=True)
+            )
     return halo
 
 

@@ -76,21 +76,18 @@ class IncrementalResult:
     steps: list[StepMetrics] = field(default_factory=list)
 
 
-def step_list(edges: DataFrame, ts_col: str = "ts") -> list[int]:
-    """Sorted distinct arrival steps (W3, ``gray/query_call.py:135``)."""
-    return [
-        int(r[0])
-        for r in edges.select(ts_col).distinct().orderBy(ts_col).collect()
-    ]
+def step_list(edges: DataFrame) -> list[int]:
+    """Sorted distinct arrival steps ``ts`` (W3, ``gray/query_call.py:135``)."""
+    return [int(r[0]) for r in edges.select("ts").distinct().orderBy("ts").collect()]
 
 
-def _bucket_sizes(edges: DataFrame, ts_col: str) -> dict[int, int]:
+def _bucket_sizes(edges: DataFrame) -> dict[int, int]:
     """One histogram job replaces the per-step count actions the replay
     loops would otherwise run (2-3 full scans per bucket): bucket sizes
     and cumulative totals are derived driver-side from this dict."""
     return {
         int(r[0]): int(r[1])
-        for r in edges.groupBy(ts_col).agg(F.count("*")).collect()
+        for r in edges.groupBy("ts").agg(F.count("*")).collect()
     }
 
 
@@ -109,14 +106,14 @@ def _step_metrics(
     )
 
 
-def _replay(kernel, edges: DataFrame, ts_col: str, base_steps: int) -> IncrementalResult:
+def _replay(kernel, edges: DataFrame, base_steps: int) -> IncrementalResult:
     """The one timestamp-bucket loop: the first ``base_steps`` buckets are
     the base graph (``kernel.base``), every later bucket is one
     ``kernel.refresh``. ``cum`` / ``old`` / ``bucket`` are lazy ``ts``
     filters of ``edges``, so a partitioned store prunes its reads. The
     base step's ``n_new_edges`` is the whole base slice."""
-    sizes = _bucket_sizes(edges, ts_col)
-    ts = F.col(ts_col)
+    sizes = _bucket_sizes(edges)
+    ts = F.col("ts")
     result = IncrementalResult(state=None)
     cum_m = 0
     for si, cut in enumerate(sorted(sizes)):
@@ -144,10 +141,10 @@ class _PageRankRefresh:
     ground truth."""
 
     def __init__(
-        self, spark: SparkSession, *, alpha: float, tol: float, directed: bool,
+        self, spark: SparkSession, *, tol: float, directed: bool,
         num_partitions: int, pem=None, counts=None,
     ):
-        self.spark, self.alpha, self.tol, self.directed = spark, alpha, tol, directed
+        self.spark, self.tol, self.directed = spark, tol, directed
         self.np, self.pem, self.counts = num_partitions, pem, counts
         self.state: DataFrame | None = None  # (id, rank)
         self.n = 0
@@ -168,7 +165,7 @@ class _PageRankRefresh:
     def _converge(self, cum: DataFrame, tol: float) -> dict:
         t0 = time.time()
         res = pagerank(
-            self.spark, cum, directed=self.directed, alpha=self.alpha, tol=tol,
+            self.spark, cum, directed=self.directed, tol=tol,
             num_partitions=self.np, init_ranks=self.state,
         )
         if self.pem is not None:
@@ -184,16 +181,14 @@ def incremental_pagerank(
     spark: SparkSession,
     edges: DataFrame,
     *,
-    ts_col: str = "ts",
     base_steps: int = 1,
-    alpha: float = 0.85,
     tol: float = 1e-6,
     directed: bool = False,
     num_partitions: int | None = None,
     with_pattern_counts: bool = False,
     pem=None,
 ) -> IncrementalResult:
-    """Replay ts buckets: the base slice converges with exact PageRank from
+    """Replay ``ts`` buckets: the base slice converges with exact PageRank from
     a uniform start; every later bucket re-converges with the same exact
     iteration, warm-started from the previous step's ranks.
 
@@ -207,10 +202,14 @@ def incremental_pagerank(
         num_partitions = kernel_nparts(edges)
     counts = _DeltaPatternCounts(num_partitions) if with_pattern_counts else None
     kernel = _PageRankRefresh(
-        spark, alpha=alpha, tol=tol, directed=directed,
+        spark, tol=tol, directed=directed,
         num_partitions=num_partitions, pem=pem, counts=counts,
     )
-    return _replay(kernel, edges, ts_col, base_steps)
+    return _replay(kernel, edges, base_steps)
+
+
+# Degree from which a vertex counts as a star centre.
+_STAR_MIN_DEGREE = 4
 
 
 class _DeltaPatternCounts:
@@ -224,9 +223,8 @@ class _DeltaPatternCounts:
     not O(E^1.5) per step. Star counts ride a carried degree vector
     updated from the new edges' endpoints."""
 
-    def __init__(self, num_partitions: int, star_min_degree: int = 4):
+    def __init__(self, num_partitions: int):
         self.np = num_partitions
-        self.k = star_min_degree
         self.known: DataFrame | None = None  # canonical a<b edges
         self.deg: DataFrame | None = None  # (id, d)
         self.tri = 0
@@ -282,7 +280,7 @@ class _DeltaPatternCounts:
         return canon.repartition(self.np, "src", "dst").localCheckpoint(eager=True)
 
     def _counts(self) -> dict:
-        stars = self.deg.where(F.col("d") >= self.k).count()
+        stars = self.deg.where(F.col("d") >= _STAR_MIN_DEGREE).count()
         return {"n_triangles": self.tri, "n_stars": int(stars)}
 
     def _tri_delta(self, new_e: DataFrame) -> int:
@@ -343,7 +341,6 @@ def incremental_pattern_match(
     edges: DataFrame,
     q,
     *,
-    ts_col: str = "ts",
     base_steps: int = 1,
 ) -> IncrementalResult:
     """Incremental graph pattern matching — the IGPM headline, relational:
@@ -354,7 +351,7 @@ def incremental_pattern_match(
     (``incremental/gray_incremental.py:230-271``), without its
     community-scope heuristic. Final state equals the batch match (tests
     pin it). State rows: one per distinct match signature."""
-    return _replay(_PatternRefresh(spark, vertices, q), edges, ts_col, base_steps)
+    return _replay(_PatternRefresh(spark, vertices, q), edges, base_steps)
 
 
 def _changed_at(state: DataFrame, touched: DataFrame) -> DataFrame:
@@ -406,13 +403,15 @@ class _LabelPropRefresh:
         return {"supersteps": res.supersteps}
 
 
+# LPA supersteps per replayed bucket.
+_LPA_MAX_ITER_PER_STEP = 10
+
+
 def incremental_labelprop(
     spark: SparkSession,
     edges: DataFrame,
     *,
-    ts_col: str = "ts",
     base_steps: int = 1,
-    max_iter_per_step: int = 10,
     num_partitions: int | None = None,
 ) -> IncrementalResult:
     """Incremental deterministic LPA: per arriving bucket, labels carry
@@ -430,8 +429,8 @@ def incremental_labelprop(
     unambiguous communities."""
     if num_partitions is None:
         num_partitions = kernel_nparts(edges)
-    kernel = _LabelPropRefresh(spark, max_iter_per_step, num_partitions)
-    return _replay(kernel, edges, ts_col, base_steps)
+    kernel = _LabelPropRefresh(spark, _LPA_MAX_ITER_PER_STEP, num_partitions)
+    return _replay(kernel, edges, base_steps)
 
 
 def _lpa_step_frontier(state: DataFrame, adj: DataFrame, n_parts: int) -> DataFrame:
@@ -567,7 +566,6 @@ def incremental_components(
     spark: SparkSession,
     edges: DataFrame,
     *,
-    ts_col: str = "ts",
     base_steps: int = 1,
     num_partitions: int | None = None,
 ) -> IncrementalResult:
@@ -577,7 +575,7 @@ def incremental_components(
     The result equals batch ``connected_components`` on the full graph."""
     if num_partitions is None:
         num_partitions = kernel_nparts(edges)
-    return _replay(_ComponentsRefresh(spark, num_partitions), edges, ts_col, base_steps)
+    return _replay(_ComponentsRefresh(spark, num_partitions), edges, base_steps)
 
 
 class _SSSPRefresh:
@@ -587,17 +585,15 @@ class _SSSPRefresh:
     where that improves something, and sweeps frontier-restricted on the
     cumulative adjacency."""
 
-    def __init__(
-        self, spark: SparkSession, source: int, weight_col: str, num_partitions: int
-    ):
-        self.spark, self.source, self.w, self.np = spark, source, weight_col, num_partitions
+    def __init__(self, spark: SparkSession, source: int, num_partitions: int):
+        self.spark, self.source, self.np = spark, source, num_partitions
         self.state: DataFrame | None = None  # (id, dist)
 
     def base(self, cum: DataFrame) -> dict:
         from .sssp import sssp
 
         res = sssp(
-            self.spark, cum, self.source, weight_col=self.w,
+            self.spark, cum, self.source,
             num_partitions=self.np, steps_per_commit=4,
         )
         self.state = res.distances.localCheckpoint(eager=True)
@@ -611,7 +607,7 @@ class _SSSPRefresh:
         # relax ONLY the new edges against the carried fixpoint: a
         # bucket-sized join, not a graph-sized pass
         cand = (
-            _prep(bucket, self.w, directed=False)
+            _prep(bucket, "w", directed=False)
             .join(
                 dist.select(F.col("id").alias("src"), F.col("dist").alias("d0")),
                 "src",
@@ -635,7 +631,7 @@ class _SSSPRefresh:
             )
             .localCheckpoint(eager=True)
         )
-        adj = _prep(cum, self.w, directed=False).repartition(self.np, "src").persist()
+        adj = _prep(cum, "w", directed=False).repartition(self.np, "src").persist()
         with released(adj):
             res = run(
                 self.spark,
@@ -655,12 +651,11 @@ def incremental_sssp(
     edges: DataFrame,
     source: int,
     *,
-    weight_col: str = "w",
-    ts_col: str = "ts",
     base_steps: int = 1,
     num_partitions: int | None = None,
 ) -> IncrementalResult:
-    """Exact incremental weighted SSSP over arrival buckets: the previous
+    """Exact incremental weighted SSSP over the ``ts`` arrival buckets of
+    ``edges(src, dst, w, ts)``: the previous
     fixpoint is a valid upper bound, each bucket's edges are relaxed once
     against it and the Bellman-Ford sweeps then run frontier-restricted
     (see ``_SSSPRefresh``). Work per step ∝ the perturbation's downstream
@@ -669,5 +664,5 @@ def incremental_sssp(
     graph."""
     if num_partitions is None:
         num_partitions = kernel_nparts(edges)
-    kernel = _SSSPRefresh(spark, source, weight_col, num_partitions)
-    return _replay(kernel, edges, ts_col, base_steps)
+    kernel = _SSSPRefresh(spark, source, num_partitions)
+    return _replay(kernel, edges, base_steps)

@@ -36,12 +36,16 @@ class KCoreResult:
     peeled_per_round: list[int] = field(default_factory=list)
 
 
+# Peel rounds of ``k_core`` / ``s_core``; an unfinished peel returns
+# ``converged=False``.
+_MAX_ROUNDS = 100
+
+
 def _peel(
     spark: SparkSession,
     sym: DataFrame,
     threshold: int,
     degree: Column,
-    max_rounds: int,
     num_partitions: int,
 ) -> KCoreResult:
     """Peel the vertices whose ``degree`` aggregate over their incident
@@ -53,7 +57,7 @@ def _peel(
     rounds = 0
     # AQE + codegen off for the loop (see _superstep.loop_confs)
     with loop_confs(spark):
-        while rounds < max_rounds:
+        while rounds < _MAX_ROUNDS:
             rounds += 1
             # persist: deg feeds both the drop-count action and the two keep
             # semi-joins; without the cache the degree aggregation runs twice
@@ -89,7 +93,6 @@ def k_core(
     edges: DataFrame,
     k: int,
     *,
-    max_rounds: int = 100,
     num_partitions: int | None = None,
 ) -> KCoreResult:
     """Peel vertices with degree < k until stable; equals
@@ -101,7 +104,7 @@ def k_core(
         .repartition(num_partitions, "src")
         .localCheckpoint(eager=True)
     )
-    return _peel(spark, e, k, F.count("*"), max_rounds, num_partitions)
+    return _peel(spark, e, k, F.count("*"), num_partitions)
 
 
 @dataclass
@@ -120,7 +123,6 @@ def coreness_hindex(
     max_rounds: int = 50,
     num_partitions: int | None = None,
     checkpoint_dir: str | None = None,
-    resume: bool = True,
 ) -> CorenessResult:
     """Full core decomposition — coreness(v) for every vertex at once —
     by h-index iteration (Lu, Zhou et al., Nature Comm. 7:10168, 2016):
@@ -192,7 +194,6 @@ def coreness_hindex(
         edge_parts=edge_partition_counts(sym),
         num_partitions=num_partitions,
         checkpoint_dir=checkpoint_dir,
-        resume=resume,
     )
     return CorenessResult(
         res.state.select("id", F.col("c").alias("coreness")), res.supersteps,
@@ -216,7 +217,6 @@ def onion_layers(
     max_rounds: int = 500,
     num_partitions: int | None = None,
     checkpoint_dir: str | None = None,
-    resume: bool = True,
 ) -> OnionResult:
     """Onion decomposition (Hébert-Dufresne, Grochow & Allard, Sci. Rep.
     6:31708, 2016): the layer index of the k-core peeling process, a
@@ -258,7 +258,7 @@ def onion_layers(
 
     state: DataFrame | None = None
     resumed_from, rounds, k = None, 0, 0
-    if resume and checkpoint_dir:
+    if checkpoint_dir:
         last = log.last_committed()
         if last is not None:
             state = log.load_state(last)
@@ -379,8 +379,6 @@ def s_core(
     edges: DataFrame,
     s: int,
     *,
-    weight_col: str = "w",
-    max_rounds: int = 100,
     num_partitions: int | None = None,
 ) -> KCoreResult:
     """Weighted (s-core / strength-core) peel: repeatedly remove
@@ -398,7 +396,7 @@ def s_core(
 
     INPUT CONTRACT: ``edges`` must be a canonical undirected weighted
     edge list — one row per unordered pair (src < dst convention), no
-    self-loops, parallel edges pre-aggregated into ``weight_col``. The
+    self-loops, parallel edges pre-aggregated into ``w``. The
     kernel symmetrizes internally; feeding both (a,b) and (b,a) rows or
     loops double-counts strength (unlike ``k_core``, which runs
     ``simple_edges`` first — weights make that canonicalization the
@@ -406,7 +404,7 @@ def s_core(
     if num_partitions is None:
         num_partitions = kernel_nparts(edges)
     e = (
-        edges.select("src", "dst", F.col(weight_col).cast("long").alias("w"))
+        edges.select("src", "dst", F.col("w").cast("long").alias("w"))
         .repartition(num_partitions, "src")
         .localCheckpoint(eager=True)
     )
@@ -414,4 +412,4 @@ def s_core(
     sym = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
     ).localCheckpoint(eager=True)
-    return _peel(spark, sym, s, F.sum("w"), max_rounds, num_partitions)
+    return _peel(spark, sym, s, F.sum("w"), num_partitions)

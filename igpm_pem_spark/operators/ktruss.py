@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .graph import canonical_undirected, kernel_nparts
 from .triangles import _triangle_list_canon
-from ._superstep import loop_confs
+from ._superstep import loop_confs, released
 
 
 def _triangle_support(tris: DataFrame) -> DataFrame:
@@ -60,12 +60,15 @@ class KTrussResult:
     dropped_per_round: list[int] = field(default_factory=list)
 
 
+# Peel rounds of ``k_truss``; an unfinished peel returns ``converged=False``.
+_MAX_ROUNDS = 100
+
+
 def k_truss(
     spark: SparkSession,
     edges: DataFrame,
     k: int,
     *,
-    max_rounds: int = 100,
     num_partitions: int | None = None,
 ) -> KTrussResult:
     """Peel edges with triangle support < k−2 until stable; equals the
@@ -83,22 +86,22 @@ def k_truss(
     converged, rounds = False, 0
     # AQE + codegen off for the loop (see _superstep.loop_confs)
     with loop_confs(spark):
-        while rounds < max_rounds:
+        while rounds < _MAX_ROUNDS:
             rounds += 1
             sup = _edge_support(e).persist()
-            n_drop = sup.where(F.col("sup") < k - 2).count()
-            dropped.append(int(n_drop))
-            if n_drop == 0:
-                sup.unpersist()
-                converged = True
-                break
-            e = (
-                sup.where(F.col("sup") >= k - 2)
-                .select("src", "dst")
-                .repartition(num_partitions, "src")
-                .localCheckpoint(eager=True)
-            )
-            sup.unpersist()
+            with released(sup):
+                n_drop = sup.where(F.col("sup") < k - 2).count()
+                dropped.append(int(n_drop))
+                if n_drop == 0:
+                    converged = True
+                    break
+                # e is materialized before the round's cache goes
+                e = (
+                    sup.where(F.col("sup") >= k - 2)
+                    .select("src", "dst")
+                    .repartition(num_partitions, "src")
+                    .localCheckpoint(eager=True)
+                )
     return KTrussResult(e, rounds, converged, dropped)
 
 
@@ -118,7 +121,6 @@ def trussness_hindex(
     max_rounds: int = 50,
     num_partitions: int | None = None,
     checkpoint_dir: str | None = None,
-    resume: bool = True,
 ) -> TrussnessResult:
     """Full truss decomposition — trussness(e) for every edge at once —
     by local h-index iteration (Sariyüce, Seshadhri, Pinar, WWW'18 local
@@ -216,7 +218,6 @@ def trussness_hindex(
         edge_parts=edge_partition_counts(tris),
         num_partitions=num_partitions,
         checkpoint_dir=checkpoint_dir,
-        resume=resume,
     )
     return TrussnessResult(
         res.state.select(

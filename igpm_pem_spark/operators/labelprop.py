@@ -79,7 +79,6 @@ def label_propagation(
     stop_on_stable: bool = True,
     num_partitions: int | None = None,
     checkpoint_dir: str | None = None,
-    resume: bool = True,
     steps_per_commit: int = 4,
 ) -> LabelPropResult:
     # steps_per_commit defaults to 4 (r6): `changed` is a per-sub-step
@@ -104,7 +103,6 @@ def label_propagation(
             num_partitions=num_partitions,
             steps_per_commit=steps_per_commit,
             checkpoint_dir=checkpoint_dir,
-            resume=resume,
         )
     return LabelPropResult(
         res.state.select("id", "label"), res.supersteps, res.converged,
@@ -119,7 +117,6 @@ def modularity_local_move(
     *,
     rounds: int = 1,
     num_partitions: int | None = None,
-    n_edges: int | None = None,
 ) -> DataFrame:
     """One or more SYNCHRONOUS Louvain-style local-move rounds on top of an
     existing community assignment (id, label) → (id, label).
@@ -152,110 +149,109 @@ def modularity_local_move(
     and the DuckDB oracle take the same branch bit-for-bit, and
     Q(move-pass) ≥ Q(input) holds by construction (gated by
     community_louvain_move / community_q_improvement).
-
-    ``n_edges`` skips the one stats job (undirected simple edge count m)
-    when the caller already knows it.
     """
     from .graph import canonical_undirected, symmetrize
 
     if num_partitions is None:
         num_partitions = kernel_nparts(edges)
     e = canonical_undirected(edges).repartition(num_partitions, "src").persist()
-    m = e.count() if n_edges is None else n_edges
-    if m == 0:
-        e.unpersist()
-        return labels.select("id", "label")
-    sym = symmetrize(e)
-    deg = sym.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("d"))
-    lab = labels.select("id", "label")
+    with released(e):
+        m = e.count()
+        if m == 0:
+            return labels.select("id", "label")
+        sym = symmetrize(e)
+        deg = sym.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("d"))
+        lab = labels.select("id", "label")
 
-    def _score(lab_df: DataFrame) -> int:
-        # integer modularity score S = Σ_c (4·m·m_c − D_c²); one
-        # intra-edge aggregate + one degree aggregate, reduced to a
-        # single driver-side scalar — the same two passes metrics.
-        # modularity makes, kept integral so accept/reject is portable
-        la = lab_df.select(F.col("id").alias("src"), F.col("label").alias("_la"))
-        lb = lab_df.select(F.col("id").alias("dst"), F.col("label").alias("_lb"))
-        mc = (
-            e.join(la.hint("shuffle_hash"), "src")
-            .join(lb.hint("shuffle_hash"), "dst")
-            .where(F.col("_la") == F.col("_lb"))
-            .groupBy(F.col("_la").alias("label"))
-            .agg(F.count("*").alias("mc"))
-        )
-        dc = deg.join(lab_df, "id").groupBy("label").agg(F.sum("d").alias("dc"))
-        row = (
-            dc.join(mc, "label", "left")
-            .select(
-                (
-                    F.lit(4 * m).cast("decimal(38,0)")
-                    * F.coalesce(F.col("mc"), F.lit(0)).cast("decimal(38,0)")
-                    - F.col("dc").cast("decimal(38,0)") * F.col("dc").cast("decimal(38,0)")
-                ).alias("term")
+        def _score(lab_df: DataFrame) -> int:
+            # integer modularity score S = Σ_c (4·m·m_c − D_c²); one
+            # intra-edge aggregate + one degree aggregate, reduced to a
+            # single driver-side scalar — the same two passes metrics.
+            # modularity makes, kept integral so accept/reject is portable
+            la = lab_df.select(F.col("id").alias("src"), F.col("label").alias("_la"))
+            lb = lab_df.select(F.col("id").alias("dst"), F.col("label").alias("_lb"))
+            mc = (
+                e.join(la.hint("shuffle_hash"), "src")
+                .join(lb.hint("shuffle_hash"), "dst")
+                .where(F.col("_la") == F.col("_lb"))
+                .groupBy(F.col("_la").alias("label"))
+                .agg(F.count("*").alias("mc"))
             )
-            .agg(F.sum("term").alias("s"))
-            .first()
-        )
-        return int(row["s"]) if row["s"] is not None else 0
+            dc = deg.join(lab_df, "id").groupBy("label").agg(F.sum("d").alias("dc"))
+            row = (
+                dc.join(mc, "label", "left")
+                .select(
+                    (
+                        F.lit(4 * m).cast("decimal(38,0)")
+                        * F.coalesce(F.col("mc"), F.lit(0)).cast("decimal(38,0)")
+                        - F.col("dc").cast("decimal(38,0)")
+                        * F.col("dc").cast("decimal(38,0)")
+                    ).alias("term")
+                )
+                .agg(F.sum("term").alias("s"))
+                .first()
+            )
+            return int(row["s"]) if row["s"] is not None else 0
 
-    s_cur = _score(lab)
-    for _ in range(rounds):
-        lab_c = lab.select(F.col("id").alias("dst"), F.col("label").alias("c"))
-        # k_vc: edges from v into each neighbor community c
-        kvc = (
-            sym.join(lab_c.hint("shuffle_hash"), "dst")
-            .groupBy(F.col("src").alias("id"), "c")
-            .agg(F.count("*").alias("kvc"))
-        )
-        tot = (
-            deg.join(lab, "id")
-            .groupBy("label")
-            .agg(F.sum("d").alias("dtot"))
-        )
-        base = (
-            kvc.join(lab, "id")  # current community a = label
-            .join(deg, "id")
-            .join(tot.select(F.col("label").alias("c"), F.col("dtot").alias("dc")), "c")
-            .join(tot.select(F.col("label"), F.col("dtot").alias("da")), "label")
-        )
-        kva = (
-            base.where(F.col("c") == F.col("label"))
-            .select("id", F.col("kvc").alias("kva"))
-        )
-        cand = (
-            base.where(F.col("c") != F.col("label"))
-            .join(kva.hint("shuffle_hash"), "id", "left")
-            .na.fill(0, ["kva"])
-            .withColumn(
-                "gain",
-                (F.col("kvc") - F.col("kva")) / F.lit(float(m))
-                - F.col("d")
-                * (F.col("dc") - F.col("da") + F.col("d"))
-                / F.lit(2.0 * m * m),
+        s_cur = _score(lab)
+        for _ in range(rounds):
+            lab_c = lab.select(F.col("id").alias("dst"), F.col("label").alias("c"))
+            # k_vc: edges from v into each neighbor community c
+            kvc = (
+                sym.join(lab_c.hint("shuffle_hash"), "dst")
+                .groupBy(F.col("src").alias("id"), "c")
+                .agg(F.count("*").alias("kvc"))
             )
-            .where(F.col("gain") > 0.0)
-        )
-        w = Window.partitionBy("id").orderBy(F.desc("gain"), F.asc("c"))
-        move = (
-            cand.withColumn("rn", F.row_number().over(w))
-            .where("rn = 1")
-            .select("id", F.col("c").alias("new_label"))
-        )
-        moved = (
-            lab.join(move.hint("shuffle_hash"), "id", "left")
-            .select(
-                "id",
-                F.coalesce(F.col("new_label"), F.col("label")).alias("label"),
+            tot = (
+                deg.join(lab, "id")
+                .groupBy("label")
+                .agg(F.sum("d").alias("dtot"))
             )
-            .localCheckpoint(eager=True)
-        )
-        s_new = _score(moved)
-        if s_new < s_cur:
-            # synchronous oscillation made the aggregate worse: reject,
-            # and stop — the same labels would re-derive the same move
-            break
-        lab, s_cur = moved, s_new
-    e.unpersist()
+            base = (
+                kvc.join(lab, "id")  # current community a = label
+                .join(deg, "id")
+                .join(
+                    tot.select(F.col("label").alias("c"), F.col("dtot").alias("dc")), "c"
+                )
+                .join(tot.select(F.col("label"), F.col("dtot").alias("da")), "label")
+            )
+            kva = (
+                base.where(F.col("c") == F.col("label"))
+                .select("id", F.col("kvc").alias("kva"))
+            )
+            cand = (
+                base.where(F.col("c") != F.col("label"))
+                .join(kva.hint("shuffle_hash"), "id", "left")
+                .na.fill(0, ["kva"])
+                .withColumn(
+                    "gain",
+                    (F.col("kvc") - F.col("kva")) / F.lit(float(m))
+                    - F.col("d")
+                    * (F.col("dc") - F.col("da") + F.col("d"))
+                    / F.lit(2.0 * m * m),
+                )
+                .where(F.col("gain") > 0.0)
+            )
+            w = Window.partitionBy("id").orderBy(F.desc("gain"), F.asc("c"))
+            move = (
+                cand.withColumn("rn", F.row_number().over(w))
+                .where("rn = 1")
+                .select("id", F.col("c").alias("new_label"))
+            )
+            moved = (
+                lab.join(move.hint("shuffle_hash"), "id", "left")
+                .select(
+                    "id",
+                    F.coalesce(F.col("new_label"), F.col("label")).alias("label"),
+                )
+                .localCheckpoint(eager=True)
+            )
+            s_new = _score(moved)
+            if s_new < s_cur:
+                # synchronous oscillation made the aggregate worse: reject,
+                # and stop — the same labels would re-derive the same move
+                break
+            lab, s_cur = moved, s_new
     return lab
 
 
@@ -263,12 +259,11 @@ def label_propagation_weighted(
     spark: SparkSession,
     edges: DataFrame,
     *,
-    weight_col: str = "w",
     max_iter: int = 3,
     num_partitions: int | None = None,
 ) -> DataFrame:
     """(id, label): synchronous LPA where each neighbor vote carries the
-    edge weight — label'(v) = argmax_label Σ w(v,u) over neighbors u with
+    edge weight ``w`` — label'(v) = argmax_label Σ w(v,u) over neighbors u with
     that label, ties to the smallest label. The multiplicity-aware
     community pass for weighted co-occurrence / import graphs: the
     unweighted kernel's step with ``sum(w)`` votes over the symmetrized
@@ -280,7 +275,7 @@ def label_propagation_weighted(
     — the fixture graphs keep weights integral for exactly this reason."""
     if num_partitions is None:
         num_partitions = kernel_nparts(edges)
-    w_ = F.col(weight_col).cast("double")
+    w_ = F.col("w").cast("double")
     sym = (
         edges.select("src", "dst", w_.alias("w"))
         .unionByName(

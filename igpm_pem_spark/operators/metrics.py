@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ._superstep import released
 from .graph import canonical_undirected, symmetrize
 from .triangles import triangles_per_vertex
 
@@ -25,24 +26,24 @@ def clustering_coefficient(edges: DataFrame) -> DataFrame:
     # three times as e1/e2/e3) — one materialization instead of re-deriving
     # the upstream edge plan per reference
     e = canonical_undirected(edges).persist()
-    deg = (
-        symmetrize(e)
-        .groupBy(F.col("src").alias("id"))
-        .agg(F.count("*").alias("d"))
-    )
-    tri = triangles_per_vertex(e)
-    out = deg.join(tri, "id", "left").select(
-        "id",
-        F.when(
-            F.col("d") >= 2,
-            2.0 * F.coalesce(F.col("triangles"), F.lit(0))
-            / (F.col("d") * (F.col("d") - 1)),
+    with released(e):
+        deg = (
+            symmetrize(e)
+            .groupBy(F.col("src").alias("id"))
+            .agg(F.count("*").alias("d"))
         )
-        .otherwise(F.lit(0.0))
-        .alias("lcc"),
-    )
-    out = out.localCheckpoint(eager=True)
-    e.unpersist()
+        tri = triangles_per_vertex(e)
+        out = deg.join(tri, "id", "left").select(
+            "id",
+            F.when(
+                F.col("d") >= 2,
+                2.0 * F.coalesce(F.col("triangles"), F.lit(0))
+                / (F.col("d") * (F.col("d") - 1)),
+            )
+            .otherwise(F.lit(0.0))
+            .alias("lcc"),
+        )
+        out = out.localCheckpoint(eager=True)
     return out
 
 
@@ -93,34 +94,34 @@ def link_prediction_jaccard(
     enormous cn=1 tail BEFORE the anti-join and degree joins — at scale
     that filter is what keeps the candidate set near-linear."""
     sym = symmetrize(canonical_undirected(edges)).persist()
-    deg = sym.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("d"))
-    w1 = sym.select(F.col("dst").alias("n"), F.col("src").alias("a"))
-    w2 = sym.select(F.col("dst").alias("n"), F.col("src").alias("b"))
-    cn = (
-        w1.join(w2, "n")
-        .where(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("cn"))
-        .where(F.col("cn") >= min_common)
-    )
-    cand = cn.join(
-        sym.select(F.col("src").alias("a"), F.col("dst").alias("b")),
-        ["a", "b"],
-        "left_anti",
-    )
-    out = (
-        cand.join(deg.select(F.col("id").alias("a"), F.col("d").alias("da")), "a")
-        .join(deg.select(F.col("id").alias("b"), F.col("d").alias("db")), "b")
-        .select(
-            "a", "b", "cn",
-            (
-                F.col("cn")
-                / (F.col("da") + F.col("db") - F.col("cn")).cast("double")
-            ).alias("jaccard"),
+    with released(sym):
+        deg = sym.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("d"))
+        w1 = sym.select(F.col("dst").alias("n"), F.col("src").alias("a"))
+        w2 = sym.select(F.col("dst").alias("n"), F.col("src").alias("b"))
+        cn = (
+            w1.join(w2, "n")
+            .where(F.col("a") < F.col("b"))
+            .groupBy("a", "b")
+            .agg(F.count("*").alias("cn"))
+            .where(F.col("cn") >= min_common)
         )
-    )
-    out = out.localCheckpoint(eager=True)
-    sym.unpersist()
+        cand = cn.join(
+            sym.select(F.col("src").alias("a"), F.col("dst").alias("b")),
+            ["a", "b"],
+            "left_anti",
+        )
+        out = (
+            cand.join(deg.select(F.col("id").alias("a"), F.col("d").alias("da")), "a")
+            .join(deg.select(F.col("id").alias("b"), F.col("d").alias("db")), "b")
+            .select(
+                "a", "b", "cn",
+                (
+                    F.col("cn")
+                    / (F.col("da") + F.col("db") - F.col("cn")).cast("double")
+                ).alias("jaccard"),
+            )
+        )
+        out = out.localCheckpoint(eager=True)
     return out
 
 
@@ -141,27 +142,27 @@ def link_prediction_adamic_adar(
     reciprocal is always finite. ``min_common`` prunes the cn=1 tail
     before the anti-join, as in the Jaccard plan."""
     sym = symmetrize(canonical_undirected(edges)).persist()
-    deg = sym.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("d"))
-    w1 = sym.select(F.col("dst").alias("n"), F.col("src").alias("a"))
-    w2 = sym.select(F.col("dst").alias("n"), F.col("src").alias("b"))
-    cn = (
-        w1.join(w2, "n")
-        .where(F.col("a") < F.col("b"))
-        .join(deg.select(F.col("id").alias("n"), F.col("d").alias("dn")), "n")
-        .groupBy("a", "b")
-        .agg(
-            F.count("*").alias("cn"),
-            F.sum(F.lit(1.0) / F.log(F.col("dn"))).alias("aa"),
-            F.sum(F.lit(1.0) / F.col("dn")).alias("ra"),
+    with released(sym):
+        deg = sym.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("d"))
+        w1 = sym.select(F.col("dst").alias("n"), F.col("src").alias("a"))
+        w2 = sym.select(F.col("dst").alias("n"), F.col("src").alias("b"))
+        cn = (
+            w1.join(w2, "n")
+            .where(F.col("a") < F.col("b"))
+            .join(deg.select(F.col("id").alias("n"), F.col("d").alias("dn")), "n")
+            .groupBy("a", "b")
+            .agg(
+                F.count("*").alias("cn"),
+                F.sum(F.lit(1.0) / F.log(F.col("dn"))).alias("aa"),
+                F.sum(F.lit(1.0) / F.col("dn")).alias("ra"),
+            )
+            .where(F.col("cn") >= min_common)
         )
-        .where(F.col("cn") >= min_common)
-    )
-    out = cn.join(
-        sym.select(F.col("src").alias("a"), F.col("dst").alias("b")),
-        ["a", "b"],
-        "left_anti",
-    ).localCheckpoint(eager=True)
-    sym.unpersist()
+        out = cn.join(
+            sym.select(F.col("src").alias("a"), F.col("dst").alias("b")),
+            ["a", "b"],
+            "left_anti",
+        ).localCheckpoint(eager=True)
     return out
 
 
@@ -193,42 +194,41 @@ def modularity(edges: DataFrame, labels: DataFrame) -> float:
     One intra-edge aggregate + one degree aggregate; the per-community
     terms are a tiny relation reduced on the driver."""
     e = canonical_undirected(edges).persist()
-    m = e.count()
-    if m == 0:
-        e.unpersist()
-        return float("nan")
-    lab = labels.select("id", "label")
-    la = lab.select(F.col("id").alias("src"), F.col("label").alias("_la"))
-    lb = lab.select(F.col("id").alias("dst"), F.col("label").alias("_lb"))
-    mc = (
-        e.join(la, "src")
-        .join(lb, "dst")
-        .where(F.col("_la") == F.col("_lb"))
-        .groupBy(F.col("_la").alias("label"))
-        .agg(F.count("*").alias("mc"))
-    )
-    deg = (
-        symmetrize(e)
-        .groupBy(F.col("src").alias("id"))
-        .agg(F.count("*").alias("d"))
-    )
-    dc = (
-        deg.join(lab, "id")
-        .groupBy("label")
-        .agg(F.sum("d").alias("dc"))
-    )
-    row = (
-        dc.join(mc, "label", "left")
-        .select(
-            (
-                F.coalesce(F.col("mc"), F.lit(0)) / F.lit(float(m))
-                - (F.col("dc") / F.lit(2.0 * m)) * (F.col("dc") / F.lit(2.0 * m))
-            ).alias("term")
+    with released(e):
+        m = e.count()
+        if m == 0:
+            return float("nan")
+        lab = labels.select("id", "label")
+        la = lab.select(F.col("id").alias("src"), F.col("label").alias("_la"))
+        lb = lab.select(F.col("id").alias("dst"), F.col("label").alias("_lb"))
+        mc = (
+            e.join(la, "src")
+            .join(lb, "dst")
+            .where(F.col("_la") == F.col("_lb"))
+            .groupBy(F.col("_la").alias("label"))
+            .agg(F.count("*").alias("mc"))
         )
-        .agg(F.sum("term").alias("q"))
-        .first()
-    )
-    e.unpersist()
+        deg = (
+            symmetrize(e)
+            .groupBy(F.col("src").alias("id"))
+            .agg(F.count("*").alias("d"))
+        )
+        dc = (
+            deg.join(lab, "id")
+            .groupBy("label")
+            .agg(F.sum("d").alias("dc"))
+        )
+        row = (
+            dc.join(mc, "label", "left")
+            .select(
+                (
+                    F.coalesce(F.col("mc"), F.lit(0)) / F.lit(float(m))
+                    - (F.col("dc") / F.lit(2.0 * m)) * (F.col("dc") / F.lit(2.0 * m))
+                ).alias("term")
+            )
+            .agg(F.sum("term").alias("q"))
+            .first()
+        )
     return float(row["q"])
 
 

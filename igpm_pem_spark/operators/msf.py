@@ -55,7 +55,6 @@ def minimum_spanning_forest(
     max_rounds: int = 32,
     num_partitions: int | None = None,
     checkpoint_dir: str | None = None,
-    resume: bool = True,
 ) -> MsfResult:
     """Borůvka minimum spanning forest over an undirected weighted edge
     list (``src``, ``dst``, ``weight_col``); parallel edges collapse to
@@ -101,7 +100,7 @@ def minimum_spanning_forest(
     comp: DataFrame | None = None
     forest: DataFrame | None = None
     resumed_from, rounds = None, 0
-    if resume and checkpoint_dir:
+    if checkpoint_dir:
         last = comp_log.last_committed()
         if last is not None:
             comp = comp_log.load_state(last).select("id", "comp")

@@ -116,7 +116,6 @@ def pagerank(
     max_iter: int = 200,
     num_partitions: int | None = None,
     checkpoint_dir: str | None = None,
-    resume: bool = True,
     steps_per_commit: int = 1,
     personalization: dict | list | None = None,
     weight_col: str | None = None,
@@ -209,7 +208,6 @@ def pagerank(
             num_partitions=num_partitions,
             steps_per_commit=steps_per_commit,
             checkpoint_dir=checkpoint_dir,
-            resume=resume,
             close_block=close_block,
         )
         return PageRankResult(

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 MAX_HOPS = 3  # extract.py:12
+# ε of the best-path argmax (``gray_multiple.py:436-441``)
+_SCORE_EPS = 1e-5
 
 
 def _pair_rel(edges: DataFrame, directed: bool, label: str | None) -> DataFrame:
@@ -221,21 +223,15 @@ def shortest_paths(
     )
 
 
-def best_paths_rwr(
-    edges: DataFrame,
-    scores: DataFrame,
-    max_hops: int = MAX_HOPS,
-    directed: bool = False,
-    label: str | None = None,
-    score_eps: float = 1e-5,
-) -> DataFrame:
+def best_paths_rwr(edges: DataFrame, scores: DataFrame) -> DataFrame:
     """(src, dst, hops, path, goodness): the RWR-guided best path per
-    reachable pair — full EXTRACT ranking parity (``extract.py:30-79``).
+    pair of the undirected ``edges`` reachable within ``MAX_HOPS`` — full
+    EXTRACT ranking parity (``extract.py:30-79``).
 
     The reference's Dijkstra maximizes the RUNNING MEAN of RWR proximity
     over a path's vertices, ``dist = (rwr(v) + d[u]·l[u])/(l[u]+1)``,
     hop-capped at 3; this operator computes the true argmax of that mean
-    over ALL simple paths ≤ ``max_hops`` (the reference's greedy expansion
+    over ALL simple paths ≤ ``MAX_HOPS`` (the reference's greedy expansion
     is a heuristic for the same objective — on graphs where greedy is
     exact, results coincide; tests pin it on the reference's test1p).
     ε-ties (1e-5, the ``gray_multiple.py:436-441`` argmax tolerance) are
@@ -244,10 +240,10 @@ def best_paths_rwr(
     proximity frame — seeded RWR from the query focus, i.e. one
     ``pagerank(personalization=seed)`` run per source of interest instead
     of the reference's all-pairs proximity dict (``rwr.py:108-129``)."""
-    closure = _simple_paths(_pair_rel(edges, directed, label), max_hops, scores)
+    closure = _simple_paths(_pair_rel(edges, False, None), MAX_HOPS, scores)
     good = F.col("ssum") / (F.col("hops") + 1)
     closure = closure.withColumn(
-        "_gq", (-F.floor(good / F.lit(score_eps))).cast("long")
+        "_gq", (-F.floor(good / F.lit(_SCORE_EPS))).cast("long")
     ).withColumn("_good", good)
     best = F.min(F.struct("_gq", "hops", "path", "_good")).alias("b")
     return (
@@ -264,9 +260,8 @@ def best_paths_rwr(
 
 
 def variable_length_edges(
-    edges: DataFrame, max_hops: int = MAX_HOPS, directed: bool = False,
-    label: str | None = None,
+    edges: DataFrame, directed: bool = False, label: str | None = None
 ) -> DataFrame:
-    """(src, dst) pairs connected by a ≤max_hops path — the join relation
+    """(src, dst) pairs connected by a ≤MAX_HOPS path — the join relation
     substituted for a ``--path`` query edge."""
-    return path_closure(edges, max_hops, directed, label).select("src", "dst")
+    return path_closure(edges, MAX_HOPS, directed, label).select("src", "dst")

@@ -20,7 +20,7 @@ the WCC kernel runs (one shuffle per sweep, layout pinned to the
 adjacency); phases shrink the alive set monotonically. Worst case (a long
 path DAG) is O(V) phases — like every pivot-based SCC scheme — but each
 phase then costs O(alive) only; cycle-rich graphs finish in a few
-phases. ``max_phases`` guards the pathological case loudly.
+phases. ``_MAX_PHASES`` guards the pathological case loudly.
 """
 
 from __future__ import annotations
@@ -48,13 +48,19 @@ class SccResult:
 # trimmed phases' fixpoints are shallow, so wider blocks just add no-op
 # sweeps).
 _UNROLL = 2
+# Bounds: phases per SCC call, sweeps per min-prop fixpoint, trim sweeps
+# per phase (trimming need not finish: leftovers go through coloring) and
+# condensation levels.
+_MAX_PHASES = 50
+_MAX_SWEEPS = 200
+_TRIM_SWEEPS = 25
+_MAX_LEVELS = 200
 
 
 def _min_prop_fix(
     state: DataFrame,
     adj: DataFrame,
     num_partitions: int,
-    max_iter: int,
 ) -> tuple[DataFrame, int]:
     """Run component(v) ← min(component(v), min over edges (u,v) of
     component(u)) to fixpoint, frontier-restricted: the CC sweep
@@ -73,19 +79,21 @@ def _min_prop_fix(
     changes nothing, so "last sweep of the batch changed nothing" is
     still exactly the fixpoint test (at most _UNROLL-1 no-op sweeps run)."""
     steps = 0
-    while steps < max_iter:
-        for _ in range(min(_UNROLL, max_iter - steps)):
+    while steps < _MAX_SWEEPS:
+        for _ in range(min(_UNROLL, _MAX_SWEEPS - steps)):
             state = _cc_step(state, adj, num_partitions).localCheckpoint(eager=False)
             steps += 1
         if state.where("changed").count() == 0:
             return state, steps
-    raise RuntimeError(f"min-propagation did not converge in {max_iter} sweeps")
+    raise RuntimeError(
+        f"min-propagation did not converge in {_MAX_SWEEPS} sweeps "
+        "(scc._MAX_SWEEPS)"
+    )
 
 
 def _trim(
     alive: DataFrame,
     fwd: DataFrame,
-    max_sweeps: int,
 ) -> tuple[DataFrame, DataFrame | None, int]:
     """Parallel trim (the T of FW-BW-Trim, Slota/Rajamanickam/Madduri
     IPDPS'14): a vertex with zero in-degree or zero out-degree in the
@@ -96,7 +104,7 @@ def _trim(
     set for pennies before a single coloring fixpoint runs.
 
     Returns (alive', singletons(id, scc) or None, sweeps). Stops early at
-    a fixpoint; ``max_sweeps`` only bounds the work (correctness never
+    a fixpoint; ``_TRIM_SWEEPS`` only bounds the work (correctness never
     depends on trimming to completion — leftovers go through coloring)."""
     singles: DataFrame | None = None
     sweeps = 0
@@ -108,7 +116,7 @@ def _trim(
         .join(alive.withColumnRenamed("id", "dst"), "dst", "left_semi")
         .localCheckpoint(eager=False)
     )
-    while sweeps < max_sweeps:
+    while sweeps < _TRIM_SWEEPS:
         # both degree flags in ONE shuffle: union the endpoint roles and
         # max-aggregate, instead of two distincts + a semi-join
         keep = (
@@ -148,10 +156,7 @@ def strongly_connected_components(
     spark: SparkSession,
     edges: DataFrame,
     *,
-    max_phases: int = 50,
-    max_iter: int = 200,
     num_partitions: int | None = None,
-    trim_sweeps: int = 25,
 ) -> SccResult:
     """(id, scc) over the directed simple graph; scc = min member id
     (matching ``nx.strongly_connected_components`` up to labeling)."""
@@ -178,10 +183,10 @@ def strongly_connected_components(
     # AQE + codegen off for the whole FW-BW-Trim iteration (fresh
     # plans per sweep/phase — see _superstep.loop_confs)
     with released(fwd), loop_confs(spark):
-        while phases < max_phases:
+        while phases < _MAX_PHASES:
             # trim first, every phase: the initial periphery, then whatever
             # each extracted SCC's removal exposes
-            alive, singles, s0 = _trim(alive, fwd, trim_sweeps)
+            alive, singles, s0 = _trim(alive, fwd)
             supersteps += s0
             if singles is not None:
                 done = singles if done is None else done.unionByName(singles)
@@ -201,7 +206,7 @@ def strongly_connected_components(
             color0 = alive.select(
                 "id", F.col("id").alias("component"), F.lit(True).alias("changed")
             ).localCheckpoint(eager=True)
-            colored, s1 = _min_prop_fix(color0, fa, num_partitions, max_iter)
+            colored, s1 = _min_prop_fix(color0, fa, num_partitions)
             supersteps += s1
             # 2. backward pivot marking within same color: encode "marked with
             # color c" as color value c, unmarked as null, and reuse min-prop
@@ -230,7 +235,7 @@ def strongly_connected_components(
             ).select(
                 "id", F.coalesce(F.col("m"), F.lit(2**62)).alias("component"), "changed"
             ).localCheckpoint(eager=True)
-            marked, s2 = _min_prop_fix(mark0, same_color, num_partitions, max_iter)
+            marked, s2 = _min_prop_fix(mark0, same_color, num_partitions)
             supersteps += s2
             # marked < sentinel ⇒ pivot's color reached v backward within its
             # color class ⇒ v ∈ SCC(pivot). (min over marks is safe: within a
@@ -246,8 +251,8 @@ def strongly_connected_components(
             )
     if not converged and alive.limit(1).count() > 0:
         raise RuntimeError(
-            f"SCC did not finish in {max_phases} phases — pathological "
-            "pivot chain; raise max_phases"
+            f"SCC did not finish in {_MAX_PHASES} phases — pathological "
+            "pivot chain; raise scc._MAX_PHASES"
         )
     result = SccResult(done, phases, supersteps, True)
     result.stats.append({"wall_sec": round(time.time() - t0, 3)})
@@ -275,7 +280,6 @@ def condensation_levels(
     spark: SparkSession,
     edges: DataFrame,
     *,
-    max_levels: int = 200,
     num_partitions: int | None = None,
 ) -> DataFrame:
     """(scc, level): longest-path layering of the SCC condensation DAG —
@@ -311,12 +315,13 @@ def condensation_levels(
         .select("c", F.lit(0).cast("int").alias("level"), F.lit(True).alias("changed"))
         .localCheckpoint(eager=True),
         lambda s: _level_step(s, q),
-        max_iter=max_levels,
+        max_iter=_MAX_LEVELS,
         num_partitions=num_partitions,
         steps_per_commit=4,
     )
     if not res.converged:
         raise RuntimeError(
-            f"condensation deeper than {max_levels} levels — raise max_levels"
+            f"condensation deeper than {_MAX_LEVELS} levels — raise "
+            "scc._MAX_LEVELS"
         )
     return res.state.select(F.col("c").alias("scc"), "level")

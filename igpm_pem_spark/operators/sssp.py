@@ -92,7 +92,6 @@ def sssp(
     max_iter: int = 100,
     num_partitions: int | None = None,
     checkpoint_dir: str | None = None,
-    resume: bool = True,
     steps_per_commit: int = 4,
 ) -> SsspResult:
     """Min-plus fixpoint: dist(v) = min over edges (u,v) of dist(u)+w.
@@ -129,7 +128,6 @@ def sssp(
             num_partitions=num_partitions,
             steps_per_commit=steps_per_commit,
             checkpoint_dir=checkpoint_dir,
-            resume=resume,
         )
     return SsspResult(
         res.state.select("id", "dist"), res.supersteps, res.converged,
@@ -165,6 +163,11 @@ def _widest_step(state: DataFrame, adj: DataFrame, num_partitions: int) -> DataF
     )
 
 
+# Supersteps of a ``widest_path`` run; an unfinished one returns
+# ``converged=False``.
+_WIDEST_MAX_ITER = 100
+
+
 def widest_path(
     spark: SparkSession,
     edges: DataFrame,
@@ -172,7 +175,6 @@ def widest_path(
     *,
     weight_col: str = "w",
     directed: bool = False,
-    max_iter: int = 100,
     num_partitions: int | None = None,
 ) -> SsspResult:
     """Bottleneck (widest-path) single source: the max-min fixpoint
@@ -200,7 +202,7 @@ def widest_path(
             "id BIGINT, width DOUBLE, changed BOOLEAN",
         ).repartition(num_partitions, "id"),
         lambda s: _widest_step(s, adj, num_partitions),
-        max_iter=max_iter,
+        max_iter=_WIDEST_MAX_ITER,
         num_partitions=num_partitions,
         steps_per_commit=4,
     )

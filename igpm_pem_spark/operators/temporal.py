@@ -75,31 +75,34 @@ def _ea_step(state: DataFrame, adj: DataFrame, num_partitions: int) -> DataFrame
     )
 
 
+# Supersteps of an ``earliest_arrival`` run (an unfinished one returns
+# ``converged=False``) and supersteps per commit.
+_MAX_ITER = 100
+_STEPS_PER_COMMIT = 4
+
+
 def earliest_arrival(
     spark: SparkSession,
     edges: DataFrame,
     sources: list[int],
     *,
-    ts_col: str = "ts",
-    start_ts: int = 0,
     directed: bool = True,
-    max_iter: int = 100,
     num_partitions: int | None = None,
-    steps_per_commit: int = 4,
 ) -> EarliestArrivalResult:
-    """Earliest-arrival times from a seed set released at ``start_ts``.
+    """Earliest-arrival times over the edges' ``ts`` from a seed set
+    released at time 0.
 
     Edges are directed by default (temporal semantics are rarely
     symmetric); ``directed=False`` symmetrizes instances, keeping each
     (src, dst, ts) occurrence. Parallel edge instances between the same
     endpoints at different times are the POINT of the model and are all
-    kept; duplicates of the same (src, dst, ts) collapse. Seeds below
-    their own ``start_ts`` trivially arrive at ``start_ts``; vertices
-    with no time-respecting path from any seed are absent."""
+    kept; duplicates of the same (src, dst, ts) collapse. Seeds arrive
+    at 0; vertices with no time-respecting path from any seed are
+    absent."""
     if num_partitions is None:
         num_partitions = kernel_nparts(edges)
     e = edges.select(
-        "src", "dst", F.col(ts_col).cast("long").alias("ts")
+        "src", "dst", F.col("ts").cast("long").alias("ts")
     ).where(F.col("src") != F.col("dst"))
     if not directed:
         e = e.unionByName(
@@ -110,14 +113,14 @@ def earliest_arrival(
         res = run(
             spark,
             lambda: spark.createDataFrame(
-                [(int(v), int(start_ts), True) for v in sources],
+                [(int(v), 0, True) for v in sources],
                 "id BIGINT, arrival BIGINT, changed BOOLEAN",
             ).repartition(num_partitions, "id").localCheckpoint(eager=True),
             lambda s: _ea_step(s, adj, num_partitions),
-            max_iter=max_iter,
+            max_iter=_MAX_ITER,
             edge_parts=edge_partition_counts(adj),
             num_partitions=num_partitions,
-            steps_per_commit=steps_per_commit,
+            steps_per_commit=_STEPS_PER_COMMIT,
         )
     return EarliestArrivalResult(
         res.state.select("id", "arrival"), res.supersteps, res.converged,
@@ -125,15 +128,10 @@ def earliest_arrival(
     )
 
 
-def interarrival_burstiness(
-    events: DataFrame,
-    entity_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    min_gaps: int = 4,
-) -> DataFrame:
-    """Goh-Barabasi burstiness of per-entity event inter-arrival times:
-    ``(entity, n_gaps, mean_gap_s6, sd_gap_s6, burstiness6)`` with
+def interarrival_burstiness(events: DataFrame, min_gaps: int = 4) -> DataFrame:
+    """Goh-Barabasi burstiness of per-user event inter-arrival times
+    over ``events(user_id, ts, event_id)``:
+    ``(user_id, n_gaps, mean_gap_s6, sd_gap_s6, burstiness6)`` with
     B = (sigma - mu) / (sigma + mu) over the entity's gap distribution —
     B -> -1 for a metronome, 0 for a Poisson process, -> +1 for extreme
     bursts (Goh & Barabasi, EPL 81 (2008): "Burstiness and memory in
@@ -151,11 +149,11 @@ def interarrival_burstiness(
     w = Window.partitionBy("ent").orderBy("us", "eid")
     gaps = (
         events.select(
-            F.col(entity_col).alias("ent"),
+            F.col("user_id").alias("ent"),
             # cast handles TIMESTAMP_NTZ parquet columns; gaps are
             # differences, so any fixed zone offset cancels
-            F.unix_micros(F.col(ts_col).cast("timestamp")).alias("us"),
-            F.col(id_col).alias("eid"),
+            F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
+            F.col("event_id").alias("eid"),
         )
         .withColumn("gap_s", (F.col("us") - F.lag("us").over(w)) / F.lit(1000000.0))
         .where(F.col("gap_s").isNotNull())
@@ -170,7 +168,7 @@ def interarrival_burstiness(
         (F.col("sd") - F.col("m")) / (F.col("sd") + F.col("m")),
     ).otherwise(F.lit(0.0))
     return stats.where(F.col("n_gaps") >= min_gaps).select(
-        F.col("ent").alias(entity_col),
+        F.col("ent").alias("user_id"),
         F.col("n_gaps").cast("bigint").alias("n_gaps"),
         F.round("m", 6).alias("mean_gap_s6"),
         F.round("sd", 6).alias("sd_gap_s6"),

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ._superstep import released
 from .graph import simple_edges
 
 # LCG-style mixing constants; intermediates bounded by
@@ -63,43 +64,42 @@ def random_walks(
     sym = simple_edges(edges, directed=False)
     w = Window.partitionBy("src").orderBy("dst")
     nbr = sym.withColumn("idx", F.row_number().over(w) - 1).persist()
-    deg = nbr.groupBy("src").agg(F.count("*").alias("deg"))
+    with released(nbr):
+        deg = nbr.groupBy("src").agg(F.count("*").alias("deg"))
 
-    verts = deg.select(F.col("src").alias("v"), "deg")
-    starts = verts.select(
-        F.explode(
-            F.array(*[F.lit(i) for i in range(walks_per_vertex)])
-        ).alias("w"),
-        "v",
-        "deg",
-    ).select(
-        (F.col("v") * walks_per_vertex + F.col("w")).alias("walk_id"),
-        F.col("v").alias("vertex"),
-        "deg",
-    )
-    out = starts.select("walk_id", F.lit(0).alias("step"), "vertex")
-    cur = starts
-    for s in range(1, walk_len + 1):
-        idx = _choice_expr(F.col("walk_id"), s, F.col("vertex"), F.col("deg"), seed)
-        nxt = (
-            cur.withColumn("idx", idx)
-            .join(
-                nbr.select(
-                    F.col("src").alias("vertex"), "idx", F.col("dst").alias("nv")
-                ),
-                ["vertex", "idx"],
+        verts = deg.select(F.col("src").alias("v"), "deg")
+        starts = verts.select(
+            F.explode(
+                F.array(*[F.lit(i) for i in range(walks_per_vertex)])
+            ).alias("w"),
+            "v",
+            "deg",
+        ).select(
+            (F.col("v") * walks_per_vertex + F.col("w")).alias("walk_id"),
+            F.col("v").alias("vertex"),
+            "deg",
+        )
+        out = starts.select("walk_id", F.lit(0).alias("step"), "vertex")
+        cur = starts
+        for s in range(1, walk_len + 1):
+            idx = _choice_expr(F.col("walk_id"), s, F.col("vertex"), F.col("deg"), seed)
+            nxt = (
+                cur.withColumn("idx", idx)
+                .join(
+                    nbr.select(
+                        F.col("src").alias("vertex"), "idx", F.col("dst").alias("nv")
+                    ),
+                    ["vertex", "idx"],
+                )
+                .select("walk_id", F.col("nv").alias("vertex"))
             )
-            .select("walk_id", F.col("nv").alias("vertex"))
-        )
-        cur = nxt.join(
-            deg.select(F.col("src").alias("vertex"), "deg"), "vertex"
-        ).select("walk_id", "vertex", "deg")
-        out = out.unionByName(
-            cur.select("walk_id", F.lit(s).alias("step"), "vertex")
-        )
-    out = out.localCheckpoint(eager=True)
-    nbr.unpersist()
-    return out
+            cur = nxt.join(
+                deg.select(F.col("src").alias("vertex"), "deg"), "vertex"
+            ).select("walk_id", "vertex", "deg")
+            out = out.unionByName(
+                cur.select("walk_id", F.lit(s).alias("step"), "vertex")
+            )
+        return out.localCheckpoint(eager=True)
 
 
 def node2vec_walks(
@@ -139,70 +139,73 @@ def node2vec_walks(
     sym = simple_edges(edges, directed=False)
     w = Window.partitionBy("src").orderBy("dst")
     nbr = sym.withColumn("idx", F.row_number().over(w) - 1).persist()
-    deg = nbr.groupBy("src").agg(F.count("*").alias("deg"))
+    with released(nbr):
+        deg = nbr.groupBy("src").agg(F.count("*").alias("deg"))
 
-    verts = deg.select(F.col("src").alias("v"), "deg")
-    starts = verts.select(
-        F.explode(
-            F.array(*[F.lit(i) for i in range(walks_per_vertex)])
-        ).alias("w"),
-        "v",
-        "deg",
-    ).select(
-        (F.col("v") * walks_per_vertex + F.col("w")).alias("walk_id"),
-        F.col("v").alias("vertex"),
-        "deg",
-    )
-    out = starts.select("walk_id", F.lit(0).alias("step"), "vertex")
-    if walk_len < 1:
+        verts = deg.select(F.col("src").alias("v"), "deg")
+        starts = verts.select(
+            F.explode(
+                F.array(*[F.lit(i) for i in range(walks_per_vertex)])
+            ).alias("w"),
+            "v",
+            "deg",
+        ).select(
+            (F.col("v") * walks_per_vertex + F.col("w")).alias("walk_id"),
+            F.col("v").alias("vertex"),
+            "deg",
+        )
+        out = starts.select("walk_id", F.lit(0).alias("step"), "vertex")
+        if walk_len < 1:
+            return out.localCheckpoint(eager=True)
+        idx = _choice_expr(F.col("walk_id"), 1, F.col("vertex"), F.col("deg"), seed)
+        cur = (
+            starts.withColumn("idx", idx)
+            .join(
+                nbr.select(
+                    F.col("src").alias("vertex"), "idx", F.col("dst").alias("nv")
+                ),
+                ["vertex", "idx"],
+            )
+            .select(
+                "walk_id", F.col("vertex").alias("prev"), F.col("nv").alias("vertex")
+            )
+        )
+        out = out.unionByName(cur.select("walk_id", F.lit(1).alias("step"), "vertex"))
+        is_nbr = sym.select(
+            F.col("src").alias("prev"), F.col("dst").alias("cand"), F.lit(1).alias("adj")
+        )
+        ww = (
+            Window.partitionBy("walk_id")
+            .orderBy("cand")
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        )
+        wt_tot = Window.partitionBy("walk_id")
+        for s in range(2, walk_len + 1):
+            cand = (
+                cur.join(
+                    nbr.select(F.col("src").alias("vertex"), F.col("dst").alias("cand")),
+                    "vertex",
+                )
+                .join(is_nbr.hint("shuffle_hash"), ["prev", "cand"], "left")
+                .withColumn(
+                    "wt",
+                    F.when(F.col("cand") == F.col("prev"), F.lit(w_ret))
+                    .when(F.col("adj") == 1, F.lit(w_nbr))
+                    .otherwise(F.lit(w_far)),
+                )
+                .withColumn("cum", F.sum("wt").over(ww))
+                .withColumn("tot", F.sum("wt").over(wt_tot))
+            )
+            r = _choice_expr(F.col("walk_id"), s, F.col("vertex"), F.col("tot"), seed)
+            cur = cand.where(
+                (F.col("cum") - F.col("wt") <= r) & (r < F.col("cum"))
+            ).select(
+                "walk_id", F.col("vertex").alias("prev"), F.col("cand").alias("vertex")
+            )
+            out = out.unionByName(
+                cur.select("walk_id", F.lit(s).alias("step"), "vertex")
+            )
         return out.localCheckpoint(eager=True)
-    idx = _choice_expr(F.col("walk_id"), 1, F.col("vertex"), F.col("deg"), seed)
-    cur = (
-        starts.withColumn("idx", idx)
-        .join(
-            nbr.select(
-                F.col("src").alias("vertex"), "idx", F.col("dst").alias("nv")
-            ),
-            ["vertex", "idx"],
-        )
-        .select("walk_id", F.col("vertex").alias("prev"), F.col("nv").alias("vertex"))
-    )
-    out = out.unionByName(cur.select("walk_id", F.lit(1).alias("step"), "vertex"))
-    is_nbr = sym.select(
-        F.col("src").alias("prev"), F.col("dst").alias("cand"), F.lit(1).alias("adj")
-    )
-    ww = (
-        Window.partitionBy("walk_id")
-        .orderBy("cand")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wt_tot = Window.partitionBy("walk_id")
-    for s in range(2, walk_len + 1):
-        cand = (
-            cur.join(
-                nbr.select(F.col("src").alias("vertex"), F.col("dst").alias("cand")),
-                "vertex",
-            )
-            .join(is_nbr.hint("shuffle_hash"), ["prev", "cand"], "left")
-            .withColumn(
-                "wt",
-                F.when(F.col("cand") == F.col("prev"), F.lit(w_ret))
-                .when(F.col("adj") == 1, F.lit(w_nbr))
-                .otherwise(F.lit(w_far)),
-            )
-            .withColumn("cum", F.sum("wt").over(ww))
-            .withColumn("tot", F.sum("wt").over(wt_tot))
-        )
-        r = _choice_expr(F.col("walk_id"), s, F.col("vertex"), F.col("tot"), seed)
-        cur = cand.where(
-            (F.col("cum") - F.col("wt") <= r) & (r < F.col("cum"))
-        ).select("walk_id", F.col("vertex").alias("prev"), F.col("cand").alias("vertex"))
-        out = out.unionByName(
-            cur.select("walk_id", F.lit(s).alias("step"), "vertex")
-        )
-    out = out.localCheckpoint(eager=True)
-    nbr.unpersist()
-    return out
 
 
 def walk_pairs(

@@ -158,7 +158,6 @@ def match_pattern(
     vertices: DataFrame,  # (id, label, props MAP<STRING,STRING>)
     edges: DataFrame,  # (src, dst, label, ...)
     q: PatternQuery,
-    max_path_hops: int = MAX_HOPS,
     max_matches_per_anchor: int | None = None,
     keep_near_miss: bool = False,
     delta_edges: DataFrame | None = None,
@@ -244,7 +243,7 @@ def match_pattern(
     def rel(e: QueryEdge) -> DataFrame:
         if e.is_path:
             return variable_length_edges(
-                base, max_hops=max_path_hops, directed=q.directed, label=e.label
+                base, directed=q.directed, label=e.label
             )
         r = base
         if e.label is not None and "label" in r.columns:
@@ -341,14 +340,14 @@ def match_pattern(
                     return None
                 if e is pinned:
                     return path_closure_delta(
-                        old_edges, delta_edges, max_path_hops, q.directed, e.label
+                        old_edges, delta_edges, MAX_HOPS, q.directed, e.label
                     )
                 # seeded expansion from whichever endpoint is bound;
                 # forward from e.a, backward (reversed edges) from e.b
                 if e.a in bound:
                     seeds = df.select(F.col(e.a).alias("id")).distinct()
                     return path_closure_from(
-                        base, seeds, max_path_hops, q.directed, e.label
+                        base, seeds, MAX_HOPS, q.directed, e.label
                     ).select("src", "dst")
                 if e.b in bound:
                     seeds = df.select(F.col(e.b).alias("id")).distinct()
@@ -358,7 +357,7 @@ def match_pattern(
                         *(["label"] if "label" in base.columns else []),
                     )
                     return path_closure_from(
-                        rev, seeds, max_path_hops, q.directed, e.label
+                        rev, seeds, MAX_HOPS, q.directed, e.label
                     ).select(
                         F.col("dst").alias("src"), F.col("src").alias("dst")
                     )

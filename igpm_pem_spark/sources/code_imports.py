@@ -140,19 +140,3 @@ def sha_manifest(repo_files: DataFrame) -> DataFrame:
     return repo_files.select(
         "repo", "path", "commit", F.sha2(F.col("content"), 256).alias("sha")
     )
-
-
-def with_arrival_step(
-    edges: DataFrame, files_per_repo: int, n_files: int, n_steps: int
-) -> DataFrame:
-    """Attach ts = arrival step bucketed by the source file's global index —
-    the reference's `add = rownum // tm_size` stamping
-    (``load_edgelist.py:29``, ``generator.py:144-152``) made deterministic
-    (row numbers don't exist at scale; the synthetic global index does)."""
-    bucket = max(n_files // max(n_steps, 1), 1)
-    r = F.regexp_extract(F.col("repo"), r"repo(\d+)", 1).cast("long")
-    # recover file-in-repo index from src id is impossible (hashed); use the
-    # repo-level index for coarse, deterministic arrival ordering
-    return edges.withColumn(
-        "ts", ((r * F.lit(files_per_repo)) / F.lit(bucket)).cast("int")
-    )

@@ -37,6 +37,13 @@ from ..operators.incremental import (
 )
 
 
+# Parquet schemas of the graph streams' edge files (``sssp_stream`` reads
+# weighted edges) and the LPA supersteps per micro-batch.
+_EDGE_SCHEMA = "src BIGINT, dst BIGINT, label STRING, ts INT"
+_WEIGHTED_EDGE_SCHEMA = "src BIGINT, dst BIGINT, w DOUBLE, ts INT"
+_LPA_MAX_ITER_PER_BATCH = 30
+
+
 @dataclass
 class StreamState:
     """Driver-held engine state updated by each micro-batch."""
@@ -115,7 +122,6 @@ def components_stream(
     spark: SparkSession,
     source_dir: str,
     *,
-    schema: str = "src BIGINT, dst BIGINT, label STRING, ts INT",
     checkpoint_dir: str | None = None,
     num_partitions: int | None = None,
 ) -> tuple["object", StreamState]:
@@ -128,7 +134,7 @@ def components_stream(
     Returns (StreamingQuery, StreamState); caller stops the query.
     """
     kernel = _ComponentsRefresh(spark, _default_nparts(spark, num_partitions))
-    return _stream(spark, source_dir, kernel, schema, checkpoint_dir)
+    return _stream(spark, source_dir, kernel, _EDGE_SCHEMA, checkpoint_dir)
 
 
 def pattern_match_stream(
@@ -137,7 +143,6 @@ def pattern_match_stream(
     source_dir: str,
     q,
     *,
-    schema: str = "src BIGINT, dst BIGINT, label STRING, ts INT",
     checkpoint_dir: str | None = None,
 ) -> tuple["object", StreamState]:
     """Streaming IGPM: a file-source edge stream drives incremental
@@ -151,7 +156,9 @@ def pattern_match_stream(
     Returns (StreamingQuery, StreamState) — the match table lands in
     ``state.matches``."""
     kernel = _PatternRefresh(spark, vertices, q)
-    return _stream(spark, source_dir, kernel, schema, checkpoint_dir, out="matches")
+    return _stream(
+        spark, source_dir, kernel, _EDGE_SCHEMA, checkpoint_dir, out="matches"
+    )
 
 
 def dedup_stream(
@@ -213,7 +220,6 @@ def sssp_stream(
     source_dir: str,
     source_vertex: int,
     *,
-    schema: str = "src BIGINT, dst BIGINT, w DOUBLE, ts INT",
     checkpoint_dir: str | None = None,
     num_partitions: int | None = None,
 ) -> tuple["object", StreamState]:
@@ -228,18 +234,15 @@ def sssp_stream(
     buckets (pinned by tests).
     """
     kernel = _SSSPRefresh(
-        spark, source_vertex, "w", _default_nparts(spark, num_partitions)
+        spark, source_vertex, _default_nparts(spark, num_partitions)
     )
-    return _stream(spark, source_dir, kernel, schema, checkpoint_dir)
+    return _stream(spark, source_dir, kernel, _WEIGHTED_EDGE_SCHEMA, checkpoint_dir)
 
 
 def pagerank_stream(
     spark: SparkSession,
     source_dir: str,
     *,
-    schema: str = "src BIGINT, dst BIGINT, label STRING, ts INT",
-    alpha: float = 0.85,
-    tol: float = 1e-6,
     checkpoint_dir: str | None = None,
     num_partitions: int | None = None,
 ) -> tuple["object", StreamState]:
@@ -252,18 +255,16 @@ def pagerank_stream(
     buckets within the convergence tolerance (pinned by tests).
     """
     kernel = _PageRankRefresh(
-        spark, alpha=alpha, tol=tol, directed=False,
+        spark, tol=1e-6, directed=False,
         num_partitions=_default_nparts(spark, num_partitions),
     )
-    return _stream(spark, source_dir, kernel, schema, checkpoint_dir)
+    return _stream(spark, source_dir, kernel, _EDGE_SCHEMA, checkpoint_dir)
 
 
 def labelprop_stream(
     spark: SparkSession,
     source_dir: str,
     *,
-    schema: str = "src BIGINT, dst BIGINT, label STRING, ts INT",
-    max_iter_per_batch: int = 30,
     checkpoint_dir: str | None = None,
     num_partitions: int | None = None,
 ) -> tuple["object", StreamState]:
@@ -281,9 +282,9 @@ def labelprop_stream(
     ``StreamState.components`` carries the (id, label) table per batch.
     """
     kernel = _LabelPropRefresh(
-        spark, max_iter_per_batch, _default_nparts(spark, num_partitions)
+        spark, _LPA_MAX_ITER_PER_BATCH, _default_nparts(spark, num_partitions)
     )
-    return _stream(spark, source_dir, kernel, schema, checkpoint_dir)
+    return _stream(spark, source_dir, kernel, _EDGE_SCHEMA, checkpoint_dir)
 
 
 def sessionize_stream(

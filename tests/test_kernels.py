@@ -20,6 +20,7 @@ from igpm_pem_spark.operators.eigencentrality import eigenvector_centrality
 from igpm_pem_spark.operators.graph import canonical_undirected, degrees
 from igpm_pem_spark.operators.incremental import incremental_components
 from igpm_pem_spark.operators.kcore import onion_layers
+from igpm_pem_spark.operators.ktruss import k_truss
 from igpm_pem_spark.operators.labelprop import label_propagation
 from igpm_pem_spark.operators.msf import minimum_spanning_forest
 from igpm_pem_spark.operators.pagerank import pagerank
@@ -139,6 +140,22 @@ def _durable_onion(spark, edges):
         return onion_layers(spark, edges, checkpoint_dir=ckpt)
 
 
+def _raising_support(edge_support):
+    """Edge support whose rows raise when a job reads them: the k-truss
+    round's drop-count job fails after the round persisted ``sup``."""
+    boom = F.raise_error(F.lit("injected support failure")).cast("long")
+    return lambda e: edge_support(e).withColumn("sup", F.coalesce(boom, "sup"))
+
+
+def _ktruss(spark, edges):
+    from pyspark.errors import PySparkException
+
+    try:
+        return k_truss(spark, edges, 3)
+    except PySparkException as err:
+        raise RuntimeError(str(err)) from err
+
+
 @pytest.mark.parametrize(
     "module, step, patch, kernel",
     [
@@ -158,9 +175,11 @@ def _durable_onion(spark, edges):
          _durable_onion),
         ("components", "connected_components", lambda f: _boom,
          lambda s, e: minimum_spanning_forest(s, e.withColumn("w", F.lit(1)))),
+        ("ktruss", "_edge_support", _raising_support, _ktruss),
     ],
     ids=["pagerank", "components", "labelprop", "incremental_components",
-         "scc", "bowtie", "eigencentrality", "hitting_time", "onion", "msf"],
+         "scc", "bowtie", "eigencentrality", "hitting_time", "onion", "msf",
+         "ktruss"],
 )
 def test_releases_caches_when_a_step_raises(
     spark, monkeypatch, module, step, patch, kernel

@@ -239,6 +239,26 @@ def test_sssp_kill_resume_matches_uninterrupted(spark, tmp_path):
     assert got == want
 
 
+def test_labelprop_kill_resume_matches_uninterrupted(spark, tmp_path):
+    from igpm_pem_spark.operators.labelprop import label_propagation
+
+    edges = _edges(spark)
+    ckpt = str(tmp_path / "lpa")
+
+    full = label_propagation(spark, edges)
+    assert full.converged
+
+    partial = label_propagation(spark, edges, max_iter=2, checkpoint_dir=ckpt)
+    assert not partial.converged
+
+    resumed = label_propagation(spark, edges, checkpoint_dir=ckpt)
+    assert resumed.resumed_from == 1
+    assert resumed.converged
+    got = {r.id: r.label for r in resumed.labels.collect()}
+    want = {r.id: r.label for r in full.labels.collect()}
+    assert got == want
+
+
 def test_coreness_kill_resume_matches_uninterrupted(spark, tmp_path):
     from igpm_pem_spark.operators.kcore import coreness_hindex
 

@@ -159,6 +159,17 @@ def test_node2vec_rejects_fractional_pq(spark):
         node2vec_walks(spark, edges_df(spark, PAIRS), p=1, q=0.5)
 
 
+def test_node2vec_zero_length_releases_its_cache(spark):
+    """walk_len=0 returns the start rows early and still unpersists the
+    neighbor index it built."""
+    from igpm_pem_spark.operators.walks import node2vec_walks
+
+    spark.catalog.clearCache()
+    res = node2vec_walks(spark, edges_df(spark, PAIRS), walk_len=0)
+    assert sorted(r.vertex for r in res.collect()) == [1, 2, 3, 4, 5, 6]
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_ppmi_pairs_matches_python(spark):
     """PPMI over a hand-built pair-count corpus vs a direct Python
     recomputation (marginals, total, max(0, ln ratio))."""
